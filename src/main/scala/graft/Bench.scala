@@ -98,17 +98,16 @@ object Bench {
     // 8-core scaling run used to overwrite the 32-core BENCH_LOCAL.json,
     // so matched-core round-over-round diffs needed git archaeology.
     // Non-32-core runs now read/write BENCH_LOCAL_c<cpus>.json; the
-    // canonical BENCH_LOCAL.json stays 32-core-only.
-    val defaultBenchFile =
-      if (cpus == "32") "BENCH_LOCAL.json" else s"BENCH_LOCAL_c$cpus.json"
-    val floorPath = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse(java.nio.file.Paths.get(s"/root/repo/$defaultBenchFile"))
+    // canonical BENCH_LOCAL.json stays 32-core-only. The one record
+    // path serves the floor read and the final write: env-overridable,
+    // else that file in the working directory.
+    val recordPath = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      if (cpus == "32") "BENCH_LOCAL.json" else s"BENCH_LOCAL_c$cpus.json"))
     val (floor: Map[String, Double], floorPlans: Map[String, String]) =
       try {
-        if (!java.nio.file.Files.exists(floorPath)) (Map.empty, Map.empty)
+        if (!java.nio.file.Files.exists(recordPath)) (Map.empty, Map.empty)
         else {
-          val body = new String(java.nio.file.Files.readAllBytes(floorPath), "UTF-8")
+          val body = new String(java.nio.file.Files.readAllBytes(recordPath), "UTF-8")
           org.json4s.jackson.JsonMethods.parse(body) match {
             case org.json4s.JObject(fields) =>
               val m = fields.toMap
@@ -202,19 +201,11 @@ object Bench {
     // Truncation-proofing (r02/r03/r06/r07 artifacts all clipped stdout:
     // parsed=null — even the single aggregate line at ~4 KB exceeded the
     // driver's capture window). stdout now carries ONLY a short summary
-    // line (total + counts + pointer to the committed file); the full
-    // per-query map lives in BENCH_LOCAL.json.
-    val short = s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"failed":$failed,"retimed":$rts,"plan_changed":$pch,"probe_ms":$probe,"sf":"$sfDir","file":"BENCH_LOCAL.json"}"""
+    // line (total + counts + pointer to the record file); the full
+    // per-query map lives in that file.
+    val short = s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"failed":$failed,"retimed":$rts,"plan_changed":$pch,"probe_ms":$probe,"sf":"$sfDir","file":"$recordPath"}"""
     if (only.isEmpty) {  // a filtered dev run must not clobber the full record
-      // path is env-overridable and falls back to the working directory so
-      // the bench is runnable outside this container's checkout layout
-      val out = sys.env.get("SPARK_GRAFT_BENCH_OUT").map(java.nio.file.Paths.get(_))
-        .getOrElse {
-          val repo = java.nio.file.Paths.get("/root/repo")
-          (if (java.nio.file.Files.isDirectory(repo)) repo
-           else java.nio.file.Paths.get(".")).resolve(defaultBenchFile)
-        }
-      java.nio.file.Files.write(out,
+      java.nio.file.Files.write(recordPath,
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       // stderr copy: survives even if a logger re-wraps stdout
       System.err.println(short)

@@ -110,12 +110,7 @@ object AnnIndex {
     val dir = new Path(base, s"v${vs.max}")
     val metaPath = new Path(dir, "_meta.json")
     if (!fs.exists(metaPath)) return None
-    val in = fs.open(metaPath)
-    val body = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    val body = LogStore.readString(fs, metaPath)
     Some((vs.max, dir, org.json4s.jackson.JsonMethods.parse(body)))
   }
 

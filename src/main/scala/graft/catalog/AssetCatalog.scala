@@ -68,7 +68,14 @@ class AssetCatalog(spark: SparkSession, root: String) {
     * validator (swagger:268-271).
     */
   def create[T: org.apache.spark.sql.Encoder](table: String, keyCol: String,
-      rows: Dataset[T]): Unit = {
+      rows: Dataset[T]): Unit =
+    log(table).commit(validatedNew(table, keyCol, rows), replace = false): Unit
+
+  /** `rows` as a frame, once no key repeats within it or already exists
+    * in `table`.
+    */
+  private def validatedNew[T](table: String, keyCol: String,
+      rows: Dataset[T]): DataFrame = {
     val batch = rows.toDF()
     require(batch.select(keyCol).distinct().count() == batch.count(),
       s"create: duplicate keys within the batch for $table")
@@ -77,7 +84,7 @@ class AssetCatalog(spark: SparkSession, root: String) {
         .join(batch.select(keyCol), Seq(keyCol), "inner").limit(1).count()
       require(dup == 0, s"create: key already exists in $table")
     }
-    log(table).commit(batch, replace = false): Unit
+    batch
   }
 
   /** R1 + R18 ATOMICALLY: the entity append and its audit event land in
@@ -90,14 +97,7 @@ class AssetCatalog(spark: SparkSession, root: String) {
   def createAudited[T: org.apache.spark.sql.Encoder](table: String, keyCol: String,
       rows: Dataset[T], audit: AuditLog, requestId: String, methodName: String,
       payloadJson: String = "{}"): Unit = {
-    val batch = rows.toDF()
-    require(batch.select(keyCol).distinct().count() == batch.count(),
-      s"create: duplicate keys within the batch for $table")
-    if (exists(table)) {
-      val dup = readTable(table).select(keyCol)
-        .join(batch.select(keyCol), Seq(keyCol), "inner").limit(1).count()
-      require(dup == 0, s"create: key already exists in $table")
-    }
+    val batch = validatedNew(table, keyCol, rows)
     CrossTableTxn.commitAll(spark, s"$root/_xtxn", Seq(
       (log(table), batch, false),
       (audit.commitLog, audit.eventFrame(requestId, methodName,
@@ -177,17 +177,9 @@ class AssetCatalog(spark: SparkSession, root: String) {
     */
   def replicate(secondaryRoot: String): Seq[String] = {
     val tables = listTables
-    val hfs = HadoopFs.fs(spark, root)
     tables.foreach { t =>
       new CommitLog(spark, s"$secondaryRoot/$t").replicateFrom(log(t)): Unit
-      for (side <- Seq("_schema.json", "_colmeta.json", "_widen.json", "_props.json")) {
-        val from = new Path(path(t), side)
-        if (hfs.exists(from))
-          org.apache.hadoop.fs.FileUtil.copy(hfs, from,
-            HadoopFs.fs(spark, secondaryRoot),
-            new Path(s"$secondaryRoot/$t", side), false,
-            spark.sparkContext.hadoopConfiguration): Unit
-      }
+      GraftTableCatalog.copySidecars(spark, path(t), s"$secondaryRoot/$t")
     }
     tables
   }

@@ -70,12 +70,7 @@ private[graft] object ColumnMapping {
     val f = new Path(root, "_colmeta.json")
     if (!fs.exists(f)) (Set.empty, 0)
     else {
-      val in = fs.open(f)
-      val body = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-        new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
+      val body = LogStore.readString(fs, f)
       org.json4s.jackson.JsonMethods.parse(body) match {
         case org.json4s.JObject(fields) =>
           val m = fields.toMap

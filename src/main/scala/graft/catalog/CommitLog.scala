@@ -161,6 +161,15 @@ object CommitLog {
   private[catalog] def sidecarLock(root: String): Object =
     sidecarLocks.computeIfAbsent(
       new org.apache.hadoop.fs.Path(root).toUri.getPath, _ => new Object)
+
+  /** What one attempt of [[CommitLog.headRace]] decided: end the race
+    * with `result` and publish nothing, or publish `lines` at head+1 and,
+    * once they win, return `onWin(head+1)`.
+    */
+  private sealed trait Attempt[+T] extends Product with Serializable
+  private final case class Settle[T](result: T) extends Attempt[T]
+  private final case class Publish[T](lines: Seq[String], onWin: Long => T)
+      extends Attempt[T]
 }
 
 /** Versioned commit log over an immutable parquet file pool — snapshot
@@ -197,11 +206,10 @@ object CommitLog {
   *    rename — and the reference's data plane is per-source S3 buckets
   *    (cft/sourceSystem.yaml:20-27), so rename-assuming commits would
   *    lose one of two racing writers on day one.
-  *  - writers race on the version number optimistically: a conditional
-  *    create onto an existing manifest returns false, the loser re-reads
-  *    the head and retries with the next number (the reference fronts
-  *    exactly this concurrent CRUD plane — three lambdas behind one API
-  *    Gateway, swagger/aws-dl-fmwrk-swagger-apigateway.yaml:30,114,198).
+  *  - writers race on the version number optimistically ([[headRace]])
+  *    (the reference fronts exactly this concurrent CRUD plane — three
+  *    lambdas behind one API Gateway,
+  *    swagger/aws-dl-fmwrk-swagger-apigateway.yaml:30,114,198).
   *
   * Scale: the manifest grows with file count, not row count; reads list
   * one small file + the named parquet footers. This is the plain-parquet
@@ -209,6 +217,7 @@ object CommitLog {
   * swapping this class out, not re-architecting callers.
   */
 class CommitLog(spark: SparkSession, tableRoot: String) {
+  import CommitLog.{Attempt, Publish, Settle}
 
   /** This table's root path, exactly as constructed — the address
     * sibling tables derive from (e.g. the strict replica's `__dlq`
@@ -280,13 +289,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   private def readHeadHint(): Option[Long] =
     try {
       onMetaAccess("open")
-      val in = hfs.open(headHint)
-      val body = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-        new String(out.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-      Some(body.trim.toLong)
+      Some(LogStore.readString(hfs, headHint).trim.toLong)
     } catch { case _: Exception => None }
 
   private def writeHeadHint(v: Long): Unit =
@@ -347,42 +350,27 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
 
   private def rawManifestLines(v: Long): Seq[String] = {
     onMetaAccess("open")
-    val in = hfs.open(manifestPath(v))
-    val body = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    body.split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
+    LogStore.readString(hfs, manifestPath(v))
+      .split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
   /** Stage `df` and publish it as a PENDING next version of a
     * cross-table transaction ([[CrossTableTxn]]): the manifest carries
     * `#xtxn:<id>\t<decisionUri>`, so the content is invisible until the
     * transaction's one decision file commits, and an aborted version
-    * resolves to the previous version's content. Claims its version
-    * through the ordinary optimistic head race — concurrent
+    * resolves to the previous version's content. Concurrent
     * single-table commits are never blocked and never lost.
     */
   private[graft] def publishPending(df: DataFrame, id: String,
       decisionUri: String, replace: Boolean, maxAttempts: Int = 50): Long = {
     enforceConstraints(df, checkConstraints, "xtxn")
     val newLines = stageToPool(df, "xtxn")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(0L) + 1
-      val prev = currentVersion.map(manifestLines).getOrElse(Seq.empty)
-      if (!replace) requireUnpartitioned("publishPending(append)", v, prev)
+    headRace("publishPending", "xtxn", maxAttempts) { (_, prev) =>
+      if (!replace) requireUnpartitioned("publishPending(append)", prev)
       val carried =
         if (replace) replaceCarriedData(prev, Some(df.schema)) else prev
-      beforePublish(attempt, v)
-      if (publish(v, stamped("xtxn",
-        s"#xtxn:$id\t$decisionUri" +: (carried ++ newLines)))) return v
-      racePause(attempt, v)
-      attempt += 1
+      publishAt(s"#xtxn:$id\t$decisionUri" +: (carried ++ newLines))
     }
-    throw new java.io.IOException(
-      s"publishPending: lost the version race $maxAttempts times under $tableRoot")
   }
 
   /** Line-type partitions of one already-read manifest — every caller
@@ -740,32 +728,21 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def setClustering(cols: Seq[String]): Long = {
     require(cols.distinct == cols, s"setClustering: duplicate columns in $cols")
-    var attempt = 0
-    while (attempt < 50) {
-      val vOpt = currentVersion
-      val prev = vOpt.map(manifestLines).getOrElse(Seq.empty)
+    headRace("setClustering", "set_clustering") { (_, prev) =>
       val partCols = partitionColsOf(prev)
       val overlap = cols.filter(partCols.contains)
       require(overlap.isEmpty,
         s"setClustering: $overlap are partition columns — constant within " +
           "every file already, clustering them is a no-op by construction")
       if (cols.nonEmpty && dataNamesOf(prev).nonEmpty) {
-        val have = readVersion(vOpt.get).columns.toSet
+        val have = readLines(prev).columns.toSet
         val missing = cols.filterNot(have)
         require(missing.isEmpty,
           s"setClustering: unknown column(s) $missing (have: ${have.toSeq.sorted})")
       }
-      val v = vOpt.getOrElse(0L)
-      hfs.mkdirs(commitsDir)
       val lines = prev.filterNot(_.startsWith("#cluster:"))
-      val manifest = if (cols.isEmpty) lines else clusterHeader(cols) +: lines
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("set_clustering", manifest))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+      publishAt(if (cols.isEmpty) lines else clusterHeader(cols) +: lines)
     }
-    throw new java.io.IOException(
-      s"setClustering: lost the version race 50 times under $tableRoot")
   }
 
   /** Apply the declared clustering layout to an outgoing batch: range-
@@ -815,61 +792,40 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"addConstraint: bad constraint name '$name'")
     spark.sessionState.sqlParser.parseExpression(exprSql) // fail-fast syntax
-    var attempt = 0
-    while (attempt < 50) {
-      // legal on a table with NO commits yet (header-only v1) — the SQL
-      // front door declares constraints right after CREATE TABLE, before
-      // the first byte lands
-      val vOpt = currentVersion
-      val prev = vOpt.map(manifestLines).getOrElse(Seq.empty)
+    // legal on a table with NO commits yet (header-only v1) — the SQL
+    // front door declares constraints right after CREATE TABLE, before
+    // the first byte lands
+    headRace("addConstraint", "add_constraint") { (_, prev) =>
       val existing = checkOf(prev)
       require(!existing.contains(name),
         s"addConstraint: constraint '$name' already exists " +
           s"(${existing(name)}) — drop it first to redefine")
       if (dataNamesOf(prev).nonEmpty) {
-        val bad = readVersion(vOpt.get).filter(violates(exprSql)).count()
+        val bad = readLines(prev).filter(violates(exprSql)).count()
         if (bad > 0) throw new IllegalStateException(
           s"addConstraint: $bad existing row(s) violate '$name' ($exprSql) " +
             s"under $tableRoot")
       }
-      val v = vOpt.getOrElse(0L)
-      hfs.mkdirs(commitsDir)
-      val lines = prev.filterNot(_.startsWith("#check:"))
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("add_constraint",
-          checkHeader(existing + (name -> exprSql)) +: lines)))
-        return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+      publishAt(checkHeader(existing + (name -> exprSql)) +:
+        prev.filterNot(_.startsWith("#check:")))
     }
-    throw new java.io.IOException(
-      s"addConstraint: lost the version race 50 times under $tableRoot")
   }
 
   /** Remove a declared constraint (metadata-only commit; loud on an
     * unknown name — silently "dropping" a typo would leave the real
     * constraint enforcing).
     */
-  def dropConstraint(name: String): Long = {
-    var attempt = 0
-    while (attempt < 50) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"dropConstraint: no committed version under $tableRoot"))
-      val existing = checkConstraints(v)
+  def dropConstraint(name: String): Long =
+    headRace("dropConstraint", "drop_constraint",
+        headless = Some(() => missingHead("dropConstraint: "))) { (_, prev) =>
+      val existing = checkOf(prev)
       require(existing.contains(name),
         s"dropConstraint: no constraint named '$name' " +
           s"(have: ${existing.keys.toSeq.sorted.mkString(", ")})")
       val rest = existing - name
-      val lines = manifestLines(v).filterNot(_.startsWith("#check:"))
-      val manifest = if (rest.isEmpty) lines else checkHeader(rest) +: lines
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("drop_constraint", manifest))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+      val lines = prev.filterNot(_.startsWith("#check:"))
+      publishAt(if (rest.isEmpty) lines else checkHeader(rest) +: lines)
     }
-    throw new java.io.IOException(
-      s"dropConstraint: lost the version race 50 times under $tableRoot")
-  }
 
   /** Violation predicate: NOT coalesce(expr, TRUE) — FALSE rows only. */
   private def violates(exprSql: String): org.apache.spark.sql.Column =
@@ -979,8 +935,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * concurrent compact/replicate) cannot change or tear what it reads.
     */
   def read(): DataFrame = {
-    val v = currentVersion.getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version under $tableRoot"))
+    val v = committedHead()
     val lines = manifestLines(v)   // ONE manifest read serves rows,
     val df = readLines(lines)      // dv names, AND the transform spec
     // hidden-partition transforms: the derived `_p_*` layout columns are
@@ -1014,8 +969,6 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * version carries no tombstones (the fast path: reads stay the plain
     * parquet scan, zero overhead).
     */
-  private def dvFrame(v: Long): Option[DataFrame] = dvFrameOf(dvFiles(v))
-
   private def dvFrameOf(names: Seq[String]): Option[DataFrame] =
     if (names.isEmpty) None
     else Some(spark.read.parquet(names.map(n => new Path(dataDir, n).toString): _*)
@@ -1050,12 +1003,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         val sf = new Path(tableRoot, "_schema.json")
         if (!hfs.exists(sf)) None
         else {
-          val in = hfs.open(sf)
-          val body = try {
-            val out = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-            new String(out.toByteArray, StandardCharsets.UTF_8)
-          } finally in.close()
+          val body = LogStore.readString(hfs, sf)
           Some(ColumnMapping.physicalSchema(
             org.apache.spark.sql.types.DataType.fromJson(body)
               .asInstanceOf[org.apache.spark.sql.types.StructType]))
@@ -1169,43 +1117,33 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       currentVersion.foreach { v => if (txns(v).contains(id)) return v }
     }
     // validate BEFORE staging (a rejected batch leaves no pool litter);
-    // re-validated in the race loop if the constraint set moved under us
+    // re-validated in the race if the constraint set moved under us
     var validatedCs = checkConstraints
     enforceConstraints(df, validatedCs, "commit")
+    // every retry publishes the SAME pooled file names (carried-over
+    // lines keep their stats)
     val newLines = stageToPool(clustered(df), "commit")
-    // race for the head version: stage a manifest for head+1, atomic
-    // rename into place; the loser re-reads the head and retries with
-    // the SAME pooled file names (carried-over lines keep their stats)
-    var attempt = 0
-    while (attempt < 50) {
-      val v = currentVersion.getOrElse(0L) + 1
-      // a replace drops the file lines but MUST carry the txn headers —
-      // applied-batch memory outlives any rewrite or compaction
-      val prev = currentVersion.map(manifestLines).getOrElse(Seq.empty)
-      txn.foreach { id =>
-        if (prev.contains(s"#txn:$id")) return v - 1  // lost race to our own id's writer
+    val opName = header.collect { case ("op", hv) => hv }
+      .getOrElse(if (replace) "replace" else "append")
+    headRace("commit", opName) { (head, prev) =>
+      if (hasTxn(prev, txn)) Settle(head)  // lost the race to our own id's writer
+      else {
+        if (!replace) requireUnpartitioned("commit(append)", prev)
+        val curCs = checkOf(prev)
+        if (curCs != validatedCs) { // constraint DDL won a race: re-validate
+          enforceConstraints(df, curCs, "commit"); validatedCs = curCs
+        }
+        // a replace drops the file lines but MUST carry the txn headers —
+        // applied-batch memory outlives any rewrite or compaction
+        val carried0 =
+          if (replace) replaceCarriedData(prev, Some(df.schema)) else prev
+        val carried = header.fold(carried0) { case (k, _) =>
+          carried0.filterNot(_.startsWith(s"#$k:"))
+        }
+        publishAt(carried ++ txn.map(id => s"#txn:$id").toSeq ++
+          header.map { case (k, hv) => s"#$k:$hv" }.toSeq ++ newLines)
       }
-      if (!replace) requireUnpartitioned("commit(append)", v, prev)
-      val curCs = checkOf(prev)
-      if (curCs != validatedCs) { // constraint DDL won a race: re-validate
-        enforceConstraints(df, curCs, "commit"); validatedCs = curCs
-      }
-      val carried0 =
-        if (replace) replaceCarriedData(prev, Some(df.schema)) else prev
-      val carried = header.fold(carried0) { case (k, _) =>
-        carried0.filterNot(_.startsWith(s"#$k:"))
-      }
-      val manifest = carried ++ txn.map(id => s"#txn:$id").toSeq ++
-        header.map { case (k, hv) => s"#$k:$hv" }.toSeq ++ newLines
-      val opName = header.collect { case ("op", hv) => hv }
-        .getOrElse(if (replace) "replace" else "append")
-      beforePublish(attempt, v)
-      if (publish(v, stamped(opName, manifest))) return v
-      racePause(attempt, v)
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"commit: lost the version race 50 times under $tableRoot")
   }
 
   /** The value of a version's `#<key>:` manifest header, if present. */
@@ -1221,8 +1159,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * manifests. `#txn:` headers on the CURRENT head are carried forward —
     * applied-batch memory must survive a rollback exactly as it survives
     * replace and compaction (a restore that forgot them would let a
-    * redelivered streaming batch double-apply). Races through the same
-    * optimistic publish loop as `commit`.
+    * redelivered streaming batch double-apply).
     */
   def restore(v: Long): Long = {
     val live = committedVersions
@@ -1238,19 +1175,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // restoring the head would publish a redundant duplicate commit
     if (v == live.max) return v
     val dataLines = manifestLines(v).filterNot(_.startsWith("#txn:"))
-    var attempt = 0
-    while (attempt < 50) {
-      val head = currentVersion.getOrElse(throw new java.util.NoSuchElementException(
-        s"restore: empty commit log under $tableRoot"))
-      val carried = manifestLines(head).filter(_.startsWith("#txn:"))
-      beforePublish(attempt, head + 1)
-      if (publish(head + 1, stamped("restore", carried ++ dataLines)))
-        return head + 1
-      racePause(attempt, head + 1)
-      attempt += 1
+    headRace("restore", "restore", headless = Some(() =>
+        new java.util.NoSuchElementException(s"restore: empty commit log under $tableRoot"))) {
+      (_, prev) => publishAt(prev.filter(_.startsWith("#txn:")) ++ dataLines)
     }
-    throw new java.io.IOException(
-      s"restore: lost the version race 50 times under $tableRoot")
   }
 
   /** Write `df` once into a staging dir, move its part files into the
@@ -1452,59 +1380,49 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val header = "#partition:" + org.json4s.jackson.JsonMethods.compact(
       org.json4s.jackson.JsonMethods.render(
         org.json4s.JArray(partitionCols.map(org.json4s.JString(_)).toList)))
-    var attempt = 0
-    while (attempt < 50) {
-      val v = currentVersion.getOrElse(0L) + 1
-      val prev = currentVersion.map(manifestLines).getOrElse(Seq.empty)
-      txn.foreach { id =>
-        if (prev.contains(s"#txn:$id")) return v - 1
+    headRace("commitPartitioned",
+        op.getOrElse(if (replace) "replace" else "append")) { (head, prev) =>
+      if (hasTxn(prev, txn)) Settle(head)
+      else {
+        // re-check the spec against the CURRENT head on every attempt: a
+        // concurrent replace can change/drop the spec between the entry
+        // check and this publish, and appending our header over the racer's
+        // file lines would mix directory layouts under data/ (the partitioned
+        // mirror of the flat paths' requireUnpartitioned)
+        if (!replace) {
+          val headCols = partitionColsOf(prev)
+          // same rule as the entry check: a racer that replaced the table
+          // FLAT (empty spec, data lines present) must also refuse — an
+          // empty spec alone is only safe over an empty table
+          require(headCols == partitionCols ||
+              (headCols.isEmpty && dataNamesOf(prev).isEmpty),
+            s"commitPartitioned: head layout changed by a concurrent commit " +
+              s"(now ${if (headCols.isEmpty) "flat" else s"partitioned by $headCols"}); " +
+              s"append by $partitionCols would mix layouts")
+        }
+        val curCs = checkOf(prev)
+        if (curCs != validatedCs) {
+          enforceConstraints(df, curCs, "commitPartitioned"); validatedCs = curCs
+        }
+        // shape-aware carry: a partitioned INSERT OVERWRITE that changes
+        // the column set drops the stale evolved `#schema:` header like
+        // the flat path; the RLO restage and other shape-preserving
+        // replaces match the recorded map and keep it
+        val carried0 =
+          if (replace) replaceCarriedData(prev, Some(df.schema))
+          else prev.filterNot(_.startsWith("#partition:"))
+        // an extra header (e.g. #ptspec:) supersedes its prior same-key
+        // line — it rides the SAME atomic publish as the data it describes
+        val carried = extraHeader match {
+          case Some(h) =>
+            val key = h.takeWhile(_ != ':') + ":"
+            carried0.filterNot(_.startsWith(key))
+          case None => carried0
+        }
+        publishAt(header +: (extraHeader.toSeq ++ carried ++
+          txn.map(id => s"#txn:$id").toSeq ++ newLines))
       }
-      // re-check the spec against the CURRENT head on every attempt: a
-      // concurrent replace can change/drop the spec between the entry
-      // check and this publish, and appending our header over the racer's
-      // file lines would mix directory layouts under data/ (the other
-      // commit paths all re-run requireUnpartitioned in-loop; this is
-      // the partitioned mirror of that discipline)
-      if (!replace) {
-        val headCols = partitionColsOf(prev)
-        // same rule as the entry check: a racer that replaced the table
-        // FLAT (empty spec, data lines present) must also refuse — an
-        // empty spec alone is only safe over an empty table
-        require(headCols == partitionCols ||
-            (headCols.isEmpty && dataNamesOf(prev).isEmpty),
-          s"commitPartitioned: head layout changed by a concurrent commit " +
-            s"(now ${if (headCols.isEmpty) "flat" else s"partitioned by $headCols"}); " +
-            s"append by $partitionCols would mix layouts")
-      }
-      val curCs = checkOf(prev)
-      if (curCs != validatedCs) {
-        enforceConstraints(df, curCs, "commitPartitioned"); validatedCs = curCs
-      }
-      // shape-aware carry: a partitioned INSERT OVERWRITE that changes
-      // the column set drops the stale evolved `#schema:` header like
-      // the flat path; the RLO restage and other shape-preserving
-      // replaces match the recorded map and keep it
-      val carried0 =
-        if (replace) replaceCarriedData(prev, Some(df.schema))
-        else prev.filterNot(_.startsWith("#partition:"))
-      // an extra header (e.g. #ptspec:) supersedes its prior same-key
-      // line — it rides the SAME atomic publish as the data it describes
-      val carried = extraHeader match {
-        case Some(h) =>
-          val key = h.takeWhile(_ != ':') + ":"
-          carried0.filterNot(_.startsWith(key))
-        case None => carried0
-      }
-      val manifest = header +: (extraHeader.toSeq ++ carried ++
-        txn.map(id => s"#txn:$id").toSeq ++ newLines)
-      beforePublish(attempt, v)
-      if (publish(v, stamped(
-        op.getOrElse(if (replace) "replace" else "append"), manifest))) return v
-      racePause(attempt, v)
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"commitPartitioned: lost the version race 50 times under $tableRoot")
   }
 
   /** Commit EXPLICITLY NAMED staged parquet files (not a whole staging
@@ -1541,30 +1459,22 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         s"$name\t${statsJson(st, rows, len)}"
       }
     val pooledPaths = newLines.map(l => new Path(dataDir, l.split('\t').head))
-    var attempt = 0
-    while (attempt < 50) {
-      val v = currentVersion.getOrElse(0L) + 1
-      val prev = currentVersion.map(manifestLines).getOrElse(Seq.empty)
-      txn.foreach { id =>
-        if (prev.contains(s"#txn:$id")) return v - 1
-      }
-      if (!replace) requireUnpartitioned("commitPooledFiles(append)", v, prev)
-      val curCs = checkOf(prev)
-      if (curCs != validatedCs) { // constraint DDL won a race: re-validate
-        enforceConstraintsOnPaths(pooledPaths, curCs, "commitPooledFiles")
-        validatedCs = curCs
-      }
-      val carried = if (replace) replaceCarriedData(prev,
-        pooledPaths.headOption.map(p => spark.read.parquet(p.toString).schema))
-      else prev
-      beforePublish(attempt, v)
-      if (publish(v, stamped(if (replace) "replace" else "append",
-        carried ++ txn.map(id => s"#txn:$id").toSeq ++ newLines))) return v
-      racePause(attempt, v)
-      attempt += 1
+    headRace("commitPooledFiles", if (replace) "replace" else "append") {
+      (head, prev) =>
+        if (hasTxn(prev, txn)) Settle(head)
+        else {
+          if (!replace) requireUnpartitioned("commitPooledFiles(append)", prev)
+          val curCs = checkOf(prev)
+          if (curCs != validatedCs) { // constraint DDL won a race: re-validate
+            enforceConstraintsOnPaths(pooledPaths, curCs, "commitPooledFiles")
+            validatedCs = curCs
+          }
+          val carried = if (replace) replaceCarriedData(prev,
+            pooledPaths.headOption.map(p => spark.read.parquet(p.toString).schema))
+          else prev
+          publishAt(carried ++ txn.map(id => s"#txn:$id").toSeq ++ newLines)
+        }
     }
-    throw new java.io.IOException(
-      s"commitPooledFiles: lost the version race 50 times under $tableRoot")
   }
 
   /** Import externally-produced parquet files WITH row-level deletes in
@@ -1607,7 +1517,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // CHECK constraints validate the LIVE rows of the import — tombstoned
     // rows never surface, so a deleted violator cannot fail the batch.
     // Validation reads the SOURCE files (pre-copy: a rejected import
-    // leaves no pool litter) and re-runs inside the race loop if the
+    // leaves no pool litter) and re-runs inside the race if the
     // constraint set moved under us, like commit()/commitStaged.
     def liveRows: DataFrame = {
       val base = spark.read.option("mergeSchema", "true")
@@ -1657,11 +1567,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         val staged = stageToPool(keyed, "importDeletes")
         staged.map("-" + _)
     }
-    var attempt = 0
-    while (attempt < 50) {
-      val v = currentVersion.getOrElse(0L) + 1
-      val prev = currentVersion.map(manifestLines).getOrElse(Seq.empty)
-      if (!replace) requireUnpartitioned("commitCopiedWithTombstones(append)", v, prev)
+    headRace("commitCopiedWithTombstones", "import") { (_, prev) =>
+      if (!replace) requireUnpartitioned("commitCopiedWithTombstones(append)", prev)
       val curCs = checkOf(prev)
       if (curCs != validatedCs) { // constraint DDL won a race: re-validate
         validate(curCs); validatedCs = curCs
@@ -1670,14 +1577,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         pooled.headOption.map { case (_, name, _) =>
           spark.read.parquet(new Path(dataDir, name).toString).schema })
       else prev
-      beforePublish(attempt, v)
-      if (publish(v, stamped("import",
-        carried ++ dataLines ++ tombLines))) return v
-      racePause(attempt, v)
-      attempt += 1
+      publishAt(carried ++ dataLines ++ tombLines)
     }
-    throw new java.io.IOException(
-      s"commitCopiedWithTombstones: lost the version race 50 times under $tableRoot")
   }
 
   /** Incremental physical replication from `src` (this log is the
@@ -1756,17 +1657,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val syncHeaders = Seq(s"#repsrc:$head",
       s"#repmap:${cursor.getOrElse(0L) + 1}-$head",
       s"#reproot:${src.tableQualifiedRoot}")
-    var attempt = 0
-    while (attempt < 50) {
-      val v = currentVersion.getOrElse(0L) + 1
-      beforePublish(attempt, v)
-      if (publish(v, stamped("replicate", syncHeaders ++ base)))
-        return Some(v)
-      racePause(attempt, v)
-      attempt += 1
+    headRace("replicateFrom", "replicate") { (_, _) =>
+      Publish(syncHeaders ++ base, Some(_))
     }
-    throw new java.io.IOException(
-      s"replicateFrom: lost the version race 50 times under $tableRoot")
   }
 
   // ---- replica promotion & generation fencing ------------------------------
@@ -1797,12 +1690,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def fenceEpoch: Option[Long] =
     if (!hfs.exists(fenceFile)) None
     else {
-      val in = hfs.open(fenceFile)
-      val body = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-        new String(out.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
+      val body = LogStore.readString(hfs, fenceFile)
       org.json4s.jackson.JsonMethods.parse(body) \ "epoch" match {
         case org.json4s.JInt(e)  => Some(e.toLong)
         case org.json4s.JLong(e) => Some(e)
@@ -1888,39 +1776,29 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     *
     * Returns (promotedVersion, generation, oldPrimaryFenced).
     */
-  def promote(fenceOldPrimary: Option[CommitLog] = None): (Long, Long, Boolean) = {
-    var attempt = 0
-    while (attempt < 50) {
-      val head = currentVersion.getOrElse(throw new IllegalStateException(
-        s"promote: no committed version under $tableRoot"))
-      val lines = manifestLines(head)
-      require(lines.exists(_.startsWith("#repsrc:")),
-        s"promote: table under $tableRoot carries no #repsrc cursor — it " +
-          "is not a replica (already writable); promotion is a " +
-          "replica-only operation")
-      val newGen = math.max(genOf(lines), fenceEpoch.getOrElse(0L)) + 1
-      // the promote commit sheds the sync bookkeeping (#repsrc cursor,
-      // #repmap window, #reproot provenance) — the HISTORY manifests
-      // keep every sync's repmap, which is what offset translation walks
-      val base = lines.filterNot(l =>
-        l.startsWith("#repsrc:") || l.startsWith("#gen:") ||
-          l.startsWith("#repmap:") || l.startsWith("#reproot:"))
-      beforePublish(attempt, head + 1)
-      if (publish(head + 1, stamped("promote", s"#gen:$newGen" +: base))) {
-        val fenced = fenceOldPrimary match {
-          case None => false
-          case Some(old) =>
+  def promote(fenceOldPrimary: Option[CommitLog] = None): (Long, Long, Boolean) =
+    headRace("promote", "promote", headless = Some(() =>
+        new IllegalStateException(s"promote: no committed version under $tableRoot"))) {
+      (_, lines) =>
+        require(lines.exists(_.startsWith("#repsrc:")),
+          s"promote: table under $tableRoot carries no #repsrc cursor — it " +
+            "is not a replica (already writable); promotion is a " +
+            "replica-only operation")
+        val newGen = math.max(genOf(lines), fenceEpoch.getOrElse(0L)) + 1
+        // the promote commit sheds the sync bookkeeping (#repsrc cursor,
+        // #repmap window, #reproot provenance) — the HISTORY manifests
+        // keep every sync's repmap, which is what offset translation walks
+        val base = lines.filterNot(l =>
+          l.startsWith("#repsrc:") || l.startsWith("#gen:") ||
+            l.startsWith("#repmap:") || l.startsWith("#reproot:"))
+        Publish(s"#gen:$newGen" +: base, v => {
+          val fenced = fenceOldPrimary.exists { old =>
             try { old.writeFence(newGen, tableRoot); true }
             catch { case scala.util.control.NonFatal(_) => false }
-        }
-        return (head + 1, newGen, fenced)
-      }
-      racePause(attempt, head + 1)
-      attempt += 1
+          }
+          (v, newGen, fenced)
+        })
     }
-    throw new java.io.IOException(
-      s"promote: lost the version race 50 times under $tableRoot")
-  }
 
   /** Re-anchor a streaming checkpoint across a failover: map an offset
     * recorded against this table's REPLICATION SOURCE (`srcRoot`,
@@ -2005,7 +1883,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * layout — the partitioned delete tier is [[deleteWhereMoR]] /
     * [[deleteKeysMoR]] + [[rewriteDeletes]].
     */
-  private def requireUnpartitioned(op: String, v: Long, lines: Seq[String]): Unit =
+  private def requireUnpartitioned(op: String, lines: Seq[String]): Unit =
     require(partitionColsOf(lines).isEmpty,
       s"$op: table under $tableRoot is hive-partitioned; use the MoR delete " +
         "tier (deleteWhereMoR/deleteKeysMoR + rewriteDeletes) or rebuild with " +
@@ -2022,33 +1900,22 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   /** Publish the parquet files previously written into `stageDir` (via
     * [[newStageDir]]) as the next commit. `replace=true` is the
     * row-level-operation contract: the staged files ARE the table's new
-    * content. Same optimistic version race as [[commit]]; `#txn:`
-    * headers carry forward across the replace.
+    * content. `#txn:` headers carry forward across the replace.
     */
   def commitStaged(stageDir: String, replace: Boolean): Long = {
     val newLines = poolFromStage(new Path(stageDir), "commitStaged")
     val newPaths = newLines.map(l => new Path(dataDir, l.split('\t').head))
     var validatedCs = checkConstraints
     enforceConstraintsOnPaths(newPaths, validatedCs, "commitStaged")
-    var attempt = 0
-    while (attempt < 50) {
-      val v = currentVersion.getOrElse(0L) + 1
-      val prev = currentVersion.map(manifestLines).getOrElse(Seq.empty)
-      if (!replace) requireUnpartitioned("commitStaged(append)", v, prev)
+    headRace("commitStaged", if (replace) "replace" else "append") { (_, prev) =>
+      if (!replace) requireUnpartitioned("commitStaged(append)", prev)
       val curCs = checkOf(prev)
       if (curCs != validatedCs) { // constraint DDL won a race: re-validate
         enforceConstraintsOnPaths(newPaths, curCs, "commitStaged")
         validatedCs = curCs
       }
-      val carried = if (replace) replaceCarried(prev) else prev
-      beforePublish(attempt, v)
-      if (publish(v, stamped(if (replace) "replace" else "append",
-        carried ++ newLines))) return v
-      racePause(attempt, v)
-      attempt += 1
+      publishAt((if (replace) replaceCarried(prev) else prev) ++ newLines)
     }
-    throw new java.io.IOException(
-      s"commitStaged: lost the version race 50 times under $tableRoot")
   }
 
   /** Zero-copy SHALLOW CLONE: publish this (empty) table's v1 as a
@@ -2283,13 +2150,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       case None =>
         if (!hfs.exists(ptspecFile)) Seq.empty
         else {
-          val in = hfs.open(ptspecFile)
-          val txt = try {
-            val out = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-            new String(out.toByteArray, StandardCharsets.UTF_8)
-          } finally in.close()
-          parsePtspecJson(txt)
+          parsePtspecJson(LogStore.readString(hfs, ptspecFile))
         }
     }
 
@@ -2442,8 +2303,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   private[graft] def prunedCandidates(cond: org.apache.spark.sql.Column)
       : Seq[String] = {
     import org.apache.spark.sql.catalyst.{expressions => E}
-    val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-      s"no committed version under $tableRoot"))
+    val v = committedHead()
     val lines = manifestLines(v)
     val names = dataNamesOf(lines)
     val specs = transformsFor(lines)
@@ -2581,8 +2441,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * row-wise. On a non-transformed table this is just `read().filter`.
     */
   def readWhere(cond: org.apache.spark.sql.Column): DataFrame = {
-    val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-      s"no committed version under $tableRoot"))
+    val v = committedHead()
     val lines = manifestLines(v)
     val specs = transformsFor(lines)
     def hide(df: DataFrame): DataFrame = {
@@ -2643,12 +2502,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val p = new Path(refsDir, name)
     if (!hfs.exists(p)) None
     else {
-      val in = hfs.open(p)
-      val txt = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-        new String(out.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
+      val txt = LogStore.readString(hfs, p)
       txt.trim.split('\t') match {
         case Array(kind, v) => Some(RefInfo(name, kind, v.toLong))
         case _              => None // torn/foreign file: ignore, never explode
@@ -2662,9 +2516,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def createTag(name: String, version: Option[Long] = None): Long = {
     requireRefName(name)
-    val v = version.getOrElse(currentVersion.getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"createTag: no committed version under $tableRoot")))
+    val v = version.getOrElse(committedHead("createTag: "))
     require(committedVersions.contains(v),
       s"createTag: version $v is not retained under $tableRoot " +
         s"(have: ${committedVersions.sorted.mkString(", ")})")
@@ -2703,9 +2555,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // loser's cleanup deleted the winner's just-registered dir, leaving
     // a ref on a missing root. Crashed creators' tmp dirs age out below.
     sweepBranchTmp()
-    val v = version.getOrElse(currentVersion.getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"createBranch: no committed version under $tableRoot")))
+    val v = version.getOrElse(committedHead("createBranch: "))
     // every pool root the fork will reference (same derivation as
     // cloneFrom's marker registration) — needed to move/retire the
     // vacuum-protection markers when the tmp clone renames into place
@@ -2873,8 +2723,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       s"fastForward: branch '$name' carries merge-on-read deletion " +
         "vectors whose tombstones bind to branch-local file names; fold " +
         "them first: CALL <catalog>.system.rewrite_deletes on the branch")
-    val head = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-      s"fastForward: no committed version under $tableRoot"))
+    val head = committedHead("fastForward: ")
     if (head != r.version) throw new IllegalStateException(
       s"fastForward: $tableRoot advanced past the '$name' fork point " +
         s"(${r.version} -> $head) — not a fast-forward; re-branch from the " +
@@ -2945,14 +2794,95 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       if (hasParts) spark.read.parquet(stage.toString)
       // readVersion, not read(): a transform-partitioned head must keep
       // its derived layout columns through the empty-truncate restage
-      else readVersion(currentVersion.getOrElse(
-        throw new java.io.FileNotFoundException(
-          s"commitStagedPartitioned: no committed version under $tableRoot")))
+      else readVersion(committedHead("commitStagedPartitioned: "))
         .where(org.apache.spark.sql.functions.lit(false))
     val ver = commitPartitioned(df, partitionCols, replace = true)
     hfs.delete(stage, true)
     ver
   }
+
+  // ---- the commit protocol ------------------------------------------------
+
+  /** The commit protocol: every single-table mutation publishes its next
+    * version through this one optimistic race for version head+1. Each
+    * attempt
+    *
+    *  1. pins the head and reads its manifest once. An uncommitted table
+    *     pins v0 with no lines, unless `headless` is given: then the
+    *     operation needs a head and throws what `headless` builds;
+    *  2. runs `decide(head, lines)`, which validates against that
+    *     snapshot (constraint re-checks included) and either settles
+    *     without publishing ([[Settle]]: a no-op, a `#txn:` id already
+    *     applied, a delegated commit) or hands back the manifest lines for
+    *     head+1 ([[Publish]]). Whatever it stages keeps uuid pool names,
+    *     so a lost attempt leaves only orphans, which vacuum's in-flight
+    *     guard ages out;
+    *  3. calls [[beforePublish]]`(attempt, head+1)` (attempt counts from
+    *     0), then publishes `#op:<op>` plus those lines at head+1
+    *     through the store's put-if-absent ([[publish]]);
+    *  4. on a win, returns `onWin(head+1)`. On a loss another writer
+    *     landed head+1 first: pause ([[racePause]]) and start over from
+    *     step 1 against the new head, so nothing computed against a stale
+    *     snapshot is ever published.
+    *
+    * After `budget` lost attempts it throws `IOException("<name>: lost the
+    * head race <budget> times under <root>")`. Append and metadata paths
+    * spend 50 attempts (a retry only re-reads one manifest); paths that
+    * recompute a rewrite per attempt spend 5.
+    */
+  private def headRace[T](name: String, op: String, budget: Int = 50,
+      headless: Option[() => Exception] = None)(
+      decide: (Long, Seq[String]) => Attempt[T]): T = {
+    var attempt = 0
+    while (attempt < budget) {
+      val head = currentVersion.getOrElse(headless.fold(0L)(fail => throw fail()))
+      decide(head, manifestLines(head)) match {
+        case Settle(result) => return result
+        case Publish(lines, onWin) =>
+          beforePublish(attempt, head + 1)
+          if (publish(head + 1, stamped(op, lines))) return onWin(head + 1)
+          racePause(attempt, head + 1)
+      }
+      attempt += 1
+    }
+    throw new java.io.IOException(
+      s"$name: lost the head race $budget times under $tableRoot")
+  }
+
+  /** [[Publish]] whose result is the version it lands at. */
+  private def publishAt(lines: Seq[String]): Attempt[Long] = Publish(lines, v => v)
+
+  /** The missing-head failure of the mutators that need a committed head. */
+  private def missingHead(prefix: String = ""): Exception =
+    new java.io.FileNotFoundException(s"${prefix}no committed version under $tableRoot")
+
+  /** [[headRace]]'s `headless` for those mutators. */
+  private def requireHead: Option[() => Exception] = Some(() => missingHead())
+
+  /** The committed head, or [[missingHead]]. */
+  private def committedHead(prefix: String = ""): Long =
+    currentVersion.getOrElse(throw missingHead(prefix))
+
+  /** Was `txn` already applied in this manifest? (`#txn:` redelivery.) */
+  private def hasTxn(lines: Seq[String], txn: Option[String]): Boolean =
+    txn.exists(id => lines.contains(s"#txn:$id"))
+
+  /** Post-lost-race pause: back off briefly while the version this
+    * writer just raced for is STILL unpublished — the claim-holder is
+    * mid-materialization (conditional-PUT stores claim first, write
+    * after). Without a pause the whole retry budget can burn in
+    * microseconds of spinning while the holder is descheduled; with it
+    * the budget spans seconds of REAL contention. No pause when the
+    * head already moved past the target — that loss is progress and the
+    * retry should recompute immediately.
+    */
+  private def racePause(attempt: Int, targeted: Long): Unit =
+    if (currentVersion.getOrElse(0L) < targeted)
+      Thread.sleep(math.min(100L, 1L << math.min(attempt, 7)))
+
+  /** Test seam: runs just before each publish attempt, letting a spec
+    * inject a racing writer's manifest deterministically. */
+  protected def beforePublish(attempt: Int, v: Long): Unit = ()
 
   /** Publish version `v` with exactly these manifest lines, through the
     * store's conditional create. False = lost the race; the caller
@@ -3416,8 +3346,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def readWhere(ranges: Seq[(String, Any, Any)]): DataFrame = {
     require(ranges.nonEmpty, "readWhere: at least one (column, lo, hi) range")
-    val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-      s"no committed version under $tableRoot"))
+    val v = committedHead()
     val lines = manifestLines(v)   // one parse serves stats, data, dv names
     val stats = fileStatsOf(lines)
     val names = dataNamesOf(lines)
@@ -3449,10 +3378,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * key is a partition column, the partition-value stats prune the
     * touched set to exactly the hit partitions before any I/O.
     *
-    * Concurrency: optimistic — the merge is computed against a head
-    * snapshot and published at head+1; if another writer lands first, the
-    * whole merge recomputes against the new head (lost work is bounded by
-    * the touched-file rewrite). Updates must carry the table's schema;
+    * A lost head race recomputes the whole merge (lost work is bounded
+    * by the touched-file rewrite). Updates must carry the table's schema;
     * with `evolve = true` the batch may ALSO carry new columns — the
     * table schema widens in the same commit (existing rows read the new
     * columns as NULL through the pool's mergeSchema read; untouched
@@ -3467,14 +3394,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     require(updates.select(keyCol).distinct().count() == updates.count(),
       s"merge: duplicate keys in the updates batch")
     var validatedCs: Map[String, String] = null
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version under $tableRoot"))
-      val lines = manifestLines(v)
+    headRace("merge", "merge", maxAttempts, requireHead) { (_, lines) =>
       val partCols = partitionColsOf(lines)
       val partTypes = partTypesOf(lines)
-      val curSchema = readVersion(v).schema
+      val curSchema = readLines(lines).schema
       val cols = curSchema.fieldNames.toSeq
       val newCols = if (evolve) updates.columns.filterNot(cols.contains).toSeq
         else Seq.empty
@@ -3491,21 +3414,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         enforceConstraints(upd, curCs, "merge"); validatedCs = curCs
       }
       val keys = upd.select(keyCol).distinct()
-      val touched = findTouched(lines, fileStats(v), keys, keyCol, partTypes = partTypes)
+      val touched = findTouched(lines, fileStatsOf(lines), keys, keyCol,
+        partTypes = partTypes)
       val keptLines = lines.filterNot(l => touched(l.split('\t').head))
       val merged =
         if (touched.isEmpty) upd.select(outCols.map(col): _*)
         // tombstones apply BEFORE the key anti-join: a MoR-deleted row
         // must not resurrect through the rewrite; under evolution the
         // survivors pad the new columns with NULL (allowMissingColumns)
-        else readFiles(touched.toSeq.sorted, dvFrame(v), partTypes)
+        else readFiles(touched.toSeq.sorted, dvFrameOf(dvNamesOf(lines)), partTypes)
           .join(keys, Seq(keyCol), "left_anti")
           .select(cols.map(col): _*)
           .unionByName(upd.select(outCols.map(col): _*),
             allowMissingColumns = true)
-      // pool the rewrite, then publish at exactly v+1: losing the race
-      // means the snapshot we merged against is stale, so recompute (the
-      // orphaned pool files age out under vacuum's in-flight guard).
       // A hive-partitioned head restages under its partition subdirs
       // (the #partition header rides keptLines), so an upsert into one
       // partition rewrites only that partition's touched files and the
@@ -3513,53 +3434,40 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val newLines =
         if (partCols.isEmpty) stageToPool(merged, "merge")
         else stagePartitioned(merged, partCols, "merge")
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("merge",
-        evolveHeader(keptLines, curSchema, newCols, upd) ++
-          newLines))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+      publishAt(evolveHeader(keptLines, curSchema, newCols, upd) ++ newLines)
     }
-    throw new java.io.IOException(
-      s"merge: lost the head race $maxAttempts times under $tableRoot")
   }
 
   /** Copy-on-write keyed DELETE: drop every row whose `keyCol` is in
     * `keys0`, rewriting ONLY the pool files that contain one (same
-    * two-step touched-file discovery and optimistic head+1 publish as
-    * [[merge]]). A delete that touches nothing returns the current
-    * version without committing — no write amplification for misses.
+    * two-step touched-file discovery as [[merge]]). A delete that
+    * touches nothing returns the current version without committing —
+    * no write amplification for misses.
     * Combined with an aged [[vacuum]] this is the right-to-erasure path:
     * once old versions expire, no surviving pool file holds the key.
     */
-  def deleteKeys(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version under $tableRoot"))
-      val lines = manifestLines(v)
+  def deleteKeys(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long =
+    headRace("delete", "delete", maxAttempts, requireHead) { (v, lines) =>
       val partCols = partitionColsOf(lines)
       val partTypes = partTypesOf(lines)
-      val cols = readVersion(v).columns.toSeq
+      val cols = readLines(lines).columns.toSeq
       val keys = keys0.select(keyCol).distinct()
-      val touched = findTouched(lines, fileStats(v), keys, keyCol, partTypes = partTypes)
-      if (touched.isEmpty) return v
-      val keptLines = lines.filterNot(l => touched(l.split('\t').head))
-      val survivors = readFiles(touched.toSeq.sorted, dvFrame(v), partTypes)
-        .join(keys, Seq(keyCol), "left_anti")
-        .select(cols.map(col): _*)
-      // partitioned survivors restage under their subdirs (see merge)
-      val newLines =
-        if (partCols.isEmpty) stageToPool(survivors, "delete")
-        else stagePartitioned(survivors, partCols, "delete")
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("delete", keptLines ++ newLines))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+      val touched = findTouched(lines, fileStatsOf(lines), keys, keyCol,
+        partTypes = partTypes)
+      if (touched.isEmpty) Settle(v)
+      else {
+        val keptLines = lines.filterNot(l => touched(l.split('\t').head))
+        val survivors = readFiles(touched.toSeq.sorted, dvFrameOf(dvNamesOf(lines)),
+            partTypes)
+          .join(keys, Seq(keyCol), "left_anti")
+          .select(cols.map(col): _*)
+        // partitioned survivors restage under their subdirs (see merge)
+        val newLines =
+          if (partCols.isEmpty) stageToPool(survivors, "delete")
+          else stagePartitioned(survivors, partCols, "delete")
+        publishAt(keptLines ++ newLines)
+      }
     }
-    throw new java.io.IOException(
-      s"delete: lost the head race $maxAttempts times under $tableRoot")
-  }
 
   /** Copy-on-write rewrite of exactly the files containing rows matching
     * `cond`, replacing them with their survivors plus (optionally)
@@ -3575,15 +3483,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def rewriteWhere(cond: org.apache.spark.sql.Column, extra: Option[DataFrame],
       maxAttempts: Int = 5, op: String = "rewrite"): Long = {
     import org.apache.spark.sql.functions.coalesce
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version under $tableRoot"))
-      val lines = manifestLines(v)
+    headRace("rewriteWhere", op, maxAttempts, requireHead) { (v, lines) =>
       val partCols = partitionColsOf(lines)
       val partTypes = partTypesOf(lines)
-      val names = files(v)
-      val dv = dvFrame(v)
+      val names = dataNamesOf(lines)
+      val dv = dvFrameOf(dvNamesOf(lines))
       // discovery runs over the VISIBLE snapshot: a file whose only
       // matching rows are already tombstoned is not touched (no rewrite).
       // Discovery yields LEAF names (what input-file metadata exposes);
@@ -3598,37 +3502,33 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             .filter(cond),
           DvKeys.head, "rewriteWhere")
       val touched = names.filter(n => touchedLeaves(leafOf(n))).toSet
-      if (touched.isEmpty && extra.isEmpty) return v
-      val keptLines = lines.filterNot(l =>
-        !l.startsWith("#") && !l.startsWith("-") && touched(l.split('\t').head))
-      // partitioned snapshots restage survivors and extras UNDER their
-      // `c=v` subdirs — predicate CoW keeps the layout like merge does
-      def stage(df: DataFrame): Seq[String] =
-        if (partCols.isEmpty) stageToPool(df, "rewriteWhere")
-        else stagePartitioned(df, partCols, "rewriteWhere")
-      val survivorLines =
-        if (touched.isEmpty) Seq.empty
-        else {
-          val cols = readVersion(v).columns.toSeq
-          val survivors = readFiles(touched.toSeq.sorted, dv, partTypes)
-            // SQL DELETE semantics: rows where the predicate is NULL survive
-            .filter(!coalesce(cond, lit(false)))
-            .select(cols.map(col): _*)
-          stage(survivors)
-        }
-      // survivors cannot newly violate; only the injected rows can
-      extra.foreach(enforceConstraints(_, checkOf(lines), "rewriteWhere"))
-      // injected rows on a transform-partitioned table carry SOURCE
-      // columns only — derive their layout columns before staging
-      val extraLines = extra.map(e => stage(applyTransforms(e))).getOrElse(Seq.empty)
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped(op,
-        keptLines ++ survivorLines ++ extraLines))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+      if (touched.isEmpty && extra.isEmpty) Settle(v)
+      else {
+        val keptLines = lines.filterNot(l =>
+          !l.startsWith("#") && !l.startsWith("-") && touched(l.split('\t').head))
+        // partitioned snapshots restage survivors and extras UNDER their
+        // `c=v` subdirs — predicate CoW keeps the layout like merge does
+        def stage(df: DataFrame): Seq[String] =
+          if (partCols.isEmpty) stageToPool(df, "rewriteWhere")
+          else stagePartitioned(df, partCols, "rewriteWhere")
+        val survivorLines =
+          if (touched.isEmpty) Seq.empty
+          else {
+            val cols = readLines(lines).columns.toSeq
+            val survivors = readFiles(touched.toSeq.sorted, dv, partTypes)
+              // SQL DELETE semantics: rows where the predicate is NULL survive
+              .filter(!coalesce(cond, lit(false)))
+              .select(cols.map(col): _*)
+            stage(survivors)
+          }
+        // survivors cannot newly violate; only the injected rows can
+        extra.foreach(enforceConstraints(_, checkOf(lines), "rewriteWhere"))
+        // injected rows on a transform-partitioned table carry SOURCE
+        // columns only — derive their layout columns before staging
+        val extraLines = extra.map(e => stage(applyTransforms(e))).getOrElse(Seq.empty)
+        publishAt(keptLines ++ survivorLines ++ extraLines)
+      }
     }
-    throw new java.io.IOException(
-      s"rewriteWhere: lost the head race $maxAttempts times under $tableRoot")
   }
 
   /** `DELETE FROM ... WHERE cond` as a predicate CoW commit. */
@@ -3644,10 +3544,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * table (an audit-log status correction) needs, vs. a whole-table
     * replace that rewrites every byte for one row.
     *
-    * Race-safe by construction: each attempt pins the CURRENT head,
-    * re-discovers touched files against it, and publishes head+1 with
-    * the untouched names carried forward — so an append that wins a
-    * version mid-update is re-read and survives the retry (a replace
+    * Touched files are re-discovered on every attempt, so an append
+    * that wins a version mid-update survives the retry (a replace
     * commit, by contrast, stages the stale snapshot once and erases the
     * racer on retry). All set-expressions evaluate against the ORIGINAL
     * row (simultaneous-assignment SQL UPDATE semantics), and a NULL
@@ -3658,15 +3556,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       sets: Seq[(String, org.apache.spark.sql.Column)],
       maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.{coalesce, when}
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version under $tableRoot"))
-      val lines = manifestLines(v)
+    headRace("updateWhere", "update", maxAttempts, requireHead) { (v, lines) =>
       val partCols = partitionColsOf(lines)
       val partTypes = partTypesOf(lines)
-      val names = files(v)
-      val dv = dvFrame(v)
+      val names = dataNamesOf(lines)
+      val dv = dvFrameOf(dvNamesOf(lines))
       // discovery over the VISIBLE snapshot, as in rewriteWhere: a file
       // whose only matching rows are tombstoned is not rewritten.
       val touchedLeaves: Set[String] =
@@ -3677,39 +3571,35 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             .filter(cond),
           DvKeys.head, "updateWhere")
       val touched = names.filter(n => touchedLeaves(leafOf(n))).toSet
-      if (touched.isEmpty) return v
-      val keptLines = lines.filterNot(l =>
-        !l.startsWith("#") && !l.startsWith("-") && touched(l.split('\t').head))
-      val cols = readVersion(v).columns.toSeq
-      val matched = coalesce(cond, lit(false))
-      val setMap = sets.toMap
-      // one pass over touched files: every column's new value is chosen
-      // against the pre-update row, so SET a=b, b=a swaps correctly
-      val rewritten = readFiles(touched.toSeq.sorted, dv, partTypes)
-        .select(cols.map { c =>
-          setMap.get(c) match {
-            case Some(e) => when(matched, e).otherwise(col(c)).as(c)
-            case None    => col(c)
-          }
-        }: _*)
-      // validate the rewrite output (only SET rows can newly violate,
-      // but the pass is O(touched files) either way — and zero when the
-      // table declares no constraints)
-      enforceConstraints(rewritten, checkOf(lines), "updateWhere")
-      // a SET on a hidden-partition transform's SOURCE column must
-      // re-derive the layout column, or the row stays filed under its
-      // old partition and pruning silently goes wrong
-      val relaid = applyTransforms(rewritten)
-      val stagedLines =
-        if (partCols.isEmpty) stageToPool(relaid, "updateWhere")
-        else stagePartitioned(relaid, partCols, "updateWhere")
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("update", keptLines ++ stagedLines))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+      if (touched.isEmpty) Settle(v)
+      else {
+        val keptLines = lines.filterNot(l =>
+          !l.startsWith("#") && !l.startsWith("-") && touched(l.split('\t').head))
+        val cols = readLines(lines).columns.toSeq
+        val matched = coalesce(cond, lit(false))
+        val setMap = sets.toMap
+        // one pass over touched files: every column's new value is chosen
+        // against the pre-update row, so SET a=b, b=a swaps correctly
+        val rewritten = readFiles(touched.toSeq.sorted, dv, partTypes)
+          .select(cols.map { c =>
+            setMap.get(c) match {
+              case Some(e) => when(matched, e).otherwise(col(c)).as(c)
+              case None    => col(c)
+            }
+          }: _*)
+        // validate the rewrite output (only SET rows can newly violate,
+        // but the pass is O(touched files) either way — and zero when the
+        // table declares no constraints)
+        enforceConstraints(rewritten, checkOf(lines), "updateWhere")
+        // a SET on a hidden-partition transform's SOURCE column must
+        // re-derive the layout column, or the row stays filed under its
+        // old partition and pruning silently goes wrong
+        val relaid = applyTransforms(rewritten)
+        publishAt(keptLines ++ (
+          if (partCols.isEmpty) stageToPool(relaid, "updateWhere")
+          else stagePartitioned(relaid, partCols, "updateWhere")))
+      }
     }
-    throw new java.io.IOException(
-      s"updateWhere: lost the head race $maxAttempts times under $tableRoot")
   }
 
   /** Merge-on-read UPDATE (update vectors): tombstone the old positions
@@ -3734,59 +3624,52 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * the row under its new partition directory. The read debt folds
     * through the same maintenance ops as MoR deletes
     * ([[rewriteDeletes]] / [[compact]] / [[optimizeBy]]). A no-match
-    * update returns the current version without committing. Same
-    * optimistic head+1 publish as [[merge]].
+    * update returns the current version without committing.
     */
   def updateWhereMoR(cond: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)],
       maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.coalesce
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version under $tableRoot"))
-      val lines = manifestLines(v)
-      val partCols = partitionColsOf(lines)
-      val partTypes = partTypesOf(lines)
-      val names = files(v)
-      if (names.isEmpty) return v
-      val visible = dvFrame(v).fold(withPos(names))(d =>
-        withPos(names).join(d, DvKeys, "left_anti"))
-      // matched rows carry their (file, pos) keys AND their data columns:
-      // one frame feeds both the tombstones and the updated copies (the
-      // deterministic filter + stable row_index make the two passes agree).
-      // A NONdeterministic predicate (rand(), current_timestamp) would
-      // let the two jobs tombstone one row set and append another inside
-      // the "atomic" commit — pin the match set once in that case.
-      val matched0 = castParts(visible, partTypes).filter(coalesce(cond, lit(false)))
-      val condDeterministic = matched0.queryExecution.analyzed.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition.deterministic
-      }.forall(identity)
-      val matched = if (condDeterministic) matched0 else matched0.localCheckpoint()
-      val dvStaged = stageToPool(matched.select(DvKeys.map(col): _*), "updateWhereMoR")
-      if (dvStaged.isEmpty) return v
-      val cols = readVersion(v).columns.toSeq
-      val setMap = sets.toMap
-      val updated = matched.select(cols.map { c =>
-        setMap.get(c) match {
-          case Some(e) => e.as(c)
-          case None    => col(s"`$c`")
+    headRace("updateWhereMoR", "update_mor", maxAttempts, requireHead) { (v, lines) =>
+      val names = dataNamesOf(lines)
+      if (names.isEmpty) Settle(v)
+      else {
+        val visible = dvFrameOf(dvNamesOf(lines)).fold(withPos(names))(d =>
+          withPos(names).join(d, DvKeys, "left_anti"))
+        // matched rows carry their (file, pos) keys AND their data columns:
+        // one frame feeds both the tombstones and the updated copies (the
+        // deterministic filter + stable row_index make the two passes agree).
+        // A NONdeterministic predicate (rand(), current_timestamp) would
+        // let the two jobs tombstone one row set and append another inside
+        // the "atomic" commit — pin the match set once in that case.
+        val matched0 = castParts(visible, partTypesOf(lines))
+          .filter(coalesce(cond, lit(false)))
+        val condDeterministic = matched0.queryExecution.analyzed.collect {
+          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+            f.condition.deterministic
+        }.forall(identity)
+        val matched = if (condDeterministic) matched0 else matched0.localCheckpoint()
+        val dvStaged = stageToPool(matched.select(DvKeys.map(col): _*), "updateWhereMoR")
+        if (dvStaged.isEmpty) Settle(v)
+        else {
+          val partCols = partitionColsOf(lines)
+          val cols = readLines(lines).columns.toSeq
+          val setMap = sets.toMap
+          val updated = matched.select(cols.map { c =>
+            setMap.get(c) match {
+              case Some(e) => e.as(c)
+              case None    => col(s"`$c`")
+            }
+          }: _*)
+          enforceConstraints(updated, checkOf(lines), "updateWhereMoR")
+          val relaid = applyTransforms(updated)
+          val dataStaged =
+            if (partCols.isEmpty) stageToPool(relaid, "updateWhereMoR")
+            else stagePartitioned(relaid, partCols, "updateWhereMoR")
+          publishAt(lines ++ dataStaged ++ dvStaged.map("-" + _))
         }
-      }: _*)
-      enforceConstraints(updated, checkOf(lines), "updateWhereMoR")
-      val relaid = applyTransforms(updated)
-      val dataStaged =
-        if (partCols.isEmpty) stageToPool(relaid, "updateWhereMoR")
-        else stagePartitioned(relaid, partCols, "updateWhereMoR")
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("update_mor",
-        lines ++ dataStaged ++ dvStaged.map("-" + _)))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+      }
     }
-    throw new java.io.IOException(
-      s"updateWhereMoR: lost the head race $maxAttempts times under $tableRoot")
   }
 
   /** Merge-on-read DELETE: record (file, position) tombstones for every
@@ -3803,30 +3686,21 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * applied), so re-deleting an already-deleted row writes nothing and
     * the change feed never reports a double delete. A delete that
     * matches nothing returns the current version without committing.
-    * Same optimistic head+1 publish as [[merge]].
     */
   def deleteWhereMoR(cond: org.apache.spark.sql.Column, maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.coalesce
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version under $tableRoot"))
-      val names = files(v)
-      if (names.isEmpty) return v
-      val visible = dvFrame(v).fold(withPos(names))(d =>
-        withPos(names).join(d, DvKeys, "left_anti"))
-      val tombs = visible.filter(coalesce(cond, lit(false)))
-        .select(DvKeys.map(col): _*)
-      val staged = stageToPool(tombs, "deleteWhereMoR")
-      if (staged.isEmpty) return v
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("delete_mor",
-        manifestLines(v) ++ staged.map("-" + _)))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+    headRace("deleteWhereMoR", "delete_mor", maxAttempts, requireHead) { (v, lines) =>
+      val names = dataNamesOf(lines)
+      val staged =
+        if (names.isEmpty) Seq.empty
+        else {
+          val visible = dvFrameOf(dvNamesOf(lines)).fold(withPos(names))(d =>
+            withPos(names).join(d, DvKeys, "left_anti"))
+          stageToPool(visible.filter(coalesce(cond, lit(false)))
+            .select(DvKeys.map(col): _*), "deleteWhereMoR")
+        }
+      if (staged.isEmpty) Settle(v) else publishAt(lines ++ staged.map("-" + _))
     }
-    throw new java.io.IOException(
-      s"deleteWhereMoR: lost the head race $maxAttempts times under $tableRoot")
   }
 
   /** Merge-on-read keyed DELETE: tombstone every visible row whose
@@ -3834,37 +3708,38 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * they bound [[deleteKeys]] — only files whose [min,max] overlaps the
     * key range are scanned for positions — but nothing is rewritten.
     */
-  def deleteKeysMoR(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version under $tableRoot"))
-      val names = files(v)
-      if (names.isEmpty) return v
-      val keys = keys0.select(keyCol).distinct()
-      val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
-        org.apache.spark.sql.functions.max(keyCol)).head()
-      if (bounds.isNullAt(0)) return v
-      val stats = fileStats(v)
-      val candidates = names.filter { n =>
+  def deleteKeysMoR(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long =
+    headRace("deleteKeysMoR", "delete_mor", maxAttempts, requireHead) { (v, lines) =>
+      val staged = keyTombstones(lines, keys0.select(keyCol).distinct(), keyCol,
+        "deleteKeysMoR")
+      if (staged.isEmpty) Settle(v) else publishAt(lines ++ staged.map("-" + _))
+    }
+
+  /** Stage (file, pos) tombstones for every visible row of the snapshot
+    * `lines` whose `keyCol` is in `keys` — the probe the keyed MoR paths
+    * share. Footer stats bound it to the files whose [min,max] overlaps
+    * the keys' range before any row I/O; empty when nothing matches.
+    */
+  private def keyTombstones(lines: Seq[String], keys: DataFrame, keyCol: String,
+      op: String): Seq[String] = {
+    val names = dataNamesOf(lines)
+    if (names.isEmpty) return Seq.empty
+    val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
+      org.apache.spark.sql.functions.max(keyCol)).head()
+    val stats = fileStatsOf(lines)
+    val candidates =
+      if (bounds.isNullAt(0)) Seq.empty[String]
+      else names.filter { n =>
         stats.get(n).flatMap(_.get(keyCol))
           .forall(_.overlaps(bounds.get(0), bounds.get(1)))
       }
-      if (candidates.isEmpty) return v
-      val visible = dvFrame(v).fold(withPos(candidates))(d =>
+    if (candidates.isEmpty) Seq.empty
+    else {
+      val visible = dvFrameOf(dvNamesOf(lines)).fold(withPos(candidates))(d =>
         withPos(candidates).join(d, DvKeys, "left_anti"))
-      val tombs = visible.join(keys, Seq(keyCol), "semi")
-        .select(DvKeys.map(col): _*)
-      val staged = stageToPool(tombs, "deleteKeysMoR")
-      if (staged.isEmpty) return v
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("delete_mor",
-        manifestLines(v) ++ staged.map("-" + _)))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+      stageToPool(visible.join(keys, Seq(keyCol), "semi")
+        .select(DvKeys.map(col): _*), op)
     }
-    throw new java.io.IOException(
-      s"deleteKeysMoR: lost the head race $maxAttempts times under $tableRoot")
   }
 
   /** Merge-on-read MERGE (merge vectors): tombstone the old positions of
@@ -3888,7 +3763,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * [[optimizeBy]] like every MoR commit; [[changesBetween]] nets the
     * merge as tombstone-deletes + added-file inserts with no special
     * casing. An empty batch returns the current version without
-    * committing. Same optimistic head+1 publish as [[merge]].
+    * committing.
     */
   def mergeMoR(updates0: DataFrame, keyCol: String, maxAttempts: Int = 5,
       evolve: Boolean = false): Long = {
@@ -3896,14 +3771,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     require(updates.select(keyCol).distinct().count() == updates.count(),
       s"mergeMoR: duplicate keys in the updates batch")
     var validatedCs: Map[String, String] = null
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version under $tableRoot"))
-      val lines = manifestLines(v)
+    headRace("mergeMoR", "merge_mor", maxAttempts, requireHead) { (v, lines) =>
       val partCols = partitionColsOf(lines)
-      val partTypes = partTypesOf(lines)
-      val curSchema = readVersion(v).schema
+      val curSchema = readLines(lines).schema
       val cols = curSchema.fieldNames.toSeq
       // schema evolution mirrors [[merge]]: with evolve=true the batch
       // may add new columns — appended rows carry them, existing files
@@ -3922,44 +3792,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       if (curCs != validatedCs) { // only the incoming rows can newly violate
         enforceConstraints(upd, curCs, "mergeMoR"); validatedCs = curCs
       }
-      val keys = upd.select(keyCol).distinct()
-      val names = files(v)
-      // tombstone the old positions of matched keys — footer stats bound
-      // the probe to the overlapping files before any row I/O
-      val dvStaged: Seq[String] =
-        if (names.isEmpty) Seq.empty
-        else {
-          val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
-            org.apache.spark.sql.functions.max(keyCol)).head()
-          val stats = fileStats(v)
-          val candidates =
-            if (bounds.isNullAt(0)) Seq.empty[String]
-            else names.filter { n =>
-              stats.get(n).flatMap(_.get(keyCol))
-                .forall(_.overlaps(bounds.get(0), bounds.get(1)))
-            }
-          if (candidates.isEmpty) Seq.empty
-          else {
-            val visible = dvFrame(v).fold(withPos(candidates))(d =>
-              withPos(candidates).join(d, DvKeys, "left_anti"))
-            stageToPool(visible.join(keys, Seq(keyCol), "semi")
-              .select(DvKeys.map(col): _*), "mergeMoR")
-          }
-        }
+      // tombstone the old positions of matched keys
+      val dvStaged =
+        keyTombstones(lines, upd.select(keyCol).distinct(), keyCol, "mergeMoR")
       val applied = upd.select(outCols.map(col): _*)
       val dataStaged =
         if (partCols.isEmpty) stageToPool(applied, "mergeMoR")
         else stagePartitioned(applied, partCols, "mergeMoR")
-      if (dvStaged.isEmpty && dataStaged.isEmpty) return v
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("merge_mor",
-        evolveHeader(lines, curSchema, newCols, upd) ++
-          dataStaged ++ dvStaged.map("-" + _)))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+      if (dvStaged.isEmpty && dataStaged.isEmpty) Settle(v)
+      else publishAt(evolveHeader(lines, curSchema, newCols, upd) ++
+        dataStaged ++ dvStaged.map("-" + _))
     }
-    throw new java.io.IOException(
-      s"mergeMoR: lost the head race $maxAttempts times under $tableRoot")
   }
 
   /** Apply one change-data set — tombstone these keys, append these
@@ -3973,7 +3816,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * source version fully applied or not at all, never a torn middle.
     *
     * Exactly-once: `txn` (the SOURCE commit version, stamped by the
-    * feed) is checked against the head manifest inside the race loop and
+    * feed) is checked against the head manifest on every attempt and
     * recorded atomically with the change — a redelivered micro-batch
     * (restart, retry storm) skips versions whose ids already landed,
     * the same `#txn:` seam every streaming writer here uses. The id is
@@ -3994,73 +3837,45 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       maxAttempts: Int = 5, evolve: Boolean = false): Long = {
     val inserts = applyTransforms(inserts0)
     var validatedCs: Map[String, String] = null
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version under $tableRoot"))
-      val lines = manifestLines(v)
-      txn.foreach { id => if (lines.contains(s"#txn:$id")) return v }
-      val partCols = partitionColsOf(lines)
-      val curSchema = readVersion(v).schema
-      val cols = curSchema.fieldNames.toSeq
-      // schema evolution mirrors [[mergeMoR]]: with evolve=true the batch
-      // may add new columns — a CDC replica must track its source through
-      // the source's own evolving merges ([[graft.stream.Replicate]])
-      val newCols = if (evolve) inserts.columns.filterNot(cols.contains).toSeq
-        else Seq.empty
-      if (evolve) {
-        val missing = cols.filterNot(inserts.columns.contains)
-        require(missing.isEmpty, "applyChangesMoR(evolve): inserts must " +
-          s"still carry every existing column (missing $missing); " +
-          "evolution ADDS columns")
-      } else require(inserts.columns.toSet == cols.toSet,
-        s"applyChangesMoR: inserts schema ${inserts.columns.toSeq} != " +
-          s"table schema $cols")
-      val ins = alignTypes(inserts, curSchema, "applyChangesMoR")
-      val outCols = cols ++ newCols
-      val curCs = checkOf(lines)
-      if (curCs != validatedCs) { // only the incoming rows can newly violate
-        enforceConstraints(ins, curCs, "applyChangesMoR"); validatedCs = curCs
-      }
-      val keys = deleteKeys0.select(keyCol).distinct()
-      val names = files(v)
-      val dvStaged: Seq[String] =
-        if (names.isEmpty) Seq.empty
-        else {
-          val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
-            org.apache.spark.sql.functions.max(keyCol)).head()
-          val stats = fileStats(v)
-          val candidates =
-            if (bounds.isNullAt(0)) Seq.empty[String]
-            else names.filter { n =>
-              stats.get(n).flatMap(_.get(keyCol))
-                .forall(_.overlaps(bounds.get(0), bounds.get(1)))
-            }
-          if (candidates.isEmpty) Seq.empty
-          else {
-            val visible = dvFrame(v).fold(withPos(candidates))(d =>
-              withPos(candidates).join(d, DvKeys, "left_anti"))
-            stageToPool(visible.join(keys, Seq(keyCol), "semi")
-              .select(DvKeys.map(col): _*), "applyChangesMoR")
-          }
+    headRace("applyChangesMoR", "cdc_apply", maxAttempts, requireHead) { (v, lines) =>
+      if (hasTxn(lines, txn)) Settle(v)
+      else {
+        val partCols = partitionColsOf(lines)
+        val curSchema = readLines(lines).schema
+        val cols = curSchema.fieldNames.toSeq
+        // schema evolution mirrors [[mergeMoR]]: with evolve=true the batch
+        // may add new columns — a CDC replica must track its source through
+        // the source's own evolving merges ([[graft.stream.Replicate]])
+        val newCols = if (evolve) inserts.columns.filterNot(cols.contains).toSeq
+          else Seq.empty
+        if (evolve) {
+          val missing = cols.filterNot(inserts.columns.contains)
+          require(missing.isEmpty, "applyChangesMoR(evolve): inserts must " +
+            s"still carry every existing column (missing $missing); " +
+            "evolution ADDS columns")
+        } else require(inserts.columns.toSet == cols.toSet,
+          s"applyChangesMoR: inserts schema ${inserts.columns.toSeq} != " +
+            s"table schema $cols")
+        val ins = alignTypes(inserts, curSchema, "applyChangesMoR")
+        val outCols = cols ++ newCols
+        val curCs = checkOf(lines)
+        if (curCs != validatedCs) { // only the incoming rows can newly violate
+          enforceConstraints(ins, curCs, "applyChangesMoR"); validatedCs = curCs
         }
-      val applied = ins.select(outCols.map(col): _*)
-      val dataStaged =
-        if (partCols.isEmpty) stageToPool(applied, "applyChangesMoR")
-        else stagePartitioned(applied, partCols, "applyChangesMoR")
-      // an empty change set without a txn id is a true no-op; WITH one,
-      // the id must still land (skip-on-redelivery has no other memory)
-      if (dvStaged.isEmpty && dataStaged.isEmpty && txn.isEmpty) return v
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("cdc_apply",
-        evolveHeader(lines, curSchema, newCols, ins) ++
+        val dvStaged = keyTombstones(lines, deleteKeys0.select(keyCol).distinct(),
+          keyCol, "applyChangesMoR")
+        val applied = ins.select(outCols.map(col): _*)
+        val dataStaged =
+          if (partCols.isEmpty) stageToPool(applied, "applyChangesMoR")
+          else stagePartitioned(applied, partCols, "applyChangesMoR")
+        // an empty change set without a txn id is a true no-op; WITH one,
+        // the id must still land (skip-on-redelivery has no other memory)
+        if (dvStaged.isEmpty && dataStaged.isEmpty && txn.isEmpty) Settle(v)
+        else publishAt(evolveHeader(lines, curSchema, newCols, ins) ++
           txn.map(id => s"#txn:$id").toSeq ++
-          dataStaged ++ dvStaged.map("-" + _)))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+          dataStaged ++ dvStaged.map("-" + _))
+      }
     }
-    throw new java.io.IOException(
-      s"applyChangesMoR: lost the head race $maxAttempts times under $tableRoot")
   }
 
   /** Fold tombstones into the data: rewrite ONLY the data files that
@@ -4073,43 +3888,34 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * (dvFilesFolded, dataFilesRewritten); a table with no tombstones is
     * a no-op.
     */
-  def rewriteDeletes(maxAttempts: Int = 5): (Int, Int) = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version under $tableRoot"))
-      val dvN = dvFiles(v)
-      if (dvN.isEmpty) return (0, 0)
-      val dv = dvFrame(v).get
-      val targets = collectNames(dv, DvKeys.head, "rewriteDeletes")
-      // stale tombstones may name files a later op already removed;
-      // tombstones carry LEAF names, manifests may carry partition subdirs
-      val touched = files(v).filter(n => targets(leafOf(n))).toSet
-      val lines = manifestLines(v)
-      val partCols = partitionColsOf(lines)
-      val keptLines = lines.filterNot(l => l.startsWith("-") ||
-        (!l.startsWith("#") && touched(l.split('\t').head)))
-      // a partitioned table's survivors restage UNDER their partition
-      // subdirs (basePath read keeps the columns; partitionBy re-lays
-      // them out) so the fold never flattens the layout
-      val survivorLines =
-        if (touched.isEmpty) Seq.empty
-        else if (partCols.nonEmpty)
-          // schema-typed partition cast matters doubly here: the fold
-          // REWRITES survivors, so an inference-drifted type would bake
-          // the wrong column type back into the pool files
-          stagePartitioned(readFiles(touched.toSeq.sorted, Some(dv),
-            partTypesOf(lines)), partCols, "rewriteDeletes")
-        else stageToPool(readFiles(touched.toSeq.sorted, Some(dv)), "rewriteDeletes")
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("rewrite_deletes",
-        keptLines ++ survivorLines))) return (dvN.length, touched.size)
-      racePause(attempt, v + 1)
-      attempt += 1
+  def rewriteDeletes(maxAttempts: Int = 5): (Int, Int) =
+    headRace("rewriteDeletes", "rewrite_deletes", maxAttempts, requireHead) { (_, lines) =>
+      val dvN = dvNamesOf(lines)
+      if (dvN.isEmpty) Settle((0, 0))
+      else {
+        val dv = dvFrameOf(dvN).get
+        val targets = collectNames(dv, DvKeys.head, "rewriteDeletes")
+        // stale tombstones may name files a later op already removed;
+        // tombstones carry LEAF names, manifests may carry partition subdirs
+        val touched = dataNamesOf(lines).filter(n => targets(leafOf(n))).toSet
+        val partCols = partitionColsOf(lines)
+        val keptLines = lines.filterNot(l => l.startsWith("-") ||
+          (!l.startsWith("#") && touched(l.split('\t').head)))
+        // a partitioned table's survivors restage UNDER their partition
+        // subdirs (basePath read keeps the columns; partitionBy re-lays
+        // them out) so the fold never flattens the layout
+        val survivorLines =
+          if (touched.isEmpty) Seq.empty
+          else if (partCols.nonEmpty)
+            // schema-typed partition cast matters doubly here: the fold
+            // REWRITES survivors, so an inference-drifted type would bake
+            // the wrong column type back into the pool files
+            stagePartitioned(readFiles(touched.toSeq.sorted, Some(dv),
+              partTypesOf(lines)), partCols, "rewriteDeletes")
+          else stageToPool(readFiles(touched.toSeq.sorted, Some(dv)), "rewriteDeletes")
+        Publish(keptLines ++ survivorLines, _ => (dvN.length, touched.size))
+      }
     }
-    throw new java.io.IOException(
-      s"rewriteDeletes: lost the head race $maxAttempts times under $tableRoot")
-  }
 
   /** Expire every row with `column` strictly below `cutoff` — the
     * data-lifecycle (TTL / retention) maintenance op, priced by what the
@@ -4143,15 +3949,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       maxAttempts: Int = 5): (Int, Int) = {
     import org.apache.spark.sql.functions.coalesce
     val cut = CommitLog.statsComparable(cutoff)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version under $tableRoot"))
-      val lines = manifestLines(v)
-      val partCols = partitionColsOf(lines)
-      val partTypes = partTypesOf(lines)
-      val names = files(v)
-      val stats = fileStats(v)
+    headRace("expireBefore", "expire", maxAttempts, requireHead) { (_, lines) =>
+      val names = dataNamesOf(lines)
+      val stats = fileStatsOf(lines)
       def cmpSafe(tpe: String, edge: String): Option[Int] =
         scala.util.Try(ColStats.cmp(tpe, edge, cut)).toOption
       val dead = names.filter { n =>
@@ -4166,32 +3966,29 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       // O(lines × straddlers) — at 100 TB the manifest is the file list
       val straddle = names.filterNot(n => dead(n) || live(n))
       val straddleSet = straddle.toSet
-      if (dead.isEmpty && straddle.isEmpty) return (0, 0)
-      val keptLines = lines.filterNot { l =>
-        !l.startsWith("#") && !l.startsWith("-") && {
-          val n = l.split('\t').head; dead(n) || straddleSet(n)
+      if (dead.isEmpty && straddle.isEmpty) Settle((0, 0))
+      else {
+        val keptLines = lines.filterNot { l =>
+          !l.startsWith("#") && !l.startsWith("-") && {
+            val n = l.split('\t').head; dead(n) || straddleSet(n)
+          }
         }
+        val survivorLines =
+          if (straddle.isEmpty) Seq.empty
+          else {
+            val partCols = partitionColsOf(lines)
+            val cols = readLines(lines).columns.toSeq
+            val survivors = readFiles(straddle.sorted, dvFrameOf(dvNamesOf(lines)),
+                partTypesOf(lines))
+              // NULL retention column survives (SQL DELETE semantics)
+              .filter(!coalesce(col(column) < lit(cutoff), lit(false)))
+              .select(cols.map(col): _*)
+            if (partCols.isEmpty) stageToPool(survivors, "expire")
+            else stagePartitioned(survivors, partCols, "expire")
+          }
+        Publish(keptLines ++ survivorLines, _ => (dead.size, straddle.size))
       }
-      val survivorLines =
-        if (straddle.isEmpty) Seq.empty
-        else {
-          val dv = dvFrame(v)
-          val cols = readVersion(v).columns.toSeq
-          val survivors = readFiles(straddle.sorted, dv, partTypes)
-            // NULL retention column survives (SQL DELETE semantics)
-            .filter(!coalesce(col(column) < lit(cutoff), lit(false)))
-            .select(cols.map(col): _*)
-          if (partCols.isEmpty) stageToPool(survivors, "expire")
-          else stagePartitioned(survivors, partCols, "expire")
-        }
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("expire", keptLines ++ survivorLines)))
-        return (dead.size, straddle.size)
-      racePause(attempt, v + 1)
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"expireBefore: lost the head race $maxAttempts times under $tableRoot")
   }
 
   /** Declare a standing TTL retention policy (`#ttl:` header, carried
@@ -4202,30 +3999,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * posture (asset registries carry lifecycle config; the engine, not a
     * human, applies it). `retainMs <= 0` clears the policy.
     */
-  def setTtl(column: String, retainMs: Long): Long = {
-    var attempt = 0
-    while (attempt < 50) {
-      val vOpt = currentVersion
-      val prev = vOpt.map(manifestLines).getOrElse(Seq.empty)
+  def setTtl(column: String, retainMs: Long): Long =
+    headRace("setTtl", "set_ttl") { (_, prev) =>
       if (retainMs > 0 && dataNamesOf(prev).nonEmpty) {
-        val have = readVersion(vOpt.get).columns.toSet
+        val have = readLines(prev).columns.toSet
         require(have.contains(column),
           s"setTtl: unknown column $column (have: ${have.toSeq.sorted})")
       }
-      val v = vOpt.getOrElse(0L)
-      hfs.mkdirs(commitsDir)
       val lines = prev.filterNot(_.startsWith("#ttl:"))
-      val manifest =
-        if (retainMs <= 0) lines
-        else CommitLog.ttlHeader(column, retainMs) +: lines
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("set_ttl", manifest))) return v + 1
-      racePause(attempt, v + 1)
-      attempt += 1
+      publishAt(
+        if (retainMs <= 0) lines else CommitLog.ttlHeader(column, retainMs) +: lines)
     }
-    throw new java.io.IOException(
-      s"setTtl: lost the version race 50 times under $tableRoot")
-  }
 
   /** The TTL policy in force at the head: (column, retainMs). */
   def ttlPolicy: Option[(String, Long)] =
@@ -4278,8 +4062,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def optimizeBy(column: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val v = currentVersion.getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version under $tableRoot"))
+    val v = committedHead()
     val names = files(v)
     val partCols = partitionColumns(v)
     require(!partCols.contains(column),
@@ -4340,8 +4123,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       (quantileBuckets >= 2 && quantileBuckets <= 65536 &&
         (quantileBuckets & (quantileBuckets - 1)) == 0),
       s"quantileBuckets must be 0 (linear) or a power of two in [2, 65536], got $quantileBuckets")
-    val v = currentVersion.getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version under $tableRoot"))
+    val v = committedHead()
     val partCols = partitionColumns(v)
     require(!columns.exists(partCols.contains),
       s"optimizeZOrder: ${columns.filter(partCols.contains)} are partition " +
@@ -4662,8 +4444,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def analyze(histograms: Boolean = true, histBins: Int = 32): (Long, Int) = {
     import org.apache.spark.sql.functions.{approx_count_distinct, array, count, count_min_sketch, max, min, percentile_approx, sum, unix_date, unix_micros, when}
-    val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-      s"analyze: no committed version under $tableRoot"))
+    val v = committedHead("analyze: ")
     val df = readVersion(v)
     import org.apache.spark.sql.types._
     val cols = df.schema.fields.collect {
@@ -4803,12 +4584,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val f = new Path(tableRoot, "_stats.json")
     if (!hfs.exists(f)) None
     else {
-      val in = hfs.open(f)
-      val body = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-        new String(out.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
+      val body = LogStore.readString(hfs, f)
       org.json4s.jackson.JsonMethods.parse(body) match {
         case org.json4s.JObject(fields) =>
           val m = fields.toMap
@@ -4841,12 +4617,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def analyzedHistograms(): Option[(Long, Map[String, (Double, Seq[Double], Seq[Long])])] = {
     val f = new Path(tableRoot, "_stats.json")
     if (!hfs.exists(f)) return None
-    val in = hfs.open(f)
-    val body = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    val body = LogStore.readString(hfs, f)
     org.json4s.jackson.JsonMethods.parse(body) match {
       case org.json4s.JObject(fields) =>
         val m = fields.toMap
@@ -4897,12 +4668,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def analyzedMinMax(): Option[(Long, Map[String, (Double, Double)])] = {
     val f = new Path(tableRoot, "_stats.json")
     if (!hfs.exists(f)) return None
-    val in = hfs.open(f)
-    val body = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    val body = LogStore.readString(hfs, f)
     org.json4s.jackson.JsonMethods.parse(body) match {
       case org.json4s.JObject(fields) =>
         val m = fields.toMap
@@ -4941,12 +4707,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       Map[String, (String, String, org.apache.spark.util.sketch.CountMinSketch)])] = {
     val f = new Path(tableRoot, "_stats.json")
     if (!hfs.exists(f)) return None
-    val in = hfs.open(f)
-    val body = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    val body = LogStore.readString(hfs, f)
     org.json4s.jackson.JsonMethods.parse(body) match {
       case org.json4s.JObject(fields) =>
         val m = fields.toMap
@@ -4993,8 +4754,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def buildBloomIndex(column: String, fpp: Double = 0.01): (Long, Int) = {
     require(fpp > 0 && fpp < 1, s"buildBloomIndex: fpp $fpp out of (0,1)")
-    val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-      s"buildBloomIndex: no committed version under $tableRoot"))
+    val v = committedHead("buildBloomIndex: ")
     val lines = manifestLines(v)
     val names = dataNamesOf(lines)
     require(names.nonEmpty, s"buildBloomIndex: $tableRoot is empty")
@@ -5185,12 +4945,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val metaPath = new Path(dir, "_meta.json")
       if (!hfs.exists(metaPath)) None
       else {
-        val in = hfs.open(metaPath)
-        val body = try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-          new String(out.toByteArray, StandardCharsets.UTF_8)
-        } finally in.close()
+        val body = LogStore.readString(hfs, metaPath)
         org.json4s.jackson.JsonMethods.parse(body) match {
           case org.json4s.JObject(fields) =>
             val m = fields.toMap
@@ -5235,8 +4990,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def readEquals(preds: Seq[(String, Any)]): DataFrame = {
     require(preds.nonEmpty, "readEquals: at least one (column, value)")
-    val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
-      s"no committed version under $tableRoot"))
+    val v = committedHead()
     val lines = manifestLines(v)
     val stats = fileStatsOf(lines)
     val names = dataNamesOf(lines)
@@ -5280,23 +5034,6 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       .filter(rowPred)
   }
 
-
-  /** Post-lost-race pause: back off briefly while the version this
-    * writer just raced for is STILL unpublished — the claim-holder is
-    * mid-materialization (conditional-PUT stores claim first, write
-    * after). Without a pause the whole retry budget can burn in
-    * microseconds of spinning while the holder is descheduled; with it
-    * the budget spans seconds of REAL contention. No pause when the
-    * head already moved past the target — that loss is progress and the
-    * retry should recompute immediately.
-    */
-  private def racePause(attempt: Int, targeted: Long): Unit =
-    if (currentVersion.getOrElse(0L) < targeted)
-      Thread.sleep(math.min(100L, 1L << math.min(attempt, 7)))
-
-  /** Test seam: runs just before each publish attempt, letting a spec
-    * inject a racing writer's manifest deterministically. */
-  protected def beforePublish(attempt: Int, v: Long): Unit = ()
 
   /** Time travel: the newest version whose manifest was published at or
     * before `tsMillis` (manifest publication IS the commit instant — the
@@ -5355,69 +5092,61 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * snapshot throughout. Returns (filesBefore, filesAfter).
     */
   def compact(targetFileBytes: Long = 128L * 1024 * 1024,
-      maxAttempts: Int = 5): (Int, Int) = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = currentVersion.getOrElse(
-        throw new java.io.FileNotFoundException(s"no committed version under $tableRoot"))
-      val lines = manifestLines(v)
-      val names = files(v)
+      maxAttempts: Int = 5): (Int, Int) =
+    headRace("compact", "compact", maxAttempts, requireHead) { (_, lines) =>
+      val names = dataNamesOf(lines)
       val partCols = partitionColsOf(lines)
       if (dvNamesOf(lines).nonEmpty) {
         // tombstoned snapshot: full rewrite, which also folds the DVs
         if (partCols.nonEmpty)
-          commitPartitioned(readVersion(v), partCols, replace = true,
+          commitPartitioned(readLines(lines), partCols, replace = true,
             op = Some("compact"))
         else {
           val bytes = names.map(n => hfs.getFileStatus(new Path(dataDir, n)).getLen).sum
           val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-          commit(readVersion(v).coalesce(nOut), replace = true, None,
+          commit(readLines(lines).coalesce(nOut), replace = true, None,
             Some("op" -> "compact"))
         }
-        return (names.length, currentFileCount)
-      }
-      val sized = names.map(n => (n, hfs.getFileStatus(new Path(dataDir, n)).getLen))
-      val candidates = sized.collect {
-        case (n, b) if b < targetFileBytes || isAbsoluteName(n) => n
-      }
-      // convergence: a LONE small file in its partition (or the whole
-      // flat pool) cannot be packed with anything — rewriting it gains
-      // no file count and would make every maintenance run a rewrite.
-      // Absolute (clone) references always pack: materializing is the
-      // point even when the partition holds just one.
-      val pack = candidates.groupBy(n =>
-          n.split('/').dropRight(1).mkString("/")).values
-        .filter(g => g.length > 1 || g.exists(isAbsoluteName))
-        .flatten.toSeq
-      if (pack.isEmpty) return (names.length, names.length)
-      val packSet = pack.toSet
-      val packBytes = sized.collect { case (n, b) if packSet(n) => b }.sum
-      val nOut = math.max(1, math.ceil(packBytes.toDouble / targetFileBytes).toInt)
-      val keptLines = lines.filterNot(l => packSet(l.split('\t').head))
-      // declared clustering: the pack rewrite is the convergence point —
-      // files written before the declaration (or restaged by CoW ops)
-      // come out range-clustered here
-      val hasCluster = clusterOf(lines).nonEmpty
-      val newLines =
-        if (partCols.isEmpty) {
-          val packed = readFiles(pack.sorted, None)
-          stageToPool(
-            if (hasCluster) clustered(packed, numParts = Some(nOut))
-            else packed.coalesce(nOut), "compact")
-        } else {
-          val packed = readFiles(pack.sorted, None, partTypesOf(lines))
-          stagePartitioned(
-            if (hasCluster) clustered(packed, partCols, Some(nOut))
-            else packed.repartition(nOut, partCols.map(col): _*),
-            partCols, "compact")
+        Settle((names.length, currentFileCount))
+      } else {
+        val sized = names.map(n => (n, hfs.getFileStatus(new Path(dataDir, n)).getLen))
+        val candidates = sized.collect {
+          case (n, b) if b < targetFileBytes || isAbsoluteName(n) => n
         }
-      beforePublish(attempt, v + 1)
-      if (publish(v + 1, stamped("compact",
-        keptLines ++ newLines))) return (names.length, currentFileCount)
-      racePause(attempt, v + 1)
-      attempt += 1
+        // convergence: a LONE small file in its partition (or the whole
+        // flat pool) cannot be packed with anything — rewriting it gains
+        // no file count and would make every maintenance run a rewrite.
+        // Absolute (clone) references always pack: materializing is the
+        // point even when the partition holds just one.
+        val pack = candidates.groupBy(n =>
+            n.split('/').dropRight(1).mkString("/")).values
+          .filter(g => g.length > 1 || g.exists(isAbsoluteName))
+          .flatten.toSeq
+        if (pack.isEmpty) Settle((names.length, names.length))
+        else {
+          val packSet = pack.toSet
+          val packBytes = sized.collect { case (n, b) if packSet(n) => b }.sum
+          val nOut = math.max(1, math.ceil(packBytes.toDouble / targetFileBytes).toInt)
+          val keptLines = lines.filterNot(l => packSet(l.split('\t').head))
+          // declared clustering: the pack rewrite is the convergence point —
+          // files written before the declaration (or restaged by CoW ops)
+          // come out range-clustered here
+          val hasCluster = clusterOf(lines).nonEmpty
+          val newLines =
+            if (partCols.isEmpty) {
+              val packed = readFiles(pack.sorted, None)
+              stageToPool(
+                if (hasCluster) clustered(packed, numParts = Some(nOut))
+                else packed.coalesce(nOut), "compact")
+            } else {
+              val packed = readFiles(pack.sorted, None, partTypesOf(lines))
+              stagePartitioned(
+                if (hasCluster) clustered(packed, partCols, Some(nOut))
+                else packed.repartition(nOut, partCols.map(col): _*),
+                partCols, "compact")
+            }
+          Publish(keptLines ++ newLines, _ => (names.length, currentFileCount))
+        }
+      }
     }
-    throw new java.io.IOException(
-      s"compact: lost the head race $maxAttempts times under $tableRoot")
-  }
 }

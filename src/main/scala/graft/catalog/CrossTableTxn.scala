@@ -107,12 +107,7 @@ object CrossTableTxn {
     val fs = HadoopFs.fs(spark, p.toString)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val body = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-        new String(out.toByteArray, "UTF-8").trim
-      } finally in.close()
+      val body = LogStore.readString(fs, p).trim
       Some(body == "commit")
     }
   }

@@ -229,12 +229,7 @@ object DeltaInterop {
     val cpVersion: Option[Long] =
       if (!fs.exists(lastCp)) None
       else {
-        val in = fs.open(lastCp)
-        val body = try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-          new String(out.toByteArray, StandardCharsets.UTF_8)
-        } finally in.close()
+        val body = LogStore.readString(fs, lastCp)
         val v = mapper.readTree(body).get("version").asLong
         if (versionAsOf.exists(_ < v)) None else Some(v)
       }
@@ -306,12 +301,7 @@ object DeltaInterop {
         versionAsOf.map(v => s" at or below version $v").getOrElse(""))
 
     versions.foreach { case (_, p) =>
-      val in = fs.open(p)
-      val body = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-        new String(out.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
+      val body = LogStore.readString(fs, p)
       // within one commit an add takes precedence over a remove of the
       // same path (the protocol's DV-update shape is remove+add of the
       // SAME file with a new descriptor, in either order)
@@ -562,12 +552,7 @@ object DeltaInterop {
       val sidecar = new Path(commitRoot, "_schema.json")
       if (!srcFs.exists(sidecar)) None
       else {
-        val in = srcFs.open(sidecar)
-        val body = try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-          new String(out.toByteArray, StandardCharsets.UTF_8)
-        } finally in.close()
+        val body = LogStore.readString(srcFs, sidecar)
         Some(DataType.fromJson(body).asInstanceOf[StructType])
       }
     }

@@ -54,15 +54,7 @@ final class GraftDataSource extends TableProvider with DataSourceRegister {
     val fs = HadoopFs.fs(spark, root)
     def sidecar(name: String): Option[String] = {
       val f = new Path(root, name)
-      if (!fs.exists(f)) None
-      else {
-        val in = fs.open(f)
-        try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-          Some(new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
-        } finally in.close()
-      }
+      if (!fs.exists(f)) None else Some(LogStore.readString(fs, f))
     }
     val declared = sidecar("_schema.json")
       .map(DataType.fromJson(_).asInstanceOf[StructType])

@@ -687,14 +687,7 @@ private[catalog] object GraftProcedures {
       val src = new CommitLog(cat.sparkSession, srcRoot)
       val replica = new CommitLog(cat.sparkSession, dstRoot)
       val synced = replica.replicateFrom(src)
-      val fs = HadoopFs.fs(cat.sparkSession, dstRoot)
-      for (side <- Seq("_schema.json", "_colmeta.json", "_widen.json", "_props.json")) {
-        val from = new org.apache.hadoop.fs.Path(srcRoot, side)
-        if (fs.exists(from))
-          org.apache.hadoop.fs.FileUtil.copy(fs, from, fs,
-            new org.apache.hadoop.fs.Path(dstRoot, side), false,
-            cat.sparkSession.sparkContext.hadoopConfiguration): Unit
-      }
+      GraftTableCatalog.copySidecars(cat.sparkSession, srcRoot, dstRoot)
       result(new StructType().add("source_version", LongType)
         .add("replica_version", LongType).add("in_sync_already", BooleanType),
         src.currentVersion.getOrElse(-1L),
@@ -747,18 +740,9 @@ private[catalog] object GraftProcedures {
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val srcRoot = cat.rootOf(input.getUTF8String(0).toString)
       val dstRoot = cat.rootForCreate(input.getUTF8String(1).toString)
-      val fs = HadoopFs.fs(cat.sparkSession, dstRoot)
       val log = new CommitLog(cat.sparkSession, dstRoot)
       val v = log.cloneFrom(srcRoot)
-      // schema / column-mapping sidecars ride along so the clone reads
-      // and evolves exactly like its source (renamed columns included)
-      for (side <- Seq("_schema.json", "_colmeta.json", "_widen.json", "_props.json")) {
-        val from = new org.apache.hadoop.fs.Path(srcRoot, side)
-        if (fs.exists(from))
-          org.apache.hadoop.fs.FileUtil.copy(fs, from, fs,
-            new org.apache.hadoop.fs.Path(dstRoot, side), false,
-            cat.sparkSession.sparkContext.hadoopConfiguration): Unit
-      }
+      GraftTableCatalog.copySidecars(cat.sparkSession, srcRoot, dstRoot)
       result(new StructType().add("version", LongType)
         .add("files_referenced", IntegerType), v, log.files(v).length)
     }

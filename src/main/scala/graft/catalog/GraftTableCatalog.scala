@@ -205,12 +205,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     val f = schemaFile(root)
     if (!fs.exists(f)) None
     else {
-      val in = fs.open(f)
-      val body = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-        new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
+      val body = LogStore.readString(fs, f)
       Some(DataType.fromJson(body).asInstanceOf[StructType])
     }
   }
@@ -365,12 +360,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
       if (log.partitionTransforms.nonEmpty) Seq.empty
       else log.currentVersion.map(log.partitionColumns).getOrElse(Seq.empty)
     } else {
-      val in = fs.open(f)
-      val body = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-        new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
+      val body = LogStore.readString(fs, f)
       org.json4s.jackson.JsonMethods.parse(body) match {
         case org.json4s.JArray(vs) => vs.collect { case org.json4s.JString(s) => s }
         case _ => Seq.empty
@@ -656,17 +646,28 @@ object GraftTableCatalog {
     val fs = HadoopFs.fs(spark, root)
     val f = new Path(root, "_props.json")
     if (!fs.exists(f)) return Map.empty
-    val in = fs.open(f)
-    val body = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-      new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
+    val body = LogStore.readString(fs, f)
     org.json4s.jackson.JsonMethods.parse(body) match {
       case org.json4s.JObject(fields) => fields.collect {
         case (k, org.json4s.JString(v)) => k -> v
       }.toMap
       case _ => Map.empty
+    }
+  }
+
+  /** Copy the root sidecars a table reads and evolves by (schema,
+    * column mapping, widening, TBLPROPERTIES) from `srcRoot` to
+    * `dstRoot`, so a replica or clone behaves exactly like its source
+    * (renamed columns included). Absent sidecars are skipped.
+    */
+  private[catalog] def copySidecars(spark: SparkSession, srcRoot: String,
+      dstRoot: String): Unit = {
+    val (srcFs, dstFs) = (HadoopFs.fs(spark, srcRoot), HadoopFs.fs(spark, dstRoot))
+    for (side <- Seq("_schema.json", "_colmeta.json", "_widen.json", "_props.json")) {
+      val from = new Path(srcRoot, side)
+      if (srcFs.exists(from))
+        org.apache.hadoop.fs.FileUtil.copy(srcFs, from, dstFs, new Path(dstRoot, side),
+          false, spark.sparkContext.hadoopConfiguration): Unit
     }
   }
 

@@ -274,12 +274,7 @@ object IcebergInterop {
       val sidecar = new Path(commitRoot, "_schema.json")
       if (!srcFs.exists(sidecar)) None
       else {
-        val in = srcFs.open(sidecar)
-        val body = try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-          new String(out.toByteArray, StandardCharsets.UTF_8)
-        } finally in.close()
+        val body = LogStore.readString(srcFs, sidecar)
         Some(org.apache.spark.sql.types.DataType.fromJson(body)
           .asInstanceOf[StructType])
       }
@@ -747,17 +742,8 @@ object IcebergInterop {
       table: String): com.fasterxml.jackson.databind.JsonNode = {
     val fs = HadoopFs.fs(spark, table)
     val metaDir = new Path(table, "metadata")
-    def slurp(p: Path): Array[Byte] = {
-      val in = fs.open(p)
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-        out.toByteArray
-      } finally in.close()
-    }
-    val hint = new String(slurp(new Path(metaDir, "version-hint.text")),
-      StandardCharsets.UTF_8).trim
-    mapper.readTree(slurp(new Path(metaDir, s"v$hint.metadata.json")))
+    val hint = LogStore.readString(fs, new Path(metaDir, "version-hint.text")).trim
+    mapper.readTree(LogStore.readBytes(fs, new Path(metaDir, s"v$hint.metadata.json")))
   }
 
   def readFileList(spark: SparkSession, table: String): Seq[String] =
@@ -785,14 +771,6 @@ object IcebergInterop {
   private[graft] def resolveFiles(spark: SparkSession,
       table: String): Seq[IceFile] = {
     val fs = HadoopFs.fs(spark, table)
-    def slurp(p: Path): Array[Byte] = {
-      val in = fs.open(p)
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-        out.toByteArray
-      } finally in.close()
-    }
     val metadata = loadMetadata(spark, table)
     val snapshotId = metadata.get("current-snapshot-id").asLong
     val snap = metadata.get("snapshots").elements().asScala
@@ -804,7 +782,7 @@ object IcebergInterop {
       // expose the interface directly and these files are metadata-small
       val tmp = java.io.File.createTempFile("graft_iceberg", ".avro")
       try {
-        java.nio.file.Files.write(tmp.toPath, slurp(p))
+        java.nio.file.Files.write(tmp.toPath, LogStore.readBytes(fs, p))
         val r = new DataFileReader[GenericRecord](tmp,
           new GenericDatumReader[GenericRecord]())
         try r.iterator().asScala.toSeq finally r.close()

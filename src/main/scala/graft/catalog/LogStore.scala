@@ -70,6 +70,17 @@ private[graft] object LogStore {
     }
   }
 
+  /** The whole content of `p`: the one read path for manifests, hints
+    * and sidecars.
+    */
+  def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes() finally in.close()
+  }
+
+  def readString(fs: FileSystem, p: Path): String =
+    new String(readBytes(fs, p), StandardCharsets.UTF_8)
+
   def write(fs: FileSystem, p: Path, content: Array[Byte]): Unit = {
     val out = fs.create(p, true)
     try out.write(content) finally out.close()

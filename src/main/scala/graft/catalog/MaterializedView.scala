@@ -183,12 +183,7 @@ object MaterializedView {
     val fs = HadoopFs.fs(spark, srcRoot)
     val p = new Path(srcRoot, "_mvs.json")
     if (!fs.exists(p)) return Seq.empty
-    val in = fs.open(p)
-    val body = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    val body = LogStore.readString(fs, p)
     org.json4s.jackson.JsonMethods.parse(body) match {
       case org.json4s.JArray(xs) => xs.collect { case org.json4s.JString(s) => s }
       case _ => Seq.empty
@@ -294,12 +289,7 @@ object MaterializedView {
     val p = new Path(mvRoot, "_mv.json")
     if (!fs.exists(p)) throw new java.io.FileNotFoundException(
       s"no materialized view under $mvRoot (missing _mv.json)")
-    val in = fs.open(p)
-    val body = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    val body = LogStore.readString(fs, p)
     org.json4s.jackson.JsonMethods.parse(body) match {
       case org.json4s.JObject(fields) =>
         val m = fields.toMap

@@ -223,11 +223,18 @@ object Stateful {
     * state work across cores instead of serializing 20 M rows through 4
     * stores (round-17 left this a constant; the 100x probe measured the
     * dedup key state-bound at 289 s). Partition count never changes
-    * values — state is hash-partitioned by key either way.
+    * values — state is hash-partitioned by key either way. Sized through
+    * the Hadoop FileSystem, so a URI or object-store landing dir counts
+    * its bytes like a local one; a missing dir or a plain file counts 0.
     */
   private def statePartitions(s: SparkSession, dir: String): Int = {
-    val bytes = Option(new java.io.File(dir).listFiles())
-      .map(_.filter(_.isFile).map(_.length()).sum).getOrElse(0L)
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = graft.catalog.HadoopFs.fs(s, dir)
+    val bytes =
+      try {
+        if (!fs.getFileStatus(path).isDirectory) 0L
+        else fs.listStatus(path).filter(_.isFile).map(_.getLen).sum
+      } catch { case _: java.io.FileNotFoundException => 0L }
     val cores = s.sparkContext.defaultParallelism
     math.max(4, math.min(cores, (bytes / (8L << 20)).toInt))
   }
