@@ -171,15 +171,15 @@ class AssetCatalog(spark: SparkSession, root: String) {
     * republishes atomically with a `#repsrc` cursor, and an in-sync table
     * costs one metadata read. A replica reader always sees a complete
     * version, never a half-written copy; at 100 TB a sync ships
-    * O(changed bytes), never O(table). Schema/column-mapping sidecars
-    * ride along so the replica reads and evolves exactly like the
-    * primary. Returns the table names in sync after the call.
+    * O(changed bytes), never O(table). The table descriptor rides along
+    * so the replica reads and evolves exactly like the primary. Returns
+    * the table names in sync after the call.
     */
   def replicate(secondaryRoot: String): Seq[String] = {
     val tables = listTables
     tables.foreach { t =>
       new CommitLog(spark, s"$secondaryRoot/$t").replicateFrom(log(t)): Unit
-      GraftTableCatalog.copySidecars(spark, path(t), s"$secondaryRoot/$t")
+      TableMeta.copy(spark, path(t), s"$secondaryRoot/$t")
     }
     tables
   }

@@ -1,6 +1,5 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField, StructType}
 
@@ -9,17 +8,17 @@ import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField, Struc
   * operation (no data-file rewrite), the same role Iceberg field ids and
   * Delta column mapping play in their formats.
   *
-  * The mapping rides the declared-schema sidecar (`_schema.json`) as
-  * per-field metadata under [[PhysicalKey]]: a field whose logical name
-  * diverged from the name stored in the parquet files carries the
-  * physical name it still reads/writes under. Tables that never renamed
-  * have no metadata and behave exactly as before (physical == logical).
+  * The mapping rides the declared schema ([[TableMeta]]) as per-field
+  * metadata under [[PhysicalKey]]: a field whose logical name diverged
+  * from the name stored in the parquet files carries the physical name
+  * it still reads/writes under. Tables that never renamed have no
+  * metadata and behave exactly as before (physical == logical).
   *
-  * A second tiny sidecar (`_colmeta.json`) remembers physical names that
-  * were EVER dropped plus a monotonic counter, so a column re-added under
-  * a dropped (or renamed-away) name binds to a FRESH physical name
-  * instead of resurrecting the old column's bytes — the field-id
-  * discipline, spelled with unique physical names.
+  * The same descriptor remembers physical names that were EVER dropped
+  * plus a monotonic counter, so a column re-added under a dropped (or
+  * renamed-away) name binds to a FRESH physical name instead of
+  * resurrecting the old column's bytes — the field-id discipline,
+  * spelled with unique physical names.
   *
   * Reference grounding: the reference's mutable registries let callers
   * update source-system schemas in place
@@ -62,39 +61,4 @@ private[graft] object ColumnMapping {
   def withPhysical(f: StructField, physical: String): StructField =
     f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
       .putString(PhysicalKey, physical).build())
-
-  // ---- dropped-name registry sidecar ------------------------------------
-
-  /** (droppedPhysicalNames, nextSuffixSeq) from `_colmeta.json`. */
-  def readMeta(fs: FileSystem, root: Path): (Set[String], Int) = {
-    val f = new Path(root, "_colmeta.json")
-    if (!fs.exists(f)) (Set.empty, 0)
-    else {
-      val body = LogStore.readString(fs, f)
-      org.json4s.jackson.JsonMethods.parse(body) match {
-        case org.json4s.JObject(fields) =>
-          val m = fields.toMap
-          val dropped = m.get("dropped") match {
-            case Some(org.json4s.JArray(vs)) =>
-              vs.collect { case org.json4s.JString(s) => s }.toSet
-            case _ => Set.empty[String]
-          }
-          val seq = m.get("seq") match {
-            case Some(org.json4s.JInt(n)) => n.toInt
-            case _ => 0
-          }
-          (dropped, seq)
-        case _ => (Set.empty, 0)
-      }
-    }
-  }
-
-  def writeMeta(fs: FileSystem, root: Path, dropped: Set[String], seq: Int): Unit = {
-    import org.json4s.JsonDSL._
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(
-        ("dropped" -> dropped.toSeq.sorted) ~ ("seq" -> seq)))
-    LogStore.write(fs, new Path(root, "_colmeta.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
 }

@@ -143,24 +143,90 @@ object CommitLog {
         ("col" -> column) ~ ("ms" -> retainMs)))
   }
 
-  /** Per-table-root monitors serializing sidecar read-merge-write cycles
-    * ([[CommitLog.setProperties]]) within this JVM, so concurrent
+  /** Per-table-root monitors serializing descriptor read-modify-write
+    * cycles ([[TableMeta.update]]) within this JVM, so concurrent
     * property merges on one table never lose each other's keys. (Cross-
     * process writers are covered by the temp-file + atomic-rename
-    * publish — a reader can never observe a torn sidecar — and last-
-    * writer-wins on the merged map, the same posture as TBLPROPERTIES
-    * DDL everywhere.)
+    * publish — a reader can never observe a torn descriptor — and last-
+    * writer-wins on the merged definition, the same posture as
+    * TBLPROPERTIES DDL everywhere.)
     */
   private[catalog] val sidecarLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Monitor for a table root's sidecar writes, keyed by the root's
+  /** Monitor for a table root's descriptor writes, keyed by the root's
     * normalized URI path so the CommitLog and catalog-DDL surfaces
     * contend on the same lock.
     */
   private[catalog] def sidecarLock(root: String): Object =
     sidecarLocks.computeIfAbsent(
       new org.apache.hadoop.fs.Path(root).toUri.getPath, _ => new Object)
+
+  /** One [[CommitLog.analyze]] result: per-column (ndv, nulls), equi-
+    * height histograms (binHeight, endpoints, perIntervalNdv), numeric
+    * (min, max) and string (min, max, base64 count-min sketch). Sketches
+    * decode only when [[strings]] is read.
+    */
+  private[catalog] final case class Analyzed(version: Long, rows: Long,
+      cols: Map[String, (Long, Long)],
+      hists: Map[String, (Double, Seq[Double], Seq[Long])],
+      minMax: Map[String, (Double, Double)],
+      sketches: Map[String, (String, String, String)]) {
+    lazy val strings: Map[String, (String, String, org.apache.spark.util.sketch.CountMinSketch)] =
+      sketches.map { case (c, (lo, hi, b64)) =>
+        c -> ((lo, hi, org.apache.spark.util.sketch.CountMinSketch.readFrom(
+          new java.io.ByteArrayInputStream(java.util.Base64.getDecoder.decode(b64)))))
+      }
+  }
+
+  private[catalog] object Analyzed {
+    import org.json4s._
+
+    def parse(body: String): Option[Analyzed] =
+      org.json4s.jackson.JsonMethods.parse(body) match {
+        case j: JObject => (j \ "version", j \ "rows") match {
+          case (JInt(v), JInt(rows)) =>
+            val cols: Seq[(String, Map[String, JValue])] = j \ "columns" match {
+              case JObject(cf) => cf.collect { case (c, JObject(cv)) => c -> cv.toMap }
+              case _ => Nil
+            }
+            def dbl(x: JValue): Option[Double] = x match {
+              case JDouble(d) => Some(d)
+              case JInt(n) => Some(n.toDouble)
+              case JDecimal(d) => Some(d.toDouble)
+              case _ => None
+            }
+            def long(m: Map[String, JValue], k: String): Long =
+              m.get(k).collect { case JInt(n) => n.toLong }.getOrElse(0L)
+            def str(m: Map[String, JValue], k: String): Option[String] =
+              m.get(k).collect { case JString(x) => x }
+            val hists = cols.collect { case (c, m) if m.contains("eps") =>
+              val eps = m.get("eps").collect { case JArray(vs) => vs.flatMap(dbl) }
+                .getOrElse(Nil)
+              val indv = m.get("indv").collect { case JArray(vs) => vs.collect {
+                case JInt(x) => x.toLong
+                case JDouble(x) => x.toLong
+              } }.getOrElse(Nil)
+              val height =
+                if (indv.isEmpty) 0.0 else (rows.toLong - long(m, "nulls")).toDouble / indv.size
+              c -> ((height, eps: Seq[Double], indv: Seq[Long]))
+            }.filter { case (_, (_, eps, indv)) => eps.size == indv.size + 1 && indv.nonEmpty }
+            Some(Analyzed(v.toLong, rows.toLong,
+              cols.map { case (c, m) => c -> ((long(m, "ndv"), long(m, "nulls"))) }.toMap,
+              hists.toMap,
+              cols.flatMap { case (c, m) =>
+                for (lo <- m.get("min").flatMap(dbl); hi <- m.get("max").flatMap(dbl))
+                  yield c -> ((lo, hi))
+              }.toMap,
+              cols.flatMap { case (c, m) =>
+                for (lo <- str(m, "smin"); hi <- str(m, "smax"); cms <- str(m, "cms"))
+                  yield c -> ((lo, hi, cms))
+              }.toMap))
+          case _ => None
+        }
+        case _ => None
+      }
+  }
 
   /** What one attempt of [[CommitLog.headRace]] decided: end the race
     * with `result` and publish nothing, or publish `lines` at head+1 and,
@@ -183,6 +249,14 @@ object CommitLog {
   *   <root>/_commits/00000003.manifest              // one line per live file
   *   <root>/_tmp/...                                // staging, never read
   * }}}
+  *
+  * Three root files stay outside the manifest, each for its reason:
+  *  - `_table.json` ([[TableMeta]]): declarations made before the first
+  *    commit and DDL that publishes no version (declared schema, column
+  *    mapping, partitioning, TBLPROPERTIES);
+  *  - `_stats.json` ([[analyze]]): estimates, never correctness inputs;
+  *  - `_fence.json` ([[fenceEpoch]]): it must hold for the root at every
+  *    version, including ones published after it.
   *
   * The manifest IS the table: a version's manifest lists exactly the pool
   * files that make up that snapshot. Three line types: `<name>[\tstats]`
@@ -517,7 +591,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * the manifest, and replaces/compactions carry it
     * ([[replaceCarried]]). Absent on tables that never evolved — the
     * overwhelmingly common case pays zero read overhead. Consumers:
-    * [[graft.catalog.GraftTable.schema]] widens the declared sidecar
+    * [[graft.catalog.GraftTable.schema]] widens the declared
     * schema with these columns so the SQL surface (INSERT, MERGE, the
     * `.changes` feed's pinned schema) sees the evolution a library-level
     * evolve performed.
@@ -542,7 +616,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * files store the derived `_p_*` layout columns, so the headerless
     * fall-back schema must shed them — a header that recorded a hidden
     * column would EXPOSE it through `GraftTable.schema` (the SQL
-    * surface appends evolved-header extras to the declared sidecar) and
+    * surface appends evolved-header extras to the declared schema) and
     * through the change feed's pinned schema, breaking the
     * hidden-partition contract every other read surface keeps.
     */
@@ -610,16 +684,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * partition spec of record (`#ptspec:`). The ptspec carry keeps the
     * spec of record IN THE MANIFEST across maintenance replaces
     * (compact's tombstoned fold, optimize, fast-forward): dropping it
-    * would demote the spec back to the write-behind `_ptspec.json`
-    * sidecar, re-opening the crash window the header closes (a
-    * transform REPLACE whose sidecar write crashed leaves the OLD spec
-    * in the sidecar — a later compact must not resurrect it). A
-    * transform replace that DECLARES a new spec supersedes the carried
-    * line via `extraHeader` ([[commitTransformed]]); the `#partition:`
-    * raw-layout header is intentionally NOT carried — each replace
-    * re-declares its own physical layout. Everything else (cursors,
-    * clone provenance) is re-derived or re-declared by the rewriting
-    * operation itself.
+    * would demote the spec back to the descriptor's write-behind copy,
+    * re-opening the crash window the header closes (a transform REPLACE
+    * whose descriptor write crashed leaves the OLD spec there — a later
+    * compact must not resurrect it). A transform replace that DECLARES a
+    * new spec supersedes the carried line via `extraHeader`
+    * ([[commitTransformed]]); the `#partition:` raw-layout header is
+    * intentionally NOT carried — each replace re-declares its own
+    * physical layout. Everything else (cursors, clone provenance) is
+    * re-derived or re-declared by the rewriting operation itself.
     */
   private def replaceCarried(prev: Seq[String]): Seq[String] =
     prev.filter(l => l.startsWith("#txn:") || l.startsWith("#check:") ||
@@ -936,24 +1009,30 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def read(): DataFrame = {
     val v = committedHead()
-    val lines = manifestLines(v)   // ONE manifest read serves rows,
-    val df = readLines(lines)      // dv names, AND the transform spec
+    // ONE manifest read and ONE descriptor read serve rows, dv names,
+    // AND the transform spec
+    val lines = manifestLines(v)
+    val meta = tableMeta
+    val df = readLines(lines, meta)
     // hidden-partition transforms: the derived `_p_*` layout columns are
     // internal — the public snapshot never shows them
-    val hidden = transformsFor(lines).map(_.derivedName).filter(df.columns.contains)
+    val hidden = transformsFor(lines, meta).map(_.derivedName).filter(df.columns.contains)
     if (hidden.isEmpty) df else df.drop(hidden: _*)
   }
 
   def readVersion(v: Long): DataFrame = readLines(manifestLines(v))
 
-  private def readLines(lines: Seq[String]): DataFrame = {
+  private def readLines(lines: Seq[String], meta: TableMeta = tableMeta): DataFrame = {
     val names = dataNamesOf(lines)
     if (names.isEmpty) {
       // a rewrite can legally commit an empty table (e.g. delete-all);
       // an empty-schema frame is the only honest value without a stored schema
       spark.emptyDataFrame
-    } else readFiles(names, dvFrameOf(dvNamesOf(lines)), partTypesOf(lines))
+    } else readFiles(names, dvFrameOf(dvNamesOf(lines)), partTypesOf(lines), meta)
   }
+
+  /** This table's descriptor ([[TableMeta]]), read fresh on every call. */
+  private def tableMeta: TableMeta = TableMeta.read(hfs, tableRoot)
 
   // ---- merge-on-read deletion vectors ------------------------------------
 
@@ -981,55 +1060,43 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   private def isAbsoluteName(n: String): Boolean =
     n.startsWith("/") || n.contains("://")
 
-  /** Parquet reader for pool files: basePath (hive partition-column
-    * rehydration) only when every name is dataDir-relative — an
-    * absolute shallow-clone reference lives outside this table's root,
-    * where a basePath that is not an ancestor is a hard error (clones
-    * are always unpartitioned, so basePath is a no-op for them anyway).
+  /** The pool files `names` as one parquet relation. Reads of a
+    * type-WIDENED table ([[TableMeta.widened]], set by ALTER COLUMN ...
+    * TYPE) pass the declared schema: old files keep their narrow physical
+    * types, so a merged-schema read would die on the int-vs-bigint
+    * conflict, while an explicit schema lets the parquet readers promote
+    * per file (int32→int64, float→double, decimal widening — native in
+    * both the vectorized and row-based readers). Never-widened tables
+    * read with mergeSchema. basePath (hive partition-column rehydration)
+    * applies only when every name is dataDir-relative — an absolute
+    * shallow-clone reference lives outside this table's root, where a
+    * basePath that is not an ancestor is a hard error (clones are always
+    * unpartitioned, so basePath is a no-op for them anyway).
     */
-  /** Physical read schema for a type-WIDENED table (`_widen.json` marker
-    * beside the log, written by ALTER COLUMN ... TYPE): old files keep
-    * their narrow physical types, so a merged-schema read would die on
-    * the int-vs-bigint conflict. Passing the declared schema explicitly
-    * lets the parquet readers promote per file (int32→int64,
-    * float→double, decimal widening — native in both the vectorized and
-    * row-based readers). None on never-widened tables: their reads stay
-    * byte-identical to the historical mergeSchema path.
-    */
-  private def widenedReadSchema: Option[org.apache.spark.sql.types.StructType] =
-    try {
-      if (!hfs.exists(new Path(tableRoot, "_widen.json"))) None
-      else {
-        val sf = new Path(tableRoot, "_schema.json")
-        if (!hfs.exists(sf)) None
-        else {
-          val body = LogStore.readString(hfs, sf)
-          Some(ColumnMapping.physicalSchema(
-            org.apache.spark.sql.types.DataType.fromJson(body)
-              .asInstanceOf[org.apache.spark.sql.types.StructType]))
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def poolReader(names: Seq[String]): org.apache.spark.sql.DataFrameReader = {
-    val r = widenedReadSchema match {
+  private def pool(names: Seq[String], meta: TableMeta = tableMeta): DataFrame = {
+    val r = meta.widenedReadSchema match {
       case Some(s) => spark.read.schema(s)
       case None    => spark.read.option("mergeSchema", "true")
     }
-    if (names.exists(isAbsoluteName)) r else r.option("basePath", dataDir.toString)
+    (if (names.exists(isAbsoluteName)) r else r.option("basePath", dataDir.toString))
+      .parquet(names.map(n => new Path(dataDir, n).toString): _*)
   }
 
-  /** Data-file read annotated with tombstone join keys: each row carries
+  /** A pool relation annotated with tombstone join keys: each row carries
     * its pool file LEAF name and its stable row position within that
     * file (leaves are uuid-unique across partition subdirs).
     */
-  private def withPos(names: Seq[String]): DataFrame =
-    poolReader(names)
-      .parquet(names.map(n => new Path(dataDir, n).toString): _*)
-      .select(col("*"),
-        org.apache.spark.sql.functions.substring_index(
-          col("_metadata.file_path"), "/", -1).as(DvKeys.head),
-        col("_metadata.row_index").as(DvKeys.last))
+  private def withPos(rel: DataFrame): DataFrame =
+    rel.select(col("*"),
+      org.apache.spark.sql.functions.substring_index(
+        col("_metadata.file_path"), "/", -1).as(DvKeys.head),
+      col("_metadata.row_index").as(DvKeys.last))
+
+  /** `names` with tombstone join keys, minus the rows `dv` tombstones. */
+  private def visibleWithPos(names: Seq[String], dv: Option[DataFrame]): DataFrame = {
+    val rows = withPos(pool(names))
+    dv.fold(rows)(rows.join(_, DvKeys, "left_anti"))
+  }
 
   /** Stats-tag type per partition column of a manifest (long / double /
     * string), harvested from the first file line carrying a bound for
@@ -1074,16 +1141,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * longer in `names` simply match nothing. No DVs = the plain scan.
     */
   private def readFiles(names: Seq[String], dv: Option[DataFrame],
-      partTypes: Map[String, String] = Map.empty): DataFrame = {
-    val base = dv match {
-      case None => poolReader(names)
-        .parquet(names.map(n => new Path(dataDir, n).toString): _*)
-      case Some(d) =>
-        val dataCols = poolReader(names)
-          .parquet(names.map(n => new Path(dataDir, n).toString): _*).columns.toSeq
-        withPos(names).join(d, DvKeys, "left_anti")
-          .select(dataCols.map(col): _*)
-    }
+      partTypes: Map[String, String] = Map.empty,
+      meta: TableMeta = tableMeta): DataFrame = {
+    val rel = pool(names, meta)
+    val base = dv.fold(rel)(d =>
+      withPos(rel).join(d, DvKeys, "left_anti").select(rel.columns.map(col).toIndexedSeq: _*))
     castParts(base, partTypes)
   }
 
@@ -1646,9 +1708,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // a transform-partitioned source's layout declaration rides along —
     // without it the replica would EXPOSE the hidden `_p_*` columns and
     // lose its transform pruning
-    if (src.hfs.exists(src.ptspecFile))
-      org.apache.hadoop.fs.FileUtil.copy(src.hfs, src.ptspecFile, hfs,
-        ptspecFile, false, hfs.getConf): Unit
+    val srcTransforms = src.tableMeta.transforms
+    if (srcTransforms.nonEmpty) writePtspec(srcTransforms)
     // beside the cursor, record WHICH source versions this sync folds
     // (`#repmap:<lo>-<hi>`) and the source's canonical identity
     // (`#reproot:`): the translation table a failed-over streaming
@@ -1664,6 +1725,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
 
   // ---- replica promotion & generation fencing ------------------------------
 
+  // a root file, not a manifest header: the fence must hold for this root
+  // at every version, including versions published after it landed
   private val fenceFile = new Path(tableRoot, "_fence.json")
 
   /** Failover generation carried by a manifest (`#gen:` header): bumped
@@ -2076,14 +2139,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   // ---- hidden partition transforms -----------------------------------------
   //
   // Iceberg-style hidden partitioning on the commit log: a declared
-  // transform (`_ptspec.json` sidecar) derives a `_p_*` hive partition
+  // transform (`#ptspec:` header) derives a `_p_*` hive partition
   // column at write time, [[read]] hides it, and [[readWhere]] prunes
   // FILES from predicates on the SOURCE column — the user never knows
   // the layout exists. Pruning rides the manifest's per-file stats
   // (partition values land as exact min=max bounds at stage time), so
   // it is pure driver-side metadata: zero file opens for skipped files.
-
-  private val ptspecFile = new Path(tableRoot, "_ptspec.json")
 
   private val TransformRe = "^\\s*([A-Za-z]+)\\s*\\(([^)]*)\\)\\s*$".r
 
@@ -2094,7 +2155,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   private def parseTransform(df: DataFrame, s: String): PartitionTransform =
     parseTransformOn(df.schema, s)
 
-  private def parseTransformOn(schema: org.apache.spark.sql.types.StructType,
+  private[catalog] def parseTransformOn(schema: org.apache.spark.sql.types.StructType,
       s: String): PartitionTransform =
     s match {
       case TransformRe(kind0, args) =>
@@ -2132,8 +2193,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * lands in the same atomic publish as the (re-)laid-out data
     * ([[commitTransformed]]), so spec and layout can never disagree,
     * even across a crash mid-commit on a transform REPLACE. The
-    * `_ptspec.json` sidecar is a write-behind cache and the pre-header
-    * format's home: consulted only when no header exists at the head.
+    * descriptor's transforms ([[TableMeta]]) are a write-behind copy and
+    * the home of a layout declared before the first commit: consulted
+    * only when no header exists at the head.
     */
   def partitionTransforms: Seq[PartitionTransform] =
     transformsFor(
@@ -2141,40 +2203,23 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       catch { case scala.util.control.NonFatal(_) => Seq.empty })
 
   /** Transform spec for a manifest already in hand — callers on the read
-    * path pass their own lines, so the spec costs ZERO extra metadata
-    * reads (head discovery stays O(1) reads).
+    * path pass their own lines (and descriptor), so the spec costs no
+    * extra manifest read (head discovery stays O(1) reads).
     */
-  private def transformsFor(lines: Seq[String]): Seq[PartitionTransform] =
+  private def transformsFor(lines: Seq[String],
+      meta: => TableMeta = tableMeta): Seq[PartitionTransform] =
     lines.find(_.startsWith("#ptspec:")) match {
-      case Some(l) => parsePtspecJson(l.stripPrefix("#ptspec:"))
-      case None =>
-        if (!hfs.exists(ptspecFile)) Seq.empty
-        else {
-          parsePtspecJson(LogStore.readString(hfs, ptspecFile))
-        }
+      case Some(l) => TableMeta.transformsOf(
+        org.json4s.jackson.JsonMethods.parse(l.stripPrefix("#ptspec:")))
+      case None => meta.transforms
     }
 
-  private def parsePtspecJson(txt: String): Seq[PartitionTransform] =
-    org.json4s.jackson.JsonMethods.parse(txt) match {
-      case org.json4s.JArray(items) => items.map { j =>
-        implicit val fmt: org.json4s.Formats = org.json4s.DefaultFormats
-        PartitionTransform(
-          (j \ "kind").extract[String], (j \ "src").extract[String],
-          (j \ "srcType").extract[String], (j \ "arg").extract[Long])
-      }
-      case _ => Seq.empty
-    }
-
-  private def ptspecJson(ts: Seq[PartitionTransform]): String = {
-    import org.json4s.JsonDSL._
+  private def ptspecJson(ts: Seq[PartitionTransform]): String =
     org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(ts.map(t =>
-        ("kind" -> t.kind) ~ ("src" -> t.src) ~ ("srcType" -> t.srcType) ~
-          ("arg" -> t.arg))))
-  }
+      org.json4s.jackson.JsonMethods.render(TableMeta.transformsJson(ts)))
 
   private def writePtspec(ts: Seq[PartitionTransform]): Unit =
-    LogStore.write(hfs, ptspecFile, ptspecJson(ts).getBytes(StandardCharsets.UTF_8))
+    TableMeta.update(hfs, tableRoot)(_.copy(transforms = ts)): Unit
 
   /** Declare hidden-partition transforms for a (possibly still empty)
     * table from its schema — the catalog's `CREATE TABLE ...
@@ -2257,7 +2302,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val ver = commitPartitioned(derived.repartition(names.map(n => col(s"`$n`")): _*),
       names, replace, txn,
       extraHeader = Some("#ptspec:" + ptspecJson(parsed)))
-    // sidecar = write-behind cache (pre-header readers + cheap probes);
+    // descriptor = write-behind copy (pre-commit declarations);
     // written only AFTER the data publish succeeds, so a failed commit
     // can never leave a NEW spec declared over OLD-layout data — and if
     // THIS write crashes, the header above is still the spec of record
@@ -2910,7 +2955,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   /** Maintenance knob resolution: the SESSION conf wins (operator
-    * override), else the table's own TBLPROPERTIES sidecar — the
+    * override), else the table's own TBLPROPERTIES (its descriptor) — the
     * declared-once-on-the-table posture: a retention or compaction
     * policy set via `ALTER TABLE ... SET TBLPROPERTIES` is honored by
     * EVERY writer session, not just the one that remembered to set a
@@ -2919,11 +2964,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * best-effort by contract).
     */
   private lazy val tableProps: Map[String, String] =
-    try GraftTableCatalog.readProps(spark, tableRoot)
+    try tableMeta.props
     catch { case scala.util.control.NonFatal(_) => Map.empty }
 
-  /** Declare (merge into) this table's `TBLPROPERTIES` sidecar
-    * (`_props.json` — the same file the V2 catalog's `ALTER TABLE ...
+  /** Declare (merge into) this table's `TBLPROPERTIES` (the descriptor's
+    * props, [[TableMeta]] — what the V2 catalog's `ALTER TABLE ...
     * SET TBLPROPERTIES` writes), for tables addressed by root rather
     * than by catalog identifier. The table-scoped way to declare
     * maintenance policies ([[maintenanceConf]]): a knob set here is
@@ -2933,21 +2978,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * maintenance-triggering publish, or use a fresh handle.
     */
   def setProperties(props: Map[String, String]): Unit =
-    // the read-merge-write cycle serializes per table root within this
-    // JVM (concurrent merges must not lose each other's keys) and the
-    // publish is temp-file + atomic rename (a racing reader must never
-    // parse a torn sidecar and silently latch empty props for its
-    // handle's lifetime)
-    CommitLog.sidecarLock(tableQualifiedRoot).synchronized {
-      val merged = (try GraftTableCatalog.readProps(spark, tableRoot)
-        catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] }) ++ props
-      LogStore.writeAtomic(hfs, new Path(tableRoot, "_props.json"),
-        org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(
-            org.json4s.JObject(merged.toList.sortBy(_._1).map {
-              case (k, v) => k -> org.json4s.JString(v)
-            }))).getBytes(StandardCharsets.UTF_8))
-    }
+    TableMeta.update(hfs, tableRoot)(m => m.copy(props = m.props ++ props)): Unit
 
   private def maintenanceConf(key: String, default: String): String =
     spark.conf.getOption(key).orElse(tableProps.get(key)).getOrElse(default)
@@ -3227,9 +3258,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // instead of drifting with path inference over the read set.
         val byLeaf = candidates.map(n => leafOf(n) -> n).toMap
         collectNames(
-          castParts(poolReader(candidates)
-            .parquet(candidates.map(n => new Path(dataDir, n).toString): _*),
-            partTypes)
+          castParts(pool(candidates), partTypes)
             .withColumn("_graft_file", input_file_name())
             .join(keys, Seq(keyCol), "semi"),
           "_graft_file", "findTouched")
@@ -3497,8 +3526,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val touchedLeaves: Set[String] =
         if (names.isEmpty) Set.empty
         else collectNames(
-          castParts(dv.fold(withPos(names))(d =>
-            withPos(names).join(d, DvKeys, "left_anti")), partTypes)
+          castParts(visibleWithPos(names, dv), partTypes)
             .filter(cond),
           DvKeys.head, "rewriteWhere")
       val touched = names.filter(n => touchedLeaves(leafOf(n))).toSet
@@ -3566,8 +3594,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val touchedLeaves: Set[String] =
         if (names.isEmpty) Set.empty
         else collectNames(
-          castParts(dv.fold(withPos(names))(d =>
-            withPos(names).join(d, DvKeys, "left_anti")), partTypes)
+          castParts(visibleWithPos(names, dv), partTypes)
             .filter(cond),
           DvKeys.head, "updateWhere")
       val touched = names.filter(n => touchedLeaves(leafOf(n))).toSet
@@ -3634,8 +3661,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val names = dataNamesOf(lines)
       if (names.isEmpty) Settle(v)
       else {
-        val visible = dvFrameOf(dvNamesOf(lines)).fold(withPos(names))(d =>
-          withPos(names).join(d, DvKeys, "left_anti"))
+        val visible = visibleWithPos(names, dvFrameOf(dvNamesOf(lines)))
         // matched rows carry their (file, pos) keys AND their data columns:
         // one frame feeds both the tombstones and the updated copies (the
         // deterministic filter + stable row_index make the two passes agree).
@@ -3694,8 +3720,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val staged =
         if (names.isEmpty) Seq.empty
         else {
-          val visible = dvFrameOf(dvNamesOf(lines)).fold(withPos(names))(d =>
-            withPos(names).join(d, DvKeys, "left_anti"))
+          val visible = visibleWithPos(names, dvFrameOf(dvNamesOf(lines)))
           stageToPool(visible.filter(coalesce(cond, lit(false)))
             .select(DvKeys.map(col): _*), "deleteWhereMoR")
         }
@@ -3735,8 +3760,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       }
     if (candidates.isEmpty) Seq.empty
     else {
-      val visible = dvFrameOf(dvNamesOf(lines)).fold(withPos(candidates))(d =>
-        withPos(candidates).join(d, DvKeys, "left_anti"))
+      val visible = visibleWithPos(candidates, dvFrameOf(dvNamesOf(lines)))
       stageToPool(visible.join(keys, Seq(keyCol), "semi")
         .select(DvKeys.map(col): _*), op)
     }
@@ -4221,12 +4245,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val to = files(toV).toSet
     val fromDvN = dvFiles(fromV).toSet
     val toDvN = dvFiles(toV).toSet
-    def dvOf(ns: Set[String]): Option[DataFrame] =
-      if (ns.isEmpty) None
-      else Some(spark.read.parquet(ns.toSeq.sorted
-        .map(n => new Path(dataDir, n).toString): _*).select(DvKeys.map(col): _*))
-    val fromDv = dvOf(fromDvN)
-    val toDv = dvOf(toDvN)
+    val fromDv = dvFrameOf(fromDvN.toSeq.sorted)
+    val toDv = dvFrameOf(toDvN.toSeq.sorted)
     val added = (to -- from).toSeq.sorted
     val removed = (from -- to).toSeq.sorted
     val common = from.intersect(to)
@@ -4253,11 +4273,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         .intersect(common).toSeq.sorted
       val effective = stillDead.fold(d)(sd => d.join(sd, DvKeys, "left_anti"))
       if (targets.isEmpty) None
-      else Some(withPos(targets).join(effective, DvKeys, "semi")
+      else Some(withPos(pool(targets)).join(effective, DvKeys, "semi")
         .drop(DvKeys: _*).withColumn("_change_type", lit(tag)))
     }.flatten
-    val newDvDeletes = dvDiffRows(dvOf(toDvN -- fromDvN), fromDv, "delete")
-    val droppedDvInserts = dvDiffRows(dvOf(fromDvN -- toDvN), toDv, "insert")
+    val newDvDeletes = dvDiffRows(dvFrameOf((toDvN -- fromDvN).toSeq.sorted), fromDv, "delete")
+    val droppedDvInserts = dvDiffRows(dvFrameOf((fromDvN -- toDvN).toSeq.sorted), toDv, "insert")
     val parts = fileParts ++ newDvDeletes.toSeq ++ droppedDvInserts.toSeq
     if (parts.isEmpty)
       readVersion(toV).withColumn("_change_type", lit("insert")).limit(0)
@@ -4577,162 +4597,42 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     (v, cols.size)
   }
 
-  /** The `_stats.json` sidecar, if [[analyze]] ever ran:
-    * (analyzedVersion, rows, col → (ndv, nullCount)).
+  /** The `_stats.json` estimates of the last [[analyze]], parsed once;
+    * None when ANALYZE never ran. The four accessors below project it.
     */
-  def analyzedStats(): Option[(Long, Long, Map[String, (Long, Long)])] = {
+  private[catalog] def analyzed(): Option[CommitLog.Analyzed] = {
     val f = new Path(tableRoot, "_stats.json")
-    if (!hfs.exists(f)) None
-    else {
-      val body = LogStore.readString(hfs, f)
-      org.json4s.jackson.JsonMethods.parse(body) match {
-        case org.json4s.JObject(fields) =>
-          val m = fields.toMap
-          for {
-            org.json4s.JInt(v) <- m.get("version")
-            org.json4s.JInt(r) <- m.get("rows")
-          } yield {
-            val cols = m.get("columns") match {
-              case Some(org.json4s.JObject(cf)) => cf.collect {
-                case (c, org.json4s.JObject(cv)) =>
-                  val cm = cv.toMap
-                  def num(k: String) = cm.get(k).collect {
-                    case org.json4s.JInt(n) => n.toLong }.getOrElse(0L)
-                  c -> (num("ndv"), num("nulls"))
-              }.toMap
-              case _ => Map.empty[String, (Long, Long)]
-            }
-            (v.toLong, r.toLong, cols)
-          }
-        case _ => None
-      }
-    }
+    if (!hfs.exists(f)) None else CommitLog.Analyzed.parse(LogStore.readString(hfs, f))
   }
 
-  /** Equi-height histograms from the `_stats.json` sidecar, if the last
-    * [[analyze]] harvested them:
+  /** (analyzedVersion, rows, col → (ndv, nullCount)). */
+  def analyzedStats(): Option[(Long, Long, Map[String, (Long, Long)])] =
+    analyzed().map(a => (a.version, a.rows, a.cols))
+
+  /** Equi-height histograms, if the last [[analyze]] harvested them:
     * (analyzedVersion, col → (binHeight, endpoints, perIntervalNdv)).
     * Height = non-null rows / bins, the catalyst equi-height contract.
     */
-  def analyzedHistograms(): Option[(Long, Map[String, (Double, Seq[Double], Seq[Long])])] = {
-    val f = new Path(tableRoot, "_stats.json")
-    if (!hfs.exists(f)) return None
-    val body = LogStore.readString(hfs, f)
-    org.json4s.jackson.JsonMethods.parse(body) match {
-      case org.json4s.JObject(fields) =>
-        val m = fields.toMap
-        for {
-          org.json4s.JInt(v) <- m.get("version")
-          org.json4s.JInt(rows) <- m.get("rows")
-        } yield {
-          val hists = m.get("columns") match {
-            case Some(org.json4s.JObject(cf)) => cf.collect {
-              case (c, org.json4s.JObject(cv)) if cv.exists(_._1 == "eps") =>
-                val cm = cv.toMap
-                val eps = cm.get("eps") match {
-                  case Some(org.json4s.JArray(vs)) => vs.collect {
-                    case org.json4s.JDouble(x) => x
-                    case org.json4s.JInt(x) => x.toDouble
-                    case org.json4s.JDecimal(x) => x.toDouble
-                  }
-                  case _ => Nil
-                }
-                val indv = cm.get("indv") match {
-                  case Some(org.json4s.JArray(vs)) => vs.collect {
-                    case org.json4s.JInt(x) => x.toLong
-                    case org.json4s.JDouble(x) => x.toLong
-                  }
-                  case _ => Nil
-                }
-                val nulls = cm.get("nulls").collect {
-                  case org.json4s.JInt(n) => n.toLong }.getOrElse(0L)
-                val height =
-                  if (indv.isEmpty) 0.0
-                  else (rows.toLong - nulls).toDouble / indv.size
-                c -> ((height, eps: Seq[Double], indv: Seq[Long]))
-            }.filter { case (_, (_, eps, indv)) =>
-              eps.size == indv.size + 1 && indv.nonEmpty }.toMap
-            case _ => Map.empty[String, (Double, Seq[Double], Seq[Long])]
-          }
-          (v.toLong, hists)
-        }
-      case _ => None
-    }
-  }
+  def analyzedHistograms(): Option[(Long, Map[String, (Double, Seq[Double], Seq[Long])])] =
+    analyzed().map(a => (a.version, a.hists))
 
-  /** Numeric-column min/max (as doubles) from `_stats.json`:
-    * (analyzedVersion, col → (min, max)). Served beside NDV so catalyst
-    * range intersection works — a numeric join key with no range is a
-    * NullValueInterval and the whole join estimates to zero.
+  /** Numeric-column min/max (as doubles): (analyzedVersion, col → (min,
+    * max)). Served beside NDV so catalyst range intersection works — a
+    * numeric join key with no range is a NullValueInterval and the whole
+    * join estimates to zero.
     */
-  def analyzedMinMax(): Option[(Long, Map[String, (Double, Double)])] = {
-    val f = new Path(tableRoot, "_stats.json")
-    if (!hfs.exists(f)) return None
-    val body = LogStore.readString(hfs, f)
-    org.json4s.jackson.JsonMethods.parse(body) match {
-      case org.json4s.JObject(fields) =>
-        val m = fields.toMap
-        for (org.json4s.JInt(v) <- m.get("version")) yield {
-          def dbl(j: org.json4s.JValue): Option[Double] = j match {
-            case org.json4s.JDouble(x) => Some(x)
-            case org.json4s.JInt(x) => Some(x.toDouble)
-            case org.json4s.JDecimal(x) => Some(x.toDouble)
-            case _ => None
-          }
-          val mm = m.get("columns") match {
-            case Some(org.json4s.JObject(cf)) => cf.flatMap {
-              case (c, org.json4s.JObject(cv)) =>
-                val cm = cv.toMap
-                for {
-                  lo <- cm.get("min").flatMap(dbl)
-                  hi <- cm.get("max").flatMap(dbl)
-                } yield c -> ((lo, hi))
-              case _ => None
-            }.toMap
-            case _ => Map.empty[String, (Double, Double)]
-          }
-          (v.toLong, mm)
-        }
-      case _ => None
-    }
-  }
+  def analyzedMinMax(): Option[(Long, Map[String, (Double, Double)])] =
+    analyzed().map(a => (a.version, a.minMax))
 
-  /** String-column statistics from `_stats.json`: (analyzedVersion,
-    * col → (lexicographic min, max, count-min frequency sketch)). The
-    * sketch answers `estimateCount(value)` within ~1% of rows at 99%
-    * confidence — per-value equality selectivity on skewed string keys
-    * (status codes, registry ids), which NDV alone cannot express.
+  /** String-column statistics: (analyzedVersion, col → (lexicographic
+    * min, max, count-min frequency sketch)). The sketch answers
+    * `estimateCount(value)` within ~1% of rows at 99% confidence —
+    * per-value equality selectivity on skewed string keys (status codes,
+    * registry ids), which NDV alone cannot express.
     */
   def analyzedStringStats(): Option[(Long,
-      Map[String, (String, String, org.apache.spark.util.sketch.CountMinSketch)])] = {
-    val f = new Path(tableRoot, "_stats.json")
-    if (!hfs.exists(f)) return None
-    val body = LogStore.readString(hfs, f)
-    org.json4s.jackson.JsonMethods.parse(body) match {
-      case org.json4s.JObject(fields) =>
-        val m = fields.toMap
-        for (org.json4s.JInt(v) <- m.get("version")) yield {
-          val ss = m.get("columns") match {
-            case Some(org.json4s.JObject(cf)) => cf.flatMap {
-              case (c, org.json4s.JObject(cv)) =>
-                val cm = cv.toMap
-                def str(k: String) = cm.get(k).collect {
-                  case org.json4s.JString(s) => s }
-                for (lo <- str("smin"); hi <- str("smax"); b64 <- str("cms"))
-                  yield c -> ((lo, hi,
-                    org.apache.spark.util.sketch.CountMinSketch.readFrom(
-                      new java.io.ByteArrayInputStream(
-                        java.util.Base64.getDecoder.decode(b64)))))
-              case _ => None
-            }.toMap
-            case _ =>
-              Map.empty[String, (String, String, org.apache.spark.util.sketch.CountMinSketch)]
-          }
-          (v.toLong, ss)
-        }
-      case _ => None
-    }
-  }
+      Map[String, (String, String, org.apache.spark.util.sketch.CountMinSketch)])] =
+    analyzed().map(a => (a.version, a.strings))
 
   /** Per-file Bloom-filter index on `column`: one pass over the current
     * snapshot aggregates a Bloom filter of `xxhash64(column)` PER POOL
@@ -4815,8 +4715,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         org.apache.spark.sql.catalyst.expressions.Literal(numItems),
         org.apache.spark.sql.catalyst.expressions.Literal(numBits))
         .toAggregateExpression())
-    poolReader(names)
-      .parquet(names.map(n => new Path(dataDir, n).toString): _*)
+    pool(names)
       .select(col("_metadata.file_path").as("path"), col(s"`$column`"))
       .groupBy(col("path"))
       .agg(bloomAgg.as("bf"))

@@ -459,8 +459,8 @@ object DeltaInterop {
     // with the wide exported schema — plain Delta readers without the
     // typeWidening feature would refuse or misread, so widened tables
     // pay the materializing write (files land wide, schema honest)
-    val widened = srcFs.exists(new Path(commitRoot, "_widen.json"))
-    val flat = log.partitionColumns(v).isEmpty && !widened
+    val meta = TableMeta.read(srcFs, commitRoot)
+    val flat = log.partitionColumns(v).isEmpty && !meta.widened
     val names: Seq[String] =
       if (flat) {
         // flat layout: pool files ARE the table bytes — copy, don't
@@ -539,23 +539,16 @@ object DeltaInterop {
         }
       }
     def esc(s: String): String = mapper.writeValueAsString(s)
-    // a declared-schema sidecar with column renames exports as a
+    // a declared schema with column renames exports as a
     // COLUMN-MAPPED Delta table (mode=name): the emitted schema carries
     // the logical names with `delta.columnMapping.physicalName` pointing
     // at the name the (byte-copied) files actually store — the public
     // protocol's own spelling of the indirection this commit log keeps
-    // in its sidecar, so a rename never forces a rewrite on export
+    // in its descriptor, so a rename never forces a rewrite on export
     // either. Tables without renames keep the minimal (1,2) log; a
     // rename-free declared schema still REPLACES the file-derived one,
     // which is what drops DROPPED columns from the exported contract.
-    val declared: Option[StructType] = {
-      val sidecar = new Path(commitRoot, "_schema.json")
-      if (!srcFs.exists(sidecar)) None
-      else {
-        val body = LogStore.readString(srcFs, sidecar)
-        Some(DataType.fromJson(body).asInstanceOf[StructType])
-      }
-    }
+    val declared = meta.schema
     val renames = declared.map(ColumnMapping.renames).getOrElse(Map.empty)
     val (outSchema, configJson, protocol) =
       if (renames.isEmpty) {

@@ -2,12 +2,11 @@ package graft.catalog
 
 import java.util
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Path-based access to commit-log tables WITHOUT a catalog —
@@ -30,9 +29,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * sink, time travel — behaves identically whether a table is reached
   * by name or by path (the reference's data plane is per-source S3
   * paths, cft/sourceSystem.yaml:20-27, so path addressing is the
-  * primary key there). Declared schema / partition spec sidecars
-  * (`_schema.json` / `_partition.json`) are honored when present, e.g.
-  * for a table created through the catalog and later read by path.
+  * primary key there). Schema and partitioning resolve exactly as the
+  * catalog resolves them ([[GraftTable.resolve]]), so a table created
+  * through the catalog and later read by path sees its declarations.
   */
 final class GraftDataSource extends TableProvider with DataSourceRegister {
 
@@ -40,7 +39,7 @@ final class GraftDataSource extends TableProvider with DataSourceRegister {
 
   // writes into a not-yet-populated root take the QUERY's schema (the
   // streaming-sink bootstrap case); reads of committed tables ignore it
-  // in favor of the sidecar/footers
+  // in favor of the declared schema/footers
   override def supportsExternalMetadata(): Boolean = true
 
   private def rootOf(options: CaseInsensitiveStringMap): String =
@@ -51,28 +50,7 @@ final class GraftDataSource extends TableProvider with DataSourceRegister {
       external: Option[StructType] = None): GraftTable = {
     val spark = SparkSession.active
     val root = rootOf(options)
-    val fs = HadoopFs.fs(spark, root)
-    def sidecar(name: String): Option[String] = {
-      val f = new Path(root, name)
-      if (!fs.exists(f)) None else Some(LogStore.readString(fs, f))
-    }
-    val declared = sidecar("_schema.json")
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-      .orElse(external)
     val log = new CommitLog(spark, root)
-    // partition spec: the sidecar when present (catalog-created tables),
-    // else the manifest's authoritative #partition header — a table
-    // written via CommitLog.commitPartitioned directly has no sidecar,
-    // and resolving it flat would make the scan omit basePath while the
-    // schema still carries the partition columns: every row would read
-    // them as NULL (silent wrong results; r8 advice)
-    val partCols = sidecar("_partition.json").map { body =>
-      org.json4s.jackson.JsonMethods.parse(body) match {
-        case org.json4s.JArray(vs) => vs.collect { case org.json4s.JString(s) => s }
-        case _ => Seq.empty[String]
-      }
-    }.getOrElse(log.currentVersion.map(log.partitionColumns)
-      .getOrElse(Seq.empty))
     val pinned: Option[Long] =
       Option(options.get("versionasof")).map(_.toLong)
         .orElse(Option(options.get("timestampasofms")).map { ts =>
@@ -82,7 +60,8 @@ final class GraftDataSource extends TableProvider with DataSourceRegister {
     pinned.foreach { v =>
       require(log.currentVersion.nonEmpty, s"graft: no commits under $root")
     }
-    new GraftTable(spark, s"graft.`$root`", root, declared, partCols, pinned)
+    new GraftTable(spark, s"graft.`$root`", root, GraftTable.resolve(spark, root, external),
+      pinned)
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =

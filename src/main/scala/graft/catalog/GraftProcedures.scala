@@ -96,12 +96,8 @@ private[catalog] object GraftProcedures {
   private def mappingStateOf(cat: GraftTableCatalog,
       root: String): (Option[org.apache.spark.sql.types.StructType],
         Map[String, String], Set[String]) = {
-    val fs = HadoopFs.fs(cat.sparkSession, root)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val declared = cat.declaredSchema(rootPath)
-    val renames = declared.map(ColumnMapping.renames).getOrElse(Map.empty)
-    val (dropped, _) = ColumnMapping.readMeta(fs, rootPath)
-    (declared, renames, dropped)
+    val meta = TableMeta.read(HadoopFs.fs(cat.sparkSession, root), root)
+    (meta.schema, meta.schema.map(ColumnMapping.renames).getOrElse(Map.empty), meta.dropped)
   }
 
   private def in(n: String, t: DataType) = ProcedureParameter.in(n, t).build()
@@ -280,10 +276,9 @@ private[catalog] object GraftProcedures {
       val root = cat.rootOf(input.getUTF8String(0).toString)
       val log = new CommitLog(cat.sparkSession, root)
       // an identity-partitioned catalog table declares its layout in the
-      // partition sidecar the catalog write path routes on — switching
-      // planes under it would fork the two declarations
-      val fs = HadoopFs.fs(cat.sparkSession, root)
-      require(!fs.exists(new org.apache.hadoop.fs.Path(root, "_partition.json")),
+      // descriptor the catalog write path routes on — switching planes
+      // under it would fork the two declarations
+      require(TableMeta.read(HadoopFs.fs(cat.sparkSession, root), root).partCols.isEmpty,
         "set_partition_transforms: table is identity-partitioned " +
           "(PARTITIONED BY columns); recreate it with a transform layout instead")
       // top-level-comma split: 'bucket(2, k), days(ts)' is two specs —
@@ -687,7 +682,7 @@ private[catalog] object GraftProcedures {
       val src = new CommitLog(cat.sparkSession, srcRoot)
       val replica = new CommitLog(cat.sparkSession, dstRoot)
       val synced = replica.replicateFrom(src)
-      GraftTableCatalog.copySidecars(cat.sparkSession, srcRoot, dstRoot)
+      TableMeta.copy(cat.sparkSession, srcRoot, dstRoot)
       result(new StructType().add("source_version", LongType)
         .add("replica_version", LongType).add("in_sync_already", BooleanType),
         src.currentVersion.getOrElse(-1L),
@@ -742,7 +737,7 @@ private[catalog] object GraftProcedures {
       val dstRoot = cat.rootForCreate(input.getUTF8String(1).toString)
       val log = new CommitLog(cat.sparkSession, dstRoot)
       val v = log.cloneFrom(srcRoot)
-      GraftTableCatalog.copySidecars(cat.sparkSession, srcRoot, dstRoot)
+      TableMeta.copy(cat.sparkSession, srcRoot, dstRoot)
       result(new StructType().add("version", LongType)
         .add("files_referenced", IntegerType), v, log.files(v).length)
     }
@@ -987,7 +982,6 @@ private[catalog] object GraftProcedures {
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       import org.apache.spark.sql.functions.col
       val root = cat.rootOf(input.getUTF8String(0).toString)
-      val rootPath = new org.apache.hadoop.fs.Path(root)
       val (declaredOpt, renames, dropped) = mappingStateOf(cat, root)
       val resultSchema = new StructType()
         .add("version", LongType).add("columns_materialized", IntegerType)
@@ -998,13 +992,14 @@ private[catalog] object GraftProcedures {
       val log = new CommitLog(cat.sparkSession, root)
       val logical = log.read().select(schema.fields.map(f =>
         col(s"`${ColumnMapping.physicalName(f)}`").as(f.name)).toIndexedSeq: _*)
-      val partCols = cat.declaredPartitioning(rootPath)
+      val partCols = GraftTable.resolve(cat.sparkSession, root).partCols
       val v =
         if (partCols.nonEmpty) log.commitPartitioned(logical, partCols, replace = true)
         else log.commit(logical, replace = true)
-      cat.writeSchema(rootPath, org.apache.spark.sql.types.StructType(
-        schema.fields.map(f => f.copy(metadata =
-          org.apache.spark.sql.types.Metadata.empty))))
+      val plain = org.apache.spark.sql.types.StructType(schema.fields.map(f =>
+        f.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
+      TableMeta.update(HadoopFs.fs(cat.sparkSession, root), root)(
+        _.copy(schema = Some(plain))): Unit
       result(resultSchema, v, renames.size)
     }
   }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
-import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructField, StructType}
+import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** V2 `TableCatalog` plugin putting [[CommitLog]] tables behind catalog
@@ -34,10 +34,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * }}}
   *
   * Layout: `<warehouse>/<namespace>/<table>` is a CommitLog root; the
-  * declared schema lives in `_schema.json` beside the log (a delete-all
-  * commit leaves zero pool files, so footers alone cannot carry the
-  * schema of an empty table). One namespace level, mirroring the
-  * reference's `<source>/<asset>` addressing.
+  * declared schema lives in the table descriptor beside the log
+  * ([[TableMeta]]; a delete-all commit leaves zero pool files, so footers
+  * alone cannot carry the schema of an empty table). One namespace
+  * level, mirroring the reference's `<source>/<asset>` addressing.
   *
   * Scale posture: reads delegate to Spark's own parquet V2 scan over the
   * snapshot's immutable file list — full pushdown/pruning/vectorization,
@@ -60,7 +60,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
 
   /** The analyzer gates DEFAULT-valued columns and ALTER TABLE
     * ADD/DROP CONSTRAINT on these catalog capabilities; both map onto
-    * machinery the engine already owns (schema-sidecar field metadata;
+    * machinery the engine already owns (declared-schema field metadata;
     * `CommitLog.addConstraint`'s `#check:` header).
     */
   override def capabilities(): util.Set[TableCatalogCapability] =
@@ -138,14 +138,14 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
   private def nsPath(db: String) = new Path(warehouse, db)
   private def tableRoot(ident: Identifier) =
     new Path(nsPath(ns1(ident.namespace())), ident.name())
-  private def schemaFile(root: Path) = new Path(root, "_schema.json")
 
-  /** A table dir is one holding a declared schema or committed data —
+  /** A table dir is one holding committed data or a declared schema —
     * raw CommitLog tables dropped into the warehouse by the DataFrame
     * plane are addressable without re-registration.
     */
   private def isTable(root: Path): Boolean =
-    fs.exists(schemaFile(root)) || fs.exists(new Path(root, "_commits"))
+    fs.exists(new Path(root, "_commits")) ||
+      TableMeta.read(fs, root.toString).schema.isDefined
 
   // ---- namespaces --------------------------------------------------------
 
@@ -201,31 +201,6 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
   override def tableExists(ident: Identifier): Boolean =
     ident.namespace().length == 1 && isTable(tableRoot(ident))
 
-  private[catalog] def declaredSchema(root: Path): Option[StructType] = {
-    val f = schemaFile(root)
-    if (!fs.exists(f)) None
-    else {
-      val body = LogStore.readString(fs, f)
-      Some(DataType.fromJson(body).asInstanceOf[StructType])
-    }
-  }
-
-  private[catalog] def writeSchema(root: Path, schema: StructType): Unit =
-    LogStore.write(fs, schemaFile(root),
-      schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** User table properties (`TBLPROPERTIES`) — a `_props.json` sidecar
-    * beside the log, shipped with replication and shallow clones like
-    * the schema/column-mapping sidecars.
-    */
-  private[catalog] def writeProps(root: Path, props: Map[String, String]): Unit =
-    LogStore.writeAtomic(fs, new Path(root, "_props.json"),
-      org.json4s.jackson.JsonMethods.compact(
-        org.json4s.jackson.JsonMethods.render(
-          org.json4s.JObject(props.toList.sortBy(_._1).map {
-            case (k, v) => k -> org.json4s.JString(v)
-          }))).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
   override def loadTable(ident: Identifier): Table = {
     if (!tableExists(ident)) {
       metadataTable(ident) match {
@@ -233,9 +208,13 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
         case None    => throw new NoSuchTableException(ident)
       }
     }
-    val root = tableRoot(ident)
-    new GraftTable(spark, fullName(ident), root.toString, declaredSchema(root),
-      declaredPartitioning(root), None)
+    handle(ident, None)
+  }
+
+  /** A handle on `ident`'s root, pinned to `version` when time-travelling. */
+  private def handle(ident: Identifier, version: Option[Long]): GraftTable = {
+    val root = tableRoot(ident).toString
+    new GraftTable(spark, fullName(ident), root, GraftTable.resolve(spark, root), version)
   }
 
   /** `<cat>.<db>.<t>.files`-style metadata tables (files / history /
@@ -255,7 +234,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
       // feed surfaces LOGICAL names: the rename mapping travels so the
       // per-version staging can relabel the pool's physical columns.
       else if (kind == "changes") {
-        val declared = declaredSchema(tableRoot(parent))
+        val declared = TableMeta.read(fs, tableRoot(parent).toString).schema
         Some(new GraftChangesTable(spark, s"${fullName(parent)}.changes",
           tableRoot(parent).toString, loadTable(parent).schema(),
           declared.map(ColumnMapping.renames).getOrElse(Map.empty)))
@@ -300,13 +279,11 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
       case _: NumberFormatException =>
         val log = new CommitLog(spark, root.toString)
         return log.ref(version) match {
-          case Some(r) if r.kind == "tag" =>
-            new GraftTable(spark, fullName(ident), root.toString,
-              declaredSchema(root), declaredPartitioning(root), Some(r.version))
+          case Some(r) if r.kind == "tag" => handle(ident, Some(r.version))
           case Some(_) => // branch: its own commit chain, unpartitioned
             new GraftTable(spark, s"${fullName(ident)}@$version",
-              log.branchRootPath(version), declaredSchema(root),
-              Seq.empty[String], None)
+              log.branchRootPath(version),
+              GraftTable.resolve(spark, root.toString).copy(partCols = Nil), None)
           case None => throw new IllegalArgumentException(
             s"'$version' is neither a commit number nor a ref (tag/branch) " +
               s"of ${fullName(ident)} " +
@@ -323,8 +300,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
           head.map(h => s" (head: $h; older versions may be vacuumed)")
             .getOrElse(" (table has no commits)"))
     }
-    new GraftTable(spark, fullName(ident), root.toString, declaredSchema(root),
-      declaredPartitioning(root), Some(v))
+    handle(ident, Some(v))
   }
 
   /** `TIMESTAMP AS OF t` — micros from Spark, resolved against manifest
@@ -337,36 +313,11 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     val v = log.versionAsOf(timestampMicros / 1000L).getOrElse(
       throw new IllegalArgumentException(
         s"no commit at or before timestamp $timestampMicros under $root"))
-    new GraftTable(spark, fullName(ident), root.toString, declaredSchema(root),
-      declaredPartitioning(root), Some(v))
+    handle(ident, Some(v))
   }
 
   private def fullName(ident: Identifier): String =
     s"$catalogName.${ns1(ident.namespace())}.${ident.name()}"
-
-  private def partitionFile(root: Path) = new Path(root, "_partition.json")
-
-  private[catalog] def declaredPartitioning(root: Path): Seq[String] = {
-    val f = partitionFile(root)
-    if (!fs.exists(f)) {
-      // no sidecar (table written via CommitLog.commitPartitioned outside
-      // the catalog): the manifest #partition header is authoritative —
-      // resolving flat would NULL every partition column (r8 advice).
-      // EXCEPT a transform-partitioned table: its header names the
-      // DERIVED `_p_*` layout columns, which are not table columns — the
-      // table is logically unpartitioned (the transforms plane derives
-      // on write and hides on read)
-      val log = new CommitLog(spark, root.toString)
-      if (log.partitionTransforms.nonEmpty) Seq.empty
-      else log.currentVersion.map(log.partitionColumns).getOrElse(Seq.empty)
-    } else {
-      val body = LogStore.readString(fs, f)
-      org.json4s.jackson.JsonMethods.parse(body) match {
-        case org.json4s.JArray(vs) => vs.collect { case org.json4s.JString(s) => s }
-        case _ => Seq.empty
-      }
-    }
-  }
 
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String]): Table = {
@@ -374,8 +325,8 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
     // PARTITIONED BY (col, ...) — identity transforms give the hive
     // layout; years/months/days/hours/bucket/truncate become HIDDEN
-    // partition transforms (`_ptspec.json`, derived `_p_*` layout,
-    // [[CommitLog.commitTransformed]] writes, reads never see them).
+    // partition transforms (declared in the descriptor, derived `_p_*`
+    // layout, [[CommitLog.commitTransformed]] writes, reads never see them).
     // Mixing the two planes in one table is refused.
     val (identities, transforms) = partitions.toSeq.partition(_.name == "identity")
     require(identities.isEmpty || transforms.isEmpty,
@@ -399,41 +350,34 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     val partCols = identities.map(_.references.head.fieldNames.mkString("."))
     partCols.foreach(c => require(schema.fieldNames.contains(c),
       s"partition column $c not in schema ${schema.fieldNames.toSeq}"))
-    val root = tableRoot(ident)
-    fs.mkdirs(root)
-    writeSchema(root, schema)
+    val root = tableRoot(ident).toString
+    val parsed = transformSpecs.map(new CommitLog(spark, root).parseTransformOn(schema, _))
     // TBLPROPERTIES: keep the user's keys, drop the engine-/Spark-
-    // injected ones (they derive from the catalog, not the sidecar)
+    // injected ones (they derive from the catalog, not the descriptor)
     val userProps = properties.asScala.toMap --
       Seq("provider", "location", "owner", "external", "is_managed_location")
-    if (userProps.nonEmpty) writeProps(root, userProps)
-    if (transformSpecs.nonEmpty)
-      new CommitLog(spark, root.toString).declareTransforms(schema, transformSpecs): Unit
-    if (partCols.nonEmpty) {
-      val json = org.json4s.jackson.JsonMethods.compact(
-        org.json4s.jackson.JsonMethods.render(
-          org.json4s.JArray(partCols.map(org.json4s.JString(_)).toList)))
-      LogStore.write(fs, partitionFile(root),
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+    fs.mkdirs(new Path(root))
+    TableMeta.update(fs, root)(_ => TableMeta(Some(schema), partCols, parsed, userProps)): Unit
     loadTable(ident)
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val root = tableRoot(ident)
-    // the EFFECTIVE schema (declared sidecar widened by any `#schema:`
+    val table = handle(ident, None)
+    // the EFFECTIVE schema (declared schema widened by any `#schema:`
     // library evolution) — an evolved column must be ALTER-able (rename,
-    // drop, retype) like any declared one; sidecar metadata is preserved
-    // because the widened schema starts from the sidecar fields
-    var schema = loadTable(ident).schema()
-    val partCols = declaredPartitioning(root).toSet
-    // a hidden-partition transform records its SOURCE column by name in
-    // `_ptspec.json`: renaming or dropping it would orphan the layout
-    // (future writes crash on the missing column; pruning dies silently)
-    val transformSrcs = new CommitLog(spark, root.toString)
-      .partitionTransforms.map(_.src).toSet
-    var (dropped, seq) = ColumnMapping.readMeta(fs, root)
+    // drop, retype) like any declared one; declared field metadata is
+    // preserved because the widened schema starts from the declared fields
+    var schema = table.schema
+    val partCols = table.meta.partCols.toSet
+    // a hidden-partition transform records its SOURCE column by name:
+    // renaming or dropping it would orphan the layout (future writes
+    // crash on the missing column; pruning dies silently)
+    val transformSrcs = table.transforms.map(_.src).toSet
+    var (dropped, seq) = (table.meta.dropped, table.meta.seq)
+    var widens = false
+    var propEdits: Map[String, String] => Map[String, String] = identity
     // physical names EVER used must never rebind to different bytes: live
     // physicals + the dropped registry together are the reserved set
     def reserved: Set[String] =
@@ -536,8 +480,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
             "smaller integral -> larger integral, FLOAT -> DOUBLE, or DECIMAL " +
             "gaining precision without losing scale or integer digits). " +
             "Rewrite through CTAS for anything else")
-        require(partCols.isEmpty && new CommitLog(spark, root.toString)
-            .partitionTransforms.isEmpty,
+        require(partCols.isEmpty && transformSrcs.isEmpty,
           s"ALTER COLUMN $name TYPE: widening on partitioned/transform-layout " +
             "tables is not supported yet (the widened read schema would hide " +
             "the layout columns); rebuild the table to retype")
@@ -555,10 +498,9 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
         schema = StructType(schema.fields.map { sf =>
           if (sf.name != name) sf else sf.copy(dataType = to)
         })
-        // the marker flips this table's library reads from mergeSchema to
-        // the explicit declared schema (CommitLog.widenedReadSchema)
-        LogStore.write(fs, new Path(root, "_widen.json"),
-          s"""{"widened":true}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        // the flag flips this table's library reads from mergeSchema to
+        // the explicit declared schema (CommitLog.pool)
+        widens = true
       case un: TableChange.UpdateColumnNullability if un.fieldNames().length == 1 =>
         val name = un.fieldNames()(0)
         require(schema.fieldNames.contains(name),
@@ -588,16 +530,9 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
             .putString("comment", uc.newComment()).build())
         })
       case sp: TableChange.SetProperty =>
-        CommitLog.sidecarLock(fs.makeQualified(root).toString).synchronized {
-          writeProps(root,
-            GraftTableCatalog.readProps(spark, root.toString) +
-              (sp.property() -> sp.value()))
-        }
+        propEdits = propEdits.andThen(_ + (sp.property() -> sp.value()))
       case rp: TableChange.RemoveProperty =>
-        CommitLog.sidecarLock(fs.makeQualified(root).toString).synchronized {
-          writeProps(root,
-            GraftTableCatalog.readProps(spark, root.toString) - rp.property())
-        }
+        propEdits = propEdits.andThen(_ - rp.property())
       case ac: TableChange.AddConstraint =>
         ac.constraint() match {
           case ck: org.apache.spark.sql.connector.catalog.constraints.Check =>
@@ -616,8 +551,12 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
         s"graft ALTER TABLE supports top-level ADD/RENAME/DROP COLUMN, " +
           s"SET/DROP DEFAULT, and ADD/DROP CONSTRAINT CHECK, got $other")
     }
-    ColumnMapping.writeMeta(fs, root, dropped, seq)
-    writeSchema(root, schema)
+    // one atomic write: a reader never sees the new schema without its
+    // dropped-name registry or widened flag; props merge against the
+    // descriptor as it stands under the lock
+    TableMeta.update(fs, root.toString)(m => m.copy(schema = Some(schema),
+      props = propEdits(m.props), dropped = dropped, seq = seq,
+      widened = m.widened || widens)): Unit
     loadTable(ident)
   }
 
@@ -637,39 +576,6 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
 
 object GraftTableCatalog {
   import org.apache.spark.sql.types._
-
-  /** Stored `TBLPROPERTIES` for a table root (`_props.json`), or empty —
-    * read lazily at `properties()` time so a handle never caches stale
-    * values across an ALTER.
-    */
-  private[catalog] def readProps(spark: SparkSession, root: String): Map[String, String] = {
-    val fs = HadoopFs.fs(spark, root)
-    val f = new Path(root, "_props.json")
-    if (!fs.exists(f)) return Map.empty
-    val body = LogStore.readString(fs, f)
-    org.json4s.jackson.JsonMethods.parse(body) match {
-      case org.json4s.JObject(fields) => fields.collect {
-        case (k, org.json4s.JString(v)) => k -> v
-      }.toMap
-      case _ => Map.empty
-    }
-  }
-
-  /** Copy the root sidecars a table reads and evolves by (schema,
-    * column mapping, widening, TBLPROPERTIES) from `srcRoot` to
-    * `dstRoot`, so a replica or clone behaves exactly like its source
-    * (renamed columns included). Absent sidecars are skipped.
-    */
-  private[catalog] def copySidecars(spark: SparkSession, srcRoot: String,
-      dstRoot: String): Unit = {
-    val (srcFs, dstFs) = (HadoopFs.fs(spark, srcRoot), HadoopFs.fs(spark, dstRoot))
-    for (side <- Seq("_schema.json", "_colmeta.json", "_widen.json", "_props.json")) {
-      val from = new Path(srcRoot, side)
-      if (srcFs.exists(from))
-        org.apache.hadoop.fs.FileUtil.copy(srcFs, from, dstFs, new Path(dstRoot, side),
-          false, spark.sparkContext.hadoopConfiguration): Unit
-    }
-  }
 
   /** Whether `from -> to` is a lossless, parquet-reader-promotable
     * widening — exactly the conversions both the vectorized and
@@ -700,14 +606,20 @@ object GraftTableCatalog {
 /** One commit-log table behind the catalog: reads delegate to the built-in
   * parquet V2 scan over the pinned snapshot's file list (pushdown,
   * pruning, vectorized reader all come from Spark); writes commit through
-  * the log's optimistic publish. `pinned` carries time travel.
+  * the log's optimistic publish. `meta` is the descriptor as
+  * [[GraftTable.resolve]] resolved it; `pinned` carries time travel.
   */
 private[graft] class GraftTable(spark: SparkSession, tableName: String, root: String,
-    declared: Option[StructType], partCols: Seq[String], pinned: Option[Long])
+    private[catalog] val meta: TableMeta, pinned: Option[Long])
   extends Table with SupportsRead with SupportsWrite with SupportsDelete
   with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
 
   private val log = new CommitLog(spark, root)
+  private def declared = meta.schema
+  private def partCols = meta.partCols
+
+  /** Declared hidden-partition transforms, resolved once per handle. */
+  private[catalog] lazy val transforms: Seq[PartitionTransform] = log.partitionTransforms
 
   /** Filesystem root of this table — the key the MV-rewrite rule joins
     * against the source recorded in a view's sidecar. */
@@ -776,11 +688,9 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
         // dropped physicals must not resurrect from a stale header: an
         // evolved column later removed via ALTER DROP lands in the
         // dropped registry, which wins over the manifest's record
-        lazy val droppedPhys =
-          ColumnMapping.readMeta(HadoopFs.fs(spark, root), new Path(root))._1
         val known = d.fieldNames.toSet ++ ColumnMapping.renames(d).values
         val extra = evolved.map(_.fields.filterNot(f =>
-            known(f.name) || droppedPhys(f.name)))
+            known(f.name) || meta.dropped(f.name)))
           .getOrElse(Array.empty[org.apache.spark.sql.types.StructField])
         if (extra.isEmpty) d else StructType(d.fields ++ extra)
       case None => evolved.getOrElse {
@@ -807,14 +717,16 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
       TableCapability.STREAMING_WRITE, TableCapability.AUTOMATIC_SCHEMA_EVOLUTION,
       TableCapability.OVERWRITE_BY_FILTER, TableCapability.TRUNCATE)
 
+  // read at `properties()` time, so a handle never serves stale values
+  // across an ALTER
   override def properties(): util.Map[String, String] =
-    (GraftTableCatalog.readProps(spark, root) ++
+    (TableMeta.read(HadoopFs.fs(spark, root), root).props ++
       Map("location" -> root, "provider" -> "graft")).asJava
 
   override def partitioning(): Array[Transform] = {
     import org.apache.spark.sql.connector.expressions.Expressions
     if (partCols.nonEmpty) partCols.map(Expressions.identity).toArray
-    else log.partitionTransforms.map { t =>
+    else transforms.map { t =>
       t.kind match {
         case "year"   => Expressions.years(t.src)
         case "month"  => Expressions.months(t.src)
@@ -877,25 +789,13 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
     // and CBO reorder see real sizes, not compressed-bytes guesses.
     val exactStats = () => snapshot.map { v =>
       val (bytes, rows) = log.snapshotStats(v)
-      val cols = log.analyzedStats() match {
-        // serve column stats only while they describe this snapshot's
-        // head lineage (estimates may go stale, versions must not lie)
-        case Some((av, _, m)) if av <= v => m
-        case _ => Map.empty[String, (Long, Long)]
+      // serve column stats only while they describe this snapshot's head
+      // lineage (estimates may go stale, versions must not lie)
+      log.analyzed().filter(_.version <= v) match {
+        case Some(a) =>
+          org.apache.spark.sql.GraftExactStats(bytes, rows, a.cols, a.hists, a.minMax)
+        case None => org.apache.spark.sql.GraftExactStats(bytes, rows, Map.empty)
       }
-      val hists =
-        if (cols.isEmpty) Map.empty[String, (Double, Seq[Double], Seq[Long])]
-        else log.analyzedHistograms() match {
-          case Some((av, h)) if av <= v => h
-          case _ => Map.empty[String, (Double, Seq[Double], Seq[Long])]
-        }
-      val mm =
-        if (cols.isEmpty) Map.empty[String, (Double, Double)]
-        else log.analyzedMinMax() match {
-          case Some((av, x)) if av <= v => x
-          case _ => Map.empty[String, (Double, Double)]
-        }
-      org.apache.spark.sql.GraftExactStats(bytes, rows, cols, hists, mm)
     }
     new org.apache.spark.sql.GraftForwardingScanBuilder(inner,
       _ => new GraftMicroBatchStream(spark, tableName, root, streamSchema, scanOptions),
@@ -909,7 +809,7 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
       // hidden-bucket twin: a single bucket(n, col) transform layout
       // reports bucket key-grouping keyed on the layout directory's
       // bucket id — two tables bucketed alike join with zero exchanges
-      bucketKeyed = log.partitionTransforms match {
+      bucketKeyed = transforms match {
         case Seq(t) if t.kind == "bucket" && !hasRenames &&
             schema.fieldNames.contains(t.src) =>
           Some((t.src, t.arg.toInt, spark))
@@ -919,7 +819,7 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
       // these columns mean the file index pruned (a fully-absorbed DATA
       // filter must not discard exact stats)
       partitionColNames =
-        partCols.toSet ++ log.partitionTransforms.map(_.derivedName))
+        partCols.toSet ++ transforms.map(_.derivedName))
   }
 
   private sealed trait WriteMode
@@ -1198,6 +1098,30 @@ private[catalog] final class OperationStrippingWriter(
 
 private[graft] object GraftTable {
   import org.apache.spark.sql.sources._
+
+  /** The descriptor a handle on `root` reads by, whether the table is
+    * reached by name or by path: the declared schema (else `external`,
+    * the query's schema on a write into an empty root) and the identity
+    * partition columns. Without declared ones, the head manifest's
+    * `#partition` header is authoritative (a table written through
+    * `CommitLog.commitPartitioned` outside the catalog would otherwise
+    * read every partition column as NULL) — except on a transform-
+    * partitioned table, whose header names the derived `_p_*` layout
+    * columns: those are not table columns, so the table is logically
+    * unpartitioned (writes derive them, reads hide them).
+    */
+  def resolve(spark: SparkSession, root: String,
+      external: Option[StructType] = None): TableMeta = {
+    val meta = TableMeta.read(HadoopFs.fs(spark, root), root)
+    val partCols =
+      if (meta.partCols.nonEmpty) meta.partCols
+      else {
+        val log = new CommitLog(spark, root)
+        if (log.partitionTransforms.nonEmpty) Nil
+        else log.currentVersion.map(log.partitionColumns).getOrElse(Nil)
+      }
+    meta.copy(schema = meta.schema.orElse(external), partCols = partCols)
+  }
 
   /** V1 pushdown filter → Column, total on the shapes Spark produces for
     * top-level columns; nested references return None (the caller then

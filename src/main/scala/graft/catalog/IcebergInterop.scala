@@ -187,8 +187,8 @@ object IcebergInterop {
     // not the file bytes) or a type-WIDENED one (narrow physical files
     // under the wide schema would need the reader's type-promotion
     // support) pays the materializing write
-    val flat = log.partitionColumns(v).isEmpty &&
-      !srcFs.exists(new Path(commitRoot, "_widen.json"))
+    val meta = TableMeta.read(srcFs, commitRoot)
+    val flat = log.partitionColumns(v).isEmpty && !meta.widened
     val names: Seq[String] =
       if (flat) {
         val ns = log.files(v)
@@ -263,22 +263,14 @@ object IcebergInterop {
     val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
     val uuid = java.util.UUID.randomUUID().toString
 
-    // a declared-schema sidecar with column renames exports under the
+    // a declared schema with column renames exports under the
     // LOGICAL names, with the spec's own indirection carrying the
     // physical file columns: `schema.name-mapping.default` maps the
     // names the (byte-copied) parquet files store — which lack Iceberg
     // field-id metadata — to the schema's field ids. Readers resolve
     // renamed columns with zero data rewrite, exactly as the commit log
     // itself does.
-    val declared: Option[StructType] = {
-      val sidecar = new Path(commitRoot, "_schema.json")
-      if (!srcFs.exists(sidecar)) None
-      else {
-        val body = LogStore.readString(srcFs, sidecar)
-        Some(org.apache.spark.sql.types.DataType.fromJson(body)
-          .asInstanceOf[StructType])
-      }
-    }
+    val declared = meta.schema
     val renames = declared.map(ColumnMapping.renames).getOrElse(Map.empty)
     val exportSchema = declared match {
       case Some(d) => StructType(d.map(f =>

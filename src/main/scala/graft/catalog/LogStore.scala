@@ -92,7 +92,7 @@ private[graft] object LogStore {
     * contract from their rename emulation because the temp file is
     * complete before the swap starts). Readers observe either the old
     * or the new COMPLETE content, never a truncated prefix — the
-    * contract mutable sidecars need (`_props.json` and friends), where
+    * contract mutable root files need (the table descriptor), where
     * [[write]]'s create(overwrite=true) opens a truncate-then-fill
     * window in which a racing reader parses invalid JSON.
     */

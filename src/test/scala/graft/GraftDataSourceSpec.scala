@@ -38,7 +38,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
 
   test("path read of a sidecar-less partitioned table rehydrates from the manifest header") {
     // written via CommitLog.commitPartitioned directly — no catalog, no
-    // _partition.json sidecar. The manifest #partition header must drive
+    // declared partitioning. The manifest #partition header must drive
     // basePath rehydration, or every partition-column cell reads NULL
     // (r8 advice: silent wrong results)
     val root = tmp("graft_ds_part")
@@ -51,6 +51,33 @@ class GraftDataSourceSpec extends AnyFunSuite {
     assert(byPath.filter($"cat".isNull).count() == 0,
       "partition column must rehydrate from the c=v layout, not NULL")
     assert(byPath.filter($"cat" === "cat1").count() == 20)
+  }
+
+  test("partitioned tables read alike by path and by name") {
+    val wh = tmp("graft_ds_wh")
+    spark.conf.set("spark.sql.catalog.gdsp", classOf[graft.catalog.GraftTableCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gdsp.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gdsp.db")
+    spark.sql("CREATE TABLE gdsp.db.ip (k BIGINT, cat STRING) PARTITIONED BY (cat)")
+    spark.sql("INSERT INTO gdsp.db.ip VALUES (1, 'a'), (2, 'b'), (3, 'a')")
+    spark.sql("CREATE TABLE gdsp.db.tp (k BIGINT, ts TIMESTAMP) PARTITIONED BY (days(ts))")
+    spark.sql("INSERT INTO gdsp.db.tp VALUES (1, TIMESTAMP '2024-01-05 10:00:00'), " +
+      "(2, TIMESTAMP '2024-01-06 11:00:00')")
+    val cat = spark.sessionState.catalogManager.catalog("gdsp")
+      .asInstanceOf[graft.catalog.GraftTableCatalog]
+    val ds = new graft.catalog.GraftDataSource
+    for ((t, parts) <- Seq("ip" -> Seq("identity(cat)"), "tp" -> Seq("days(ts)"))) {
+      val root = s"$wh/db/$t"
+      val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("path", root))
+      val byName = cat.loadTable(
+        org.apache.spark.sql.connector.catalog.Identifier.of(Array("db"), t))
+      assert(ds.inferSchema(opts) == byName.schema(), t)
+      assert(ds.inferPartitioning(opts).map(_.toString).toSeq == parts, t)
+      assert(byName.partitioning().map(_.toString).toSeq == parts, t)
+      assert(spark.read.format("graft").load(root).collect().toSet ==
+        spark.table(s"gdsp.db.$t").collect().toSet, t)
+    }
   }
 
   test("streaming tail and streaming sink through the format") {

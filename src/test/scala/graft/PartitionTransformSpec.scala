@@ -202,22 +202,20 @@ class PartitionTransformSpec extends AnyFunSuite {
   test("maintenance replaces carry the #ptspec: header past a stale sidecar") {
     // The crash window the manifest header exists to close: a transform
     // REPLACE publishes the new spec in the manifest, then crashes before
-    // the write-behind _ptspec.json refresh — the sidecar still holds the
+    // the write-behind descriptor refresh — the descriptor still holds the
     // OLD spec. Every later maintenance replace (compact's tombstoned
     // fold here) must keep the header as the spec of record; dropping it
-    // would resurrect the stale sidecar spec and disagree with the laid-
-    // out data.
+    // would resurrect the stale descriptor spec and disagree with the
+    // laid-out data.
     val root = freshRoot("pt_stale_sidecar")
     val log = new CommitLog(spark, root)
     log.commitTransformed(daysDf, Seq("days(ts)"), replace = false)
-    // simulate the crashed sidecar refresh: overwrite it with a spec that
-    // does NOT match the committed layout
+    // simulate the crashed descriptor refresh: overwrite its transforms
+    // with a spec that does NOT match the committed layout
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.catalog.LogStore.write(fs,
-      new org.apache.hadoop.fs.Path(root, "_ptspec.json"),
-      """[{"kind":"bucket","src":"k","srcType":"bigint","arg":4}]"""
-        .getBytes("UTF-8"))
+    graft.catalog.TableMeta.update(fs, root)(_.copy(transforms =
+      Seq(graft.catalog.PartitionTransform("bucket", "k", "bigint", 4L))))
     // tombstoned fold forces compact's full partitioned rewrite — the
     // replace path that used to drop the header
     log.deleteWhereMoR(col("k") === 1L): Unit
@@ -226,7 +224,7 @@ class PartitionTransformSpec extends AnyFunSuite {
     assert(log.headerOf(head, "ptspec").nonEmpty,
       "compact's replace must carry the #ptspec: header")
     assert(log.partitionTransforms.map(_.spec) == Seq("day(ts)"),
-      "the manifest header, not the stale sidecar, is the spec of record")
+      "the manifest header, not the stale descriptor, is the spec of record")
     assert(log.files(head).forall(_.contains("_p_day_ts=")),
       "fold must keep the day layout the header declares")
     assert(log.read().count() == 5)

@@ -11,8 +11,9 @@ import graft.catalog.CommitLog
   * (smaller integral → larger integral, FLOAT → DOUBLE, DECIMAL gaining
   * precision without losing scale/integer digits), so old files keep
   * their narrow bytes and both the catalog scan (declared schema →
-  * ParquetTable) and the library plane (`_widen.json` marker flips
-  * CommitLog reads from mergeSchema to the explicit declared schema)
+  * ParquetTable) and the library plane (the table descriptor's widened
+  * flag flips CommitLog reads from mergeSchema to the explicit declared
+  * schema)
   * read mixed narrow/wide pools correctly. Narrowing, cross-family,
   * layout and index conflicts refuse loudly. Unique catalog: `gtw`.
   */
@@ -47,8 +48,8 @@ class TypeWideningSpec extends AnyFunSuite {
     assert(got.map(_.getDecimal(2).toPlainString).toSeq ==
       Seq("12.340", "99999999999999999.999"))
     // library plane: CommitLog.read() over the SAME mixed pool — the
-    // _widen.json marker must flip it off mergeSchema (which dies on the
-    // int-vs-bigint merge) onto the declared schema
+    // descriptor's widened flag must flip it off mergeSchema (which dies
+    // on the int-vs-bigint merge) onto the declared schema
     val lib = new CommitLog(spark, s"$warehouse/db/w").read()
     assert(lib.schema("k").dataType == LongType)
     assert(lib.orderBy("k").collect().map(_.getLong(0)).toSeq ==
@@ -168,7 +169,7 @@ class TypeWideningSpec extends AnyFunSuite {
     spark.sql("INSERT INTO gtw.db.t VALUES (8)")
     val v1 = spark.sql("SELECT * FROM gtw.db.t VERSION AS OF 1")
     assert(v1.schema("k").dataType == LongType,
-      "head schema governs all reads (one _schema.json per table)")
+      "head schema governs all reads (one declared schema per table)")
     assert(v1.collect().map(_.getLong(0)).toSeq == Seq(7L))
   }
 }
