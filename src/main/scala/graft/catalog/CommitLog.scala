@@ -136,13 +136,6 @@ object CommitLog {
     case other => String.valueOf(other)
   }
 
-  private[catalog] def ttlHeader(column: String, retainMs: Long): String = {
-    import org.json4s.JsonDSL._
-    "#ttl:" + org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(
-        ("col" -> column) ~ ("ms" -> retainMs)))
-  }
-
   /** Per-table-root monitors serializing descriptor read-modify-write
     * cycles ([[TableMeta.update]]) within this JVM, so concurrent
     * property merges on one table never lose each other's keys. (Cross-
@@ -229,12 +222,12 @@ object CommitLog {
   }
 
   /** What one attempt of [[CommitLog.headRace]] decided: end the race
-    * with `result` and publish nothing, or publish `lines` at head+1 and,
-    * once they win, return `onWin(head+1)`.
+    * with `result` and publish nothing, or publish `manifest` at head+1
+    * and, once it wins, return `onWin(head+1)`.
     */
   private sealed trait Attempt[+T] extends Product with Serializable
   private final case class Settle[T](result: T) extends Attempt[T]
-  private final case class Publish[T](lines: Seq[String], onWin: Long => T)
+  private final case class Publish[T](manifest: Manifest, onWin: Long => T)
       extends Attempt[T]
 }
 
@@ -259,11 +252,9 @@ object CommitLog {
   *    version, including ones published after it.
   *
   * The manifest IS the table: a version's manifest lists exactly the pool
-  * files that make up that snapshot. Three line types: `<name>[\tstats]`
-  * (a data file), `#txn:<id>` (applied-batch memory), and
-  * `-<name>[\tstats]` (a merge-on-read deletion-vector file of
-  * (data-file, row-position) tombstones — see [[deleteWhereMoR]]).
-  * Invariants:
+  * files that make up that snapshot, plus versioned headers. [[Manifest]]
+  * owns the format: its scaladoc lists every line kind and which headers
+  * each rewrite carries. Invariants:
   *  - pool files are written once and never modified or renamed; only
   *    `vacuum` deletes them, and only when no retained version references
   *    them — so any reader that resolved a manifest keeps reading a
@@ -292,6 +283,7 @@ object CommitLog {
   */
 class CommitLog(spark: SparkSession, tableRoot: String) {
   import CommitLog.{Attempt, Publish, Settle}
+  import Manifest.{Entry, Header}
 
   /** This table's root path, exactly as constructed — the address
     * sibling tables derive from (e.g. the strict replica's `__dlq`
@@ -380,9 +372,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def currentVersion: Option[Long] = {
     readHeadHint() match {
-      case Some(h) if hfs.exists(manifestPath(h)) =>
+      case Some(h) if isCommitted(h) =>
         var v = h
-        while (hfs.exists(manifestPath(v + 1))) v += 1
+        while (isCommitted(v + 1)) v += 1
         Some(v)
       case _ =>
         val vs = committedVersions
@@ -392,25 +384,26 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
 
   def exists: Boolean = currentVersion.nonEmpty
 
-  /** Raw manifest lines of a committed version: `<name>` or
-    * `<name>\t<stats-json>`. The tab-separated stats suffix is optional
-    * per line, so pre-stats manifests (and carried-over lines from them)
-    * parse unchanged — those files are simply never pruned.
+  /** Is version `v` committed and not yet vacuumed? One existence probe. */
+  private[catalog] def isCommitted(v: Long): Boolean = hfs.exists(manifestPath(v))
+
+  /** The effective manifest of a committed version (empty for v0).
+    * Stats are optional per entry, so pre-stats manifests (and entries
+    * carried over from them) read unchanged — those files are simply
+    * never pruned.
     */
-  private def manifestLines(v: Long): Seq[String] = {
-    if (v <= 0L) return Seq.empty
-    val lines = rawManifestLines(v)
-    lines.find(_.startsWith("#xtxn:")) match {
-      case None => lines
-      case Some(h) =>
+  private def manifest(v: Long): Manifest = {
+    if (v <= 0L) return Manifest.empty
+    val m = rawManifest(v)
+    m.xtxnDecision match {
+      case None => m
+      case Some(decisionUri) =>
         // a cross-table-transaction version is visible only once its
         // single decision file says commit; an aborted (or
         // reader-force-aborted) version is an empty no-op whose
         // effective content is the previous version's ([[CrossTableTxn]])
-        val decisionUri = h.stripPrefix("#xtxn:").split('\t').last
-        if (CrossTableTxn.resolve(spark, decisionUri))
-          lines.filterNot(_.startsWith("#xtxn:"))
-        else manifestLines(v - 1)
+        if (CrossTableTxn.resolve(spark, decisionUri)) m.without(Manifest.XTxn)
+        else manifest(v - 1)
     }
   }
 
@@ -420,12 +413,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * then forced abort) — after this call the version's content is
     * immutable, which is what makes a pinned group a stable snapshot.
     */
-  private[catalog] def resolveDecision(v: Long): Unit = manifestLines(v): Unit
+  private[catalog] def resolveDecision(v: Long): Unit = manifest(v): Unit
 
-  private def rawManifestLines(v: Long): Seq[String] = {
+  private def rawManifest(v: Long): Manifest = {
     onMetaAccess("open")
-    LogStore.readString(hfs, manifestPath(v))
-      .split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
+    Manifest.read(LogStore.readString(hfs, manifestPath(v)))
   }
 
   /** Stage `df` and publish it as a PENDING next version of a
@@ -438,39 +430,24 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   private[graft] def publishPending(df: DataFrame, id: String,
       decisionUri: String, replace: Boolean, maxAttempts: Int = 50): Long = {
     enforceConstraints(df, checkConstraints, "xtxn")
-    val newLines = stageToPool(df, "xtxn")
+    val newEntries = stageToPool(df, "xtxn")
     headRace("publishPending", "xtxn", maxAttempts) { (_, prev) =>
       if (!replace) requireUnpartitioned("publishPending(append)", prev)
       val carried =
         if (replace) replaceCarriedData(prev, Some(df.schema)) else prev
-      publishAt(s"#xtxn:$id\t$decisionUri" +: (carried ++ newLines))
+      publishAt(Header.xtxn(id, decisionUri) +: (carried ++ newEntries))
     }
   }
 
-  /** Line-type partitions of one already-read manifest — every caller
-    * that needs more than one of these parses the manifest ONCE and
-    * splits, keeping read-path metadata cost at one open per version.
-    * (Pool names are uuid-derived and can never start with `#` or `-`,
-    * so the prefixes are unambiguous.)
-    */
-  private def dataNamesOf(lines: Seq[String]): Seq[String] =
-    lines.filterNot(l => l.startsWith("#") || l.startsWith("-"))
-      .map(_.split('\t').head)
-  private def dvNamesOf(lines: Seq[String]): Seq[String] =
-    lines.filter(_.startsWith("-")).map(_.stripPrefix("-").split('\t').head)
-
-  /** Data pool file names (relative to data/) of a committed version.
-    * `#`-prefixed manifest lines are metadata (txn markers) and
-    * `-`-prefixed lines are deletion-vector files, not data files.
-    */
-  def files(v: Long): Seq[String] = dataNamesOf(manifestLines(v))
+  /** Data pool file names (relative to data/) of a committed version. */
+  def files(v: Long): Seq[String] = manifest(v).dataNames
 
   /** Deletion-vector pool file names of a committed version (`-`-prefixed
     * manifest lines). Each is a parquet file of (data-file name, row
     * position) tombstones — the merge-on-read delete tier (see
     * [[deleteWhereMoR]]).
     */
-  def dvFiles(v: Long): Seq[String] = dvNamesOf(manifestLines(v))
+  def dvFiles(v: Long): Seq[String] = manifest(v).dvNames
 
   /** Absolute pool-file paths of a committed version — the file list a
     * V2 scan binds to (the snapshot stays immutable under later commits).
@@ -481,8 +458,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   /** Per-file column statistics of a committed version (absent for files
     * committed before stats existed — they are treated as unprunable).
     */
-  def fileStats(v: Long): Map[String, Map[String, ColStats]] =
-    fileStatsOf(manifestLines(v))
+  def fileStats(v: Long): Map[String, Map[String, ColStats]] = manifest(v).fileStats
 
   /** Per-file detail of a retained version — the `t.files` metadata
     * table's source. Bytes/rows come from the manifest's commit-time
@@ -491,22 +467,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * the file's layout directory (hive `c=v` subdirs, including the
     * hidden `_p_*` transform dirs), empty for flat pools.
     */
-  def fileDetails(v: Long): Seq[FileDetail] =
-    manifestLines(v).filterNot(l => l.startsWith("#") || l.startsWith("-"))
-      .map { line =>
-        val p = line.split('\t')
-        val (rows, bytes) = if (p.length > 1) lineMeta(p(1)) else (None, None)
-        FileDetail(p(0), p(0).split('/').dropRight(1).mkString("/"), bytes, rows)
-      }
-
-  private def fileStatsOf(lines: Seq[String]): Map[String, Map[String, ColStats]] =
-    lines.filterNot(l => l.startsWith("#") || l.startsWith("-"))
-      .flatMap { line =>
-      line.split('\t') match {
-        case Array(name, json) => Some(name -> parseStats(json))
-        case _                 => None
-      }
-    }.toMap
+  def fileDetails(v: Long): Seq[FileDetail] = manifest(v).data.map(e =>
+    FileDetail(e.name, e.name.split('/').dropRight(1).mkString("/"), e.bytes, e.rows))
 
   /** Partition columns recorded in a version's manifest (`#partition:`
     * header, JSON array), empty for unpartitioned versions. Hive-style
@@ -518,15 +480,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * manifest analog of the reference's `<asset>/<batch>/init/` landing
     * layout (cft/sourceSystem.yaml:77).
     */
-  def partitionColumns(v: Long): Seq[String] = partitionColsOf(manifestLines(v))
-
-  private def partitionColsOf(lines: Seq[String]): Seq[String] =
-    lines.find(_.startsWith("#partition:")).map { l =>
-      org.json4s.jackson.JsonMethods.parse(l.stripPrefix("#partition:")) match {
-        case org.json4s.JArray(vs) => vs.collect { case org.json4s.JString(s) => s }
-        case _ => Seq.empty
-      }
-    }.getOrElse(Seq.empty)
+  def partitionColumns(v: Long): Seq[String] = manifest(v).partitionColumns
 
   /** Leaf file name (pool names carry partition subdirs; leaves are
     * uuid-derived and globally unique, so leaf-keyed matching — what the
@@ -542,9 +496,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * re-adds the headers), so "was this batch applied" survives
     * compaction and rewrites for the table's lifetime.
     */
-  def txns(v: Long): Set[String] =
-    manifestLines(v).filter(_.startsWith("#txn:"))
-      .map(_.stripPrefix("#txn:")).toSet
+  def txns(v: Long): Set[String] = manifest(v).txns.toSet
 
   // ---- CHECK constraints ---------------------------------------------------
 
@@ -559,26 +511,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * (swagger:26-27 validator, SURVEY.md §2.1 R12); this is the
     * lakehouse-native form — declared once, enforced on the write path.
     */
-  def checkConstraints(v: Long): Map[String, String] = checkOf(manifestLines(v))
+  def checkConstraints(v: Long): Map[String, String] = manifest(v).checks
 
   /** Head constraints; empty for an uncommitted table. */
   def checkConstraints: Map[String, String] =
     currentVersion.map(checkConstraints).getOrElse(Map.empty)
-
-  private def checkOf(lines: Seq[String]): Map[String, String] =
-    lines.find(_.startsWith("#check:")).map { l =>
-      org.json4s.jackson.JsonMethods.parse(l.stripPrefix("#check:")) match {
-        case org.json4s.JObject(fs) =>
-          fs.collect { case (k, org.json4s.JString(s)) => k -> s }.toMap
-        case _ => Map.empty[String, String]
-      }
-    }.getOrElse(Map.empty)
-
-  private def checkHeader(cs: Map[String, String]): String =
-    "#check:" + org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(
-        org.json4s.JObject(cs.toList.sortBy(_._1).map {
-          case (k, s) => k -> org.json4s.JString(s) })))
 
   // ---- evolved schema of record ---------------------------------------------
 
@@ -597,15 +534,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * evolve performed.
     */
   def evolvedSchemaAt(v: Long): Option[org.apache.spark.sql.types.StructType] =
-    schemaOf(manifestLines(v))
+    manifest(v).schema
 
   def evolvedSchema: Option[org.apache.spark.sql.types.StructType] =
     currentVersion.flatMap(evolvedSchemaAt)
-
-  private def schemaOf(lines: Seq[String]): Option[org.apache.spark.sql.types.StructType] =
-    lines.find(_.startsWith("#schema:")).map(l =>
-      org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("#schema:"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Replace any prior `#schema:` header with the post-evolution schema:
     * the pre-evolution columns in their existing order (from the current
@@ -620,16 +552,16 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * through the change feed's pinned schema, breaking the
     * hidden-partition contract every other read surface keeps.
     */
-  private def evolveHeader(lines: Seq[String], curDataSchema: => org.apache.spark.sql.types.StructType,
-      newCols: Seq[String], batch: DataFrame): Seq[String] = {
-    if (newCols.isEmpty) lines
+  private def evolveHeader(m: Manifest, curDataSchema: => org.apache.spark.sql.types.StructType,
+      newCols: Seq[String], batch: DataFrame): Manifest = {
+    if (newCols.isEmpty) m
     else {
-      val hidden = transformsFor(lines).map(_.derivedName).toSet
-      val cur0 = schemaOf(lines).getOrElse(curDataSchema)
+      val hidden = transformsFor(m).map(_.derivedName).toSet
+      val cur0 = m.schema.getOrElse(curDataSchema)
       val cur = org.apache.spark.sql.types.StructType(
         cur0.fields.filterNot(f => hidden(f.name)))
       val add = newCols.filterNot(cur.fieldNames.contains)
-      if (add.isEmpty) lines
+      if (add.isEmpty) m
       else {
         // a widened column is NULLABLE by definition regardless of the
         // batch's own nullability: every pre-evolution row reads it as
@@ -637,7 +569,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // versions against the evolved schema — e.g. the change feed)
         val widened = org.apache.spark.sql.types.StructType(
           cur.fields ++ add.map(n => batch.schema(n).copy(nullable = true)))
-        lines.filterNot(_.startsWith("#schema:")) :+ ("#schema:" + widened.json)
+        m.without(Manifest.Schema) :+ Header.schema(widened)
       }
     }
   }
@@ -676,12 +608,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     if (changed) updates.select(aligned.toSeq: _*) else updates
   }
 
-  /** Headers that must outlive a replace/compaction: applied-batch
-    * memory (`#txn:`), declared CHECK constraints (`#check:`), the
-    * declared clustering spec (`#cluster:`), the failover generation
-    * (`#gen:` — losing it would make a once-promoted table's next
-    * publish bounce off its own old fence), and the transform
-    * partition spec of record (`#ptspec:`). The ptspec carry keeps the
+  /** Headers that must outlive a replace/compaction: the lineage set
+    * (`#txn:` applied-batch memory; `#gen:` the failover generation —
+    * losing it would make a once-promoted table's next publish bounce
+    * off its own old fence) and the contract set (CHECK constraints,
+    * clustering, TTL, evolved schema, the transform partition spec of
+    * record). The ptspec carry keeps the
     * spec of record IN THE MANIFEST across maintenance replaces
     * (compact's tombstoned fold, optimize, fast-forward): dropping it
     * would demote the spec back to the descriptor's write-behind copy,
@@ -694,11 +626,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * physical layout. Everything else (cursors, clone provenance) is
     * re-derived or re-declared by the rewriting operation itself.
     */
-  private def replaceCarried(prev: Seq[String]): Seq[String] =
-    prev.filter(l => l.startsWith("#txn:") || l.startsWith("#check:") ||
-      l.startsWith("#cluster:") || l.startsWith("#ptspec:") ||
-      l.startsWith("#ttl:") || l.startsWith("#schema:") ||
-      l.startsWith("#gen:"))
+  private def replaceCarried(prev: Manifest): Manifest =
+    prev.only(Manifest.Lineage ++ Manifest.Contracts)
 
   /** [[replaceCarried]] for replaces that REDEFINE the table's content
     * outright (INSERT OVERWRITE / `commit(replace=true)` / a replace
@@ -717,10 +646,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * replace; `None` (schema unknowable — e.g. truncate-to-empty) carries
     * conservatively.
     */
-  private def replaceCarriedData(prev: Seq[String],
-      newSchema: => Option[org.apache.spark.sql.types.StructType]): Seq[String] = {
+  private def replaceCarriedData(prev: Manifest,
+      newSchema: => Option[org.apache.spark.sql.types.StructType]): Manifest = {
     val base = replaceCarried(prev)
-    schemaOf(base) match {
+    base.schema match {
       case Some(rec) =>
         // compare USER-level shapes: on a transform table both the
         // batch AND the recorded schema (widened from a data schema
@@ -736,7 +665,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           s.fields.filterNot(f => hidden(f.name))
             .map(f => f.name -> f.dataType).toMap
         val sameShape = newSchema.forall(ns => userShape(rec) == userShape(ns))
-        if (sameShape) base else base.filterNot(_.startsWith("#schema:"))
+        if (sameShape) base else base.without(Manifest.Schema)
       case None => base
     }
   }
@@ -747,17 +676,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * manifests that predate the tag. Inert to every reader — pure
     * DESCRIBE HISTORY provenance.
     */
-  def operation(v: Long): String = opOf(manifestLines(v)).getOrElse("")
-
-  private def opOf(lines: Seq[String]): Option[String] =
-    lines.find(_.startsWith("#op:")).map(_.stripPrefix("#op:"))
-
-  /** Tag a manifest-to-publish with its operation, dropping any stale
-    * tag carried from the previous version (each `#op:` describes ITS
-    * commit only).
-    */
-  private def stamped(op: String, lines: Seq[String]): Seq[String] =
-    s"#op:$op" +: lines.filterNot(_.startsWith("#op:"))
+  def operation(v: Long): String = manifest(v).op.getOrElse("")
 
   // ---- declared clustering -------------------------------------------------
 
@@ -772,25 +691,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * affected; a batch missing a clustering column stages unsorted
     * (conservative, still correct).
     */
-  def clusteringColumns(v: Long): Seq[String] = clusterOf(manifestLines(v))
+  def clusteringColumns(v: Long): Seq[String] = manifest(v).clustering
 
   /** Head clustering spec; empty for an uncommitted or undeclared table. */
   def clusteringColumns: Seq[String] =
     currentVersion.map(clusteringColumns).getOrElse(Seq.empty)
-
-  private def clusterOf(lines: Seq[String]): Seq[String] =
-    lines.find(_.startsWith("#cluster:")).map { l =>
-      org.json4s.jackson.JsonMethods.parse(l.stripPrefix("#cluster:")) match {
-        case org.json4s.JArray(vs) =>
-          vs.collect { case org.json4s.JString(s) => s }
-        case _ => Seq.empty[String]
-      }
-    }.getOrElse(Seq.empty)
-
-  private def clusterHeader(cols: Seq[String]): String =
-    "#cluster:" + org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(
-        org.json4s.JArray(cols.toList.map(org.json4s.JString(_)))))
 
   /** Declare (or with `Seq.empty` clear) the table's clustering columns:
     * a metadata-only commit publishing the `#cluster:` header. Legal on
@@ -802,19 +707,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def setClustering(cols: Seq[String]): Long = {
     require(cols.distinct == cols, s"setClustering: duplicate columns in $cols")
     headRace("setClustering", "set_clustering") { (_, prev) =>
-      val partCols = partitionColsOf(prev)
+      val partCols = prev.partitionColumns
       val overlap = cols.filter(partCols.contains)
       require(overlap.isEmpty,
         s"setClustering: $overlap are partition columns — constant within " +
           "every file already, clustering them is a no-op by construction")
-      if (cols.nonEmpty && dataNamesOf(prev).nonEmpty) {
-        val have = readLines(prev).columns.toSet
+      if (cols.nonEmpty && prev.data.nonEmpty) {
+        val have = readManifest(prev).columns.toSet
         val missing = cols.filterNot(have)
         require(missing.isEmpty,
           s"setClustering: unknown column(s) $missing (have: ${have.toSeq.sorted})")
       }
-      val lines = prev.filterNot(_.startsWith("#cluster:"))
-      publishAt(if (cols.isEmpty) lines else clusterHeader(cols) +: lines)
+      publishAt(if (cols.isEmpty) prev.without(Manifest.Cluster)
+        else prev.set(Header.cluster(cols)))
     }
   }
 
@@ -869,18 +774,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // front door declares constraints right after CREATE TABLE, before
     // the first byte lands
     headRace("addConstraint", "add_constraint") { (_, prev) =>
-      val existing = checkOf(prev)
+      val existing = prev.checks
       require(!existing.contains(name),
         s"addConstraint: constraint '$name' already exists " +
           s"(${existing(name)}) — drop it first to redefine")
-      if (dataNamesOf(prev).nonEmpty) {
-        val bad = readLines(prev).filter(violates(exprSql)).count()
+      if (prev.data.nonEmpty) {
+        val bad = readManifest(prev).filter(violates(exprSql)).count()
         if (bad > 0) throw new IllegalStateException(
           s"addConstraint: $bad existing row(s) violate '$name' ($exprSql) " +
             s"under $tableRoot")
       }
-      publishAt(checkHeader(existing + (name -> exprSql)) +:
-        prev.filterNot(_.startsWith("#check:")))
+      publishAt(prev.set(Header.check(existing + (name -> exprSql))))
     }
   }
 
@@ -891,13 +795,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def dropConstraint(name: String): Long =
     headRace("dropConstraint", "drop_constraint",
         headless = Some(() => missingHead("dropConstraint: "))) { (_, prev) =>
-      val existing = checkOf(prev)
+      val existing = prev.checks
       require(existing.contains(name),
         s"dropConstraint: no constraint named '$name' " +
           s"(have: ${existing.keys.toSeq.sorted.mkString(", ")})")
       val rest = existing - name
-      val lines = prev.filterNot(_.startsWith("#check:"))
-      publishAt(if (rest.isEmpty) lines else checkHeader(rest) +: lines)
+      publishAt(if (rest.isEmpty) prev.without(Manifest.Check)
+        else prev.set(Header.check(rest)))
     }
 
   /** Violation predicate: NOT coalesce(expr, TRUE) — FALSE rows only. */
@@ -1011,24 +915,23 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val v = committedHead()
     // ONE manifest read and ONE descriptor read serve rows, dv names,
     // AND the transform spec
-    val lines = manifestLines(v)
+    val m = manifest(v)
     val meta = tableMeta
-    val df = readLines(lines, meta)
+    val df = readManifest(m, meta)
     // hidden-partition transforms: the derived `_p_*` layout columns are
     // internal — the public snapshot never shows them
-    val hidden = transformsFor(lines, meta).map(_.derivedName).filter(df.columns.contains)
+    val hidden = transformsFor(m, meta).map(_.derivedName).filter(df.columns.contains)
     if (hidden.isEmpty) df else df.drop(hidden: _*)
   }
 
-  def readVersion(v: Long): DataFrame = readLines(manifestLines(v))
+  def readVersion(v: Long): DataFrame = readManifest(manifest(v))
 
-  private def readLines(lines: Seq[String], meta: TableMeta = tableMeta): DataFrame = {
-    val names = dataNamesOf(lines)
-    if (names.isEmpty) {
+  private def readManifest(m: Manifest, meta: TableMeta = tableMeta): DataFrame = {
+    if (m.data.isEmpty) {
       // a rewrite can legally commit an empty table (e.g. delete-all);
       // an empty-schema frame is the only honest value without a stored schema
       spark.emptyDataFrame
-    } else readFiles(names, dvFrameOf(dvNamesOf(lines)), partTypesOf(lines), meta)
+    } else readFiles(m.dataNames, dvFrameOf(m.dvNames), partTypesOf(m), meta)
   }
 
   /** This table's descriptor ([[TableMeta]]), read fresh on every call. */
@@ -1053,13 +956,6 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     else Some(spark.read.parquet(names.map(n => new Path(dataDir, n).toString): _*)
       .select(DvKeys.map(col): _*))
 
-  /** Manifest names are dataDir-relative, EXCEPT shallow-clone lines,
-    * which are absolute references into the source's pool
-    * ([[cloneFrom]]); `Path(dataDir, n)` resolves both.
-    */
-  private def isAbsoluteName(n: String): Boolean =
-    n.startsWith("/") || n.contains("://")
-
   /** The pool files `names` as one parquet relation. Reads of a
     * type-WIDENED table ([[TableMeta.widened]], set by ALTER COLUMN ...
     * TYPE) pass the declared schema: old files keep their narrow physical
@@ -1068,7 +964,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * per file (int32→int64, float→double, decimal widening — native in
     * both the vectorized and row-based readers). Never-widened tables
     * read with mergeSchema. basePath (hive partition-column rehydration)
-    * applies only when every name is dataDir-relative — an absolute
+    * applies only when every name is dataDir-relative
+    * ([[Manifest.isAbsoluteName]]; `Path(dataDir, n)` resolves both) — an absolute
     * shallow-clone reference lives outside this table's root, where a
     * basePath that is not an ancestor is a hard error (clones are always
     * unpartitioned, so basePath is a no-op for them anyway).
@@ -1078,7 +975,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       case Some(s) => spark.read.schema(s)
       case None    => spark.read.option("mergeSchema", "true")
     }
-    (if (names.exists(isAbsoluteName)) r else r.option("basePath", dataDir.toString))
+    (if (names.exists(Manifest.isAbsoluteName)) r else r.option("basePath", dataDir.toString))
       .parquet(names.map(n => new Path(dataDir, n).toString): _*)
   }
 
@@ -1108,11 +1005,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * query and int in the next (and a pruned range read would silently
     * drop rows the lexical row filter should keep).
     */
-  private def partTypesOf(lines: Seq[String]): Map[String, String] = {
-    val cols = partitionColsOf(lines)
+  private def partTypesOf(m: Manifest): Map[String, String] = {
+    val cols = m.partitionColumns
     if (cols.isEmpty) Map.empty
     else {
-      val stats = fileStatsOf(lines)
+      val stats = m.fileStats
       cols.map { c =>
         // legacy manifests (pre schema-typed bounds) tagged each file by
         // the VALUE's lexical shape, so one column can carry mixed tags
@@ -1184,14 +1081,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     enforceConstraints(df, validatedCs, "commit")
     // every retry publishes the SAME pooled file names (carried-over
     // lines keep their stats)
-    val newLines = stageToPool(clustered(df), "commit")
-    val opName = header.collect { case ("op", hv) => hv }
+    val newEntries = stageToPool(clustered(df), "commit")
+    val opName = header.collect { case (Manifest.Op, hv) => hv }
       .getOrElse(if (replace) "replace" else "append")
     headRace("commit", opName) { (head, prev) =>
-      if (hasTxn(prev, txn)) Settle(head)  // lost the race to our own id's writer
+      if (txn.exists(prev.hasTxn)) Settle(head)  // lost the race to our own id's writer
       else {
         if (!replace) requireUnpartitioned("commit(append)", prev)
-        val curCs = checkOf(prev)
+        val curCs = prev.checks
         if (curCs != validatedCs) { // constraint DDL won a race: re-validate
           enforceConstraints(df, curCs, "commit"); validatedCs = curCs
         }
@@ -1199,18 +1096,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // applied-batch memory outlives any rewrite or compaction
         val carried0 =
           if (replace) replaceCarriedData(prev, Some(df.schema)) else prev
-        val carried = header.fold(carried0) { case (k, _) =>
-          carried0.filterNot(_.startsWith(s"#$k:"))
-        }
-        publishAt(carried ++ txn.map(id => s"#txn:$id").toSeq ++
-          header.map { case (k, hv) => s"#$k:$hv" }.toSeq ++ newLines)
+        val carried = header.fold(carried0) { case (k, _) => carried0.without(k) }
+        publishAt(carried ++ txn.map(Header.txn) ++
+          header.map { case (k, hv) => Header(k, hv) } ++ newEntries)
       }
     }
   }
 
   /** The value of a version's `#<key>:` manifest header, if present. */
-  def headerOf(v: Long, key: String): Option[String] =
-    manifestLines(v).find(_.startsWith(s"#$key:")).map(_.stripPrefix(s"#$key:"))
+  def headerOf(v: Long, key: String): Option[String] = manifest(v).header(key)
 
   /** RESTORE (rollback): make the head's content equal an earlier
     * version's, published as a NEW commit whose manifest re-references
@@ -1218,10 +1112,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * history is preserved (the rolled-back versions stay readable and
     * time-travelable until vacuum). Because the new head references the
     * restored files, vacuum keeps them live even after it drops the old
-    * manifests. `#txn:` headers on the CURRENT head are carried forward —
-    * applied-batch memory must survive a rollback exactly as it survives
-    * replace and compaction (a restore that forgot them would let a
-    * redelivered streaming batch double-apply).
+    * manifests. The CURRENT head's lineage headers are carried forward:
+    * applied-batch memory (`#txn:`) must survive a rollback exactly as it
+    * survives replace and compaction (a restore that forgot it would let
+    * a redelivered streaming batch double-apply), and the failover
+    * generation (`#gen:`) must never move back (a pre-promotion target
+    * would re-open the fence the promotion stamped on the old primary).
+    * Everything else is the target's, contracts included.
     */
   def restore(v: Long): Long = {
     val live = committedVersions
@@ -1236,15 +1133,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         "a vacuumed version cannot be restored)")
     // restoring the head would publish a redundant duplicate commit
     if (v == live.max) return v
-    val dataLines = manifestLines(v).filterNot(_.startsWith("#txn:"))
+    val target = manifest(v).without(Manifest.Lineage)
     headRace("restore", "restore", headless = Some(() =>
         new java.util.NoSuchElementException(s"restore: empty commit log under $tableRoot"))) {
-      (_, prev) => publishAt(prev.filter(_.startsWith("#txn:")) ++ dataLines)
+      (_, prev) => publishAt(prev.only(Manifest.Lineage) ++ target)
     }
   }
 
   /** Write `df` once into a staging dir, move its part files into the
-    * pool under fresh opaque names, and return their manifest lines
+    * pool under fresh opaque names, and return their manifest entries
     * (name + footer stats). Names are computed BEFORE any version race —
     * only a manifest confers liveness, so they need not embed the
     * finally-committed version; the uuid keeps racing writers' files from
@@ -1255,19 +1152,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * orphans.) Footer stats ride the manifest line: one footer read per
     * new file at commit time buys every future reader file-level pruning.
     */
-  private def stageToPool(df: DataFrame, op: String): Seq[String] = {
+  private def stageToPool(df: DataFrame, op: String): Seq[Entry] = {
     val stage = new Path(tmpDir, java.util.UUID.randomUUID().toString)
     df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
     poolFromStage(stage, op)
   }
 
   /** Move an already-written staging dir's part files into the pool
-    * under fresh opaque names and return their manifest lines — the
+    * under fresh opaque names and return their manifest entries — the
     * second half of [[stageToPool]], split out so writers that produce
     * their files through other machinery (the V2 batch write behind SQL
     * MERGE/UPDATE) share the same pooling discipline.
     */
-  private def poolFromStage(stage: Path, op: String): Seq[String] = {
+  private def poolFromStage(stage: Path, op: String): Seq[Entry] = {
     // one footer read per part yields BOTH the row count and the stats;
     // zero-row parts (Spark writes schema-only files for empty partitions
     // of union/anti-join plans) are dropped here — they would pollute
@@ -1280,14 +1177,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     hfs.mkdirs(dataDir)
     hfs.mkdirs(commitsDir)
-    val lines = parts.zipWithIndex.map { case ((src, len, (rows, st)), i) =>
+    val entries = parts.zipWithIndex.map { case ((src, len, (rows, st)), i) =>
       val name = f"$uuid-part$i%05d.parquet"
       if (!hfs.rename(src, new Path(dataDir, name)))
         throw new java.io.IOException(s"$op: could not move $src into the pool")
-      s"$name\t${statsJson(st, rows, len)}"
+      Entry.pooled(name, st, rows, len)
     }
     hfs.delete(stage, true)
-    lines.toSeq
+    entries.toSeq
   }
 
   /** Hive %xx escape decoding for partition-dir values (Spark escapes
@@ -1351,7 +1248,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * bounds, so one conjunctive test serves both pruning tiers.
     */
   private def stagePartitioned(df: DataFrame, partitionCols: Seq[String],
-      op: String): Seq[String] = {
+      op: String): Seq[Entry] = {
     require(partitionCols.nonEmpty, s"$op: empty partition column list")
     val missing = partitionCols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"$op: partition columns $missing not in ${df.columns.toSeq}")
@@ -1386,7 +1283,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     hfs.mkdirs(dataDir)
     hfs.mkdirs(commitsDir)
-    val lines = parts.sortBy(_._1.getName).zipWithIndex.map {
+    val entries = parts.sortBy(_._1.getName).zipWithIndex.map {
       case ((src, len, subdirs), i) =>
         val (rows, st) = footerInfo(src)
         if (rows == 0L) { hfs.delete(src, false); None }
@@ -1396,12 +1293,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           hfs.mkdirs(dest.getParent)
           if (!hfs.rename(src, dest))
             throw new java.io.IOException(s"$op: could not move $src into the pool")
-          val merged = st ++ partValueStats(subdirs, colType)
-          Some(s"$name\t${statsJson(merged, rows, len)}")
+          Some(Entry.pooled(name, st ++ partValueStats(subdirs, colType), rows, len))
         }
     }.flatten
     hfs.delete(stage, true)
-    lines.toSeq
+    entries.toSeq
   }
 
   /** Commit `df` hive-partitioned by `partitionCols` as the next version
@@ -1425,26 +1321,24 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       currentVersion.foreach { v => if (txns(v).contains(id)) return v }
     }
     currentVersion.filter(_ => !replace).foreach { v =>
-      val prevLines = manifestLines(v)
-      val existing = partitionColsOf(prevLines)
+      val prevManifest = manifest(v)
+      val existing = prevManifest.partitionColumns
       // an empty-spec head is only appendable when it holds NO data
       // files: hive subdir lines over flat lines mix directory depths
       require(existing == partitionCols ||
-          (existing.isEmpty && dataNamesOf(prevLines).isEmpty),
+          (existing.isEmpty && prevManifest.data.isEmpty),
         s"commitPartitioned: head is ${if (existing.isEmpty) "flat"
           else s"partitioned by $existing"}, append by $partitionCols " +
           "would mix layouts (replace=true may change the spec)")
     }
     var validatedCs = checkConstraints
     enforceConstraints(df, validatedCs, "commitPartitioned")
-    val newLines = stagePartitioned(clustered(df, partitionCols),
+    val newEntries = stagePartitioned(clustered(df, partitionCols),
       partitionCols, "commitPartitioned")
-    val header = "#partition:" + org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(
-        org.json4s.JArray(partitionCols.map(org.json4s.JString(_)).toList)))
+    val extra = extraHeader.map(Manifest.parseLine)
     headRace("commitPartitioned",
         op.getOrElse(if (replace) "replace" else "append")) { (head, prev) =>
-      if (hasTxn(prev, txn)) Settle(head)
+      if (txn.exists(prev.hasTxn)) Settle(head)
       else {
         // re-check the spec against the CURRENT head on every attempt: a
         // concurrent replace can change/drop the spec between the entry
@@ -1452,17 +1346,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // file lines would mix directory layouts under data/ (the partitioned
         // mirror of the flat paths' requireUnpartitioned)
         if (!replace) {
-          val headCols = partitionColsOf(prev)
+          val headCols = prev.partitionColumns
           // same rule as the entry check: a racer that replaced the table
           // FLAT (empty spec, data lines present) must also refuse — an
           // empty spec alone is only safe over an empty table
           require(headCols == partitionCols ||
-              (headCols.isEmpty && dataNamesOf(prev).isEmpty),
+              (headCols.isEmpty && prev.data.isEmpty),
             s"commitPartitioned: head layout changed by a concurrent commit " +
               s"(now ${if (headCols.isEmpty) "flat" else s"partitioned by $headCols"}); " +
               s"append by $partitionCols would mix layouts")
         }
-        val curCs = checkOf(prev)
+        val curCs = prev.checks
         if (curCs != validatedCs) {
           enforceConstraints(df, curCs, "commitPartitioned"); validatedCs = curCs
         }
@@ -1472,17 +1366,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // replaces match the recorded map and keep it
         val carried0 =
           if (replace) replaceCarriedData(prev, Some(df.schema))
-          else prev.filterNot(_.startsWith("#partition:"))
+          else prev.without(Manifest.Partition)
         // an extra header (e.g. #ptspec:) supersedes its prior same-key
         // line — it rides the SAME atomic publish as the data it describes
-        val carried = extraHeader match {
-          case Some(h) =>
-            val key = h.takeWhile(_ != ':') + ":"
-            carried0.filterNot(_.startsWith(key))
-          case None => carried0
-        }
-        publishAt(header +: (extraHeader.toSeq ++ carried ++
-          txn.map(id => s"#txn:$id").toSeq ++ newLines))
+        val carried = extra.collect { case h: Header => carried0.without(h.key) }
+          .getOrElse(carried0)
+        publishAt(Header.partition(partitionCols) +: (Manifest(extra.toSeq) ++ carried ++
+          txn.map(Header.txn) ++ newEntries))
       }
     }
   }
@@ -1511,22 +1401,22 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     hfs.mkdirs(dataDir)
     hfs.mkdirs(commitsDir)
-    val newLines = paths.sortBy(_.getName)
+    val newEntries = paths.sortBy(_.getName)
       .map(p => (p, hfs.getFileStatus(p).getLen, footerInfo(p)))
       .filter { case (_, _, (rows, _)) => rows > 0 }
       .zipWithIndex.map { case ((src, len, (rows, st)), i) =>
         val name = f"$uuid-part$i%05d.parquet"
         if (!hfs.rename(src, new Path(dataDir, name)))
           throw new java.io.IOException(s"commitPooledFiles: could not move $src")
-        s"$name\t${statsJson(st, rows, len)}"
+        Entry.pooled(name, st, rows, len)
       }
-    val pooledPaths = newLines.map(l => new Path(dataDir, l.split('\t').head))
+    val pooledPaths = newEntries.map(e => new Path(dataDir, e.name))
     headRace("commitPooledFiles", if (replace) "replace" else "append") {
       (head, prev) =>
-        if (hasTxn(prev, txn)) Settle(head)
+        if (txn.exists(prev.hasTxn)) Settle(head)
         else {
           if (!replace) requireUnpartitioned("commitPooledFiles(append)", prev)
-          val curCs = checkOf(prev)
+          val curCs = prev.checks
           if (curCs != validatedCs) { // constraint DDL won a race: re-validate
             enforceConstraintsOnPaths(pooledPaths, curCs, "commitPooledFiles")
             validatedCs = curCs
@@ -1534,7 +1424,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           val carried = if (replace) replaceCarriedData(prev,
             pooledPaths.headOption.map(p => spark.read.parquet(p.toString).schema))
           else prev
-          publishAt(carried ++ txn.map(id => s"#txn:$id").toSeq ++ newLines)
+          publishAt(carried ++ txn.map(Header.txn) ++ newEntries)
         }
     }
   }
@@ -1614,10 +1504,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val (rows, st) = footerInfo(dst)
       if (rows == 0L) { hfs.delete(dst, false); None }
       else Some((src.toUri.getPath, name,
-        s"$name\t${statsJson(st, rows, hfs.getFileStatus(dst).getLen)}"))
+        Entry.pooled(name, st, rows, hfs.getFileStatus(dst).getLen)))
     }
-    val dataLines = pooled.map(_._3)
-    val tombLines = tombs match {
+    val dataEntries = pooled.map(_._3)
+    val tombEntries = tombs match {
       case None => Seq.empty
       case Some(t) =>
         val mapDf = pooled.map { case (srcNorm, name, _) => (srcNorm, name) }
@@ -1626,12 +1516,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           .join(org.apache.spark.sql.functions.broadcast(mapDf), Seq("_graft_src"))
           .select(col(DvKeys.head),
             col("_graft_del_pos").cast("long").as(DvKeys.last))
-        val staged = stageToPool(keyed, "importDeletes")
-        staged.map("-" + _)
+        stageToPool(keyed, "importDeletes").map(_.asDv)
     }
     headRace("commitCopiedWithTombstones", "import") { (_, prev) =>
       if (!replace) requireUnpartitioned("commitCopiedWithTombstones(append)", prev)
-      val curCs = checkOf(prev)
+      val curCs = prev.checks
       if (curCs != validatedCs) { // constraint DDL won a race: re-validate
         validate(curCs); validatedCs = curCs
       }
@@ -1639,7 +1528,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         pooled.headOption.map { case (_, name, _) =>
           spark.read.parquet(new Path(dataDir, name).toString).schema })
       else prev
-      publishAt(carried ++ dataLines ++ tombLines)
+      publishAt(carried ++ dataEntries ++ tombEntries)
     }
   }
 
@@ -1665,46 +1554,35 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def replicateFrom(src: CommitLog): Option[Long] = {
     val head = src.currentVersion.getOrElse(return None)
-    val cursor = currentVersion.flatMap(v => headerOf(v, "repsrc")).map(_.toLong)
+    val cursor = currentVersion.flatMap(v => manifest(v).syncedVersion)
     if (cursor.contains(head)) return None
-    val lines = src.manifestLines(head)
+    val srcManifest = src.manifest(head)
     // a FENCED source is a superseded primary: its lineage forked from
     // the promoted table's the moment the fence landed, so syncing from
     // it would propagate exactly the split-brain the fence exists to
     // stop. A source AT the fenced generation is fine — that's a
     // resynced replica legitimately serving a cascade.
     src.fenceEpoch.foreach { e =>
-      require(genOf(lines) >= e,
+      require(srcManifest.generation >= e,
         s"replicateFrom: the replication source is FENCED at epoch $e " +
-          s"(its head carries generation ${genOf(lines)}) — a promoted " +
+          s"(its head carries generation ${srcManifest.generation}) — a promoted " +
           "replica superseded it during failover; sync from the promoted " +
           "table instead")
     }
-    def isAbs(n: String) = n.startsWith("/") || n.contains("://")
     hfs.mkdirs(dataDir)
     hfs.mkdirs(commitsDir)
-    val outLines = lines.map { l =>
-      if (l.startsWith("#")) l
-      else {
-        val tomb = l.startsWith("-")
-        val body = if (tomb) l.drop(1) else l
-        val parts = body.split('\t')
-        val n = parts(0)
-        val local = if (isAbs(n)) leafOf(n) else n
-        val dst = new Path(dataDir, local)
-        if (!hfs.exists(dst)) {
-          val sp = if (isAbs(n)) new Path(n) else new Path(src.dataDir, n)
-          if (local.contains('/')) hfs.mkdirs(dst.getParent)
-          if (!org.apache.hadoop.fs.FileUtil.copy(src.hfs, sp, hfs, dst, false,
-              hfs.getConf))
-            throw new java.io.IOException(s"replicateFrom: copy of $n failed")
-        }
-        val rebuilt = (local +: parts.drop(1).toSeq).mkString("\t")
-        if (tomb) "-" + rebuilt else rebuilt
+    val localized = srcManifest.mapEntries { e =>
+      val local = if (e.absolute) leafOf(e.name) else e.name
+      val dst = new Path(dataDir, local)
+      if (!hfs.exists(dst)) {
+        val sp = if (e.absolute) new Path(e.name) else new Path(src.dataDir, e.name)
+        if (local.contains('/')) hfs.mkdirs(dst.getParent)
+        if (!org.apache.hadoop.fs.FileUtil.copy(src.hfs, sp, hfs, dst, false,
+            hfs.getConf))
+          throw new java.io.IOException(s"replicateFrom: copy of ${e.name} failed")
       }
+      e.copy(name = local)
     }
-    val base = outLines.filterNot(l => l.startsWith("#repsrc:") ||
-      l.startsWith("#repmap:") || l.startsWith("#reproot:"))
     // a transform-partitioned source's layout declaration rides along —
     // without it the replica would EXPOSE the hidden `_p_*` columns and
     // lose its transform pruning
@@ -1715,12 +1593,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // (`#reproot:`): the translation table a failed-over streaming
     // consumer re-anchors its primary-version checkpoint through
     // ([[translateSourceOffset]])
-    val syncHeaders = Seq(s"#repsrc:$head",
-      s"#repmap:${cursor.getOrElse(0L) + 1}-$head",
-      s"#reproot:${src.tableQualifiedRoot}")
-    headRace("replicateFrom", "replicate") { (_, _) =>
-      Publish(syncHeaders ++ base, Some(_))
-    }
+    val synced = Manifest(Seq(Header.repsrc(head),
+      Header.repmap(cursor.getOrElse(0L) + 1, head),
+      Header.reproot(src.tableQualifiedRoot))) ++ localized.without(Manifest.Sync)
+    headRace("replicateFrom", "replicate") { (_, _) => Publish(synced, Some(_)) }
   }
 
   // ---- replica promotion & generation fencing ------------------------------
@@ -1729,17 +1605,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   // at every version, including versions published after it landed
   private val fenceFile = new Path(tableRoot, "_fence.json")
 
-  /** Failover generation carried by a manifest (`#gen:` header): bumped
-    * by every [[promote]], 0 for tables that never took part in a
-    * failover. The generation is the fencing token — see [[fenceEpoch]].
+  /** Head failover generation (`#gen:` header): bumped by every
+    * [[promote]], 0 for tables that never took part in a failover. The
+    * generation is the fencing token — see [[fenceEpoch]].
     */
-  private def genOf(lines: Seq[String]): Long =
-    lines.find(_.startsWith("#gen:"))
-      .map(_.stripPrefix("#gen:").trim.toLong).getOrElse(0L)
-
-  /** Head failover generation; 0 for never-promoted tables. */
   def generation: Long =
-    currentVersion.map(v => genOf(manifestLines(v))).getOrElse(0L)
+    currentVersion.map(v => manifest(v).generation).getOrElse(0L)
 
   /** The fence epoch stamped at this root (`_fence.json`), if any: a
     * durable mark that a REPLICA of this table was promoted at that
@@ -1785,10 +1656,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * ordinary commit from a rejoined stale primary, or a direct write
     * to a resynced replica — bounces loudly instead of forking history.
     */
-  private def enforceFence(lines: Seq[String]): Unit =
+  private def enforceFence(m: Manifest): Unit =
     fenceEpoch.foreach { e =>
-      val g = genOf(lines)
-      val ok = if (opOf(lines).contains("replicate")) g >= e else g > e
+      val g = m.generation
+      val ok = if (m.op.contains("replicate")) g >= e else g > e
       if (!ok) throw new IllegalStateException(
         s"publish: table under $tableRoot is FENCED at epoch $e (this " +
           s"manifest carries generation $g) — a replica was promoted and " +
@@ -1842,19 +1713,16 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def promote(fenceOldPrimary: Option[CommitLog] = None): (Long, Long, Boolean) =
     headRace("promote", "promote", headless = Some(() =>
         new IllegalStateException(s"promote: no committed version under $tableRoot"))) {
-      (_, lines) =>
-        require(lines.exists(_.startsWith("#repsrc:")),
+      (_, head) =>
+        require(head.has(Manifest.RepSrc),
           s"promote: table under $tableRoot carries no #repsrc cursor — it " +
             "is not a replica (already writable); promotion is a " +
             "replica-only operation")
-        val newGen = math.max(genOf(lines), fenceEpoch.getOrElse(0L)) + 1
+        val newGen = math.max(head.generation, fenceEpoch.getOrElse(0L)) + 1
         // the promote commit sheds the sync bookkeeping (#repsrc cursor,
         // #repmap window, #reproot provenance) — the HISTORY manifests
         // keep every sync's repmap, which is what offset translation walks
-        val base = lines.filterNot(l =>
-          l.startsWith("#repsrc:") || l.startsWith("#gen:") ||
-            l.startsWith("#repmap:") || l.startsWith("#reproot:"))
-        Publish(s"#gen:$newGen" +: base, v => {
+        Publish(head.without(Manifest.Sync).set(Header.gen(newGen)), v => {
           val fenced = fenceOldPrimary.exists { old =>
             try { old.writeFence(newGen, tableRoot); true }
             catch { case scala.util.control.NonFatal(_) => false }
@@ -1900,17 +1768,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     var fold: Option[(Long, Long, Long)] = None
     var v = 1L
     while (v <= head) {
-      headerOf(v, "repmap").foreach { m =>
-        val fromWant = headerOf(v, "reproot").forall(r => norm(r.trim) == want)
-        if (fromWant) m.trim.split('-') match {
-          case Array(loS, hiS) =>
-            val (lo, hi) = (loS.toLong, hiS.toLong)
-            sawSource = true
-            if (hi > maxHi) maxHi = hi
-            if (srcVersion == hi) return v
-            if (srcVersion >= lo && srcVersion < hi && fold.isEmpty)
-              fold = Some((v, lo, hi))
-          case _ => ()
+      val m = manifest(v)
+      m.syncWindow.foreach { case (lo, hi) =>
+        if (m.syncRoot.forall(r => norm(r.trim) == want)) {
+          sawSource = true
+          if (hi > maxHi) maxHi = hi
+          if (srcVersion == hi) return v
+          if (srcVersion >= lo && srcVersion < hi && fold.isEmpty)
+            fold = Some((v, lo, hi))
         }
       }
       v += 1
@@ -1946,8 +1811,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * layout — the partitioned delete tier is [[deleteWhereMoR]] /
     * [[deleteKeysMoR]] + [[rewriteDeletes]].
     */
-  private def requireUnpartitioned(op: String, lines: Seq[String]): Unit =
-    require(partitionColsOf(lines).isEmpty,
+  private def requireUnpartitioned(op: String, m: Manifest): Unit =
+    require(m.partitionColumns.isEmpty,
       s"$op: table under $tableRoot is hive-partitioned; use the MoR delete " +
         "tier (deleteWhereMoR/deleteKeysMoR + rewriteDeletes) or rebuild with " +
         "commitPartitioned(replace = true)")
@@ -1966,18 +1831,18 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * content. `#txn:` headers carry forward across the replace.
     */
   def commitStaged(stageDir: String, replace: Boolean): Long = {
-    val newLines = poolFromStage(new Path(stageDir), "commitStaged")
-    val newPaths = newLines.map(l => new Path(dataDir, l.split('\t').head))
+    val newEntries = poolFromStage(new Path(stageDir), "commitStaged")
+    val newPaths = newEntries.map(e => new Path(dataDir, e.name))
     var validatedCs = checkConstraints
     enforceConstraintsOnPaths(newPaths, validatedCs, "commitStaged")
     headRace("commitStaged", if (replace) "replace" else "append") { (_, prev) =>
       if (!replace) requireUnpartitioned("commitStaged(append)", prev)
-      val curCs = checkOf(prev)
+      val curCs = prev.checks
       if (curCs != validatedCs) { // constraint DDL won a race: re-validate
         enforceConstraintsOnPaths(newPaths, curCs, "commitStaged")
         validatedCs = curCs
       }
-      publishAt((if (replace) replaceCarried(prev) else prev) ++ newLines)
+      publishAt((if (replace) replaceCarried(prev) else prev) ++ newEntries)
     }
   }
 
@@ -2027,13 +1892,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       s"cloneFrom: $srcRoot carries merge-on-read deletion vectors; fold " +
         "them first: CALL <catalog>.system.rewrite_deletes")
     val srcData = new Path(srcRoot, "data")
-    val absLines = src.manifestLines(v)
-      .filterNot(l => l.startsWith("#") || l.startsWith("-"))
-      .map { l =>
-        val i = l.indexOf('\t')
-        val (name, rest) = if (i < 0) (l, "") else (l.substring(0, i), l.substring(i))
-        s"${new Path(srcData, name)}$rest"
-      }
+    val srcManifest = src.manifest(v)
+    val absEntries = srcManifest.data.map(e => e.copy(name = new Path(srcData, e.name).toString))
     // register this clone at EVERY root it references (clone-of-clone
     // lines can point past the immediate source at the original pool),
     // so those roots' vacuums keep referenced files live — one atomic
@@ -2042,24 +1902,21 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // leaves an unreferenced marker that self-cleans on the source's
     // next vacuum, whereas the reverse order would leave a published,
     // readable clone that one source vacuum permanently breaks.
-    absLines.iterator.flatMap(l => dataRootOf(l.split('\t').head))
+    absEntries.iterator.flatMap(e => dataRootOf(e.name))
       .map(r => r.stripSuffix("/data")).toSet[String]
       .foreach(registerCloneAt(_, tableRoot))
-    // declarative table metadata FORKS with the data: CHECK constraints,
-    // clustering, TTL policy, the evolved schema of record, and the
-    // transform spec all describe the snapshot being cloned — dropping
-    // them would hand back a clone that accepts rows the source refuses,
-    // loses a library-evolved column from its schema, or exposes a
-    // transform layout's hidden `_p_*` columns. `#txn:` memory is NOT
-    // carried: the clone is a new table; streams writing to it start
-    // their own exactly-once ledger.
-    val metaCarried = src.manifestLines(v).filter(l =>
-      l.startsWith("#check:") || l.startsWith("#cluster:") ||
-        l.startsWith("#ttl:") || l.startsWith("#schema:") ||
-        l.startsWith("#ptspec:"))
-    // provenance header (inert to every reader): names the branch point
-    if (!publish(1, stamped("clone",
-        s"#clone:$srcRoot@$v" +: (metaCarried ++ absLines)))) throw new java.io.IOException(
+    // the contracts FORK with the data: CHECK constraints, clustering,
+    // TTL policy, the evolved schema of record, and the transform spec
+    // all describe the snapshot being cloned — dropping them would hand
+    // back a clone that accepts rows the source refuses, loses a
+    // library-evolved column from its schema, or exposes a transform
+    // layout's hidden `_p_*` columns. Lineage is NOT carried: the clone
+    // is a new table; streams writing to it start their own exactly-once
+    // ledger. The provenance header (inert to every reader) names the
+    // branch point.
+    val cloned = Header.cloned(srcRoot, v) +:
+      (srcManifest.only(Manifest.Contracts) ++ absEntries)
+    if (!publish(1, cloned.set(Header.op("clone")))) throw new java.io.IOException(
       s"cloneFrom: lost the v1 race under $tableRoot")
     // a concurrent source vacuum may have dropped a time-travel target
     // version while this clone was in flight (the head always survives
@@ -2077,7 +1934,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * is unambiguous.
     */
   private def dataRootOf(n: String): Option[String] =
-    if (!isAbsoluteName(n)) None
+    if (!Manifest.isAbsoluteName(n)) None
     else {
       val i = n.lastIndexOf("/data/")
       if (i < 0) None else Some(n.substring(0, i + 5))
@@ -2117,10 +1974,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     hfs.listStatus(dir).foreach { m =>
       val cloneRoot = java.net.URLDecoder.decode(m.getPath.getName, "UTF-8")
       val clone = new CommitLog(spark, cloneRoot)
-      val refs = clone.committedVersions.flatMap(clone.manifestLines)
-        .filterNot(l => l.startsWith("#") || l.startsWith("-"))
-        .map(_.split('\t').head)
-        .filter(isAbsoluteName)
+      val refs = clone.committedVersions.flatMap(clone.manifest(_).dataNames)
+        .filter(Manifest.isAbsoluteName)
         .map(n => new Path(n).toUri.getPath)
         .filter(_.startsWith(myData + "/"))
         .map(_.stripPrefix(myData + "/"))
@@ -2199,24 +2054,16 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def partitionTransforms: Seq[PartitionTransform] =
     transformsFor(
-      try currentVersion.map(manifestLines).getOrElse(Seq.empty)
-      catch { case scala.util.control.NonFatal(_) => Seq.empty })
+      try currentVersion.map(manifest).getOrElse(Manifest.empty)
+      catch { case scala.util.control.NonFatal(_) => Manifest.empty })
 
   /** Transform spec for a manifest already in hand — callers on the read
-    * path pass their own lines (and descriptor), so the spec costs no
+    * path pass their own manifest (and descriptor), so the spec costs no
     * extra manifest read (head discovery stays O(1) reads).
     */
-  private def transformsFor(lines: Seq[String],
+  private def transformsFor(m: Manifest,
       meta: => TableMeta = tableMeta): Seq[PartitionTransform] =
-    lines.find(_.startsWith("#ptspec:")) match {
-      case Some(l) => TableMeta.transformsOf(
-        org.json4s.jackson.JsonMethods.parse(l.stripPrefix("#ptspec:")))
-      case None => meta.transforms
-    }
-
-  private def ptspecJson(ts: Seq[PartitionTransform]): String =
-    org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(TableMeta.transformsJson(ts)))
+    m.transforms.getOrElse(meta.transforms)
 
   private def writePtspec(ts: Seq[PartitionTransform]): Unit =
     TableMeta.update(hfs, tableRoot)(_.copy(transforms = ts)): Unit
@@ -2252,7 +2099,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val names = ts.map(_.derivedName)
     val df = applyTransforms(df0).repartition(names.map(n => col(s"`$n`")): _*)
     val ver = commitPartitioned(df, names, replace = true,
-      extraHeader = Some("#ptspec:" + ptspecJson(ts)))
+      extraHeader = Some(Header.ptspec(ts).text))
     hfs.delete(stage, true)
     ver
   }
@@ -2301,7 +2148,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // spec, a reader of the old head the old one
     val ver = commitPartitioned(derived.repartition(names.map(n => col(s"`$n`")): _*),
       names, replace, txn,
-      extraHeader = Some("#ptspec:" + ptspecJson(parsed)))
+      extraHeader = Some(Header.ptspec(parsed).text))
     // descriptor = write-behind copy (pre-commit declarations);
     // written only AFTER the data publish succeeds, so a failed commit
     // can never leave a NEW spec declared over OLD-layout data — and if
@@ -2349,11 +2196,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       : Seq[String] = {
     import org.apache.spark.sql.catalyst.{expressions => E}
     val v = committedHead()
-    val lines = manifestLines(v)
-    val names = dataNamesOf(lines)
-    val specs = transformsFor(lines)
+    val m = manifest(v)
+    val names = m.dataNames
+    val specs = transformsFor(m)
     if (names.isEmpty) return names
-    val stats = fileStatsOf(lines)
+    val stats = m.fileStats
     // a Spark-4 Column is a ColumnNode tree, not a catalyst expression:
     // resolve it the honest way — analyze a Filter over this snapshot
     // and lift the RESOLVED condition (attributes bound, literals
@@ -2487,17 +2334,16 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def readWhere(cond: org.apache.spark.sql.Column): DataFrame = {
     val v = committedHead()
-    val lines = manifestLines(v)
-    val specs = transformsFor(lines)
+    val m = manifest(v)
+    val specs = transformsFor(m)
     def hide(df: DataFrame): DataFrame = {
       val hidden = specs.map(_.derivedName).filter(df.columns.contains)
       if (hidden.isEmpty) df else df.drop(hidden: _*)
     }
-    if (dataNamesOf(lines).isEmpty) return hide(readVersion(v).filter(cond))
+    if (m.data.isEmpty) return hide(readVersion(v).filter(cond))
     val candidates = prunedCandidates(cond)
     if (candidates.isEmpty) hide(readVersion(v).filter(cond).limit(0))
-    else hide(readFiles(candidates, dvFrameOf(dvNamesOf(lines)),
-      partTypesOf(lines)).filter(cond))
+    else hide(readFiles(candidates, dvFrameOf(m.dvNames), partTypesOf(m)).filter(cond))
   }
 
   // ---- named refs: tags, branches, write-audit-publish ---------------------
@@ -2572,7 +2418,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         s"createTag: ref '$name' already exists under $tableRoot")
     // a concurrent vacuum may have read refs BEFORE this tag landed and
     // collected v — fail loudly rather than hand back a dangling tag
-    if (!hfs.exists(manifestPath(v))) {
+    if (!isCommitted(v)) {
       hfs.delete(new Path(refsDir, name), false)
       throw new java.io.IOException(
         s"createTag: version $v of $tableRoot was vacuumed mid-create; " +
@@ -2584,9 +2430,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   /** Fork a zero-copy branch at `version` (default: head): a shallow
     * clone under `_branches/<name>` whose writers pool into their own
     * dir ([[cloneFrom]] semantics and refusals — the main table must be
-    * unpartitioned and DV-free). Main's declared CHECK constraints and
-    * clustering carry onto the branch so audited writes meet the same
-    * contracts they'll be published under.
+    * unpartitioned and DV-free). The clone forks main's contracts (CHECK
+    * constraints, clustering, TTL, evolved schema, transform spec), so
+    * audited writes meet the same contracts they'll be published under;
+    * the branch root is the clone's one version.
     */
   def createBranch(name: String, version: Option[Long] = None): Long = {
     requireRefName(name)
@@ -2605,12 +2452,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // cloneFrom's marker registration) — needed to move/retire the
     // vacuum-protection markers when the tmp clone renames into place
     val srcData = new Path(tableRoot, "data")
-    val roots = manifestLines(v)
-      .filterNot(l => l.startsWith("#") || l.startsWith("-"))
-      .map { l =>
-        val n = l.split('\t').head
-        if (isAbsoluteName(n)) n else new Path(srcData, n).toString
-      }
+    val roots = manifest(v).dataNames
+      .map(n => if (Manifest.isAbsoluteName(n)) n else new Path(srcData, n).toString)
       .flatMap(dataRootOf).map(_.stripSuffix("/data")).toSet
     val tmp = new Path(tableRoot,
       s"_branches/.tmp-$name-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -2619,15 +2462,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       roots.foreach(deregisterCloneAt(_, tmp.toString))
       hfs.delete(tmp, true): Unit
     }
-    try {
-      bl.cloneFrom(tableRoot, Some(v)): Unit
-      // table contracts ride along (one manifest write, no data scan — the
-      // rows already satisfied them on main at the fork point)
-      val hdr = manifestLines(v).filter(l =>
-        l.startsWith("#check:") || l.startsWith("#cluster:"))
-      if (hdr.nonEmpty)
-        bl.publish(2, bl.stamped("clone", hdr ++ bl.manifestLines(1))): Unit
-    } catch { case e: Throwable => dropTmp(); throw e }
+    try bl.cloneFrom(tableRoot, Some(v)): Unit
+    catch { case e: Throwable => dropTmp(); throw e }
     // Two-phase publish so a visible ref ALWAYS implies its root exists
     // (readers never race the rename): (1) an atomic PENDING claim under
     // `_refs/.pending/` makes the shared branch root exclusively ours,
@@ -2694,9 +2530,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           st.getModificationTime <= cutoff) {
         val dead = new CommitLog(spark, st.getPath.toString)
         dead.currentVersion.foreach { dv =>
-          dead.manifestLines(dv)
-            .filterNot(l => l.startsWith("#") || l.startsWith("-"))
-            .flatMap(l => dataRootOf(l.split('\t').head))
+          dead.manifest(dv).dataNames.flatMap(dataRootOf)
             .map(_.stripSuffix("/data")).toSet[String]
             .foreach(deregisterCloneAt(_, st.getPath.toString))
         }
@@ -2760,11 +2594,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val bl = branchLog(name)
     val bv = bl.currentVersion.getOrElse(throw new IllegalStateException(
       s"fastForward: branch '$name' has no commits"))
-    val lines = bl.manifestLines(bv)
-    require(partitionColsOf(lines).isEmpty,
+    val branch = bl.manifest(bv)
+    require(branch.partitionColumns.isEmpty,
       s"fastForward: branch '$name' is hive-partitioned; publish cannot " +
         "span partition roots — materialize with INSERT OVERWRITE instead")
-    require(dvNamesOf(lines).isEmpty,
+    require(branch.dvs.isEmpty,
       s"fastForward: branch '$name' carries merge-on-read deletion " +
         "vectors whose tombstones bind to branch-local file names; fold " +
         "them first: CALL <catalog>.system.rewrite_deletes on the branch")
@@ -2775,13 +2609,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         "head or bring the changes over with a keyed merge")
     val bData = new Path(branchDir(name), "data")
     val myData = dataDir.toUri.getPath
-    // split the branch's data lines into its OWN pool files (relative
+    // split the branch's data entries into its OWN pool files (relative
     // names — the audited new/rewritten data) and references back into
     // main's pool (absolute — untouched since the fork)
-    val dataLines = lines.filterNot(_.startsWith("#"))
-    val own = dataNamesOf(dataLines).filterNot(isAbsoluteName)
+    val own = branch.data.filterNot(_.absolute).map(_.name)
+    val main = manifest(head)
     enforceConstraintsOnPaths(own.map(n => new Path(bData, n)),
-      checkOf(manifestLines(head)), s"fastForward('$name')")
+      main.checks, s"fastForward('$name')")
     hfs.mkdirs(dataDir)
     val moved = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
     def rollback(): Unit = moved.foreach { case (src, dst) => hfs.rename(dst, src) }
@@ -2794,23 +2628,20 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       }
       moved += ((src, dst))
     }
-    val rewritten = dataLines.map { l =>
-      val i = l.indexOf('\t')
-      val (n0, rest) = if (i < 0) (l, "") else (l.substring(0, i), l.substring(i))
-      val p = if (isAbsoluteName(n0)) new Path(n0).toUri.getPath else n0
-      if (isAbsoluteName(n0) && p.startsWith(myData + "/"))
-        p.stripPrefix(myData + "/") + rest
-      else l
+    val rewritten = branch.data.map { e =>
+      val p = if (e.absolute) new Path(e.name).toUri.getPath else e.name
+      if (e.absolute && p.startsWith(myData + "/")) e.copy(name = p.stripPrefix(myData + "/"))
+      else e
     }
-    // clone-of-clone chains: a line may still point at a THIRD root;
+    // clone-of-clone chains: an entry may still point at a THIRD root;
     // register main there so that root's vacuum keeps the file live
-    dataNamesOf(rewritten).filter(isAbsoluteName)
-      .flatMap(dataRootOf).map(_.stripSuffix("/data")).toSet[String]
+    rewritten.filter(_.absolute).flatMap(e => dataRootOf(e.name))
+      .map(_.stripSuffix("/data")).toSet[String]
       .foreach(registerCloneAt(_, tableRoot))
-    // standing table contracts stay MAIN's (txn memory, constraints,
-    // clustering); the branch ships data, not DDL
-    val carried = replaceCarried(manifestLines(head))
-    if (!publish(head + 1, stamped("fast_forward", carried ++ rewritten))) {
+    // standing table lineage and contracts stay MAIN's (txn memory,
+    // constraints, clustering); the branch ships data, not DDL
+    val published = (replaceCarried(main) ++ rewritten).set(Header.op("fast_forward"))
+    if (!publish(head + 1, published)) {
       rollback()
       throw new IllegalStateException(
         s"fastForward: a concurrent commit advanced $tableRoot past $head " +
@@ -2853,17 +2684,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * attempt
     *
     *  1. pins the head and reads its manifest once. An uncommitted table
-    *     pins v0 with no lines, unless `headless` is given: then the
+    *     pins v0 with an empty manifest, unless `headless` is given: then the
     *     operation needs a head and throws what `headless` builds;
-    *  2. runs `decide(head, lines)`, which validates against that
+    *  2. runs `decide(head, manifest)`, which validates against that
     *     snapshot (constraint re-checks included) and either settles
     *     without publishing ([[Settle]]: a no-op, a `#txn:` id already
-    *     applied, a delegated commit) or hands back the manifest lines for
+    *     applied, a delegated commit) or hands back the manifest for
     *     head+1 ([[Publish]]). Whatever it stages keeps uuid pool names,
     *     so a lost attempt leaves only orphans, which vacuum's in-flight
     *     guard ages out;
     *  3. calls [[beforePublish]]`(attempt, head+1)` (attempt counts from
-    *     0), then publishes `#op:<op>` plus those lines at head+1
+    *     0), then publishes that manifest, its `#op:` set to `op`, at head+1
     *     through the store's put-if-absent ([[publish]]);
     *  4. on a win, returns `onWin(head+1)`. On a loss another writer
     *     landed head+1 first: pause ([[racePause]]) and start over from
@@ -2877,15 +2708,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   private def headRace[T](name: String, op: String, budget: Int = 50,
       headless: Option[() => Exception] = None)(
-      decide: (Long, Seq[String]) => Attempt[T]): T = {
+      decide: (Long, Manifest) => Attempt[T]): T = {
     var attempt = 0
     while (attempt < budget) {
       val head = currentVersion.getOrElse(headless.fold(0L)(fail => throw fail()))
-      decide(head, manifestLines(head)) match {
+      decide(head, manifest(head)) match {
         case Settle(result) => return result
-        case Publish(lines, onWin) =>
+        case Publish(m, onWin) =>
           beforePublish(attempt, head + 1)
-          if (publish(head + 1, stamped(op, lines))) return onWin(head + 1)
+          if (publish(head + 1, m.set(Header.op(op)))) return onWin(head + 1)
           racePause(attempt, head + 1)
       }
       attempt += 1
@@ -2895,7 +2726,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   }
 
   /** [[Publish]] whose result is the version it lands at. */
-  private def publishAt(lines: Seq[String]): Attempt[Long] = Publish(lines, v => v)
+  private def publishAt(m: Manifest): Attempt[Long] = Publish(m, v => v)
 
   /** The missing-head failure of the mutators that need a committed head. */
   private def missingHead(prefix: String = ""): Exception =
@@ -2907,10 +2738,6 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   /** The committed head, or [[missingHead]]. */
   private def committedHead(prefix: String = ""): Long =
     currentVersion.getOrElse(throw missingHead(prefix))
-
-  /** Was `txn` already applied in this manifest? (`#txn:` redelivery.) */
-  private def hasTxn(lines: Seq[String], txn: Option[String]): Boolean =
-    txn.exists(id => lines.contains(s"#txn:$id"))
 
   /** Post-lost-race pause: back off briefly while the version this
     * writer just raced for is STILL unpublished — the claim-holder is
@@ -2929,23 +2756,23 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * inject a racing writer's manifest deterministically. */
   protected def beforePublish(attempt: Int, v: Long): Unit = ()
 
-  /** Publish version `v` with exactly these manifest lines, through the
+  /** Publish version `v` with exactly this manifest, through the
     * store's conditional create. False = lost the race; the caller
     * re-reads the head and retries. No rename of the manifest name is
     * ever involved, so the protocol holds on substrates without atomic
     * rename (object stores) given a conditional-put [[LogStore]].
     */
-  private def publish(v: Long, lines: Seq[String]): Boolean = {
-    enforceFence(lines)   // a fenced stale primary must bounce, not fork
+  private def publish(v: Long, m: Manifest): Boolean = {
+    enforceFence(m)   // a fenced stale primary must bounce, not fork
     hfs.mkdirs(commitsDir)
-    val won = store.putIfAbsent(manifestPath(v), LogStore.lines(lines))
+    val won = store.putIfAbsent(manifestPath(v), LogStore.lines(m.lines))
     if (won) {
       writeHeadHint(v)   // best-effort; stale-low is self-healing
-      maintainBloomIndexes(v, lines)
-      maintainAnnIndexes(v, lines)
-      autoEnforceTtl(lines)
-      autoRewriteDeletes(lines)
-      autoCompact(lines)
+      maintainBloomIndexes(v, m)
+      maintainAnnIndexes(v, m)
+      autoEnforceTtl(m)
+      autoRewriteDeletes(m)
+      autoCompact(m)
       autoVacuum()
     }
     won
@@ -2999,23 +2826,16 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * degrade to the manual `compact()` path, and the reentrancy guard
     * keeps the compaction's own publish from recursing.
     */
-  private def autoCompact(lines: Seq[String]): Boolean = {
+  private def autoCompact(m: Manifest): Boolean = {
     if (compacting.get()) return false
     try {
       val minSmall =
         maintenanceConf("spark.graft.autoCompact.minSmallFiles", "0").toInt
       if (minSmall <= 0) return false
-      if (dvNamesOf(lines).nonEmpty) return false
+      if (m.dvs.nonEmpty) return false
       val target = maintenanceConf("spark.graft.autoCompact.targetBytes",
         String.valueOf(128L * 1024 * 1024)).toLong
-      val small = lines.count { l =>
-        if (l.startsWith("#") || l.startsWith("-")) false
-        else {
-          val p = l.split('\t')
-          !isAbsoluteName(p.head) && p.length > 1 &&
-            lineMeta(p(1))._2.exists(_ < target)
-        }
-      }
+      val small = m.data.count(e => !e.absolute && e.bytes.exists(_ < target))
       if (small < minSmall) return false
       compacting.set(true)
       try { val (b, a) = compact(target); a < b }
@@ -3101,22 +2921,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * replica past both thresholds folds and compacts in one publish
     * cascade.
     */
-  private def autoRewriteDeletes(lines: Seq[String]): Boolean = {
+  private def autoRewriteDeletes(m: Manifest): Boolean = {
     if (deleteFolding.get()) return false
     try {
       val ratio = maintenanceConf(
         "spark.graft.rewriteDeletes.maxDebtRatio", "0").toDouble
       if (ratio <= 0) return false
-      def rowsOf(l: String): Long = {
-        val p = l.split('\t')
-        if (p.length > 1) lineMeta(p(1))._1.getOrElse(0L) else 0L
-      }
-      val debt = lines.filter(_.startsWith("-"))
-        .map(l => rowsOf(l.stripPrefix("-"))).sum
+      val debt = m.dvs.map(_.rows.getOrElse(0L)).sum
       if (debt == 0L) return false
-      val data = lines
-        .filterNot(l => l.startsWith("#") || l.startsWith("-"))
-        .map(rowsOf).sum
+      val data = m.data.map(_.rows.getOrElse(0L)).sum
       // the declared ratio is debt vs LIVE rows: stored rows still count
       // their already-tombstoned copies, so dividing by `data` would
       // understate the ratio (debt/(live+debt)) exactly when debt is
@@ -3144,12 +2957,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * and ANY failure degrades to the manual `CALL enforce_ttl` path —
     * never a failed commit, never a wrong answer.
     */
-  private def autoEnforceTtl(lines: Seq[String]): Boolean = {
+  private def autoEnforceTtl(m: Manifest): Boolean = {
     if (ttlEnforcing.get()) return false
     try {
       if (maintenanceConf("spark.graft.ttl.autoEnforce", "false") != "true")
         return false
-      if (!lines.exists(_.startsWith("#ttl:"))) return false
+      if (!m.has(Manifest.Ttl)) return false
       // deterministic-maintenance escape hatch: `spark.graft.ttl.asOfMs`
       // pins the enforcement clock (tests, replayed pipelines, frozen
       // benchmarks); production leaves it unset = wall clock
@@ -3182,15 +2995,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def maintain(): Seq[String] = {
     if (currentVersion.isEmpty) return Seq.empty
     val acted = scala.collection.mutable.ArrayBuffer.empty[String]
-    def headLines = currentVersion.map(manifestLines).getOrElse(Seq.empty)
-    if (autoEnforceTtl(headLines)) acted += "ttl"
-    if (autoRewriteDeletes(headLines)) acted += "rewrite_deletes"
-    if (autoCompact(headLines)) acted += "compact"
+    def head = currentVersion.map(manifest).getOrElse(Manifest.empty)
+    if (autoEnforceTtl(head)) acted += "ttl"
+    if (autoRewriteDeletes(head)) acted += "rewrite_deletes"
+    if (autoCompact(head)) acted += "compact"
     if (autoVacuum()) acted += "vacuum"
     acted.toSeq
   }
 
-  /** Pool files among `lines` that CONTAIN at least one of `keys`:
+  /** Pool files of `m` that CONTAIN at least one of `keys`:
     * footer-stats range overlap first (no I/O, pure driver metadata the
     * manifest already holds), then an exact semi-join with
     * `input_file_name()` over just the candidates, reduced to ONE
@@ -3235,18 +3048,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     rows.iterator.map(_.getString(0)).toSet
   }
 
-  private def findTouched(lines: Seq[String], stats: Map[String, Map[String, ColStats]],
-      keys: DataFrame, keyCol: String, refineCap: Int = touchRefineCap,
-      partTypes: Map[String, String] = Map.empty): Set[String] = {
+  private def findTouched(m: Manifest, keys: DataFrame, keyCol: String,
+      refineCap: Int = touchRefineCap, partTypes: Map[String, String] = Map.empty): Set[String] = {
     val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
       org.apache.spark.sql.functions.max(keyCol)).head()
     if (bounds.isNullAt(0)) Set.empty
     else {
       val (lo, hi) = (bounds.get(0), bounds.get(1))
-      val candidates = lines.filterNot(l => l.startsWith("#") || l.startsWith("-"))
-        .map(_.split('\t').head).filter { n =>
-          stats.get(n).flatMap(_.get(keyCol)).forall(_.overlaps(lo, hi))
-        }
+      val stats = m.fileStats
+      val candidates = m.dataNames.filter { n =>
+        stats.get(n).flatMap(_.get(keyCol)).forall(_.overlaps(lo, hi))
+      }
       if (candidates.isEmpty) Set.empty
       else if (candidates.length > refineCap) candidates.toSet
       else {
@@ -3267,39 +3079,6 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     }
   }
 
-  // ---- manifest stats encoding (json4s ships with Spark) -----------------
-
-  /** Per-line stats json: column bounds plus the file's exact row count
-    * (`_n`) and byte size (`_b`), both known for free at commit time (the
-    * footer is already open, the FileStatus already listed). They make
-    * [[snapshotStats]] a pure manifest read — the planner's size/row
-    * estimates never re-list the pool. `_n`/`_b` are JSON numbers, which
-    * [[parseStats]]'s object-only collect skips, so old manifests and new
-    * readers interoperate both ways.
-    */
-  private def statsJson(st: Map[String, ColStats], rows: Long, bytes: Long): String = {
-    import org.json4s._
-    import org.json4s.JsonDSL._
-    val fields = JField("_n", JInt(rows)) :: JField("_b", JInt(bytes)) ::
-      st.toSeq.sortBy(_._1).map { case (c, s) =>
-        JField(c, ("t" -> s.tpe) ~ ("mn" -> s.min) ~ ("mx" -> s.max))
-      }.toList
-    org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(JObject(fields)))
-  }
-
-  /** (_n, _b) of one stats json, absent on pre-tag manifests. */
-  private def lineMeta(json: String): (Option[Long], Option[Long]) =
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case org.json4s.JObject(fields) =>
-        val m = fields.toMap
-        def num(k: String): Option[Long] = m.get(k).collect {
-          case org.json4s.JInt(n) => n.toLong
-        }
-        (num("_n"), num("_b"))
-      case _ => (None, None)
-    }
-
   /** Exact (bytes, rows) of a retained version. Bytes/rows come from the
     * manifest's commit-time `_n`/`_b` tags — zero filesystem calls on the
     * planner path (at 100 TB, re-listing the pool per query would be the
@@ -3308,14 +3087,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * carries merge-on-read tombstones (visible rows < stored rows).
     */
   def snapshotStats(v: Long): (Long, Option[Long]) = {
-    val lines = manifestLines(v)
-    var bytes = 0L; var rows = 0L; var rowsKnown = dvNamesOf(lines).isEmpty
-    lines.iterator.filterNot(l => l.startsWith("#") || l.startsWith("-")).foreach { l =>
-      val parts = l.split('\t')
-      val (n, b) = if (parts.length > 1) lineMeta(parts(1)) else (None, None)
-      bytes += b.getOrElse(
-        hfs.getFileStatus(new Path(dataDir, parts(0))).getLen)
-      n match { case Some(x) => rows += x; case None => rowsKnown = false }
+    val m = manifest(v)
+    var bytes = 0L; var rows = 0L; var rowsKnown = m.dvs.isEmpty
+    m.data.foreach { e =>
+      bytes += e.bytes.getOrElse(hfs.getFileStatus(new Path(dataDir, e.name)).getLen)
+      e.rows match { case Some(x) => rows += x; case None => rowsKnown = false }
     }
     (bytes, if (rowsKnown) Some(rows) else None)
   }
@@ -3329,29 +3105,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * a guess.
     */
   private[graft] def snapshotBounds(v: Long, column: String): Option[ColStats] = {
-    val lines = manifestLines(v)
-    if (dvNamesOf(lines).nonEmpty) return None
-    val names = dataNamesOf(lines)
-    if (names.isEmpty) return None
-    val stats = fileStatsOf(lines)
-    val bounds = names.map(n => stats.get(n).flatMap(_.get(column)))
+    val m = manifest(v)
+    if (m.dvs.nonEmpty || m.data.isEmpty) return None
+    val stats = m.fileStats
+    val bounds = m.dataNames.map(n => stats.get(n).flatMap(_.get(column)))
     if (bounds.exists(_.isEmpty)) return None
     Some(bounds.flatten.reduce(ColStats.widen))
   }
-
-  private def parseStats(json: String): Map[String, ColStats] =
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case org.json4s.JObject(fields) => fields.collect {
-        case (c, org.json4s.JObject(f)) =>
-          val m = f.toMap
-          def str(k: String) = m(k) match {
-            case org.json4s.JString(s) => s
-            case other                 => other.values.toString
-          }
-          c -> ColStats(str("t"), str("mn"), str("mx"))
-      }.toMap
-      case _ => Map.empty
-    }
 
   /** File-skipping range read: rows of the current version with `column`
     * in [lo, hi], scanning ONLY the pool files whose footer min/max
@@ -3376,9 +3136,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def readWhere(ranges: Seq[(String, Any, Any)]): DataFrame = {
     require(ranges.nonEmpty, "readWhere: at least one (column, lo, hi) range")
     val v = committedHead()
-    val lines = manifestLines(v)   // one parse serves stats, data, dv names
-    val stats = fileStatsOf(lines)
-    val names = dataNamesOf(lines)
+    val m = manifest(v)   // one read serves stats, data, dv names
+    val stats = m.fileStats
+    val names = m.dataNames
     val candidates = names.filter { n =>
       ranges.forall { case (c, lo, hi) =>
         stats.get(n).flatMap(_.get(c)).forall(_.overlaps(lo, hi))
@@ -3390,8 +3150,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // all files pruned: zero-row frame with the table schema, no scan
     // (OptimizeLimitZero folds the limit-0 into an empty relation)
     else if (candidates.isEmpty) readVersion(v).filter(pred).limit(0)
-    else readFiles(candidates, dvFrameOf(dvNamesOf(lines)), partTypesOf(lines))
-      .filter(pred)
+    else readFiles(candidates, dvFrameOf(m.dvNames), partTypesOf(m)).filter(pred)
   }
 
   /** Copy-on-write MERGE (upsert by key): rows of `updates` replace
@@ -3423,10 +3182,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     require(updates.select(keyCol).distinct().count() == updates.count(),
       s"merge: duplicate keys in the updates batch")
     var validatedCs: Map[String, String] = null
-    headRace("merge", "merge", maxAttempts, requireHead) { (_, lines) =>
-      val partCols = partitionColsOf(lines)
-      val partTypes = partTypesOf(lines)
-      val curSchema = readLines(lines).schema
+    headRace("merge", "merge", maxAttempts, requireHead) { (_, head) =>
+      val partCols = head.partitionColumns
+      val partTypes = partTypesOf(head)
+      val curSchema = readManifest(head).schema
       val cols = curSchema.fieldNames.toSeq
       val newCols = if (evolve) updates.columns.filterNot(cols.contains).toSeq
         else Seq.empty
@@ -3438,32 +3197,31 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         s"merge: updates schema ${updates.columns.toSeq} != table schema $cols")
       val upd = alignTypes(updates, curSchema, "merge")
       val outCols = cols ++ newCols
-      val curCs = checkOf(lines)
+      val curCs = head.checks
       if (curCs != validatedCs) { // only the incoming rows can newly violate
         enforceConstraints(upd, curCs, "merge"); validatedCs = curCs
       }
       val keys = upd.select(keyCol).distinct()
-      val touched = findTouched(lines, fileStatsOf(lines), keys, keyCol,
-        partTypes = partTypes)
-      val keptLines = lines.filterNot(l => touched(l.split('\t').head))
+      val touched = findTouched(head, keys, keyCol, partTypes = partTypes)
+      val kept = head.filterEntries(e => e.dv || !touched(e.name))
       val merged =
         if (touched.isEmpty) upd.select(outCols.map(col): _*)
         // tombstones apply BEFORE the key anti-join: a MoR-deleted row
         // must not resurrect through the rewrite; under evolution the
         // survivors pad the new columns with NULL (allowMissingColumns)
-        else readFiles(touched.toSeq.sorted, dvFrameOf(dvNamesOf(lines)), partTypes)
+        else readFiles(touched.toSeq.sorted, dvFrameOf(head.dvNames), partTypes)
           .join(keys, Seq(keyCol), "left_anti")
           .select(cols.map(col): _*)
           .unionByName(upd.select(outCols.map(col): _*),
             allowMissingColumns = true)
       // A hive-partitioned head restages under its partition subdirs
-      // (the #partition header rides keptLines), so an upsert into one
+      // (the #partition header rides the kept lines), so an upsert into one
       // partition rewrites only that partition's touched files and the
       // layout survives — no flatten, no full-table rewrite.
-      val newLines =
+      val newEntries =
         if (partCols.isEmpty) stageToPool(merged, "merge")
         else stagePartitioned(merged, partCols, "merge")
-      publishAt(evolveHeader(keptLines, curSchema, newCols, upd) ++ newLines)
+      publishAt(evolveHeader(kept, curSchema, newCols, upd) ++ newEntries)
     }
   }
 
@@ -3476,25 +3234,24 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * once old versions expire, no surviving pool file holds the key.
     */
   def deleteKeys(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long =
-    headRace("delete", "delete", maxAttempts, requireHead) { (v, lines) =>
-      val partCols = partitionColsOf(lines)
-      val partTypes = partTypesOf(lines)
-      val cols = readLines(lines).columns.toSeq
+    headRace("delete", "delete", maxAttempts, requireHead) { (v, head) =>
+      val partCols = head.partitionColumns
+      val partTypes = partTypesOf(head)
+      val cols = readManifest(head).columns.toSeq
       val keys = keys0.select(keyCol).distinct()
-      val touched = findTouched(lines, fileStatsOf(lines), keys, keyCol,
-        partTypes = partTypes)
+      val touched = findTouched(head, keys, keyCol, partTypes = partTypes)
       if (touched.isEmpty) Settle(v)
       else {
-        val keptLines = lines.filterNot(l => touched(l.split('\t').head))
-        val survivors = readFiles(touched.toSeq.sorted, dvFrameOf(dvNamesOf(lines)),
+        val kept = head.filterEntries(e => e.dv || !touched(e.name))
+        val survivors = readFiles(touched.toSeq.sorted, dvFrameOf(head.dvNames),
             partTypes)
           .join(keys, Seq(keyCol), "left_anti")
           .select(cols.map(col): _*)
         // partitioned survivors restage under their subdirs (see merge)
-        val newLines =
+        val newEntries =
           if (partCols.isEmpty) stageToPool(survivors, "delete")
           else stagePartitioned(survivors, partCols, "delete")
-        publishAt(keptLines ++ newLines)
+        publishAt(kept ++ newEntries)
       }
     }
 
@@ -3512,11 +3269,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def rewriteWhere(cond: org.apache.spark.sql.Column, extra: Option[DataFrame],
       maxAttempts: Int = 5, op: String = "rewrite"): Long = {
     import org.apache.spark.sql.functions.coalesce
-    headRace("rewriteWhere", op, maxAttempts, requireHead) { (v, lines) =>
-      val partCols = partitionColsOf(lines)
-      val partTypes = partTypesOf(lines)
-      val names = dataNamesOf(lines)
-      val dv = dvFrameOf(dvNamesOf(lines))
+    headRace("rewriteWhere", op, maxAttempts, requireHead) { (v, head) =>
+      val partCols = head.partitionColumns
+      val partTypes = partTypesOf(head)
+      val names = head.dataNames
+      val dv = dvFrameOf(head.dvNames)
       // discovery runs over the VISIBLE snapshot: a file whose only
       // matching rows are already tombstoned is not touched (no rewrite).
       // Discovery yields LEAF names (what input-file metadata exposes);
@@ -3532,17 +3289,16 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val touched = names.filter(n => touchedLeaves(leafOf(n))).toSet
       if (touched.isEmpty && extra.isEmpty) Settle(v)
       else {
-        val keptLines = lines.filterNot(l =>
-          !l.startsWith("#") && !l.startsWith("-") && touched(l.split('\t').head))
+        val kept = head.filterEntries(e => e.dv || !touched(e.name))
         // partitioned snapshots restage survivors and extras UNDER their
         // `c=v` subdirs — predicate CoW keeps the layout like merge does
-        def stage(df: DataFrame): Seq[String] =
+        def stage(df: DataFrame): Seq[Entry] =
           if (partCols.isEmpty) stageToPool(df, "rewriteWhere")
           else stagePartitioned(df, partCols, "rewriteWhere")
-        val survivorLines =
+        val survivorEntries =
           if (touched.isEmpty) Seq.empty
           else {
-            val cols = readLines(lines).columns.toSeq
+            val cols = readManifest(head).columns.toSeq
             val survivors = readFiles(touched.toSeq.sorted, dv, partTypes)
               // SQL DELETE semantics: rows where the predicate is NULL survive
               .filter(!coalesce(cond, lit(false)))
@@ -3550,11 +3306,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             stage(survivors)
           }
         // survivors cannot newly violate; only the injected rows can
-        extra.foreach(enforceConstraints(_, checkOf(lines), "rewriteWhere"))
+        extra.foreach(enforceConstraints(_, head.checks, "rewriteWhere"))
         // injected rows on a transform-partitioned table carry SOURCE
         // columns only — derive their layout columns before staging
-        val extraLines = extra.map(e => stage(applyTransforms(e))).getOrElse(Seq.empty)
-        publishAt(keptLines ++ survivorLines ++ extraLines)
+        val extraEntries = extra.map(e => stage(applyTransforms(e))).getOrElse(Seq.empty)
+        publishAt(kept ++ survivorEntries ++ extraEntries)
       }
     }
   }
@@ -3584,11 +3340,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       sets: Seq[(String, org.apache.spark.sql.Column)],
       maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.{coalesce, when}
-    headRace("updateWhere", "update", maxAttempts, requireHead) { (v, lines) =>
-      val partCols = partitionColsOf(lines)
-      val partTypes = partTypesOf(lines)
-      val names = dataNamesOf(lines)
-      val dv = dvFrameOf(dvNamesOf(lines))
+    headRace("updateWhere", "update", maxAttempts, requireHead) { (v, head) =>
+      val partCols = head.partitionColumns
+      val partTypes = partTypesOf(head)
+      val names = head.dataNames
+      val dv = dvFrameOf(head.dvNames)
       // discovery over the VISIBLE snapshot, as in rewriteWhere: a file
       // whose only matching rows are tombstoned is not rewritten.
       val touchedLeaves: Set[String] =
@@ -3600,9 +3356,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val touched = names.filter(n => touchedLeaves(leafOf(n))).toSet
       if (touched.isEmpty) Settle(v)
       else {
-        val keptLines = lines.filterNot(l =>
-          !l.startsWith("#") && !l.startsWith("-") && touched(l.split('\t').head))
-        val cols = readLines(lines).columns.toSeq
+        val kept = head.filterEntries(e => e.dv || !touched(e.name))
+        val cols = readManifest(head).columns.toSeq
         val matched = coalesce(cond, lit(false))
         val setMap = sets.toMap
         // one pass over touched files: every column's new value is chosen
@@ -3617,12 +3372,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // validate the rewrite output (only SET rows can newly violate,
         // but the pass is O(touched files) either way — and zero when the
         // table declares no constraints)
-        enforceConstraints(rewritten, checkOf(lines), "updateWhere")
+        enforceConstraints(rewritten, head.checks, "updateWhere")
         // a SET on a hidden-partition transform's SOURCE column must
         // re-derive the layout column, or the row stays filed under its
         // old partition and pruning silently goes wrong
         val relaid = applyTransforms(rewritten)
-        publishAt(keptLines ++ (
+        publishAt(kept ++ (
           if (partCols.isEmpty) stageToPool(relaid, "updateWhere")
           else stagePartitioned(relaid, partCols, "updateWhere")))
       }
@@ -3657,18 +3412,18 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       sets: Seq[(String, org.apache.spark.sql.Column)],
       maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.coalesce
-    headRace("updateWhereMoR", "update_mor", maxAttempts, requireHead) { (v, lines) =>
-      val names = dataNamesOf(lines)
+    headRace("updateWhereMoR", "update_mor", maxAttempts, requireHead) { (v, head) =>
+      val names = head.dataNames
       if (names.isEmpty) Settle(v)
       else {
-        val visible = visibleWithPos(names, dvFrameOf(dvNamesOf(lines)))
+        val visible = visibleWithPos(names, dvFrameOf(head.dvNames))
         // matched rows carry their (file, pos) keys AND their data columns:
         // one frame feeds both the tombstones and the updated copies (the
         // deterministic filter + stable row_index make the two passes agree).
         // A NONdeterministic predicate (rand(), current_timestamp) would
         // let the two jobs tombstone one row set and append another inside
         // the "atomic" commit — pin the match set once in that case.
-        val matched0 = castParts(visible, partTypesOf(lines))
+        val matched0 = castParts(visible, partTypesOf(head))
           .filter(coalesce(cond, lit(false)))
         val condDeterministic = matched0.queryExecution.analyzed.collect {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
@@ -3678,8 +3433,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         val dvStaged = stageToPool(matched.select(DvKeys.map(col): _*), "updateWhereMoR")
         if (dvStaged.isEmpty) Settle(v)
         else {
-          val partCols = partitionColsOf(lines)
-          val cols = readLines(lines).columns.toSeq
+          val partCols = head.partitionColumns
+          val cols = readManifest(head).columns.toSeq
           val setMap = sets.toMap
           val updated = matched.select(cols.map { c =>
             setMap.get(c) match {
@@ -3687,12 +3442,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
               case None    => col(s"`$c`")
             }
           }: _*)
-          enforceConstraints(updated, checkOf(lines), "updateWhereMoR")
+          enforceConstraints(updated, head.checks, "updateWhereMoR")
           val relaid = applyTransforms(updated)
           val dataStaged =
             if (partCols.isEmpty) stageToPool(relaid, "updateWhereMoR")
             else stagePartitioned(relaid, partCols, "updateWhereMoR")
-          publishAt(lines ++ dataStaged ++ dvStaged.map("-" + _))
+          publishAt(head ++ dataStaged ++ dvStaged.map(_.asDv))
         }
       }
     }
@@ -3715,16 +3470,16 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def deleteWhereMoR(cond: org.apache.spark.sql.Column, maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.coalesce
-    headRace("deleteWhereMoR", "delete_mor", maxAttempts, requireHead) { (v, lines) =>
-      val names = dataNamesOf(lines)
+    headRace("deleteWhereMoR", "delete_mor", maxAttempts, requireHead) { (v, head) =>
+      val names = head.dataNames
       val staged =
         if (names.isEmpty) Seq.empty
         else {
-          val visible = visibleWithPos(names, dvFrameOf(dvNamesOf(lines)))
+          val visible = visibleWithPos(names, dvFrameOf(head.dvNames))
           stageToPool(visible.filter(coalesce(cond, lit(false)))
             .select(DvKeys.map(col): _*), "deleteWhereMoR")
         }
-      if (staged.isEmpty) Settle(v) else publishAt(lines ++ staged.map("-" + _))
+      if (staged.isEmpty) Settle(v) else publishAt(head ++ staged.map(_.asDv))
     }
   }
 
@@ -3734,24 +3489,25 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * key range are scanned for positions — but nothing is rewritten.
     */
   def deleteKeysMoR(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long =
-    headRace("deleteKeysMoR", "delete_mor", maxAttempts, requireHead) { (v, lines) =>
-      val staged = keyTombstones(lines, keys0.select(keyCol).distinct(), keyCol,
+    headRace("deleteKeysMoR", "delete_mor", maxAttempts, requireHead) { (v, head) =>
+      val staged = keyTombstones(head, keys0.select(keyCol).distinct(), keyCol,
         "deleteKeysMoR")
-      if (staged.isEmpty) Settle(v) else publishAt(lines ++ staged.map("-" + _))
+      if (staged.isEmpty) Settle(v) else publishAt(head ++ staged)
     }
 
   /** Stage (file, pos) tombstones for every visible row of the snapshot
-    * `lines` whose `keyCol` is in `keys` — the probe the keyed MoR paths
-    * share. Footer stats bound it to the files whose [min,max] overlaps
-    * the keys' range before any row I/O; empty when nothing matches.
+    * `m` whose `keyCol` is in `keys` — the probe the keyed MoR paths
+    * share — as deletion-vector entries. Footer stats bound it to the
+    * files whose [min,max] overlaps the keys' range before any row I/O;
+    * empty when nothing matches.
     */
-  private def keyTombstones(lines: Seq[String], keys: DataFrame, keyCol: String,
-      op: String): Seq[String] = {
-    val names = dataNamesOf(lines)
+  private def keyTombstones(m: Manifest, keys: DataFrame, keyCol: String,
+      op: String): Seq[Entry] = {
+    val names = m.dataNames
     if (names.isEmpty) return Seq.empty
     val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
       org.apache.spark.sql.functions.max(keyCol)).head()
-    val stats = fileStatsOf(lines)
+    val stats = m.fileStats
     val candidates =
       if (bounds.isNullAt(0)) Seq.empty[String]
       else names.filter { n =>
@@ -3760,9 +3516,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       }
     if (candidates.isEmpty) Seq.empty
     else {
-      val visible = visibleWithPos(candidates, dvFrameOf(dvNamesOf(lines)))
+      val visible = visibleWithPos(candidates, dvFrameOf(m.dvNames))
       stageToPool(visible.join(keys, Seq(keyCol), "semi")
-        .select(DvKeys.map(col): _*), op)
+        .select(DvKeys.map(col): _*), op).map(_.asDv)
     }
   }
 
@@ -3795,9 +3551,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     require(updates.select(keyCol).distinct().count() == updates.count(),
       s"mergeMoR: duplicate keys in the updates batch")
     var validatedCs: Map[String, String] = null
-    headRace("mergeMoR", "merge_mor", maxAttempts, requireHead) { (v, lines) =>
-      val partCols = partitionColsOf(lines)
-      val curSchema = readLines(lines).schema
+    headRace("mergeMoR", "merge_mor", maxAttempts, requireHead) { (v, head) =>
+      val partCols = head.partitionColumns
+      val curSchema = readManifest(head).schema
       val cols = curSchema.fieldNames.toSeq
       // schema evolution mirrors [[merge]]: with evolve=true the batch
       // may add new columns — appended rows carry them, existing files
@@ -3812,20 +3568,20 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         s"mergeMoR: updates schema ${updates.columns.toSeq} != table schema $cols")
       val upd = alignTypes(updates, curSchema, "mergeMoR")
       val outCols = cols ++ newCols
-      val curCs = checkOf(lines)
+      val curCs = head.checks
       if (curCs != validatedCs) { // only the incoming rows can newly violate
         enforceConstraints(upd, curCs, "mergeMoR"); validatedCs = curCs
       }
       // tombstone the old positions of matched keys
       val dvStaged =
-        keyTombstones(lines, upd.select(keyCol).distinct(), keyCol, "mergeMoR")
+        keyTombstones(head, upd.select(keyCol).distinct(), keyCol, "mergeMoR")
       val applied = upd.select(outCols.map(col): _*)
       val dataStaged =
         if (partCols.isEmpty) stageToPool(applied, "mergeMoR")
         else stagePartitioned(applied, partCols, "mergeMoR")
       if (dvStaged.isEmpty && dataStaged.isEmpty) Settle(v)
-      else publishAt(evolveHeader(lines, curSchema, newCols, upd) ++
-        dataStaged ++ dvStaged.map("-" + _))
+      else publishAt(evolveHeader(head, curSchema, newCols, upd) ++
+        dataStaged ++ dvStaged)
     }
   }
 
@@ -3861,11 +3617,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       maxAttempts: Int = 5, evolve: Boolean = false): Long = {
     val inserts = applyTransforms(inserts0)
     var validatedCs: Map[String, String] = null
-    headRace("applyChangesMoR", "cdc_apply", maxAttempts, requireHead) { (v, lines) =>
-      if (hasTxn(lines, txn)) Settle(v)
+    headRace("applyChangesMoR", "cdc_apply", maxAttempts, requireHead) { (v, head) =>
+      if (txn.exists(head.hasTxn)) Settle(v)
       else {
-        val partCols = partitionColsOf(lines)
-        val curSchema = readLines(lines).schema
+        val partCols = head.partitionColumns
+        val curSchema = readManifest(head).schema
         val cols = curSchema.fieldNames.toSeq
         // schema evolution mirrors [[mergeMoR]]: with evolve=true the batch
         // may add new columns — a CDC replica must track its source through
@@ -3882,11 +3638,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             s"table schema $cols")
         val ins = alignTypes(inserts, curSchema, "applyChangesMoR")
         val outCols = cols ++ newCols
-        val curCs = checkOf(lines)
+        val curCs = head.checks
         if (curCs != validatedCs) { // only the incoming rows can newly violate
           enforceConstraints(ins, curCs, "applyChangesMoR"); validatedCs = curCs
         }
-        val dvStaged = keyTombstones(lines, deleteKeys0.select(keyCol).distinct(),
+        val dvStaged = keyTombstones(head, deleteKeys0.select(keyCol).distinct(),
           keyCol, "applyChangesMoR")
         val applied = ins.select(outCols.map(col): _*)
         val dataStaged =
@@ -3895,9 +3651,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // an empty change set without a txn id is a true no-op; WITH one,
         // the id must still land (skip-on-redelivery has no other memory)
         if (dvStaged.isEmpty && dataStaged.isEmpty && txn.isEmpty) Settle(v)
-        else publishAt(evolveHeader(lines, curSchema, newCols, ins) ++
-          txn.map(id => s"#txn:$id").toSeq ++
-          dataStaged ++ dvStaged.map("-" + _))
+        else publishAt(evolveHeader(head, curSchema, newCols, ins) ++
+          txn.map(Header.txn) ++ dataStaged ++ dvStaged)
       }
     }
   }
@@ -3913,31 +3668,30 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * a no-op.
     */
   def rewriteDeletes(maxAttempts: Int = 5): (Int, Int) =
-    headRace("rewriteDeletes", "rewrite_deletes", maxAttempts, requireHead) { (_, lines) =>
-      val dvN = dvNamesOf(lines)
+    headRace("rewriteDeletes", "rewrite_deletes", maxAttempts, requireHead) { (_, head) =>
+      val dvN = head.dvNames
       if (dvN.isEmpty) Settle((0, 0))
       else {
         val dv = dvFrameOf(dvN).get
         val targets = collectNames(dv, DvKeys.head, "rewriteDeletes")
         // stale tombstones may name files a later op already removed;
         // tombstones carry LEAF names, manifests may carry partition subdirs
-        val touched = dataNamesOf(lines).filter(n => targets(leafOf(n))).toSet
-        val partCols = partitionColsOf(lines)
-        val keptLines = lines.filterNot(l => l.startsWith("-") ||
-          (!l.startsWith("#") && touched(l.split('\t').head)))
+        val touched = head.dataNames.filter(n => targets(leafOf(n))).toSet
+        val partCols = head.partitionColumns
+        val kept = head.filterEntries(e => !e.dv && !touched(e.name))
         // a partitioned table's survivors restage UNDER their partition
         // subdirs (basePath read keeps the columns; partitionBy re-lays
         // them out) so the fold never flattens the layout
-        val survivorLines =
+        val survivorEntries =
           if (touched.isEmpty) Seq.empty
           else if (partCols.nonEmpty)
             // schema-typed partition cast matters doubly here: the fold
             // REWRITES survivors, so an inference-drifted type would bake
             // the wrong column type back into the pool files
             stagePartitioned(readFiles(touched.toSeq.sorted, Some(dv),
-              partTypesOf(lines)), partCols, "rewriteDeletes")
+              partTypesOf(head)), partCols, "rewriteDeletes")
           else stageToPool(readFiles(touched.toSeq.sorted, Some(dv)), "rewriteDeletes")
-        Publish(keptLines ++ survivorLines, _ => (dvN.length, touched.size))
+        Publish(kept ++ survivorEntries, _ => (dvN.length, touched.size))
       }
     }
 
@@ -3973,9 +3727,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       maxAttempts: Int = 5): (Int, Int) = {
     import org.apache.spark.sql.functions.coalesce
     val cut = CommitLog.statsComparable(cutoff)
-    headRace("expireBefore", "expire", maxAttempts, requireHead) { (_, lines) =>
-      val names = dataNamesOf(lines)
-      val stats = fileStatsOf(lines)
+    headRace("expireBefore", "expire", maxAttempts, requireHead) { (_, head) =>
+      val names = head.dataNames
+      val stats = head.fileStats
       def cmpSafe(tpe: String, edge: String): Option[Int] =
         scala.util.Try(ColStats.cmp(tpe, edge, cut)).toOption
       val dead = names.filter { n =>
@@ -3992,25 +3746,21 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val straddleSet = straddle.toSet
       if (dead.isEmpty && straddle.isEmpty) Settle((0, 0))
       else {
-        val keptLines = lines.filterNot { l =>
-          !l.startsWith("#") && !l.startsWith("-") && {
-            val n = l.split('\t').head; dead(n) || straddleSet(n)
-          }
-        }
-        val survivorLines =
+        val kept = head.filterEntries(e => e.dv || !(dead(e.name) || straddleSet(e.name)))
+        val survivorEntries =
           if (straddle.isEmpty) Seq.empty
           else {
-            val partCols = partitionColsOf(lines)
-            val cols = readLines(lines).columns.toSeq
-            val survivors = readFiles(straddle.sorted, dvFrameOf(dvNamesOf(lines)),
-                partTypesOf(lines))
+            val partCols = head.partitionColumns
+            val cols = readManifest(head).columns.toSeq
+            val survivors = readFiles(straddle.sorted, dvFrameOf(head.dvNames),
+                partTypesOf(head))
               // NULL retention column survives (SQL DELETE semantics)
               .filter(!coalesce(col(column) < lit(cutoff), lit(false)))
               .select(cols.map(col): _*)
             if (partCols.isEmpty) stageToPool(survivors, "expire")
             else stagePartitioned(survivors, partCols, "expire")
           }
-        Publish(keptLines ++ survivorLines, _ => (dead.size, straddle.size))
+        Publish(kept ++ survivorEntries, _ => (dead.size, straddle.size))
       }
     }
   }
@@ -4025,30 +3775,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def setTtl(column: String, retainMs: Long): Long =
     headRace("setTtl", "set_ttl") { (_, prev) =>
-      if (retainMs > 0 && dataNamesOf(prev).nonEmpty) {
-        val have = readLines(prev).columns.toSet
+      if (retainMs > 0 && prev.data.nonEmpty) {
+        val have = readManifest(prev).columns.toSet
         require(have.contains(column),
           s"setTtl: unknown column $column (have: ${have.toSeq.sorted})")
       }
-      val lines = prev.filterNot(_.startsWith("#ttl:"))
-      publishAt(
-        if (retainMs <= 0) lines else CommitLog.ttlHeader(column, retainMs) +: lines)
+      publishAt(if (retainMs <= 0) prev.without(Manifest.Ttl)
+        else prev.set(Header.ttl(column, retainMs)))
     }
 
   /** The TTL policy in force at the head: (column, retainMs). */
-  def ttlPolicy: Option[(String, Long)] =
-    currentVersion.map(manifestLines).getOrElse(Seq.empty)
-      .find(_.startsWith("#ttl:")).flatMap { l =>
-        org.json4s.jackson.JsonMethods.parse(l.stripPrefix("#ttl:")) match {
-          case org.json4s.JObject(fields) =>
-            val m = fields.toMap
-            for {
-              c <- m.get("col").collect { case org.json4s.JString(s) => s }
-              ms <- m.get("ms").collect { case org.json4s.JInt(n) => n.toLong }
-            } yield (c, ms)
-          case _ => None
-        }
-      }
+  def ttlPolicy: Option[(String, Long)] = currentVersion.flatMap(manifest(_).ttl)
 
   /** Enforce the declared TTL policy as of `nowMs` (caller-supplied —
     * maintenance stays deterministic and testable; a scheduler passes
@@ -4103,7 +3840,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       .repartitionByRange(nOut, keys: _*)
       .sortWithinPartitions(keys: _*)
     if (partCols.isEmpty)
-      commit(clustered, replace = true, None, Some("op" -> "optimize"))
+      commit(clustered, replace = true, None, Some(Manifest.Op -> "optimize"))
     else commitPartitioned(clustered, partCols, replace = true,
       op = Some("optimize"))
     (names.length, currentFileCount)
@@ -4218,7 +3955,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       .sortWithinPartitions(keys: _*)
       .drop("_graft_z")
     if (partCols.isEmpty)
-      commit(clustered, replace = true, None, Some("op" -> "optimize"))
+      commit(clustered, replace = true, None, Some(Manifest.Op -> "optimize"))
     else commitPartitioned(clustered, partCols, replace = true,
       op = Some("optimize"))
     (names.length, currentFileCount)
@@ -4257,7 +3994,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       (added, toDv, "insert", toV),
       (removed, fromDv, "delete", fromV)).collect {
       case (ns, dv, tag, v) if ns.nonEmpty =>
-        readFiles(ns, dv, partTypesOf(manifestLines(v)))
+        readFiles(ns, dv, partTypesOf(manifest(v)))
           .withColumn("_change_type", lit(tag))
     }
     // tombstone diffs on files present at BOTH ends: a DV file added in
@@ -4655,17 +4392,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def buildBloomIndex(column: String, fpp: Double = 0.01): (Long, Int) = {
     require(fpp > 0 && fpp < 1, s"buildBloomIndex: fpp $fpp out of (0,1)")
     val v = committedHead("buildBloomIndex: ")
-    val lines = manifestLines(v)
-    val names = dataNamesOf(lines)
+    val m = manifest(v)
+    val names = m.dataNames
     require(names.nonEmpty, s"buildBloomIndex: $tableRoot is empty")
     val dt = readVersion(v).schema.find(_.name == column).getOrElse(
       throw new IllegalArgumentException(
         s"buildBloomIndex: no column `$column` in $tableRoot")).dataType
-    val perFileRows = lines.iterator
-      .filterNot(l => l.startsWith("#") || l.startsWith("-"))
-      .flatMap { l =>
-        val p = l.split('\t'); if (p.length > 1) lineMeta(p(1))._1 else None
-      }.toSeq
+    val perFileRows = m.data.flatMap(_.rows)
     val numItems = math.max(1024L,
       if (perFileRows.nonEmpty) perFileRows.max else 1000000L)
     val numBits = org.apache.spark.util.sketch.BloomFilter
@@ -4737,23 +4470,18 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * conservatively scanned — never a wrong answer, by the
     * unknown-file-scans contract of [[readEquals]].
     */
-  private def maintainBloomIndexes(v: Long, lines: Seq[String]): Unit = {
+  private def maintainBloomIndexes(v: Long, m: Manifest): Unit = {
     try {
       if (spark.conf.get("spark.graft.bloomIndex.autoMaintain", "true") != "true") return
       val base = new Path(tableRoot, "_index/bloom")
       if (!hfs.exists(base)) return
       val prev =
         if (v <= 1) Set.empty[String]
-        else dataNamesOf(rawManifestLines(v - 1)).toSet
-      val newLines = lines
-        .filterNot(l => l.startsWith("#") || l.startsWith("-"))
-        .filterNot(l => prev(l.split('\t').head))
-      val newNames = newLines.map(_.split('\t').head)
-        .filterNot(n => n.startsWith("/") || n.contains("://"))
+        else rawManifest(v - 1).dataNames.toSet
+      val added = m.data.filterNot(e => prev(e.name))
+      val newNames = added.filterNot(_.absolute).map(_.name)
       if (newNames.isEmpty) return
-      val rowsOf = newLines.flatMap { l =>
-        val p = l.split('\t'); if (p.length > 1) lineMeta(p(1))._1 else None
-      }
+      val rowsOf = added.flatMap(_.rows)
       val numItems = math.max(1024L, if (rowsOf.nonEmpty) rowsOf.max else 1000000L)
       hfs.listStatus(base).map(_.getPath.getName).foreach { column =>
         bloomIndexFor(column).foreach { case (_, _, fpp, dir) =>
@@ -4782,19 +4510,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * any failure leaves the new vectors conservatively scanned, never a
     * wrong answer.
     */
-  private def maintainAnnIndexes(v: Long, lines: Seq[String]): Unit = {
+  private def maintainAnnIndexes(v: Long, m: Manifest): Unit = {
     try {
       if (spark.conf.get("spark.graft.annIndex.autoMaintain", "true") != "true") return
       val base = new Path(tableRoot, "_index/ann")
       if (!hfs.exists(base)) return
       val prev =
         if (v <= 1) Set.empty[String]
-        else dataNamesOf(rawManifestLines(v - 1)).toSet
-      val newNames = lines
-        .filterNot(l => l.startsWith("#") || l.startsWith("-"))
-        .map(_.split('\t').head)
-        .filterNot(prev)
-        .filterNot(n => n.startsWith("/") || n.contains("://"))
+        else rawManifest(v - 1).dataNames.toSet
+      val newNames = m.data.filterNot(e => prev(e.name) || e.absolute).map(_.name)
       if (newNames.isEmpty) return
       hfs.listStatus(base).map(_.getPath.getName).foreach { column =>
         AnnIndex.metaOf(spark, tableRoot, column).foreach { case (_, idCol, dir) =>
@@ -4890,9 +4614,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def readEquals(preds: Seq[(String, Any)]): DataFrame = {
     require(preds.nonEmpty, "readEquals: at least one (column, value)")
     val v = committedHead()
-    val lines = manifestLines(v)
-    val stats = fileStatsOf(lines)
-    val names = dataNamesOf(lines)
+    val m = manifest(v)
+    val stats = m.fileStats
+    val names = m.dataNames
     val rowPred = preds.map { case (c, x) => col(s"`$c`") === lit(x) }
       .reduce(_ && _)
     if (names.isEmpty) return readVersion(v)
@@ -4929,8 +4653,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       }
     }
     if (candidates.isEmpty) readVersion(v).filter(rowPred).limit(0)
-    else readFiles(candidates, dvFrameOf(dvNamesOf(lines)), partTypesOf(lines))
-      .filter(rowPred)
+    else readFiles(candidates, dvFrameOf(m.dvNames), partTypesOf(m)).filter(rowPred)
   }
 
 
@@ -4965,12 +4688,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def history(): Seq[CommitInfo] =
     committedVersions.sorted.reverse.map { v =>
-      val lines = manifestLines(v)
-      CommitInfo(v, commitTime(v), dataNamesOf(lines).length,
-        dvNamesOf(lines).length,
-        lines.count(_.startsWith("#txn:")),
-        partitionColsOf(lines),
-        opOf(lines).getOrElse(""))
+      val m = manifest(v)
+      CommitInfo(v, commitTime(v), m.data.length, m.dvs.length, m.txns.length,
+        m.partitionColumns, m.op.getOrElse(""))
     }
 
   /** File count of the current manifest (compaction bookkeeping). */
@@ -4992,25 +4712,25 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def compact(targetFileBytes: Long = 128L * 1024 * 1024,
       maxAttempts: Int = 5): (Int, Int) =
-    headRace("compact", "compact", maxAttempts, requireHead) { (_, lines) =>
-      val names = dataNamesOf(lines)
-      val partCols = partitionColsOf(lines)
-      if (dvNamesOf(lines).nonEmpty) {
+    headRace("compact", "compact", maxAttempts, requireHead) { (_, head) =>
+      val names = head.dataNames
+      val partCols = head.partitionColumns
+      if (head.dvs.nonEmpty) {
         // tombstoned snapshot: full rewrite, which also folds the DVs
         if (partCols.nonEmpty)
-          commitPartitioned(readLines(lines), partCols, replace = true,
+          commitPartitioned(readManifest(head), partCols, replace = true,
             op = Some("compact"))
         else {
           val bytes = names.map(n => hfs.getFileStatus(new Path(dataDir, n)).getLen).sum
           val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-          commit(readLines(lines).coalesce(nOut), replace = true, None,
-            Some("op" -> "compact"))
+          commit(readManifest(head).coalesce(nOut), replace = true, None,
+            Some(Manifest.Op -> "compact"))
         }
         Settle((names.length, currentFileCount))
       } else {
         val sized = names.map(n => (n, hfs.getFileStatus(new Path(dataDir, n)).getLen))
         val candidates = sized.collect {
-          case (n, b) if b < targetFileBytes || isAbsoluteName(n) => n
+          case (n, b) if b < targetFileBytes || Manifest.isAbsoluteName(n) => n
         }
         // convergence: a LONE small file in its partition (or the whole
         // flat pool) cannot be packed with anything — rewriting it gains
@@ -5019,32 +4739,32 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // point even when the partition holds just one.
         val pack = candidates.groupBy(n =>
             n.split('/').dropRight(1).mkString("/")).values
-          .filter(g => g.length > 1 || g.exists(isAbsoluteName))
+          .filter(g => g.length > 1 || g.exists(Manifest.isAbsoluteName))
           .flatten.toSeq
         if (pack.isEmpty) Settle((names.length, names.length))
         else {
           val packSet = pack.toSet
           val packBytes = sized.collect { case (n, b) if packSet(n) => b }.sum
           val nOut = math.max(1, math.ceil(packBytes.toDouble / targetFileBytes).toInt)
-          val keptLines = lines.filterNot(l => packSet(l.split('\t').head))
+          val kept = head.filterEntries(e => e.dv || !packSet(e.name))
           // declared clustering: the pack rewrite is the convergence point —
           // files written before the declaration (or restaged by CoW ops)
           // come out range-clustered here
-          val hasCluster = clusterOf(lines).nonEmpty
-          val newLines =
+          val hasCluster = head.clustering.nonEmpty
+          val newEntries =
             if (partCols.isEmpty) {
               val packed = readFiles(pack.sorted, None)
               stageToPool(
                 if (hasCluster) clustered(packed, numParts = Some(nOut))
                 else packed.coalesce(nOut), "compact")
             } else {
-              val packed = readFiles(pack.sorted, None, partTypesOf(lines))
+              val packed = readFiles(pack.sorted, None, partTypesOf(head))
               stagePartitioned(
                 if (hasCluster) clustered(packed, partCols, Some(nOut))
                 else packed.repartition(nOut, partCols.map(col): _*),
                 partCols, "compact")
             }
-          Publish(keptLines ++ newLines, _ => (names.length, currentFileCount))
+          Publish(kept ++ newEntries, _ => (names.length, currentFileCount))
         }
       }
     }

@@ -292,9 +292,9 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     }
     // fail at resolution with the live range, not at scan time with a
     // raw FileNotFoundException from the manifest read
-    if (!HadoopFs.fs(spark, root.toString)
-        .exists(new Path(root, f"_commits/$v%08d.manifest"))) {
-      val head = new CommitLog(spark, root.toString).currentVersion
+    val log = new CommitLog(spark, root.toString)
+    if (!log.isCommitted(v)) {
+      val head = log.currentVersion
       throw new IllegalArgumentException(
         s"version $v is not available for ${fullName(ident)}" +
           head.map(h => s" (head: $h; older versions may be vacuumed)")

@@ -466,6 +466,27 @@ class ReplicateSpec extends AnyFunSuite {
       "the debt stands — only the promoted lineage may fold it")
   }
 
+  test("restore past a promotion keeps the generation: the reverse resync " +
+      "still clears the old primary's fence") {
+    spark.sql("CREATE TABLE grpl.db.srcG (k BIGINT, v STRING)")
+    spark.sql("INSERT INTO grpl.db.srcG VALUES (1, 'a'), (2, 'b')")
+    val primary = new CommitLog(spark, s"$warehouse/db/srcG")
+    val replica = new CommitLog(spark, tmp("graft_restore_gen"))
+    val synced = replica.replicateFrom(primary).get
+    val (_, gen, fenced) = replica.promote(Some(primary))
+    assert(gen == 1L && fenced)
+    replica.commit(Seq((3L, "c")).toDF("k", "v"), replace = false)
+    // roll back to the pre-promotion sync: the data reverts, the fencing
+    // token must not — a generation-0 head would bounce off the fence it
+    // stamped on the old primary
+    replica.restore(synced): Unit
+    assert(snapshot(replica) == Set((1L, "a"), (2L, "b")))
+    assert(replica.generation == 1L, "a restore must not move the generation back")
+    assert(primary.replicateFrom(replica).nonEmpty)
+    assert(snapshot(primary) == snapshot(replica))
+    assert(primary.generation == 1L)
+  }
+
   test("SQL surface: CALL promote_replica fails over, late fence-stamp " +
       "is idempotent, parity holds against the promoted side") {
     spark.sql("CREATE TABLE grpl.db.srcQ (k BIGINT, v STRING)")

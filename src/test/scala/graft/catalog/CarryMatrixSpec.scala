@@ -76,9 +76,15 @@ class CarryMatrixSpec extends AnyFunSuite {
   }
 
   /** One operation: run it on a fixture root, return the root whose head
-    * holds the result.
+    * holds the result. `counts` runs it once and counts each header kind
+    * in that head.
     */
-  private case class Op(name: String, run: String => String, expected: Set[String])
+  private case class Op(name: String, run: String => String, expected: Set[String]) {
+    lazy val counts: Map[String, Int] = {
+      val lines = rawHead(run(fixture(name.takeWhile(_.isLetter))))
+      Kinds.map(k => k -> lines.count(_.startsWith(s"#$k:"))).toMap
+    }
+  }
 
   private val ops = Seq(
     Op("append", { root =>
@@ -116,17 +122,6 @@ class CarryMatrixSpec extends AnyFunSuite {
     }, Verbatim)
   )
 
-  /** Header-kind counts in each operation's resulting head, computed once
-    * per operation.
-    */
-  private val counts: Map[String, () => Map[String, Int]] = ops.map { op =>
-    lazy val c = {
-      val lines = rawHead(op.run(fixture(op.name.takeWhile(_.isLetter))))
-      Kinds.map(k => k -> lines.count(_.startsWith(s"#$k:"))).toMap
-    }
-    op.name -> (() => c)
-  }.toMap
-
   test("a branch root is one version: the fork carries its contracts at v1") {
     val root = fixture("branch")
     val log = new CommitLog(spark, root)
@@ -137,8 +132,8 @@ class CarryMatrixSpec extends AnyFunSuite {
   for (op <- ops; kind <- Kinds) {
     val want = op.expected(kind)
     test(s"#$kind: after ${op.name} is ${if (want) "present" else "absent"}") {
-      assert(counts(op.name)()(kind) == (if (want) 1 else 0),
-        s"#$kind: occurs ${counts(op.name)()(kind)} times after ${op.name}")
+      assert(op.counts(kind) == (if (want) 1 else 0),
+        s"#$kind: occurs ${op.counts(kind)} times after ${op.name}")
     }
   }
 }
