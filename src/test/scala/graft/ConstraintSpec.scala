@@ -259,4 +259,38 @@ class ConstraintSpec extends AnyFunSuite {
       s"imported batch must re-validate against the new head: ${ex.getMessage}")
     assert(plain.read().count() == 1, "violating import must not land")
   }
+
+  /** The keyed DML paths and the streaming sink's pooled commit: each
+    * validates its batch against the empty constraint set, loses attempt
+    * 0 to an addConstraint, and must re-validate against the new head.
+    */
+  private val racedPaths: Seq[(String, CommitLog => Any)] = Seq(
+    "merge" -> (_.merge(Seq((2L, -9)).toDF("k", "qty"), "k")),
+    "mergeMoR" -> (_.mergeMoR(Seq((2L, -9)).toDF("k", "qty"), "k")),
+    "applyChangesMoR" -> (_.applyChangesMoR(Seq.empty[Long].toDF("k"),
+      Seq((2L, -9)).toDF("k", "qty"), "k")),
+    "commitPooledFiles" -> (l => graft.catalog.SinkCommit(l,
+      Seq(oneSrcFile(Seq((2L, -9)).toDF("k", "qty"))), replace = false)))
+
+  test("constraint DDL landing mid-merge, mid-mergeMoR, mid-applyChangesMoR and " +
+      "mid-commitPooledFiles re-validates the racing batch") {
+    racedPaths.foreach { case (op, run) =>
+      val root = tmp()
+      val plain = new CommitLog(spark, root)
+      plain.commit(Seq((1L, 5)).toDF("k", "qty"), replace = false)
+      val racer = new CommitLog(spark, root) {
+        private var fired = false
+        override protected def beforePublish(attempt: Int, v: Long): Unit =
+          if (attempt == 0 && !fired) {
+            fired = true; plain.addConstraint("qty_pos", "qty > 0"): Unit
+          }
+      }
+      val ex = intercept[IllegalStateException](run(racer))
+      assert(ex.getMessage.contains(s"$op: CHECK constraint violation"),
+        s"$op must re-validate against the new head: ${ex.getMessage}")
+      assert(plain.checkConstraints.contains("qty_pos"))
+      assert(plain.read().collect().map(_.getLong(0)).toSeq == Seq(1L),
+        s"$op: the violating batch must not land")
+    }
+  }
 }

@@ -482,9 +482,25 @@ class ReplicateSpec extends AnyFunSuite {
     replica.restore(synced): Unit
     assert(snapshot(replica) == Set((1L, "a"), (2L, "b")))
     assert(replica.generation == 1L, "a restore must not move the generation back")
+    // nor may it turn the promoted primary back into a replica: the
+    // pre-promotion sync cursor stays behind
+    assert(replica.headerOf(replica.currentVersion.get, "repsrc").isEmpty,
+      "a restore must not bring back the target's sync cursor")
     assert(primary.replicateFrom(replica).nonEmpty)
     assert(snapshot(primary) == snapshot(replica))
     assert(primary.generation == 1L)
+    // a table that is still a replica keeps the restored sync's cursor,
+    // so the next sync ships what the source committed since
+    val src2 = new CommitLog(spark, tmp("graft_restore_src2"))
+    src2.commit(Seq((1L, "a")).toDF("k", "v"), replace = false)
+    val rep2 = new CommitLog(spark, tmp("graft_restore_rep2"))
+    val first = rep2.replicateFrom(src2).get
+    src2.commit(Seq((2L, "b")).toDF("k", "v"), replace = false)
+    rep2.replicateFrom(src2).get: Unit
+    rep2.restore(first): Unit
+    assert(rep2.headerOf(rep2.currentVersion.get, "repsrc").contains("1"))
+    assert(rep2.replicateFrom(src2).nonEmpty)
+    assert(snapshot(rep2) == snapshot(src2))
   }
 
   test("SQL surface: CALL promote_replica fails over, late fence-stamp " +
