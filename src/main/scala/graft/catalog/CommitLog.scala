@@ -430,7 +430,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   private[graft] def publishPending(df: DataFrame, id: String,
       decisionUri: String, replace: Boolean, maxAttempts: Int = 50): Long = {
     enforceConstraints(df, checkConstraints, "xtxn")
-    val newEntries = stageToPool(df, "xtxn")
+    val newEntries = stage(df, Nil, "xtxn")
     headRace("publishPending", "xtxn", maxAttempts) { (_, prev) =>
       if (!replace) requireUnpartitioned("publishPending(append)", prev)
       val carried =
@@ -497,6 +497,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * compaction and rewrites for the table's lifetime.
     */
   def txns(v: Long): Set[String] = manifest(v).txns.toSet
+
+  /** The head version when `txn` already landed there: a redelivered
+    * batch returns it before validating or staging anything.
+    */
+  private def appliedAt(txn: Option[String]): Option[Long] =
+    txn.flatMap(id => currentVersion.filter(v => txns(v).contains(id)))
 
   // ---- CHECK constraints ---------------------------------------------------
 
@@ -860,6 +866,21 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       cs, op)
   }
 
+  /** The constraint gate of one write: `gate(cs)(check)` runs `check(cs)`
+    * — which validates the write's batch against the constraint set `cs`
+    * — unless the set is the one this gate last passed. A write checks
+    * its batch before staging where it can (a rejected batch leaves no
+    * pool litter), then on every [[headRace]] attempt against the pinned
+    * head's set; the batch is validated again only when constraint DDL
+    * won a race and the set moved, so a row never lands unchecked against
+    * the constraints it is published under.
+    */
+  private final class ConstraintGate {
+    private var validatedCs: Option[Map[String, String]] = None
+    def apply(cs: Map[String, String])(check: Map[String, String] => Unit): Unit =
+      if (!validatedCs.contains(cs)) { check(cs); validatedCs = Some(cs) }
+  }
+
   // ---- footer statistics -------------------------------------------------
 
   /** Row count + min/max per top-level column, merged across the file's
@@ -1072,26 +1093,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def commit(df: DataFrame, replace: Boolean, txn: Option[String],
       header: Option[(String, String)]): Long = {
-    txn.foreach { id =>
-      currentVersion.foreach { v => if (txns(v).contains(id)) return v }
-    }
-    // validate BEFORE staging (a rejected batch leaves no pool litter);
-    // re-validated in the race if the constraint set moved under us
-    var validatedCs = checkConstraints
-    enforceConstraints(df, validatedCs, "commit")
-    // every retry publishes the SAME pooled file names (carried-over
-    // lines keep their stats)
-    val newEntries = stageToPool(clustered(df), "commit")
+    for (v <- appliedAt(txn)) return v
+    val gate = new ConstraintGate
+    gate(checkConstraints)(enforceConstraints(df, _, "commit"))
+    val newEntries = stage(clustered(df), Nil, "commit")
     val opName = header.collect { case (Manifest.Op, hv) => hv }
       .getOrElse(if (replace) "replace" else "append")
     headRace("commit", opName) { (head, prev) =>
       if (txn.exists(prev.hasTxn)) Settle(head)  // lost the race to our own id's writer
       else {
         if (!replace) requireUnpartitioned("commit(append)", prev)
-        val curCs = prev.checks
-        if (curCs != validatedCs) { // constraint DDL won a race: re-validate
-          enforceConstraints(df, curCs, "commit"); validatedCs = curCs
-        }
+        gate(prev.checks)(enforceConstraints(df, _, "commit"))
         // a replace drops the file lines but MUST carry the txn headers —
         // applied-batch memory outlives any rewrite or compaction
         val carried0 =
@@ -1118,7 +1130,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * a redelivered streaming batch double-apply), and the failover
     * generation (`#gen:`) must never move back (a pre-promotion target
     * would re-open the fence the promotion stamped on the old primary).
-    * Everything else is the target's, contracts included.
+    * Everything else is the target's, contracts included, except its sync
+    * cursor (`#repsrc:`/`#repmap:`/`#reproot:`): that is taken only while
+    * the head is itself a replica, so restoring a promoted table to a
+    * pre-promotion sync never turns it back into a replica.
     */
   def restore(v: Long): Long = {
     val live = committedVersions
@@ -1136,55 +1151,109 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val target = manifest(v).without(Manifest.Lineage)
     headRace("restore", "restore", headless = Some(() =>
         new java.util.NoSuchElementException(s"restore: empty commit log under $tableRoot"))) {
-      (_, prev) => publishAt(prev.only(Manifest.Lineage) ++ target)
+      (_, prev) => publishAt(prev.only(Manifest.Lineage) ++
+        (if (prev.has(Manifest.RepSrc)) target else target.without(Manifest.Sync)))
     }
   }
 
-  /** Write `df` once into a staging dir, move its part files into the
-    * pool under fresh opaque names, and return their manifest entries
-    * (name + footer stats). Names are computed BEFORE any version race —
-    * only a manifest confers liveness, so they need not embed the
-    * finally-committed version; the uuid keeps racing writers' files from
-    * clashing. (Computing names inside the retry loop was a real bug: a
-    * writer that lost the rename race would publish a manifest listing
-    * names that were never created, making that version and every append
-    * chaining it unreadable — and vacuum would collect the real files as
-    * orphans.) Footer stats ride the manifest line: one footer read per
-    * new file at commit time buys every future reader file-level pruning.
+  /** Staging by layout, for every operation that writes a DataFrame:
+    * write `df` once into a staging dir, hive-partitioned by `partCols`
+    * when given (each part then pools under its `c=v` subdirs), and pool
+    * the parts ([[poolFromStage]]). Names are computed BEFORE any version
+    * race — only a manifest confers liveness, so they need not embed the
+    * finally-committed version, and every retry of a publish lists the
+    * same pooled names. (Computing names inside the retry loop was a real
+    * bug: a writer that lost the rename race would publish a manifest
+    * listing names that were never created, making that version and every
+    * append chaining it unreadable — and vacuum would collect the real
+    * files as orphans.)
     */
-  private def stageToPool(df: DataFrame, op: String): Seq[Entry] = {
-    val stage = new Path(tmpDir, java.util.UUID.randomUUID().toString)
-    df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    poolFromStage(stage, op)
+  private def stage(df: DataFrame, partCols: Seq[String], op: String): Seq[Entry] = {
+    val dir = new Path(tmpDir, java.util.UUID.randomUUID().toString)
+    if (partCols.isEmpty) df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
+    else {
+      val missing = partCols.filterNot(df.columns.contains)
+      require(missing.isEmpty, s"$op: partition columns $missing not in ${df.columns.toSeq}")
+      // Optimized write (opt-in): without it, EVERY writing task opens a
+      // file in EVERY partition value it holds — at 1000 tasks × 1000
+      // partition values that is 10^6 near-empty files per commit, the
+      // classic partitioned-ingest failure. The pre-shuffle clusters rows
+      // by partition value first (one exchange), collapsing the count to
+      // ~one file per value. Deliberately opt-in: clustering by partition
+      // value serializes each value into one task, which is the wrong
+      // trade for skewed values or few-partition writes — and the default
+      // keeps file counts byte-identical for existing callers.
+      val toStage =
+        if (spark.conf.getOption("spark.graft.optimizedWrite.enabled")
+            .exists(_.toBoolean))
+          df.repartition(partCols.map(c => col(s"`$c`")): _*)
+        else df
+      toStage.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
+        .parquet(dir.toString)
+    }
+    poolFromStage(dir, op, partColTypes(df, partCols))
   }
 
-  /** Move an already-written staging dir's part files into the pool
-    * under fresh opaque names and return their manifest entries — the
-    * second half of [[stageToPool]], split out so writers that produce
-    * their files through other machinery (the V2 batch write behind SQL
-    * MERGE/UPDATE) share the same pooling discipline.
+  /** Pool the parquet parts of an already-written staging dir (hive
+    * `c=v` subdirs included) and delete the dir — the second half of
+    * [[stage]], split out so writers that produce their files through
+    * other machinery (the V2 batch write behind SQL MERGE/UPDATE) share
+    * the same pooling discipline. `colType` types the partition-value
+    * bounds ([[partColTypes]]).
     */
-  private def poolFromStage(stage: Path, op: String): Seq[Entry] = {
-    // one footer read per part yields BOTH the row count and the stats;
-    // zero-row parts (Spark writes schema-only files for empty partitions
-    // of union/anti-join plans) are dropped here — they would pollute
-    // every future manifest as stats-less, never-prunable entries
-    val parts = hfs.listStatus(stage)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-      .map(f => (f.getPath, f.getLen, footerInfo(f.getPath)))
-      .filter { case (_, _, (rows, _)) => rows > 0 }
+  private def poolFromStage(dir: Path, op: String,
+      colType: Map[String, String] = Map.empty): Seq[Entry] = {
+    val dirUri = dir.toUri.getPath
+    val it = hfs.listFiles(dir, true)
+    val parts = scala.collection.mutable.ArrayBuffer.empty[PoolPart]
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
+        val rel = f.getPath.toUri.getPath.stripPrefix(dirUri).stripPrefix("/")
+        parts += PoolPart(f.getPath, f.getLen, rel.split('/').dropRight(1).toSeq)
+      }
+    }
+    val entries = poolParts(parts.sortBy(_.src.getName).toSeq, op, colType).map(_._2)
+    hfs.delete(dir, true)
+    entries
+  }
+
+  /** One parquet file headed for the pool: where it is, its length, and
+    * the hive `c=v` subdirs it files under (empty for flat pools).
+    */
+  private case class PoolPart(src: Path, len: Long, subdirs: Seq[String] = Nil)
+
+  /** The pooling helper every write path shares: turn `parts` into pool
+    * entries, in order. One footer read per part yields BOTH the row
+    * count and the stats; zero-row parts (Spark writes a schema-only file
+    * for an empty first partition of union/anti-join plans, and external
+    * writers hand over empty files) are dropped before numbering — they
+    * would pollute every future manifest as stats-less, never-prunable
+    * entries. Each survivor moves (or, with `copy`, is copied
+    * byte-identical) to `data/[<subdirs>/]<uuid8>-partNNNNN.parquet`, and
+    * its entry carries the footer stats plus an exact min=max bound per
+    * partition value ([[partValueStats]]), so one conjunctive test serves
+    * both pruning tiers. The uuid keeps racing writers' files apart.
+    * Returns each pooled part with its entry.
+    */
+  private def poolParts(parts: Seq[PoolPart], op: String,
+      colType: Map[String, String] = Map.empty,
+      copy: Boolean = false): Seq[(PoolPart, Entry)] = {
+    val live = parts.map(p => (p, footerInfo(p.src))).filter(_._2._1 > 0)
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     hfs.mkdirs(dataDir)
-    hfs.mkdirs(commitsDir)
-    val entries = parts.zipWithIndex.map { case ((src, len, (rows, st)), i) =>
-      val name = f"$uuid-part$i%05d.parquet"
-      if (!hfs.rename(src, new Path(dataDir, name)))
-        throw new java.io.IOException(s"$op: could not move $src into the pool")
-      Entry.pooled(name, st, rows, len)
+    live.zipWithIndex.map { case ((p, (rows, st)), i) =>
+      val name = (p.subdirs :+ f"$uuid-part$i%05d.parquet").mkString("/")
+      val dst = new Path(dataDir, name)
+      if (p.subdirs.nonEmpty) hfs.mkdirs(dst.getParent)
+      val landed =
+        if (copy) org.apache.hadoop.fs.FileUtil.copy(HadoopFs.fs(spark, p.src.toString),
+          p.src, hfs, dst, false, hfs.getConf)
+        else hfs.rename(p.src, dst)
+      if (!landed) throw new java.io.IOException(
+        s"$op: could not ${if (copy) "copy" else "move"} ${p.src} into the pool")
+      p -> Entry.pooled(name, st ++ partValueStats(p.subdirs, colType), rows, p.len)
     }
-    hfs.delete(stage, true)
-    entries.toSeq
   }
 
   /** Hive %xx escape decoding for partition-dir values (Spark escapes
@@ -1242,64 +1311,6 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     }.toMap
   }
 
-  /** Stage `df` hive-partitioned by `partitionCols` and pool the parts
-    * UNDER their partition subdirs (manifest names carry the subpath).
-    * Stats = footer stats of the data columns + exact partition-value
-    * bounds, so one conjunctive test serves both pruning tiers.
-    */
-  private def stagePartitioned(df: DataFrame, partitionCols: Seq[String],
-      op: String): Seq[Entry] = {
-    require(partitionCols.nonEmpty, s"$op: empty partition column list")
-    val missing = partitionCols.filterNot(df.columns.contains)
-    require(missing.isEmpty, s"$op: partition columns $missing not in ${df.columns.toSeq}")
-    val colType = partColTypes(df, partitionCols)
-    val stage = new Path(tmpDir, java.util.UUID.randomUUID().toString)
-    // Optimized write (opt-in): without it, EVERY writing task opens a
-    // file in EVERY partition value it holds — at 1000 tasks × 1000
-    // partition values that is 10^6 near-empty files per commit, the
-    // classic partitioned-ingest failure. The pre-shuffle clusters rows
-    // by partition value first (one exchange), collapsing the count to
-    // ~one file per value. Deliberately opt-in: clustering by partition
-    // value serializes each value into one task, which is the wrong
-    // trade for skewed values or few-partition writes — and the default
-    // keeps file counts byte-identical for existing callers.
-    val toStage =
-      if (spark.conf.getOption("spark.graft.optimizedWrite.enabled")
-          .exists(_.toBoolean))
-        df.repartition(partitionCols.map(c => col(s"`$c`")): _*)
-      else df
-    toStage.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-      .parquet(stage.toString)
-    val stageUri = stage.toUri.getPath
-    val it = hfs.listFiles(stage, true)
-    val parts = scala.collection.mutable.ArrayBuffer.empty[(Path, Long, Seq[String])]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
-        val rel = f.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
-        parts += ((f.getPath, f.getLen, rel.split('/').dropRight(1).toSeq))
-      }
-    }
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    hfs.mkdirs(dataDir)
-    hfs.mkdirs(commitsDir)
-    val entries = parts.sortBy(_._1.getName).zipWithIndex.map {
-      case ((src, len, subdirs), i) =>
-        val (rows, st) = footerInfo(src)
-        if (rows == 0L) { hfs.delete(src, false); None }
-        else {
-          val name = (subdirs :+ f"$uuid-part$i%05d.parquet").mkString("/")
-          val dest = new Path(dataDir, name)
-          hfs.mkdirs(dest.getParent)
-          if (!hfs.rename(src, dest))
-            throw new java.io.IOException(s"$op: could not move $src into the pool")
-          Some(Entry.pooled(name, st ++ partValueStats(subdirs, colType), rows, len))
-        }
-    }.flatten
-    hfs.delete(stage, true)
-    entries.toSeq
-  }
-
   /** Commit `df` hive-partitioned by `partitionCols` as the next version
     * (the partitioned twin of [[commit]]). Appends require the head's
     * partition spec to match; a replace may change it. The spec rides
@@ -1317,9 +1328,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       replace: Boolean, txn: Option[String] = None,
       op: Option[String] = None,
       extraHeader: Option[String] = None): Long = {
-    txn.foreach { id =>
-      currentVersion.foreach { v => if (txns(v).contains(id)) return v }
-    }
+    require(partitionCols.nonEmpty, "commitPartitioned: empty partition column list")
+    for (v <- appliedAt(txn)) return v
     currentVersion.filter(_ => !replace).foreach { v =>
       val prevManifest = manifest(v)
       val existing = prevManifest.partitionColumns
@@ -1331,10 +1341,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           else s"partitioned by $existing"}, append by $partitionCols " +
           "would mix layouts (replace=true may change the spec)")
     }
-    var validatedCs = checkConstraints
-    enforceConstraints(df, validatedCs, "commitPartitioned")
-    val newEntries = stagePartitioned(clustered(df, partitionCols),
-      partitionCols, "commitPartitioned")
+    val gate = new ConstraintGate
+    gate(checkConstraints)(enforceConstraints(df, _, "commitPartitioned"))
+    val newEntries = stage(clustered(df, partitionCols), partitionCols, "commitPartitioned")
     val extra = extraHeader.map(Manifest.parseLine)
     headRace("commitPartitioned",
         op.getOrElse(if (replace) "replace" else "append")) { (head, prev) =>
@@ -1356,10 +1365,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
               s"(now ${if (headCols.isEmpty) "flat" else s"partitioned by $headCols"}); " +
               s"append by $partitionCols would mix layouts")
         }
-        val curCs = prev.checks
-        if (curCs != validatedCs) {
-          enforceConstraints(df, curCs, "commitPartitioned"); validatedCs = curCs
-        }
+        gate(prev.checks)(enforceConstraints(df, _, "commitPartitioned"))
         // shape-aware carry: a partitioned INSERT OVERWRITE that changes
         // the column set drops the stale evolved `#schema:` header like
         // the flat path; the RLO restage and other shape-preserving
@@ -1389,38 +1395,20 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   private[catalog] def commitPooledFiles(paths: Seq[Path], replace: Boolean,
       txn: Option[String]): Long = {
-    txn.foreach { id =>
-      currentVersion.foreach { v => if (txns(v).contains(id)) return v }
-    }
+    for (v <- appliedAt(txn)) return v
     if (paths.isEmpty && !replace) return currentVersion.getOrElse(0L)
-    // validate BEFORE the pool move: a rejected epoch leaves its files
-    // where the writer staged them (the stage dir ages out), not in the
-    // pool masquerading as committable content
-    var validatedCs = checkConstraints
-    enforceConstraintsOnPaths(paths, validatedCs, "commitPooledFiles")
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    hfs.mkdirs(dataDir)
-    hfs.mkdirs(commitsDir)
-    val newEntries = paths.sortBy(_.getName)
-      .map(p => (p, hfs.getFileStatus(p).getLen, footerInfo(p)))
-      .filter { case (_, _, (rows, _)) => rows > 0 }
-      .zipWithIndex.map { case ((src, len, (rows, st)), i) =>
-        val name = f"$uuid-part$i%05d.parquet"
-        if (!hfs.rename(src, new Path(dataDir, name)))
-          throw new java.io.IOException(s"commitPooledFiles: could not move $src")
-        Entry.pooled(name, st, rows, len)
-      }
+    // a rejected epoch's files stay in the writer's stage dir, which ages out
+    val gate = new ConstraintGate
+    gate(checkConstraints)(enforceConstraintsOnPaths(paths, _, "commitPooledFiles"))
+    val newEntries = poolParts(paths.sortBy(_.getName)
+      .map(p => PoolPart(p, hfs.getFileStatus(p).getLen)), "commitPooledFiles").map(_._2)
     val pooledPaths = newEntries.map(e => new Path(dataDir, e.name))
     headRace("commitPooledFiles", if (replace) "replace" else "append") {
       (head, prev) =>
         if (txn.exists(prev.hasTxn)) Settle(head)
         else {
           if (!replace) requireUnpartitioned("commitPooledFiles(append)", prev)
-          val curCs = prev.checks
-          if (curCs != validatedCs) { // constraint DDL won a race: re-validate
-            enforceConstraintsOnPaths(pooledPaths, curCs, "commitPooledFiles")
-            validatedCs = curCs
-          }
+          gate(prev.checks)(enforceConstraintsOnPaths(pooledPaths, _, "commitPooledFiles"))
           val carried = if (replace) replaceCarriedData(prev,
             pooledPaths.headOption.map(p => spark.read.parquet(p.toString).schema))
           else prev
@@ -1468,9 +1456,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     import spark.implicits._
     // CHECK constraints validate the LIVE rows of the import — tombstoned
     // rows never surface, so a deleted violator cannot fail the batch.
-    // Validation reads the SOURCE files (pre-copy: a rejected import
-    // leaves no pool litter) and re-runs inside the race if the
-    // constraint set moved under us, like commit()/commitStaged.
+    // Validation reads the SOURCE files, before the copy.
     def liveRows: DataFrame = {
       val base = spark.read.option("mergeSchema", "true")
         .parquet(srcs.map(_.toString): _*)
@@ -1488,45 +1474,31 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             .drop("_graft_src", "_graft_del_pos")
       }
     }
-    var validatedCs = checkConstraints
+    val gate = new ConstraintGate
     def validate(cs: Map[String, String]): Unit =
       if (cs.nonEmpty) enforceConstraints(liveRows, cs, "commitCopiedWithTombstones")
-    validate(validatedCs)
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    hfs.mkdirs(dataDir)
-    hfs.mkdirs(commitsDir)
-    val pooled = srcs.zipWithIndex.flatMap { case (src, i) =>
-      val srcFs = HadoopFs.fs(spark, src.toString)
-      val name = f"$uuid-part$i%05d.parquet"
-      val dst = new Path(dataDir, name)
-      if (!org.apache.hadoop.fs.FileUtil.copy(srcFs, src, hfs, dst, false, hfs.getConf))
-        throw new java.io.IOException(s"commitCopiedWithTombstones: copy of $src failed")
-      val (rows, st) = footerInfo(dst)
-      if (rows == 0L) { hfs.delete(dst, false); None }
-      else Some((src.toUri.getPath, name,
-        Entry.pooled(name, st, rows, hfs.getFileStatus(dst).getLen)))
-    }
-    val dataEntries = pooled.map(_._3)
+    gate(checkConstraints)(validate)
+    val pooled = poolParts(srcs.map(p =>
+      PoolPart(p, HadoopFs.fs(spark, p.toString).getFileStatus(p).getLen)),
+      "commitCopiedWithTombstones", copy = true)
+    val dataEntries = pooled.map(_._2)
     val tombEntries = tombs match {
       case None => Seq.empty
       case Some(t) =>
-        val mapDf = pooled.map { case (srcNorm, name, _) => (srcNorm, name) }
+        val mapDf = pooled.map { case (p, e) => (p.src.toUri.getPath, e.name) }
           .toDF("_graft_src", DvKeys.head)
         val keyed = t
           .join(org.apache.spark.sql.functions.broadcast(mapDf), Seq("_graft_src"))
           .select(col(DvKeys.head),
             col("_graft_del_pos").cast("long").as(DvKeys.last))
-        stageToPool(keyed, "importDeletes").map(_.asDv)
+        stage(keyed, Nil, "importDeletes").map(_.asDv)
     }
     headRace("commitCopiedWithTombstones", "import") { (_, prev) =>
       if (!replace) requireUnpartitioned("commitCopiedWithTombstones(append)", prev)
-      val curCs = prev.checks
-      if (curCs != validatedCs) { // constraint DDL won a race: re-validate
-        validate(curCs); validatedCs = curCs
-      }
+      gate(prev.checks)(validate)
       val carried = if (replace) replaceCarriedData(prev,
-        pooled.headOption.map { case (_, name, _) =>
-          spark.read.parquet(new Path(dataDir, name).toString).schema })
+        dataEntries.headOption.map(e =>
+          spark.read.parquet(new Path(dataDir, e.name).toString).schema))
       else prev
       publishAt(carried ++ dataEntries ++ tombEntries)
     }
@@ -1833,15 +1805,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def commitStaged(stageDir: String, replace: Boolean): Long = {
     val newEntries = poolFromStage(new Path(stageDir), "commitStaged")
     val newPaths = newEntries.map(e => new Path(dataDir, e.name))
-    var validatedCs = checkConstraints
-    enforceConstraintsOnPaths(newPaths, validatedCs, "commitStaged")
+    val gate = new ConstraintGate
+    gate(checkConstraints)(enforceConstraintsOnPaths(newPaths, _, "commitStaged"))
     headRace("commitStaged", if (replace) "replace" else "append") { (_, prev) =>
       if (!replace) requireUnpartitioned("commitStaged(append)", prev)
-      val curCs = prev.checks
-      if (curCs != validatedCs) { // constraint DDL won a race: re-validate
-        enforceConstraintsOnPaths(newPaths, curCs, "commitStaged")
-        validatedCs = curCs
-      }
+      gate(prev.checks)(enforceConstraintsOnPaths(newPaths, _, "commitStaged"))
       publishAt((if (replace) replaceCarried(prev) else prev) ++ newEntries)
     }
   }
@@ -2090,18 +2058,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val ts = partitionTransforms
     require(ts.nonEmpty, s"commitStagedTransformed: no declared transforms " +
       s"under $tableRoot")
-    val stage = new Path(stageDir)
-    val hasParts = hfs.exists(stage) && hfs.listStatus(stage)
-      .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val df0 =
-      if (hasParts) spark.read.parquet(stage.toString)
-      else read().where(org.apache.spark.sql.functions.lit(false))
     val names = ts.map(_.derivedName)
-    val df = applyTransforms(df0).repartition(names.map(n => col(s"`$n`")): _*)
-    val ver = commitPartitioned(df, names, replace = true,
-      extraHeader = Some(Header.ptspec(ts).text))
-    hfs.delete(stage, true)
-    ver
+    restaged(stageDir, "commitStagedTransformed") { df =>
+      commitPartitioned(applyTransforms(df).repartition(names.map(n => col(s"`$n`")): _*),
+        names, replace = true, extraHeader = Some(Header.ptspec(ts).text))
+    }
   }
 
   /** (Re)compute every declared derived column whose source is present —
@@ -2662,18 +2623,24 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * plane ([[merge]]). An empty stage is a legal truncate-to-empty
     * (the schema comes from the current head).
     */
-  def commitStagedPartitioned(stageDir: String, partitionCols: Seq[String]): Long = {
-    val stage = new Path(stageDir)
-    val hasParts = hfs.exists(stage) && hfs.listStatus(stage)
+  def commitStagedPartitioned(stageDir: String, partitionCols: Seq[String]): Long =
+    restaged(stageDir, "commitStagedPartitioned")(
+      commitPartitioned(_, partitionCols, replace = true))
+
+  /** Re-stage the rows an external writer staged under `stageDir` through
+    * `commit`, then drop the stage dir. A stage with no parts is a legal
+    * truncate-to-empty: `commit` gets the committed head's schema with no
+    * rows (`readVersion`, not `read()`: a transform-partitioned head keeps
+    * its derived layout columns).
+    */
+  private def restaged(stageDir: String, op: String)(commit: DataFrame => Long): Long = {
+    val dir = new Path(stageDir)
+    val hasParts = hfs.exists(dir) && hfs.listStatus(dir)
       .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val df =
-      if (hasParts) spark.read.parquet(stage.toString)
-      // readVersion, not read(): a transform-partitioned head must keep
-      // its derived layout columns through the empty-truncate restage
-      else readVersion(committedHead("commitStagedPartitioned: "))
-        .where(org.apache.spark.sql.functions.lit(false))
-    val ver = commitPartitioned(df, partitionCols, replace = true)
-    hfs.delete(stage, true)
+    val ver = commit(
+      if (hasParts) spark.read.parquet(dir.toString)
+      else readVersion(committedHead(s"$op: ")).where(lit(false)))
+    hfs.delete(dir, true)
     ver
   }
 
@@ -2687,12 +2654,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     *     pins v0 with an empty manifest, unless `headless` is given: then the
     *     operation needs a head and throws what `headless` builds;
     *  2. runs `decide(head, manifest)`, which validates against that
-    *     snapshot (constraint re-checks included) and either settles
-    *     without publishing ([[Settle]]: a no-op, a `#txn:` id already
-    *     applied, a delegated commit) or hands back the manifest for
-    *     head+1 ([[Publish]]). Whatever it stages keeps uuid pool names,
-    *     so a lost attempt leaves only orphans, which vacuum's in-flight
-    *     guard ages out;
+    *     snapshot (constraint re-checks through the write's
+    *     [[ConstraintGate]]) and either settles without publishing
+    *     ([[Settle]]: a no-op, a `#txn:` id already applied, a delegated
+    *     commit) or hands back the manifest for head+1 ([[Publish]]).
+    *     Whatever it stages goes through [[stage]] / [[poolParts]] under
+    *     uuid pool names, so a lost attempt leaves only orphans, which
+    *     vacuum's in-flight guard ages out;
     *  3. calls [[beforePublish]]`(attempt, head+1)` (attempt counts from
     *     0), then publishes that manifest, its `#op:` set to `op`, at head+1
     *     through the store's put-if-absent ([[publish]]);
@@ -3003,19 +2971,6 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     acted.toSeq
   }
 
-  /** Pool files of `m` that CONTAIN at least one of `keys`:
-    * footer-stats range overlap first (no I/O, pure driver metadata the
-    * manifest already holds), then an exact semi-join with
-    * `input_file_name()` over just the candidates, reduced to ONE
-    * aggregated row (`collect_set` of file names, map-side combined) —
-    * per-file rows never materialize on the driver, and the fetched
-    * array is bounded by the candidate count, which is itself bounded
-    * by `refineCap`: past the cap the exact refinement is skipped and
-    * the stats-overlap set stands as the touched set (correct — a
-    * candidate with no matched key is rewritten byte-identical — at the
-    * price of extra rewrite, the right trade once the refinement scan
-    * itself would rival the rewrite it prunes).
-    */
   /** Candidate-count ceiling above which touched-file discovery trusts
     * footer stats alone (no exact refinement scan). Overridable for
     * tests and for tables whose clustering makes stats near-exact.
@@ -3048,34 +3003,82 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     rows.iterator.map(_.getString(0)).toSet
   }
 
+  /** Pool files of `m` that CONTAIN at least one of `keys`:
+    * footer-stats range overlap first (no I/O, pure driver metadata the
+    * manifest already holds), then an exact semi-join with
+    * `input_file_name()` over just the candidates, reduced to ONE
+    * aggregated row (`collect_set` of file names, map-side combined) —
+    * per-file rows never materialize on the driver, and the fetched
+    * array is bounded by the candidate count, which is itself bounded
+    * by `refineCap`: past the cap the exact refinement is skipped and
+    * the stats-overlap set stands as the touched set (correct — a
+    * candidate with no matched key is rewritten byte-identical — at the
+    * price of extra rewrite, the right trade once the refinement scan
+    * itself would rival the rewrite it prunes).
+    */
   private def findTouched(m: Manifest, keys: DataFrame, keyCol: String,
       refineCap: Int = touchRefineCap, partTypes: Map[String, String] = Map.empty): Set[String] = {
+    val candidates = keyCandidates(m, keys, keyCol)
+    if (candidates.isEmpty) Set.empty
+    else if (candidates.length > refineCap) candidates.toSet
+    else {
+      // the refine scan yields LEAF paths (input_file metadata); on a
+      // hive-partitioned pool the manifest names carry subdirs, so map
+      // leaves back (leaves are uuid-unique across partition subdirs).
+      // basePath keeps partition columns readable when keyCol IS one,
+      // and the castParts pin makes their type match the key frame's
+      // instead of drifting with path inference over the read set.
+      val byLeaf = candidates.map(n => leafOf(n) -> n).toMap
+      collectNames(
+        castParts(pool(candidates), partTypes)
+          .withColumn("_graft_file", input_file_name())
+          .join(keys, Seq(keyCol), "semi"),
+        "_graft_file", "findTouched")
+        .flatMap(p => byLeaf.get(leafOf(p)))
+    }
+  }
+
+  /** Data files of `m` whose footer stats admit every `(column, lo, hi)`
+    * range — the stats tier of every file-skipping read and touched-file
+    * discovery, pure driver metadata with no data I/O. A file without a
+    * bound on a column stays a candidate.
+    */
+  private def statsCandidates(m: Manifest, ranges: Seq[(String, Any, Any)]): Seq[String] = {
+    val stats = m.fileStats
+    m.dataNames.filter(n => ranges.forall { case (c, lo, hi) =>
+      stats.get(n).flatMap(_.get(c)).forall(_.overlaps(lo, hi))
+    })
+  }
+
+  /** [[statsCandidates]] for the [min, max] range of `keys` (one
+    * aggregate job); empty when `keys` has no non-null key.
+    */
+  private def keyCandidates(m: Manifest, keys: DataFrame, keyCol: String): Seq[String] = {
     val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
       org.apache.spark.sql.functions.max(keyCol)).head()
-    if (bounds.isNullAt(0)) Set.empty
+    if (bounds.isNullAt(0)) Seq.empty
+    else statsCandidates(m, Seq((keyCol, bounds.get(0), bounds.get(1))))
+  }
+
+  /** Data files of `m` holding a VISIBLE row that matches `cond` — the
+    * predicate twin of [[findTouched]] behind [[rewriteWhere]] and
+    * [[updateWhere]]: one predicate-pushed scan (parquet row-group stats
+    * prune the probe) reduced to distinct file names, metadata-scale on
+    * the driver. A file whose only matching rows are already tombstoned
+    * by `dv` is not touched. Discovery yields LEAF names (what input-file
+    * metadata exposes), which normalize to manifest names exactly (leaves
+    * are uuid-unique); castParts pins partition-column types so a
+    * predicate on a string partition column compares lexically, matching
+    * the stats tier.
+    */
+  private def touchedBy(m: Manifest, cond: org.apache.spark.sql.Column,
+      dv: Option[DataFrame], op: String): Set[String] = {
+    val names = m.dataNames
+    if (names.isEmpty) Set.empty
     else {
-      val (lo, hi) = (bounds.get(0), bounds.get(1))
-      val stats = m.fileStats
-      val candidates = m.dataNames.filter { n =>
-        stats.get(n).flatMap(_.get(keyCol)).forall(_.overlaps(lo, hi))
-      }
-      if (candidates.isEmpty) Set.empty
-      else if (candidates.length > refineCap) candidates.toSet
-      else {
-        // the refine scan yields LEAF paths (input_file metadata); on a
-        // hive-partitioned pool the manifest names carry subdirs, so map
-        // leaves back (leaves are uuid-unique across partition subdirs).
-        // basePath keeps partition columns readable when keyCol IS one,
-        // and the castParts pin makes their type match the key frame's
-        // instead of drifting with path inference over the read set.
-        val byLeaf = candidates.map(n => leafOf(n) -> n).toMap
-        collectNames(
-          castParts(pool(candidates), partTypes)
-            .withColumn("_graft_file", input_file_name())
-            .join(keys, Seq(keyCol), "semi"),
-          "_graft_file", "findTouched")
-          .flatMap(p => byLeaf.get(leafOf(p)))
-      }
+      val leaves = collectNames(
+        castParts(visibleWithPos(names, dv), partTypesOf(m)).filter(cond), DvKeys.head, op)
+      names.filter(n => leaves(leafOf(n))).toSet
     }
   }
 
@@ -3090,11 +3093,21 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val m = manifest(v)
     var bytes = 0L; var rows = 0L; var rowsKnown = m.dvs.isEmpty
     m.data.foreach { e =>
-      bytes += e.bytes.getOrElse(hfs.getFileStatus(new Path(dataDir, e.name)).getLen)
+      bytes += bytesOf(e)
       e.rows match { case Some(x) => rows += x; case None => rowsKnown = false }
     }
     (bytes, if (rowsKnown) Some(rows) else None)
   }
+
+  /** Size of a pool file: its entry's commit-time `_b` tag, or one
+    * FileStatus call for a pre-tag line.
+    */
+  private def bytesOf(e: Entry): Long =
+    e.bytes.getOrElse(hfs.getFileStatus(new Path(dataDir, e.name)).getLen)
+
+  /** Output file count of a rewrite of `bytes` at `targetFileBytes` each. */
+  private def fileCount(bytes: Long, targetFileBytes: Long): Int =
+    math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
 
   /** Exact snapshot-wide bounds of `column` from the manifest's per-file
     * footer stats, or None unless EVERY data file of version `v` carries
@@ -3137,13 +3150,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     require(ranges.nonEmpty, "readWhere: at least one (column, lo, hi) range")
     val v = committedHead()
     val m = manifest(v)   // one read serves stats, data, dv names
-    val stats = m.fileStats
     val names = m.dataNames
-    val candidates = names.filter { n =>
-      ranges.forall { case (c, lo, hi) =>
-        stats.get(n).flatMap(_.get(c)).forall(_.overlaps(lo, hi))
-      }
-    }
+    val candidates = statsCandidates(m, ranges)
     val pred = ranges.map { case (c, lo, hi) => col(c).between(lit(lo), lit(hi)) }
       .reduce(_ && _)
     if (names.isEmpty) readVersion(v)
@@ -3176,53 +3184,76 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def merge(updates0: DataFrame, keyCol: String, maxAttempts: Int = 5,
       evolve: Boolean = false): Long = {
-    // hidden-partition transforms: derive the layout columns for the
-    // incoming rows — callers hand SOURCE columns only, never `_p_*`
-    val updates = applyTransforms(updates0)
-    require(updates.select(keyCol).distinct().count() == updates.count(),
-      s"merge: duplicate keys in the updates batch")
-    var validatedCs: Map[String, String] = null
+    val updates = keyedUpdates(updates0, keyCol, "merge")
+    val gate = new ConstraintGate
     headRace("merge", "merge", maxAttempts, requireHead) { (_, head) =>
-      val partCols = head.partitionColumns
       val partTypes = partTypesOf(head)
-      val curSchema = readManifest(head).schema
-      val cols = curSchema.fieldNames.toSeq
-      val newCols = if (evolve) updates.columns.filterNot(cols.contains).toSeq
-        else Seq.empty
-      if (evolve) {
-        val missing = cols.filterNot(updates.columns.contains)
-        require(missing.isEmpty, "merge(evolve): updates must still carry " +
-          s"every existing column (missing $missing); evolution ADDS columns")
-      } else require(updates.columns.toSet == cols.toSet,
-        s"merge: updates schema ${updates.columns.toSeq} != table schema $cols")
-      val upd = alignTypes(updates, curSchema, "merge")
-      val outCols = cols ++ newCols
-      val curCs = head.checks
-      if (curCs != validatedCs) { // only the incoming rows can newly violate
-        enforceConstraints(upd, curCs, "merge"); validatedCs = curCs
-      }
-      val keys = upd.select(keyCol).distinct()
+      val b = keyedBatch(updates, head, evolve, "merge", "updates")
+      // only the incoming rows can newly violate
+      gate(head.checks)(enforceConstraints(b.rows, _, "merge"))
+      val keys = b.rows.select(keyCol).distinct()
       val touched = findTouched(head, keys, keyCol, partTypes = partTypes)
       val kept = head.filterEntries(e => e.dv || !touched(e.name))
       val merged =
-        if (touched.isEmpty) upd.select(outCols.map(col): _*)
+        if (touched.isEmpty) b.applied
         // tombstones apply BEFORE the key anti-join: a MoR-deleted row
         // must not resurrect through the rewrite; under evolution the
         // survivors pad the new columns with NULL (allowMissingColumns)
         else readFiles(touched.toSeq.sorted, dvFrameOf(head.dvNames), partTypes)
           .join(keys, Seq(keyCol), "left_anti")
-          .select(cols.map(col): _*)
-          .unionByName(upd.select(outCols.map(col): _*),
-            allowMissingColumns = true)
+          .select(b.cols.map(col): _*)
+          .unionByName(b.applied, allowMissingColumns = true)
       // A hive-partitioned head restages under its partition subdirs
       // (the #partition header rides the kept lines), so an upsert into one
       // partition rewrites only that partition's touched files and the
       // layout survives — no flatten, no full-table rewrite.
-      val newEntries =
-        if (partCols.isEmpty) stageToPool(merged, "merge")
-        else stagePartitioned(merged, partCols, "merge")
-      publishAt(evolveHeader(kept, curSchema, newCols, upd) ++ newEntries)
+      publishAt(b.evolved(kept) ++ stage(merged, head.partitionColumns, "merge"))
     }
+  }
+
+  /** `updates0` with its hidden-partition layout columns derived (callers
+    * hand SOURCE columns only, never `_p_*`), refused when a key repeats.
+    */
+  private def keyedUpdates(updates0: DataFrame, keyCol: String, op: String): DataFrame = {
+    val updates = applyTransforms(updates0)
+    require(updates.select(keyCol).distinct().count() == updates.count(),
+      s"$op: duplicate keys in the updates batch")
+    updates
+  }
+
+  /** The one prologue of the keyed writes ([[merge]], [[mergeMoR]],
+    * [[applyChangesMoR]]): check `batch` against the head it lands on.
+    * Without `evolve` it must carry exactly the table's columns; with it,
+    * it may ADD columns — the table schema widens in the same commit
+    * ([[evolveHeader]]) — but must keep every existing one. Existing
+    * columns align to the table's types ([[alignTypes]]). `noun` names
+    * the batch in the messages.
+    */
+  private def keyedBatch(batch: DataFrame, head: Manifest, evolve: Boolean,
+      op: String, noun: String): KeyedBatch = {
+    val schema = readManifest(head).schema
+    val cols = schema.fieldNames.toSeq
+    if (evolve) {
+      val missing = cols.filterNot(batch.columns.contains)
+      require(missing.isEmpty, s"$op(evolve): $noun must still carry every " +
+        s"existing column (missing $missing); evolution ADDS columns")
+    } else require(batch.columns.toSet == cols.toSet,
+      s"$op: $noun schema ${batch.columns.toSeq} != table schema $cols")
+    KeyedBatch(alignTypes(batch, schema, op), schema,
+      if (evolve) batch.columns.filterNot(cols.contains).toSeq else Seq.empty)
+  }
+
+  /** A [[keyedBatch]]: `rows` aligned to the table `schema`, and the
+    * columns the batch adds.
+    */
+  private case class KeyedBatch(rows: DataFrame,
+      schema: org.apache.spark.sql.types.StructType, newCols: Seq[String]) {
+    /** The table's columns. */
+    def cols: Seq[String] = schema.fieldNames.toSeq
+    /** The rows in output order: the table's columns, then the new ones. */
+    def applied: DataFrame = rows.select((cols ++ newCols).map(col): _*)
+    /** `m` under the widened `#schema:` header when the batch adds columns. */
+    def evolved(m: Manifest): Manifest = evolveHeader(m, schema, newCols, rows)
   }
 
   /** Copy-on-write keyed DELETE: drop every row whose `keyCol` is in
@@ -3235,7 +3266,6 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def deleteKeys(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long =
     headRace("delete", "delete", maxAttempts, requireHead) { (v, head) =>
-      val partCols = head.partitionColumns
       val partTypes = partTypesOf(head)
       val cols = readManifest(head).columns.toSeq
       val keys = keys0.select(keyCol).distinct()
@@ -3248,10 +3278,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           .join(keys, Seq(keyCol), "left_anti")
           .select(cols.map(col): _*)
         // partitioned survivors restage under their subdirs (see merge)
-        val newEntries =
-          if (partCols.isEmpty) stageToPool(survivors, "delete")
-          else stagePartitioned(survivors, partCols, "delete")
-        publishAt(kept ++ newEntries)
+        publishAt(kept ++ stage(survivors, head.partitionColumns, "delete"))
       }
     }
 
@@ -3271,45 +3298,29 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     import org.apache.spark.sql.functions.coalesce
     headRace("rewriteWhere", op, maxAttempts, requireHead) { (v, head) =>
       val partCols = head.partitionColumns
-      val partTypes = partTypesOf(head)
-      val names = head.dataNames
       val dv = dvFrameOf(head.dvNames)
-      // discovery runs over the VISIBLE snapshot: a file whose only
-      // matching rows are already tombstoned is not touched (no rewrite).
-      // Discovery yields LEAF names (what input-file metadata exposes);
-      // they normalize to manifest names, exactly (leaves are uuid-unique).
-      // castParts pins partition-column types so a predicate on a string
-      // partition column compares lexically, matching the stats tier.
-      val touchedLeaves: Set[String] =
-        if (names.isEmpty) Set.empty
-        else collectNames(
-          castParts(visibleWithPos(names, dv), partTypes)
-            .filter(cond),
-          DvKeys.head, "rewriteWhere")
-      val touched = names.filter(n => touchedLeaves(leafOf(n))).toSet
+      val touched = touchedBy(head, cond, dv, "rewriteWhere")
       if (touched.isEmpty && extra.isEmpty) Settle(v)
       else {
         val kept = head.filterEntries(e => e.dv || !touched(e.name))
         // partitioned snapshots restage survivors and extras UNDER their
         // `c=v` subdirs — predicate CoW keeps the layout like merge does
-        def stage(df: DataFrame): Seq[Entry] =
-          if (partCols.isEmpty) stageToPool(df, "rewriteWhere")
-          else stagePartitioned(df, partCols, "rewriteWhere")
         val survivorEntries =
           if (touched.isEmpty) Seq.empty
           else {
             val cols = readManifest(head).columns.toSeq
-            val survivors = readFiles(touched.toSeq.sorted, dv, partTypes)
+            val survivors = readFiles(touched.toSeq.sorted, dv, partTypesOf(head))
               // SQL DELETE semantics: rows where the predicate is NULL survive
               .filter(!coalesce(cond, lit(false)))
               .select(cols.map(col): _*)
-            stage(survivors)
+            stage(survivors, partCols, "rewriteWhere")
           }
         // survivors cannot newly violate; only the injected rows can
         extra.foreach(enforceConstraints(_, head.checks, "rewriteWhere"))
         // injected rows on a transform-partitioned table carry SOURCE
         // columns only — derive their layout columns before staging
-        val extraEntries = extra.map(e => stage(applyTransforms(e))).getOrElse(Seq.empty)
+        val extraEntries = extra.map(e => stage(applyTransforms(e), partCols, "rewriteWhere"))
+          .getOrElse(Seq.empty)
         publishAt(kept ++ survivorEntries ++ extraEntries)
       }
     }
@@ -3341,19 +3352,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.{coalesce, when}
     headRace("updateWhere", "update", maxAttempts, requireHead) { (v, head) =>
-      val partCols = head.partitionColumns
-      val partTypes = partTypesOf(head)
-      val names = head.dataNames
       val dv = dvFrameOf(head.dvNames)
-      // discovery over the VISIBLE snapshot, as in rewriteWhere: a file
-      // whose only matching rows are tombstoned is not rewritten.
-      val touchedLeaves: Set[String] =
-        if (names.isEmpty) Set.empty
-        else collectNames(
-          castParts(visibleWithPos(names, dv), partTypes)
-            .filter(cond),
-          DvKeys.head, "updateWhere")
-      val touched = names.filter(n => touchedLeaves(leafOf(n))).toSet
+      val touched = touchedBy(head, cond, dv, "updateWhere")
       if (touched.isEmpty) Settle(v)
       else {
         val kept = head.filterEntries(e => e.dv || !touched(e.name))
@@ -3362,7 +3362,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         val setMap = sets.toMap
         // one pass over touched files: every column's new value is chosen
         // against the pre-update row, so SET a=b, b=a swaps correctly
-        val rewritten = readFiles(touched.toSeq.sorted, dv, partTypes)
+        val rewritten = readFiles(touched.toSeq.sorted, dv, partTypesOf(head))
           .select(cols.map { c =>
             setMap.get(c) match {
               case Some(e) => when(matched, e).otherwise(col(c)).as(c)
@@ -3376,10 +3376,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // a SET on a hidden-partition transform's SOURCE column must
         // re-derive the layout column, or the row stays filed under its
         // old partition and pruning silently goes wrong
-        val relaid = applyTransforms(rewritten)
-        publishAt(kept ++ (
-          if (partCols.isEmpty) stageToPool(relaid, "updateWhere")
-          else stagePartitioned(relaid, partCols, "updateWhere")))
+        publishAt(kept ++ stage(applyTransforms(rewritten), head.partitionColumns,
+          "updateWhere"))
       }
     }
   }
@@ -3430,10 +3428,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             f.condition.deterministic
         }.forall(identity)
         val matched = if (condDeterministic) matched0 else matched0.localCheckpoint()
-        val dvStaged = stageToPool(matched.select(DvKeys.map(col): _*), "updateWhereMoR")
+        val dvStaged = stage(matched.select(DvKeys.map(col): _*), Nil, "updateWhereMoR")
         if (dvStaged.isEmpty) Settle(v)
         else {
-          val partCols = head.partitionColumns
           val cols = readManifest(head).columns.toSeq
           val setMap = sets.toMap
           val updated = matched.select(cols.map { c =>
@@ -3443,10 +3440,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             }
           }: _*)
           enforceConstraints(updated, head.checks, "updateWhereMoR")
-          val relaid = applyTransforms(updated)
-          val dataStaged =
-            if (partCols.isEmpty) stageToPool(relaid, "updateWhereMoR")
-            else stagePartitioned(relaid, partCols, "updateWhereMoR")
+          val dataStaged = stage(applyTransforms(updated), head.partitionColumns,
+            "updateWhereMoR")
           publishAt(head ++ dataStaged ++ dvStaged.map(_.asDv))
         }
       }
@@ -3476,8 +3471,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         if (names.isEmpty) Seq.empty
         else {
           val visible = visibleWithPos(names, dvFrameOf(head.dvNames))
-          stageToPool(visible.filter(coalesce(cond, lit(false)))
-            .select(DvKeys.map(col): _*), "deleteWhereMoR")
+          stage(visible.filter(coalesce(cond, lit(false)))
+            .select(DvKeys.map(col): _*), Nil, "deleteWhereMoR")
         }
       if (staged.isEmpty) Settle(v) else publishAt(head ++ staged.map(_.asDv))
     }
@@ -3503,22 +3498,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   private def keyTombstones(m: Manifest, keys: DataFrame, keyCol: String,
       op: String): Seq[Entry] = {
-    val names = m.dataNames
-    if (names.isEmpty) return Seq.empty
-    val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
-      org.apache.spark.sql.functions.max(keyCol)).head()
-    val stats = m.fileStats
-    val candidates =
-      if (bounds.isNullAt(0)) Seq.empty[String]
-      else names.filter { n =>
-        stats.get(n).flatMap(_.get(keyCol))
-          .forall(_.overlaps(bounds.get(0), bounds.get(1)))
-      }
+    if (m.data.isEmpty) return Seq.empty
+    val candidates = keyCandidates(m, keys, keyCol)
     if (candidates.isEmpty) Seq.empty
     else {
       val visible = visibleWithPos(candidates, dvFrameOf(m.dvNames))
-      stageToPool(visible.join(keys, Seq(keyCol), "semi")
-        .select(DvKeys.map(col): _*), op).map(_.asDv)
+      stage(visible.join(keys, Seq(keyCol), "semi")
+        .select(DvKeys.map(col): _*), Nil, op).map(_.asDv)
     }
   }
 
@@ -3547,41 +3533,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def mergeMoR(updates0: DataFrame, keyCol: String, maxAttempts: Int = 5,
       evolve: Boolean = false): Long = {
-    val updates = applyTransforms(updates0)
-    require(updates.select(keyCol).distinct().count() == updates.count(),
-      s"mergeMoR: duplicate keys in the updates batch")
-    var validatedCs: Map[String, String] = null
+    val updates = keyedUpdates(updates0, keyCol, "mergeMoR")
+    val gate = new ConstraintGate
     headRace("mergeMoR", "merge_mor", maxAttempts, requireHead) { (v, head) =>
-      val partCols = head.partitionColumns
-      val curSchema = readManifest(head).schema
-      val cols = curSchema.fieldNames.toSeq
-      // schema evolution mirrors [[merge]]: with evolve=true the batch
-      // may add new columns — appended rows carry them, existing files
-      // stay untouched and read the new columns as NULL (mergeSchema)
-      val newCols = if (evolve) updates.columns.filterNot(cols.contains).toSeq
-        else Seq.empty
-      if (evolve) {
-        val missing = cols.filterNot(updates.columns.contains)
-        require(missing.isEmpty, "mergeMoR(evolve): updates must still " +
-          s"carry every existing column (missing $missing); evolution ADDS columns")
-      } else require(updates.columns.toSet == cols.toSet,
-        s"mergeMoR: updates schema ${updates.columns.toSeq} != table schema $cols")
-      val upd = alignTypes(updates, curSchema, "mergeMoR")
-      val outCols = cols ++ newCols
-      val curCs = head.checks
-      if (curCs != validatedCs) { // only the incoming rows can newly violate
-        enforceConstraints(upd, curCs, "mergeMoR"); validatedCs = curCs
-      }
+      // schema evolution mirrors [[merge]]: appended rows carry the new
+      // columns, existing files stay untouched and read them as NULL
+      val b = keyedBatch(updates, head, evolve, "mergeMoR", "updates")
+      gate(head.checks)(enforceConstraints(b.rows, _, "mergeMoR"))
       // tombstone the old positions of matched keys
       val dvStaged =
-        keyTombstones(head, upd.select(keyCol).distinct(), keyCol, "mergeMoR")
-      val applied = upd.select(outCols.map(col): _*)
-      val dataStaged =
-        if (partCols.isEmpty) stageToPool(applied, "mergeMoR")
-        else stagePartitioned(applied, partCols, "mergeMoR")
+        keyTombstones(head, b.rows.select(keyCol).distinct(), keyCol, "mergeMoR")
+      val dataStaged = stage(b.applied, head.partitionColumns, "mergeMoR")
       if (dvStaged.isEmpty && dataStaged.isEmpty) Settle(v)
-      else publishAt(evolveHeader(head, curSchema, newCols, upd) ++
-        dataStaged ++ dvStaged)
+      else publishAt(b.evolved(head) ++ dataStaged ++ dvStaged)
     }
   }
 
@@ -3616,43 +3580,21 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       keyCol: String, txn: Option[String] = None,
       maxAttempts: Int = 5, evolve: Boolean = false): Long = {
     val inserts = applyTransforms(inserts0)
-    var validatedCs: Map[String, String] = null
+    val gate = new ConstraintGate
     headRace("applyChangesMoR", "cdc_apply", maxAttempts, requireHead) { (v, head) =>
       if (txn.exists(head.hasTxn)) Settle(v)
       else {
-        val partCols = head.partitionColumns
-        val curSchema = readManifest(head).schema
-        val cols = curSchema.fieldNames.toSeq
-        // schema evolution mirrors [[mergeMoR]]: with evolve=true the batch
-        // may add new columns — a CDC replica must track its source through
-        // the source's own evolving merges ([[graft.stream.Replicate]])
-        val newCols = if (evolve) inserts.columns.filterNot(cols.contains).toSeq
-          else Seq.empty
-        if (evolve) {
-          val missing = cols.filterNot(inserts.columns.contains)
-          require(missing.isEmpty, "applyChangesMoR(evolve): inserts must " +
-            s"still carry every existing column (missing $missing); " +
-            "evolution ADDS columns")
-        } else require(inserts.columns.toSet == cols.toSet,
-          s"applyChangesMoR: inserts schema ${inserts.columns.toSeq} != " +
-            s"table schema $cols")
-        val ins = alignTypes(inserts, curSchema, "applyChangesMoR")
-        val outCols = cols ++ newCols
-        val curCs = head.checks
-        if (curCs != validatedCs) { // only the incoming rows can newly violate
-          enforceConstraints(ins, curCs, "applyChangesMoR"); validatedCs = curCs
-        }
+        // schema evolution mirrors [[mergeMoR]]: a CDC replica must track its
+        // source through the source's own evolving merges ([[graft.stream.Replicate]])
+        val b = keyedBatch(inserts, head, evolve, "applyChangesMoR", "inserts")
+        gate(head.checks)(enforceConstraints(b.rows, _, "applyChangesMoR"))
         val dvStaged = keyTombstones(head, deleteKeys0.select(keyCol).distinct(),
           keyCol, "applyChangesMoR")
-        val applied = ins.select(outCols.map(col): _*)
-        val dataStaged =
-          if (partCols.isEmpty) stageToPool(applied, "applyChangesMoR")
-          else stagePartitioned(applied, partCols, "applyChangesMoR")
+        val dataStaged = stage(b.applied, head.partitionColumns, "applyChangesMoR")
         // an empty change set without a txn id is a true no-op; WITH one,
         // the id must still land (skip-on-redelivery has no other memory)
         if (dvStaged.isEmpty && dataStaged.isEmpty && txn.isEmpty) Settle(v)
-        else publishAt(evolveHeader(head, curSchema, newCols, ins) ++
-          txn.map(Header.txn) ++ dataStaged ++ dvStaged)
+        else publishAt(b.evolved(head) ++ txn.map(Header.txn) ++ dataStaged ++ dvStaged)
       }
     }
   }
@@ -3677,20 +3619,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // stale tombstones may name files a later op already removed;
         // tombstones carry LEAF names, manifests may carry partition subdirs
         val touched = head.dataNames.filter(n => targets(leafOf(n))).toSet
-        val partCols = head.partitionColumns
         val kept = head.filterEntries(e => !e.dv && !touched(e.name))
         // a partitioned table's survivors restage UNDER their partition
         // subdirs (basePath read keeps the columns; partitionBy re-lays
-        // them out) so the fold never flattens the layout
+        // them out) so the fold never flattens the layout. The
+        // schema-typed partition cast matters doubly here: the fold
+        // REWRITES survivors, so an inference-drifted type would bake the
+        // wrong column type back into the pool files
         val survivorEntries =
           if (touched.isEmpty) Seq.empty
-          else if (partCols.nonEmpty)
-            // schema-typed partition cast matters doubly here: the fold
-            // REWRITES survivors, so an inference-drifted type would bake
-            // the wrong column type back into the pool files
-            stagePartitioned(readFiles(touched.toSeq.sorted, Some(dv),
-              partTypesOf(head)), partCols, "rewriteDeletes")
-          else stageToPool(readFiles(touched.toSeq.sorted, Some(dv)), "rewriteDeletes")
+          else stage(readFiles(touched.toSeq.sorted, Some(dv), partTypesOf(head)),
+            head.partitionColumns, "rewriteDeletes")
         Publish(kept ++ survivorEntries, _ => (dvN.length, touched.size))
       }
     }
@@ -3750,15 +3689,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         val survivorEntries =
           if (straddle.isEmpty) Seq.empty
           else {
-            val partCols = head.partitionColumns
             val cols = readManifest(head).columns.toSeq
             val survivors = readFiles(straddle.sorted, dvFrameOf(head.dvNames),
                 partTypesOf(head))
               // NULL retention column survives (SQL DELETE semantics)
               .filter(!coalesce(col(column) < lit(cutoff), lit(false)))
               .select(cols.map(col): _*)
-            if (partCols.isEmpty) stageToPool(survivors, "expire")
-            else stagePartitioned(survivors, partCols, "expire")
+            stage(survivors, head.partitionColumns, "expire")
           }
         Publish(kept ++ survivorEntries, _ => (dead.size, straddle.size))
       }
@@ -3824,27 +3761,28 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def optimizeBy(column: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val v = committedHead()
-    val names = files(v)
-    val partCols = partitionColumns(v)
+    val m = manifest(v)
+    val partCols = m.partitionColumns
     require(!partCols.contains(column),
       s"optimizeBy: $column is a partition column — constant within every " +
         "c=v dir, clustering on it is a no-op")
-    val bytes = names.map(n => hfs.getFileStatus(new Path(dataDir, n)).getLen).sum
-    val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+    val nOut = fileCount(m.data.map(bytesOf).sum, targetFileBytes)
     val keys = partCols.map(col) :+ col(column)
     // on a partitioned table the cluster keys LEAD with the partition
     // columns: each shuffle range then holds one partition's value slab,
     // and the hive re-stage keeps the c=v layout — partition-local
     // clustering, never a flat rewrite
-    val clustered = readVersion(v)
-      .repartitionByRange(nOut, keys: _*)
-      .sortWithinPartitions(keys: _*)
-    if (partCols.isEmpty)
-      commit(clustered, replace = true, None, Some(Manifest.Op -> "optimize"))
-    else commitPartitioned(clustered, partCols, replace = true,
-      op = Some("optimize"))
-    (names.length, currentFileCount)
+    replaceAs(readVersion(v).repartitionByRange(nOut, keys: _*)
+      .sortWithinPartitions(keys: _*), partCols, "optimize")
+    (m.data.length, currentFileCount)
   }
+
+  /** Replace the table's content with `df` under the `partCols` layout,
+    * stamped `op` — the publish of the whole-table maintenance rewrites.
+    */
+  private def replaceAs(df: DataFrame, partCols: Seq[String], op: String): Long =
+    if (partCols.isEmpty) commit(df, replace = true, None, Some(Manifest.Op -> op))
+    else commitPartitioned(df, partCols, replace = true, op = Some(op))
 
   /** Z-order cluster the head snapshot on `columns` (the multi-dimension
     * OPTIMIZE ZORDER maintenance op): rows are range-partitioned and
@@ -3885,13 +3823,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         (quantileBuckets & (quantileBuckets - 1)) == 0),
       s"quantileBuckets must be 0 (linear) or a power of two in [2, 65536], got $quantileBuckets")
     val v = committedHead()
-    val partCols = partitionColumns(v)
+    val m = manifest(v)
+    val partCols = m.partitionColumns
     require(!columns.exists(partCols.contains),
       s"optimizeZOrder: ${columns.filter(partCols.contains)} are partition " +
         "columns — constant within every c=v dir, z-ordering them is a no-op")
-    val names = files(v)
-    val bytes = names.map(n => hfs.getFileStatus(new Path(dataDir, n)).getLen).sum
-    val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+    val nOut = fileCount(m.data.map(bytesOf).sum, targetFileBytes)
     val snap = readVersion(v)
     val k = columns.size
     val (scaled, bits) =
@@ -3950,15 +3887,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // pruning on the partition column and on the z-ordered dimensions
     // compose instead of one destroying the other
     val keys = partCols.map(col) :+ col("_graft_z")
-    val clustered = snap.withColumn("_graft_z", zval)
+    replaceAs(snap.withColumn("_graft_z", zval)
       .repartitionByRange(nOut, keys: _*)
       .sortWithinPartitions(keys: _*)
-      .drop("_graft_z")
-    if (partCols.isEmpty)
-      commit(clustered, replace = true, None, Some(Manifest.Op -> "optimize"))
-    else commitPartitioned(clustered, partCols, replace = true,
-      op = Some("optimize"))
-    (names.length, currentFileCount)
+      .drop("_graft_z"), partCols, "optimize")
+    (m.data.length, currentFileCount)
   }
 
   /** Change data feed between two committed versions (`fromV` exclusive,
@@ -4615,16 +4548,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     require(preds.nonEmpty, "readEquals: at least one (column, value)")
     val v = committedHead()
     val m = manifest(v)
-    val stats = m.fileStats
     val names = m.dataNames
     val rowPred = preds.map { case (c, x) => col(s"`$c`") === lit(x) }
       .reduce(_ && _)
     if (names.isEmpty) return readVersion(v)
-    var candidates = names.filter { n =>
-      preds.forall { case (c, x) =>
-        stats.get(n).flatMap(_.get(c)).forall(_.overlaps(x, x))
-      }
-    }
+    var candidates = statsCandidates(m, preds.map { case (c, x) => (c, x, x) })
     preds.foreach { case (c, x) =>
       if (candidates.nonEmpty) bloomIndexFor(c).foreach { case (_, ddl, _, dir) =>
         try {
@@ -4717,18 +4645,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val partCols = head.partitionColumns
       if (head.dvs.nonEmpty) {
         // tombstoned snapshot: full rewrite, which also folds the DVs
-        if (partCols.nonEmpty)
-          commitPartitioned(readManifest(head), partCols, replace = true,
-            op = Some("compact"))
-        else {
-          val bytes = names.map(n => hfs.getFileStatus(new Path(dataDir, n)).getLen).sum
-          val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-          commit(readManifest(head).coalesce(nOut), replace = true, None,
-            Some(Manifest.Op -> "compact"))
-        }
+        val all = readManifest(head)
+        replaceAs(if (partCols.nonEmpty) all
+          else all.coalesce(fileCount(head.data.map(bytesOf).sum, targetFileBytes)),
+          partCols, "compact")
         Settle((names.length, currentFileCount))
       } else {
-        val sized = names.map(n => (n, hfs.getFileStatus(new Path(dataDir, n)).getLen))
+        val sized = head.data.map(e => (e.name, bytesOf(e)))
         val candidates = sized.collect {
           case (n, b) if b < targetFileBytes || Manifest.isAbsoluteName(n) => n
         }
@@ -4744,27 +4667,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         if (pack.isEmpty) Settle((names.length, names.length))
         else {
           val packSet = pack.toSet
-          val packBytes = sized.collect { case (n, b) if packSet(n) => b }.sum
-          val nOut = math.max(1, math.ceil(packBytes.toDouble / targetFileBytes).toInt)
+          val nOut = fileCount(sized.collect { case (n, b) if packSet(n) => b }.sum,
+            targetFileBytes)
           val kept = head.filterEntries(e => e.dv || !packSet(e.name))
           // declared clustering: the pack rewrite is the convergence point —
           // files written before the declaration (or restaged by CoW ops)
           // come out range-clustered here
-          val hasCluster = head.clustering.nonEmpty
-          val newEntries =
-            if (partCols.isEmpty) {
-              val packed = readFiles(pack.sorted, None)
-              stageToPool(
-                if (hasCluster) clustered(packed, numParts = Some(nOut))
-                else packed.coalesce(nOut), "compact")
-            } else {
-              val packed = readFiles(pack.sorted, None, partTypesOf(head))
-              stagePartitioned(
-                if (hasCluster) clustered(packed, partCols, Some(nOut))
-                else packed.repartition(nOut, partCols.map(col): _*),
-                partCols, "compact")
-            }
-          Publish(kept ++ newEntries, _ => (names.length, currentFileCount))
+          val packed = readFiles(pack.sorted, None, partTypesOf(head))
+          val laidOut =
+            if (head.clustering.nonEmpty) clustered(packed, partCols, Some(nOut))
+            else if (partCols.isEmpty) packed.coalesce(nOut)
+            else packed.repartition(nOut, partCols.map(col): _*)
+          Publish(kept ++ stage(laidOut, partCols, "compact"),
+            _ => (names.length, currentFileCount))
         }
       }
     }

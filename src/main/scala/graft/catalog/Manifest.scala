@@ -148,10 +148,13 @@ private[catalog] object Manifest {
   val Lineage: Set[String] = Set(Txn, Gen)
   /** Carried by replaces, forked by clones, reverted by restore. */
   val Contracts: Set[String] = Set(Check, Cluster, Ttl, Schema, Ptspec)
-  /** A replica's sync cursor: replaced by each sync, shed by promotion. */
+  /** A replica's sync cursor: replaced by each sync, shed by promotion; a
+    * restore takes the target's only onto a head that carries one.
+    */
   val Sync: Set[String] = Set(RepSrc, RepMap, RepRoot)
   /** Describes one version: replaces and clones drop it, appends keep the
-    * head's, restore takes the target's.
+    * head's, restore takes the target's (its [[Sync]] cursor only while the
+    * head is a replica).
     */
   val PerCommit: Set[String] = Set(Op, Clone, XTxn, Partition) ++ Sync
 

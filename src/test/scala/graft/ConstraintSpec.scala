@@ -281,9 +281,7 @@ class ConstraintSpec extends AnyFunSuite {
       val racer = new CommitLog(spark, root) {
         private var fired = false
         override protected def beforePublish(attempt: Int, v: Long): Unit =
-          if (attempt == 0 && !fired) {
-            fired = true; plain.addConstraint("qty_pos", "qty > 0"): Unit
-          }
+          if (!fired) { fired = true; plain.addConstraint("qty_pos", "qty > 0"): Unit }
       }
       val ex = intercept[IllegalStateException](run(racer))
       assert(ex.getMessage.contains(s"$op: CHECK constraint violation"),
