@@ -192,6 +192,77 @@ class MergeEvolveSpec extends AnyFunSuite {
     assert(log.read().columns.sorted.toSeq == Seq("k", "p", "score", "v"))
   }
 
+  /** [[seeded]], then an evolving merge of one NEW key that adds column
+    * `w`: the third file is the only one holding `w`, so a copy-on-write
+    * rewrite of either seeded file touches only files that predate it.
+    */
+  private def evolvedPast(root: String): CommitLog = {
+    val log = seeded(root)
+    log.merge(Seq((201L, 2010L, "n")).toDF("k", "v", "w").coalesce(1), "k",
+      evolve = true)
+    assert(log.files(3L).length == 3)
+    log
+  }
+
+  private def kvw(log: CommitLog): Map[Long, (Long, Option[String])] =
+    log.read().select("k", "v", "w").as[(Long, Long, Option[String])]
+      .collect().map { case (k, v, w) => k -> ((v, w)) }.toMap
+
+  test("CoW rewrite after evolution: merge of an old key pads the new column") {
+    val log = evolvedPast(freshRoot())
+    log.merge(Seq((50L, 555L, "a")).toDF("k", "v", "w"), "k")
+    val rows = kvw(log)
+    assert(rows(50L) == ((555L, Some("a"))))
+    assert(rows(51L) == ((510L, None)), "rewritten survivor must read w as NULL")
+    assert(rows(201L) == ((2010L, Some("n"))))
+    assert(rows.size == 201)
+  }
+
+  test("CoW rewrite after evolution: deleteKeys of an old key") {
+    val log = evolvedPast(freshRoot())
+    log.deleteKeys(Seq(50L).toDF("k"), "k")
+    val rows = kvw(log)
+    assert(!rows.contains(50L))
+    assert(rows(51L) == ((510L, None)))
+    assert(rows(201L) == ((2010L, Some("n"))))
+    assert(rows.size == 200)
+  }
+
+  test("CoW rewrite after evolution: deleteWhere and rewriteWhere with extra rows") {
+    val log = evolvedPast(freshRoot())
+    log.deleteWhere(col("k") === 50L)
+    log.rewriteWhere(col("k") === 150L,
+      Some(Seq((150L, 1L, "r")).toDF("k", "v", "w")))
+    val rows = kvw(log)
+    assert(!rows.contains(50L))
+    assert(rows(150L) == ((1L, Some("r"))))
+    assert(rows(51L) == ((510L, None)))
+    assert(rows(151L) == ((1510L, None)))
+    assert(rows.size == 200)
+  }
+
+  test("CoW rewrite after evolution: updateWhere of an old key") {
+    val log = evolvedPast(freshRoot())
+    log.updateWhere(col("k") === 50L, Seq("v" -> lit(0L)))
+    val rows = kvw(log)
+    assert(rows(50L) == ((0L, None)))
+    assert(rows(51L) == ((510L, None)))
+    assert(rows.size == 201)
+  }
+
+  test("CoW rewrite after evolution: enforceTtl rewrites a straddler that predates the column") {
+    val log = seeded(freshRoot())
+    log.mergeMoR(Seq((201L, 2010L, "n")).toDF("k", "v", "w"), "k", evolve = true)
+    // `k` read as epoch millis: cutoff 1050 - 1000 = 50 straddles file 1
+    log.setTtl("k", 1000L)
+    assert(log.enforceTtl(1050L) == ((0, 1)))
+    val rows = kvw(log)
+    assert(rows.keySet.min == 50L)
+    assert(rows(50L) == ((500L, None)))
+    assert(rows(201L) == ((2010L, Some("n"))))
+    assert(rows.size == 152)
+  }
+
   test("transform replace: the hidden _p_ layout columns never count as drift") {
     val root = freshRoot()
     val log = new CommitLog(spark, root)
