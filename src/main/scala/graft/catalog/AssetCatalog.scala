@@ -61,8 +61,6 @@ class AssetCatalog(spark: SparkSession, root: String) {
     */
   def readTable(table: String): DataFrame = log(table).read()
 
-  private def exists(table: String): Boolean = log(table).exists
-
   /** R1/R5: validated append. Fails fast on duplicate key — the
     * analysis-time validation posture of the reference's gateway
     * validator (swagger:268-271).
@@ -71,19 +69,19 @@ class AssetCatalog(spark: SparkSession, root: String) {
       rows: Dataset[T]): Unit =
     log(table).commit(validatedNew(table, keyCol, rows), replace = false): Unit
 
-  /** `rows` as a frame, once no key repeats within it or already exists
-    * in `table`.
+  /** `rows` evaluated once ([[CommitLog.evaluated]]), once no key
+    * repeats within it or already exists in `table`. The repeat check
+    * reads the batch's keys on the driver; the existence check probes
+    * only the files whose key bounds admit the batch's
+    * ([[CommitLog.holdsAnyKey]]), so a fresh id above every stored key
+    * costs no Spark job.
     */
   private def validatedNew[T](table: String, keyCol: String,
       rows: Dataset[T]): DataFrame = {
-    val batch = rows.toDF()
-    require(batch.select(keyCol).distinct().count() == batch.count(),
-      s"create: duplicate keys within the batch for $table")
-    if (exists(table)) {
-      val dup = readTable(table).select(keyCol)
-        .join(batch.select(keyCol), Seq(keyCol), "inner").limit(1).count()
-      require(dup == 0, s"create: key already exists in $table")
-    }
+    val batch = CommitLog.evaluated(rows.toDF())
+    val keys = CommitLog.keysOf(batch, keyCol)
+    require(!keys.duplicated, s"create: duplicate keys within the batch for $table")
+    require(!log(table).holdsAnyKey(keys, keyCol), s"create: key already exists in $table")
     batch
   }
 
@@ -117,19 +115,27 @@ class AssetCatalog(spark: SparkSession, root: String) {
     * of the whole table. The projection reads the old snapshot's
     * immutable pool files while the new version stages, so the rewrite
     * can never consume itself.
+    *
+    * Both batches are evaluated once ([[CommitLog.evaluated]]): `updates`
+    * before the duplicate check, which then reads its keys on the driver,
+    * and the joined replacement rows before the merge, whose checks,
+    * probe and stage write read them instead of re-running the join. The
+    * duplicate check stays here: the inner join would drop a repeated
+    * UNKNOWN key before the merge's own check could see it.
     */
   def update(table: String, keyCol: String, updates: DataFrame): Unit = {
-    require(updates.select(keyCol).distinct().count() == updates.count(),
+    val batch = CommitLog.evaluated(updates)
+    require(!CommitLog.keysOf(batch, keyCol).duplicated,
       s"update: duplicate keys in the updates batch for $table")
     val cur = readTable(table)
-    val upd = updates.columns.filterNot(_ == keyCol)
-    val matchedNew = cur.as("c").join(updates.as("u"), Seq(keyCol), "inner")
+    val upd = batch.columns.filterNot(_ == keyCol)
+    val matchedNew = cur.as("c").join(batch.as("u"), Seq(keyCol), "inner")
       .select(cur.columns.map { c =>
         if (c == keyCol) col(keyCol)
         else if (upd.contains(c)) col(s"u.$c").as(c)
         else col(s"c.$c").as(c)
       }: _*)
-    log(table).merge(matchedNew, keyCol): Unit
+    log(table).merge(CommitLog.evaluated(matchedNew), keyCol): Unit
   }
 
   /** R4: keyed delete — copy-on-write [[CommitLog.deleteKeys]]: only the

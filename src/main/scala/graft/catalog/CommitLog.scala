@@ -8,7 +8,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{col, input_file_name, lit}
 
 /** Per-file min/max of one column, harvested from the parquet footer at
@@ -221,6 +222,79 @@ object CommitLog {
       }
   }
 
+  /** Rows a write batch may hold on the driver ([[evaluated]]). */
+  private[catalog] val BatchRowCap: Int = 10000
+
+  /** `df`'s rows when it plans as a LocalRelation, whose collect runs no
+    * Spark job; None for any other plan.
+    */
+  private[catalog] def localRows(df: DataFrame): Option[Array[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(df.collect())
+      case _                => None
+    }
+
+  /** A write batch evaluated once, so the checks, probes and stage write
+    * that follow read its rows instead of re-running its plan. Up to
+    * [[BatchRowCap]] rows are collected (one job; none when `df` already
+    * plans as a LocalRelation) and come back as a LocalRelation; a larger
+    * batch is local-checkpointed on the executors.
+    */
+  private[catalog] def evaluated(df: DataFrame): DataFrame =
+    if (isLocal(df)) df
+    else {
+      val rows = df.limit(BatchRowCap + 1).collect()
+      if (rows.length <= BatchRowCap) df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
+      else df.localCheckpoint()
+    }
+
+  /** Whether `df` plans as a LocalRelation: its rows are on the driver. */
+  private[catalog] def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** The keys of a write batch: `frame` holds each key once, `duplicated`
+    * says whether a key repeats in the batch (NULL counts as one key, as
+    * in `distinct`), and `bounds` is the (min, max) of its non-null keys,
+    * None when it has none.
+    */
+  private[catalog] final case class BatchKeys(frame: DataFrame, duplicated: Boolean,
+      bounds: Option[(Any, Any)])
+
+  /** [[BatchKeys]] of `batch`'s `keyCol`. A driver-held batch
+    * ([[localRows]]) answers on the driver with no job; any other batch,
+    * or keys with no exact driver order or equality (floating point,
+    * binary, nested), pays one fused aggregate: count, count(distinct),
+    * min and max.
+    */
+  private[catalog] def keysOf(batch: DataFrame, keyCol: String): BatchKeys = {
+    import org.apache.spark.sql.functions.{count, count_distinct, max, min}
+    val keys = batch.select(keyCol)
+    val onDriver = localRows(keys).filter(_.forall(r => r.isNullAt(0) || (r.get(0) match {
+      case _: java.lang.Double | _: java.lang.Float => false
+      case _: Comparable[_] => true
+      case _ => false
+    })))
+    onDriver match {
+      case Some(rows) =>
+        val distinct = rows.distinct
+        val present = distinct.iterator.filterNot(_.isNullAt(0))
+          .map(_.get(0).asInstanceOf[Comparable[Any]]).toSeq
+        val order = Ordering.fromLessThan[Comparable[Any]](_.compareTo(_) < 0)
+        BatchKeys(
+          if (distinct.length == rows.length) keys
+          else batch.sparkSession.createDataFrame(distinct.toSeq.asJava, keys.schema),
+          distinct.length < rows.length,
+          if (present.isEmpty) None else Some((present.min(order), present.max(order))))
+      case None =>
+        val k = col(keyCol)
+        val a = keys.agg(count(lit(1)), count_distinct(k), count(k), min(k), max(k)).head()
+        val n = a.getLong(0)
+        val duplicated = a.getLong(1) + (if (a.getLong(2) < n) 1 else 0) < n
+        BatchKeys(if (duplicated) keys.distinct() else keys, duplicated,
+          if (a.isNullAt(3)) None else Some((a.get(3), a.get(4))))
+    }
+  }
+
   /** What one attempt of [[CommitLog.headRace]] decided: end the race
     * with `result` and publish nothing, or publish `manifest` at head+1
     * and, once it wins, return `onWin(head+1)`.
@@ -429,7 +503,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   private[graft] def publishPending(df: DataFrame, id: String,
       decisionUri: String, replace: Boolean, maxAttempts: Int = 50): Long = {
-    enforceConstraints(df, checkConstraints, "xtxn")
+    val pre = headNow
+    enforceConstraints(df, pre.checks, "xtxn", schemaOf(pre))
     val newEntries = stage(df, Nil, "xtxn")
     headRace("publishPending", "xtxn", maxAttempts) { (_, prev) =>
       if (!replace) requireUnpartitioned("publishPending(append)", prev)
@@ -819,24 +894,25 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * aggregate pass counts violations for EVERY constraint (the error
     * names them all, not just the first); the 3-row sample is gathered
     * only on the failure path. Columns the batch lacks (schema-evolution
-    * appends) are padded as typed NULLs from the head schema before
-    * evaluation — NULL passes, matching what the padded rows will read
-    * back as. O(batch), never O(table), and zero cost when the table
-    * declares no constraints.
+    * appends) are padded as typed NULLs from `headSchema`, the schema of
+    * the head the write is checked against — NULL passes, matching what
+    * the padded rows will read back as. `headSchema` is evaluated only
+    * when `cs` is non-empty. O(batch), never O(table), and zero cost when
+    * the table declares no constraints.
     */
   private def enforceConstraints(df: DataFrame, cs: Map[String, String],
-      op: String): Unit = {
+      op: String, headSchema: => org.apache.spark.sql.types.StructType): Unit = {
     if (cs.isEmpty) return
     import org.apache.spark.sql.functions.{sum, when}
     val have = df.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    val padded = currentVersion.map(readVersion(_).schema.fields.toSeq)
-      .getOrElse(Seq.empty)
+    val padded = headSchema.fields.toSeq
       .filterNot(f => have(f.name.toLowerCase(java.util.Locale.ROOT)))
       .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
     val named = cs.toSeq.sortBy(_._1)
+    // a driver-held batch aggregates as one part: one job, no exchange
     val aggs = named.map { case (_, e) =>
       sum(when(violates(e), 1L).otherwise(0L)) }
-    val counts = padded.agg(aggs.head, aggs.tail: _*).head()
+    val counts = onePart(padded).agg(aggs.head, aggs.tail: _*).head()
     val broken = named.zipWithIndex.collect {
       case ((n, e), i) if !counts.isNullAt(i) && counts.getLong(i) > 0 =>
         (n, e, counts.getLong(i))
@@ -858,13 +934,23 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * declares constraints at all.
     */
   private def enforceConstraintsOnPaths(paths: Seq[Path],
-      cs: Map[String, String], op: String): Unit = {
+      cs: Map[String, String], op: String,
+      headSchema: => org.apache.spark.sql.types.StructType): Unit = {
     if (cs.isEmpty || paths.isEmpty) return
     enforceConstraints(
       spark.read.option("mergeSchema", "true")
         .parquet(paths.map(_.toString): _*),
-      cs, op)
+      cs, op, headSchema)
   }
+
+  /** The head a write validates against before its [[headRace]]. */
+  private def headNow: Manifest = currentVersion.map(manifest).getOrElse(Manifest.empty)
+
+  /** The read schema of `m`'s snapshot: one schema-inference job (none
+    * for a widened table, whose declared schema is read as is).
+    */
+  private def schemaOf(m: Manifest): org.apache.spark.sql.types.StructType =
+    readManifest(m).schema
 
   /** The constraint gate of one write: `gate(cs)(check)` runs `check(cs)`
     * — which validates the write's batch against the constraint set `cs`
@@ -968,14 +1054,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   private val DvKeys = Seq("_graft_del_file", "_graft_del_pos")
 
+  /** The tombstone files' schema: read as declared, with no inference. */
+  private val DvSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField(DvKeys.head, org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField(DvKeys.last, org.apache.spark.sql.types.LongType)))
+
   /** Union of a version's deletion-vector files, or None when the
     * version carries no tombstones (the fast path: reads stay the plain
     * parquet scan, zero overhead).
     */
   private def dvFrameOf(names: Seq[String]): Option[DataFrame] =
     if (names.isEmpty) None
-    else Some(spark.read.parquet(names.map(n => new Path(dataDir, n).toString): _*)
-      .select(DvKeys.map(col): _*))
+    else Some(spark.read.schema(DvSchema)
+      .parquet(names.map(n => new Path(dataDir, n).toString): _*))
 
   /** The pool files `names` as one parquet relation. Reads of a
     * type-WIDENED table ([[TableMeta.widened]], set by ALTER COLUMN ...
@@ -984,15 +1075,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * conflict, while an explicit schema lets the parquet readers promote
     * per file (int32→int64, float→double, decimal widening — native in
     * both the vectorized and row-based readers). Never-widened tables
-    * read with mergeSchema. basePath (hive partition-column rehydration)
+    * read with mergeSchema, unless the caller passes `schema` — the head
+    * snapshot's schema, which it already inferred: that read runs no
+    * inference job, and a file lacking a column the head has reads it as
+    * typed NULLs. basePath (hive partition-column rehydration)
     * applies only when every name is dataDir-relative
     * ([[Manifest.isAbsoluteName]]; `Path(dataDir, n)` resolves both) — an absolute
     * shallow-clone reference lives outside this table's root, where a
     * basePath that is not an ancestor is a hard error (clones are always
     * unpartitioned, so basePath is a no-op for them anyway).
     */
-  private def pool(names: Seq[String], meta: TableMeta = tableMeta): DataFrame = {
-    val r = meta.widenedReadSchema match {
+  private def pool(names: Seq[String], meta: TableMeta = tableMeta,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+    val r = schema.orElse(meta.widenedReadSchema) match {
       case Some(s) => spark.read.schema(s)
       case None    => spark.read.option("mergeSchema", "true")
     }
@@ -1011,8 +1106,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       col("_metadata.row_index").as(DvKeys.last))
 
   /** `names` with tombstone join keys, minus the rows `dv` tombstones. */
-  private def visibleWithPos(names: Seq[String], dv: Option[DataFrame]): DataFrame = {
-    val rows = withPos(pool(names))
+  private def visibleWithPos(names: Seq[String], dv: Option[DataFrame],
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+    val rows = withPos(pool(names, schema = schema))
     dv.fold(rows)(rows.join(_, DvKeys, "left_anti"))
   }
 
@@ -1057,11 +1153,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * Spark's size estimate broadcasts it and the scan stays one
     * shuffle-free codegen'd pass; stale tombstones referencing files no
     * longer in `names` simply match nothing. No DVs = the plain scan.
+    * `schema` is [[pool]]'s.
     */
   private def readFiles(names: Seq[String], dv: Option[DataFrame],
       partTypes: Map[String, String] = Map.empty,
-      meta: TableMeta = tableMeta): DataFrame = {
-    val rel = pool(names, meta)
+      meta: TableMeta = tableMeta,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+    val rel = pool(names, meta, schema)
     val base = dv.fold(rel)(d =>
       withPos(rel).join(d, DvKeys, "left_anti").select(rel.columns.map(col).toIndexedSeq: _*))
     castParts(base, partTypes)
@@ -1095,7 +1193,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       header: Option[(String, String)]): Long = {
     for (v <- appliedAt(txn)) return v
     val gate = new ConstraintGate
-    gate(checkConstraints)(enforceConstraints(df, _, "commit"))
+    val pre = headNow
+    gate(pre.checks)(enforceConstraints(df, _, "commit", schemaOf(pre)))
     val newEntries = stage(clustered(df), Nil, "commit")
     val opName = header.collect { case (Manifest.Op, hv) => hv }
       .getOrElse(if (replace) "replace" else "append")
@@ -1103,7 +1202,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       if (txn.exists(prev.hasTxn)) Settle(head)  // lost the race to our own id's writer
       else {
         if (!replace) requireUnpartitioned("commit(append)", prev)
-        gate(prev.checks)(enforceConstraints(df, _, "commit"))
+        gate(prev.checks)(enforceConstraints(df, _, "commit", schemaOf(prev)))
         // a replace drops the file lines but MUST carry the txn headers —
         // applied-batch memory outlives any rewrite or compaction
         val carried0 =
@@ -1193,6 +1292,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     }
     poolFromStage(dir, op, partColTypes(df, partCols))
   }
+
+  /** `df` as one part when its rows are driver-held
+    * ([[CommitLog.evaluated]]): a LocalRelation scans as up to
+    * `leafNodeDefaultParallelism` slices, and [[stage]] would pool each
+    * slice of a small batch as its own file.
+    */
+  private def onePart(df: DataFrame): DataFrame =
+    if (CommitLog.isLocal(df)) df.coalesce(1) else df
 
   /** Pool the parquet parts of an already-written staging dir (hive
     * `c=v` subdirs included) and delete the dir — the second half of
@@ -1342,7 +1449,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           "would mix layouts (replace=true may change the spec)")
     }
     val gate = new ConstraintGate
-    gate(checkConstraints)(enforceConstraints(df, _, "commitPartitioned"))
+    val pre = headNow
+    gate(pre.checks)(enforceConstraints(df, _, "commitPartitioned", schemaOf(pre)))
     val newEntries = stage(clustered(df, partitionCols), partitionCols, "commitPartitioned")
     val extra = extraHeader.map(Manifest.parseLine)
     headRace("commitPartitioned",
@@ -1365,7 +1473,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
               s"(now ${if (headCols.isEmpty) "flat" else s"partitioned by $headCols"}); " +
               s"append by $partitionCols would mix layouts")
         }
-        gate(prev.checks)(enforceConstraints(df, _, "commitPartitioned"))
+        gate(prev.checks)(enforceConstraints(df, _, "commitPartitioned", schemaOf(prev)))
         // shape-aware carry: a partitioned INSERT OVERWRITE that changes
         // the column set drops the stale evolved `#schema:` header like
         // the flat path; the RLO restage and other shape-preserving
@@ -1399,7 +1507,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     if (paths.isEmpty && !replace) return currentVersion.getOrElse(0L)
     // a rejected epoch's files stay in the writer's stage dir, which ages out
     val gate = new ConstraintGate
-    gate(checkConstraints)(enforceConstraintsOnPaths(paths, _, "commitPooledFiles"))
+    val pre = headNow
+    gate(pre.checks)(enforceConstraintsOnPaths(paths, _, "commitPooledFiles", schemaOf(pre)))
     val newEntries = poolParts(paths.sortBy(_.getName)
       .map(p => PoolPart(p, hfs.getFileStatus(p).getLen)), "commitPooledFiles").map(_._2)
     val pooledPaths = newEntries.map(e => new Path(dataDir, e.name))
@@ -1408,7 +1517,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         if (txn.exists(prev.hasTxn)) Settle(head)
         else {
           if (!replace) requireUnpartitioned("commitPooledFiles(append)", prev)
-          gate(prev.checks)(enforceConstraintsOnPaths(pooledPaths, _, "commitPooledFiles"))
+          gate(prev.checks)(enforceConstraintsOnPaths(pooledPaths, _, "commitPooledFiles",
+            schemaOf(prev)))
           val carried = if (replace) replaceCarriedData(prev,
             pooledPaths.headOption.map(p => spark.read.parquet(p.toString).schema))
           else prev
@@ -1475,9 +1585,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       }
     }
     val gate = new ConstraintGate
-    def validate(cs: Map[String, String]): Unit =
-      if (cs.nonEmpty) enforceConstraints(liveRows, cs, "commitCopiedWithTombstones")
-    gate(checkConstraints)(validate)
+    def validate(head: Manifest)(cs: Map[String, String]): Unit =
+      if (cs.nonEmpty) enforceConstraints(liveRows, cs, "commitCopiedWithTombstones",
+        schemaOf(head))
+    val pre = headNow
+    gate(pre.checks)(validate(pre))
     val pooled = poolParts(srcs.map(p =>
       PoolPart(p, HadoopFs.fs(spark, p.toString).getFileStatus(p).getLen)),
       "commitCopiedWithTombstones", copy = true)
@@ -1495,7 +1607,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     }
     headRace("commitCopiedWithTombstones", "import") { (_, prev) =>
       if (!replace) requireUnpartitioned("commitCopiedWithTombstones(append)", prev)
-      gate(prev.checks)(validate)
+      gate(prev.checks)(validate(prev))
       val carried = if (replace) replaceCarriedData(prev,
         dataEntries.headOption.map(e =>
           spark.read.parquet(new Path(dataDir, e.name).toString).schema))
@@ -1806,10 +1918,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val newEntries = poolFromStage(new Path(stageDir), "commitStaged")
     val newPaths = newEntries.map(e => new Path(dataDir, e.name))
     val gate = new ConstraintGate
-    gate(checkConstraints)(enforceConstraintsOnPaths(newPaths, _, "commitStaged"))
+    val pre = headNow
+    gate(pre.checks)(enforceConstraintsOnPaths(newPaths, _, "commitStaged", schemaOf(pre)))
     headRace("commitStaged", if (replace) "replace" else "append") { (_, prev) =>
       if (!replace) requireUnpartitioned("commitStaged(append)", prev)
-      gate(prev.checks)(enforceConstraintsOnPaths(newPaths, _, "commitStaged"))
+      gate(prev.checks)(enforceConstraintsOnPaths(newPaths, _, "commitStaged", schemaOf(prev)))
       publishAt((if (replace) replaceCarried(prev) else prev) ++ newEntries)
     }
   }
@@ -2576,7 +2689,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val own = branch.data.filterNot(_.absolute).map(_.name)
     val main = manifest(head)
     enforceConstraintsOnPaths(own.map(n => new Path(bData, n)),
-      main.checks, s"fastForward('$name')")
+      main.checks, s"fastForward('$name')", schemaOf(main))
     hfs.mkdirs(dataDir)
     val moved = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
     def rollback(): Unit = moved.foreach { case (src, dst) => hfs.rename(dst, src) }
@@ -3003,21 +3116,23 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     rows.iterator.map(_.getString(0)).toSet
   }
 
-  /** Pool files of `m` that CONTAIN at least one of `keys`:
-    * footer-stats range overlap first (no I/O, pure driver metadata the
-    * manifest already holds), then an exact semi-join with
-    * `input_file_name()` over just the candidates, reduced to ONE
-    * aggregated row (`collect_set` of file names, map-side combined) —
-    * per-file rows never materialize on the driver, and the fetched
-    * array is bounded by the candidate count, which is itself bounded
-    * by `refineCap`: past the cap the exact refinement is skipped and
-    * the stats-overlap set stands as the touched set (correct — a
-    * candidate with no matched key is rewritten byte-identical — at the
-    * price of extra rewrite, the right trade once the refinement scan
-    * itself would rival the rewrite it prunes).
+  /** Pool files of `m` that CONTAIN at least one of `keys`. `keys` is
+    * the write batch's key set, evaluated once before the head race
+    * ([[CommitLog.keysOf]]), so this probe never re-runs the batch's
+    * plan. Footer-stats overlap with the keys' bounds comes first (no I/O
+    * and no job: bounds and manifest are on the driver), then an exact
+    * semi-join with `input_file_name()` over just the candidates, read
+    * through the head's `schema` (no inference job), reduced to distinct
+    * file names ([[collectNames]]) — per-row data never reaches the
+    * driver. `refineCap` bounds the refined candidates: past the cap the
+    * exact refinement is skipped and the stats-overlap set stands as the
+    * touched set (correct — a candidate with no matched key is rewritten
+    * byte-identical — at the price of extra rewrite, the right trade once
+    * the refinement scan itself would rival the rewrite it prunes).
     */
-  private def findTouched(m: Manifest, keys: DataFrame, keyCol: String,
-      refineCap: Int = touchRefineCap, partTypes: Map[String, String] = Map.empty): Set[String] = {
+  private def findTouched(m: Manifest, keys: CommitLog.BatchKeys, keyCol: String,
+      schema: => org.apache.spark.sql.types.StructType, refineCap: Int = touchRefineCap,
+      partTypes: Map[String, String] = Map.empty): Set[String] = {
     val candidates = keyCandidates(m, keys, keyCol)
     if (candidates.isEmpty) Set.empty
     else if (candidates.length > refineCap) candidates.toSet
@@ -3030,9 +3145,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       // instead of drifting with path inference over the read set.
       val byLeaf = candidates.map(n => leafOf(n) -> n).toMap
       collectNames(
-        castParts(pool(candidates), partTypes)
+        castParts(pool(candidates, schema = Some(schema)), partTypes)
           .withColumn("_graft_file", input_file_name())
-          .join(keys, Seq(keyCol), "semi"),
+          .join(keys.frame, Seq(keyCol), "semi"),
         "_graft_file", "findTouched")
         .flatMap(p => byLeaf.get(leafOf(p)))
     }
@@ -3050,15 +3165,28 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     })
   }
 
-  /** [[statsCandidates]] for the [min, max] range of `keys` (one
-    * aggregate job); empty when `keys` has no non-null key.
+  /** [[statsCandidates]] for the [min, max] range of `keys`; empty when
+    * the batch has no non-null key.
     */
-  private def keyCandidates(m: Manifest, keys: DataFrame, keyCol: String): Seq[String] = {
-    val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
-      org.apache.spark.sql.functions.max(keyCol)).head()
-    if (bounds.isNullAt(0)) Seq.empty
-    else statsCandidates(m, Seq((keyCol, bounds.get(0), bounds.get(1))))
-  }
+  private def keyCandidates(m: Manifest, keys: CommitLog.BatchKeys, keyCol: String): Seq[String] =
+    keys.bounds.fold(Seq.empty[String]) { case (lo, hi) =>
+      statsCandidates(m, Seq((keyCol, lo, hi)))
+    }
+
+  /** Whether the head holds a visible row whose `keyCol` is one of `keys`.
+    * Exact: the stats tier narrows the head's files ([[keyCandidates]]),
+    * then one semi-join over only those files, tombstones applied,
+    * answers; there is no refine cap. Keys outside every file's bounds
+    * cost no job.
+    */
+  private[catalog] def holdsAnyKey(keys: CommitLog.BatchKeys, keyCol: String): Boolean =
+    currentVersion.exists { v =>
+      val m = manifest(v)
+      val candidates = keyCandidates(m, keys, keyCol)
+      candidates.nonEmpty &&
+        !readFiles(candidates, dvFrameOf(m.dvNames), partTypesOf(m))
+          .join(keys.frame, Seq(keyCol), "semi").isEmpty
+    }
 
   /** Data files of `m` holding a VISIBLE row that matches `cond` — the
     * predicate twin of [[findTouched]] behind [[rewriteWhere]] and
@@ -3069,15 +3197,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * metadata exposes), which normalize to manifest names exactly (leaves
     * are uuid-unique); castParts pins partition-column types so a
     * predicate on a string partition column compares lexically, matching
-    * the stats tier.
+    * the stats tier. The scan reads through the head's `schema`.
     */
   private def touchedBy(m: Manifest, cond: org.apache.spark.sql.Column,
-      dv: Option[DataFrame], op: String): Set[String] = {
+      dv: Option[DataFrame], op: String,
+      schema: org.apache.spark.sql.types.StructType): Set[String] = {
     val names = m.dataNames
     if (names.isEmpty) Set.empty
     else {
       val leaves = collectNames(
-        castParts(visibleWithPos(names, dv), partTypesOf(m)).filter(cond), DvKeys.head, op)
+        castParts(visibleWithPos(names, dv, Some(schema)), partTypesOf(m)).filter(cond),
+        DvKeys.head, op)
       names.filter(n => leaves(leafOf(n))).toSet
     }
   }
@@ -3184,23 +3314,24 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def merge(updates0: DataFrame, keyCol: String, maxAttempts: Int = 5,
       evolve: Boolean = false): Long = {
-    val updates = keyedUpdates(updates0, keyCol, "merge")
+    val (updates, keys) = keyedUpdates(updates0, keyCol, "merge")
     val gate = new ConstraintGate
     headRace("merge", "merge", maxAttempts, requireHead) { (_, head) =>
       val partTypes = partTypesOf(head)
       val b = keyedBatch(updates, head, evolve, "merge", "updates")
       // only the incoming rows can newly violate
-      gate(head.checks)(enforceConstraints(b.rows, _, "merge"))
-      val keys = b.rows.select(keyCol).distinct()
-      val touched = findTouched(head, keys, keyCol, partTypes = partTypes)
+      gate(head.checks)(enforceConstraints(b.rows, _, "merge", b.schema))
+      val touched = findTouched(head, keys, keyCol, b.schema, partTypes = partTypes)
       val kept = head.filterEntries(e => e.dv || !touched(e.name))
       val merged =
         if (touched.isEmpty) b.applied
         // tombstones apply BEFORE the key anti-join: a MoR-deleted row
-        // must not resurrect through the rewrite; under evolution the
-        // survivors pad the new columns with NULL (allowMissingColumns)
-        else readFiles(touched.toSeq.sorted, dvFrameOf(head.dvNames), partTypes)
-          .join(keys, Seq(keyCol), "left_anti")
+        // must not resurrect through the rewrite. The head schema reads a
+        // column a touched file predates as NULL; under evolution the
+        // survivors pad the batch's new columns (allowMissingColumns)
+        else readFiles(touched.toSeq.sorted, dvFrameOf(head.dvNames), partTypes,
+            schema = Some(b.schema))
+          .join(keys.frame, Seq(keyCol), "left_anti")
           .select(b.cols.map(col): _*)
           .unionByName(b.applied, allowMissingColumns = true)
       // A hive-partitioned head restages under its partition subdirs
@@ -3212,13 +3343,18 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   }
 
   /** `updates0` with its hidden-partition layout columns derived (callers
-    * hand SOURCE columns only, never `_p_*`), refused when a key repeats.
+    * hand SOURCE columns only, never `_p_*`), and its keys; refused when a
+    * key repeats. This is where a keyed write's batch is evaluated, once,
+    * before the head race ([[CommitLog.evaluated]]): every attempt's
+    * duplicate check, constraint check, touched-file probe and stage write
+    * read these rows, never the caller's plan again.
     */
-  private def keyedUpdates(updates0: DataFrame, keyCol: String, op: String): DataFrame = {
-    val updates = applyTransforms(updates0)
-    require(updates.select(keyCol).distinct().count() == updates.count(),
-      s"$op: duplicate keys in the updates batch")
-    updates
+  private def keyedUpdates(updates0: DataFrame, keyCol: String,
+      op: String): (DataFrame, CommitLog.BatchKeys) = {
+    val updates = CommitLog.evaluated(applyTransforms(updates0))
+    val keys = CommitLog.keysOf(updates, keyCol)
+    require(!keys.duplicated, s"$op: duplicate keys in the updates batch")
+    (updates, keys)
   }
 
   /** The one prologue of the keyed writes ([[merge]], [[mergeMoR]],
@@ -3231,7 +3367,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   private def keyedBatch(batch: DataFrame, head: Manifest, evolve: Boolean,
       op: String, noun: String): KeyedBatch = {
-    val schema = readManifest(head).schema
+    val schema = schemaOf(head)
     val cols = schema.fieldNames.toSeq
     if (evolve) {
       val missing = cols.filterNot(batch.columns.contains)
@@ -3244,14 +3380,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   }
 
   /** A [[keyedBatch]]: `rows` aligned to the table `schema`, and the
-    * columns the batch adds.
+    * columns the batch adds. `schema` is inferred once per attempt and
+    * serves every read of the head in that attempt.
     */
   private case class KeyedBatch(rows: DataFrame,
       schema: org.apache.spark.sql.types.StructType, newCols: Seq[String]) {
     /** The table's columns. */
     def cols: Seq[String] = schema.fieldNames.toSeq
     /** The rows in output order: the table's columns, then the new ones. */
-    def applied: DataFrame = rows.select((cols ++ newCols).map(col): _*)
+    def applied: DataFrame = onePart(rows.select((cols ++ newCols).map(col): _*))
     /** `m` under the widened `#schema:` header when the batch adds columns. */
     def evolved(m: Manifest): Manifest = evolveHeader(m, schema, newCols, rows)
   }
@@ -3264,23 +3401,24 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * Combined with an aged [[vacuum]] this is the right-to-erasure path:
     * once old versions expire, no surviving pool file holds the key.
     */
-  def deleteKeys(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long =
+  def deleteKeys(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long = {
+    val keys = CommitLog.keysOf(CommitLog.evaluated(keys0.select(keyCol)), keyCol)
     headRace("delete", "delete", maxAttempts, requireHead) { (v, head) =>
       val partTypes = partTypesOf(head)
-      val cols = readManifest(head).columns.toSeq
-      val keys = keys0.select(keyCol).distinct()
-      val touched = findTouched(head, keys, keyCol, partTypes = partTypes)
+      lazy val schema = schemaOf(head)
+      val touched = findTouched(head, keys, keyCol, schema, partTypes = partTypes)
       if (touched.isEmpty) Settle(v)
       else {
         val kept = head.filterEntries(e => e.dv || !touched(e.name))
         val survivors = readFiles(touched.toSeq.sorted, dvFrameOf(head.dvNames),
-            partTypes)
-          .join(keys, Seq(keyCol), "left_anti")
-          .select(cols.map(col): _*)
+            partTypes, schema = Some(schema))
+          .join(keys.frame, Seq(keyCol), "left_anti")
+          .select(schema.fieldNames.toSeq.map(col): _*)
         // partitioned survivors restage under their subdirs (see merge)
         publishAt(kept ++ stage(survivors, head.partitionColumns, "delete"))
       }
     }
+  }
 
   /** Copy-on-write rewrite of exactly the files containing rows matching
     * `cond`, replacing them with their survivors plus (optionally)
@@ -3299,7 +3437,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     headRace("rewriteWhere", op, maxAttempts, requireHead) { (v, head) =>
       val partCols = head.partitionColumns
       val dv = dvFrameOf(head.dvNames)
-      val touched = touchedBy(head, cond, dv, "rewriteWhere")
+      val schema = schemaOf(head)
+      val touched = touchedBy(head, cond, dv, "rewriteWhere", schema)
       if (touched.isEmpty && extra.isEmpty) Settle(v)
       else {
         val kept = head.filterEntries(e => e.dv || !touched(e.name))
@@ -3308,15 +3447,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         val survivorEntries =
           if (touched.isEmpty) Seq.empty
           else {
-            val cols = readManifest(head).columns.toSeq
-            val survivors = readFiles(touched.toSeq.sorted, dv, partTypesOf(head))
+            val survivors = readFiles(touched.toSeq.sorted, dv, partTypesOf(head),
+                schema = Some(schema))
               // SQL DELETE semantics: rows where the predicate is NULL survive
               .filter(!coalesce(cond, lit(false)))
-              .select(cols.map(col): _*)
+              .select(schema.fieldNames.toSeq.map(col): _*)
             stage(survivors, partCols, "rewriteWhere")
           }
         // survivors cannot newly violate; only the injected rows can
-        extra.foreach(enforceConstraints(_, head.checks, "rewriteWhere"))
+        extra.foreach(enforceConstraints(_, head.checks, "rewriteWhere", schema))
         // injected rows on a transform-partitioned table carry SOURCE
         // columns only — derive their layout columns before staging
         val extraEntries = extra.map(e => stage(applyTransforms(e), partCols, "rewriteWhere"))
@@ -3353,17 +3492,18 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     import org.apache.spark.sql.functions.{coalesce, when}
     headRace("updateWhere", "update", maxAttempts, requireHead) { (v, head) =>
       val dv = dvFrameOf(head.dvNames)
-      val touched = touchedBy(head, cond, dv, "updateWhere")
+      val schema = schemaOf(head)
+      val touched = touchedBy(head, cond, dv, "updateWhere", schema)
       if (touched.isEmpty) Settle(v)
       else {
         val kept = head.filterEntries(e => e.dv || !touched(e.name))
-        val cols = readManifest(head).columns.toSeq
         val matched = coalesce(cond, lit(false))
         val setMap = sets.toMap
         // one pass over touched files: every column's new value is chosen
         // against the pre-update row, so SET a=b, b=a swaps correctly
-        val rewritten = readFiles(touched.toSeq.sorted, dv, partTypesOf(head))
-          .select(cols.map { c =>
+        val rewritten = readFiles(touched.toSeq.sorted, dv, partTypesOf(head),
+            schema = Some(schema))
+          .select(schema.fieldNames.toSeq.map { c =>
             setMap.get(c) match {
               case Some(e) => when(matched, e).otherwise(col(c)).as(c)
               case None    => col(c)
@@ -3372,7 +3512,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // validate the rewrite output (only SET rows can newly violate,
         // but the pass is O(touched files) either way — and zero when the
         // table declares no constraints)
-        enforceConstraints(rewritten, head.checks, "updateWhere")
+        enforceConstraints(rewritten, head.checks, "updateWhere", schema)
         // a SET on a hidden-partition transform's SOURCE column must
         // re-derive the layout column, or the row stays filed under its
         // old partition and pruning silently goes wrong
@@ -3415,32 +3555,27 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       if (names.isEmpty) Settle(v)
       else {
         val visible = visibleWithPos(names, dvFrameOf(head.dvNames))
-        // matched rows carry their (file, pos) keys AND their data columns:
-        // one frame feeds both the tombstones and the updated copies (the
-        // deterministic filter + stable row_index make the two passes agree).
-        // A NONdeterministic predicate (rand(), current_timestamp) would
-        // let the two jobs tombstone one row set and append another inside
-        // the "atomic" commit — pin the match set once in that case.
-        val matched0 = castParts(visible, partTypesOf(head))
-          .filter(coalesce(cond, lit(false)))
-        val condDeterministic = matched0.queryExecution.analyzed.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.deterministic
-        }.forall(identity)
-        val matched = if (condDeterministic) matched0 else matched0.localCheckpoint()
-        val dvStaged = stage(matched.select(DvKeys.map(col): _*), Nil, "updateWhereMoR")
-        if (dvStaged.isEmpty) Settle(v)
+        // matched rows carry their (file, pos) keys AND their data columns,
+        // evaluated once: the tombstones and the updated copies come from
+        // the same rows, even under a nondeterministic predicate (rand(),
+        // current_timestamp), and neither re-runs the scan
+        val matched = CommitLog.evaluated(castParts(visible, partTypesOf(head))
+          .filter(coalesce(cond, lit(false))))
+        if (matched.isEmpty) Settle(v)
         else {
-          val cols = readManifest(head).columns.toSeq
+          val headSchema = org.apache.spark.sql.types.StructType(
+            matched.schema.filterNot(f => DvKeys.contains(f.name)))
           val setMap = sets.toMap
-          val updated = matched.select(cols.map { c =>
+          val updated = matched.select(headSchema.fieldNames.toSeq.map { c =>
             setMap.get(c) match {
               case Some(e) => e.as(c)
               case None    => col(s"`$c`")
             }
           }: _*)
-          enforceConstraints(updated, head.checks, "updateWhereMoR")
-          val dataStaged = stage(applyTransforms(updated), head.partitionColumns,
+          enforceConstraints(updated, head.checks, "updateWhereMoR", headSchema)
+          val dvStaged = stage(onePart(matched.select(DvKeys.map(col): _*)), Nil,
+            "updateWhereMoR")
+          val dataStaged = stage(onePart(applyTransforms(updated)), head.partitionColumns,
             "updateWhereMoR")
           publishAt(head ++ dataStaged ++ dvStaged.map(_.asDv))
         }
@@ -3483,27 +3618,29 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * they bound [[deleteKeys]] — only files whose [min,max] overlaps the
     * key range are scanned for positions — but nothing is rewritten.
     */
-  def deleteKeysMoR(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long =
+  def deleteKeysMoR(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long = {
+    val keys = CommitLog.keysOf(CommitLog.evaluated(keys0.select(keyCol)), keyCol)
     headRace("deleteKeysMoR", "delete_mor", maxAttempts, requireHead) { (v, head) =>
-      val staged = keyTombstones(head, keys0.select(keyCol).distinct(), keyCol,
-        "deleteKeysMoR")
+      val staged = keyTombstones(head, keys, keyCol, "deleteKeysMoR")
       if (staged.isEmpty) Settle(v) else publishAt(head ++ staged)
     }
+  }
 
   /** Stage (file, pos) tombstones for every visible row of the snapshot
     * `m` whose `keyCol` is in `keys` — the probe the keyed MoR paths
     * share — as deletion-vector entries. Footer stats bound it to the
     * files whose [min,max] overlaps the keys' range before any row I/O;
-    * empty when nothing matches.
+    * empty when nothing matches. `schema` is the head's, when the caller
+    * already inferred it.
     */
-  private def keyTombstones(m: Manifest, keys: DataFrame, keyCol: String,
-      op: String): Seq[Entry] = {
+  private def keyTombstones(m: Manifest, keys: CommitLog.BatchKeys, keyCol: String,
+      op: String, schema: Option[org.apache.spark.sql.types.StructType] = None): Seq[Entry] = {
     if (m.data.isEmpty) return Seq.empty
     val candidates = keyCandidates(m, keys, keyCol)
     if (candidates.isEmpty) Seq.empty
     else {
-      val visible = visibleWithPos(candidates, dvFrameOf(m.dvNames))
-      stage(visible.join(keys, Seq(keyCol), "semi")
+      val visible = visibleWithPos(candidates, dvFrameOf(m.dvNames), schema)
+      stage(visible.join(keys.frame, Seq(keyCol), "semi")
         .select(DvKeys.map(col): _*), Nil, op).map(_.asDv)
     }
   }
@@ -3533,16 +3670,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def mergeMoR(updates0: DataFrame, keyCol: String, maxAttempts: Int = 5,
       evolve: Boolean = false): Long = {
-    val updates = keyedUpdates(updates0, keyCol, "mergeMoR")
+    val (updates, keys) = keyedUpdates(updates0, keyCol, "mergeMoR")
     val gate = new ConstraintGate
     headRace("mergeMoR", "merge_mor", maxAttempts, requireHead) { (v, head) =>
       // schema evolution mirrors [[merge]]: appended rows carry the new
       // columns, existing files stay untouched and read them as NULL
       val b = keyedBatch(updates, head, evolve, "mergeMoR", "updates")
-      gate(head.checks)(enforceConstraints(b.rows, _, "mergeMoR"))
+      gate(head.checks)(enforceConstraints(b.rows, _, "mergeMoR", b.schema))
       // tombstone the old positions of matched keys
-      val dvStaged =
-        keyTombstones(head, b.rows.select(keyCol).distinct(), keyCol, "mergeMoR")
+      val dvStaged = keyTombstones(head, keys, keyCol, "mergeMoR", Some(b.schema))
       val dataStaged = stage(b.applied, head.partitionColumns, "mergeMoR")
       if (dvStaged.isEmpty && dataStaged.isEmpty) Settle(v)
       else publishAt(b.evolved(head) ++ dataStaged ++ dvStaged)
@@ -3579,7 +3715,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def applyChangesMoR(deleteKeys0: DataFrame, inserts0: DataFrame,
       keyCol: String, txn: Option[String] = None,
       maxAttempts: Int = 5, evolve: Boolean = false): Long = {
-    val inserts = applyTransforms(inserts0)
+    // both sides evaluated once, like [[keyedUpdates]]' batch
+    val inserts = CommitLog.evaluated(applyTransforms(inserts0))
+    val deleted = CommitLog.keysOf(CommitLog.evaluated(deleteKeys0.select(keyCol)), keyCol)
     val gate = new ConstraintGate
     headRace("applyChangesMoR", "cdc_apply", maxAttempts, requireHead) { (v, head) =>
       if (txn.exists(head.hasTxn)) Settle(v)
@@ -3587,9 +3725,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // schema evolution mirrors [[mergeMoR]]: a CDC replica must track its
         // source through the source's own evolving merges ([[graft.stream.Replicate]])
         val b = keyedBatch(inserts, head, evolve, "applyChangesMoR", "inserts")
-        gate(head.checks)(enforceConstraints(b.rows, _, "applyChangesMoR"))
-        val dvStaged = keyTombstones(head, deleteKeys0.select(keyCol).distinct(),
-          keyCol, "applyChangesMoR")
+        gate(head.checks)(enforceConstraints(b.rows, _, "applyChangesMoR", b.schema))
+        val dvStaged = keyTombstones(head, deleted, keyCol, "applyChangesMoR",
+          Some(b.schema))
         val dataStaged = stage(b.applied, head.partitionColumns, "applyChangesMoR")
         // an empty change set without a txn id is a true no-op; WITH one,
         // the id must still land (skip-on-redelivery has no other memory)
@@ -3689,12 +3827,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         val survivorEntries =
           if (straddle.isEmpty) Seq.empty
           else {
-            val cols = readManifest(head).columns.toSeq
+            val schema = schemaOf(head)
             val survivors = readFiles(straddle.sorted, dvFrameOf(head.dvNames),
-                partTypesOf(head))
+                partTypesOf(head), schema = Some(schema))
               // NULL retention column survives (SQL DELETE semantics)
               .filter(!coalesce(col(column) < lit(cutoff), lit(false)))
-              .select(cols.map(col): _*)
+              .select(schema.fieldNames.toSeq.map(col): _*)
             stage(survivors, head.partitionColumns, "expire")
           }
         Publish(kept ++ survivorEntries, _ => (dead.size, straddle.size))

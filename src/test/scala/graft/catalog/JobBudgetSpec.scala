@@ -108,6 +108,7 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("each registry op stays within its Spark-job budget") {
     val reg = new Registry
     val got = measure(reg)
+    info(s"jobs per op: ${got.toSeq.sortBy(_._1).map { case (op, n) => s"$op $n" }.mkString(", ")}")
     val over = budgets.filter { case (op, cap) => got(op) > cap }
     assert(over.isEmpty, s"over budget: ${over.map { case (op, cap) =>
       s"$op ${got(op)} > $cap" }.mkString(", ")}; all: $got")
@@ -129,6 +130,7 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
       .addConstraint("status_set", "status IS NOT NULL")
     reg.update(IdBase + 3, "warm2")
     val constrained = jobsOf(reg.update(IdBase + 3, "c"))
+    info(s"update jobs: plain $plain, constrained $constrained")
     assert(constrained <= budgets.toMap.apply("update") + 1,
       s"constrained update ran $constrained jobs")
     assert(constrained <= plain + 1,
