@@ -222,13 +222,16 @@ object CommitLog {
       }
   }
 
-  /** Rows a write batch may hold on the driver ([[evaluated]]). */
-  private[catalog] val BatchRowCap: Int = 10000
+  /** Rows a write batch may hold on the driver ([[evaluated]]). A
+    * registry write carries a handful and a landing-file upsert about a
+    * thousand; a larger batch is checkpointed on the executors instead.
+    */
+  private val BatchRowCap: Int = 10000
 
   /** `df`'s rows when it plans as a LocalRelation, whose collect runs no
     * Spark job; None for any other plan.
     */
-  private[catalog] def localRows(df: DataFrame): Option[Array[Row]] =
+  private def localRows(df: DataFrame): Option[Array[Row]] =
     df.queryExecution.optimizedPlan match {
       case _: LocalRelation => Some(df.collect())
       case _                => None
@@ -249,7 +252,7 @@ object CommitLog {
     }
 
   /** Whether `df` plans as a LocalRelation: its rows are on the driver. */
-  private[catalog] def isLocal(df: DataFrame): Boolean =
+  private def isLocal(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** The keys of a write batch: `frame` holds each key once, `duplicated`
@@ -909,9 +912,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       .filterNot(f => have(f.name.toLowerCase(java.util.Locale.ROOT)))
       .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
     val named = cs.toSeq.sortBy(_._1)
-    // a driver-held batch aggregates as one part: one job, no exchange
     val aggs = named.map { case (_, e) =>
       sum(when(violates(e), 1L).otherwise(0L)) }
+    // a driver-held batch aggregates as one part: one job, no exchange
     val counts = onePart(padded).agg(aggs.head, aggs.tail: _*).head()
     val broken = named.zipWithIndex.collect {
       case ((n, e), i) if !counts.isNullAt(i) && counts.getLong(i) > 0 =>
@@ -3715,6 +3718,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def applyChangesMoR(deleteKeys0: DataFrame, inserts0: DataFrame,
       keyCol: String, txn: Option[String] = None,
       maxAttempts: Int = 5, evolve: Boolean = false): Long = {
+    for (v <- appliedAt(txn)) return v
     // both sides evaluated once, like [[keyedUpdates]]' batch
     val inserts = CommitLog.evaluated(applyTransforms(inserts0))
     val deleted = CommitLog.keysOf(CommitLog.evaluated(deleteKeys0.select(keyCol)), keyCol)

@@ -60,9 +60,9 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val audit = new AuditLog(spark, s"$root/audit")
     private var next = IdBase + 16
 
-    def rows(ids: Seq[Long], status: String = "active"): DataFrame =
+    def rows(ids: Seq[Long]): DataFrame =
       ids.map(i => SourceSystem(i, s"src-$i", "us-east-1",
-        new Timestamp(1700000000000L + i), status)).toDF()
+        new Timestamp(1700000000000L + i), "active")).toDF()
 
     def rid(id: Long): String = s"$Table-$id"
 
