@@ -141,6 +141,32 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("status_set"), e.getMessage)
   }
 
+  test("a batch over the driver-row cap is checkpointed: merge, duplicate check " +
+      "and keyed delete stay exact") {
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs_cap").toString
+    val log = new CommitLog(spark, root)
+    log.commit(spark.range(0, 12000, 1, 4).toDF("k").withColumn("v", col("k")),
+      replace = false)
+    // 12,000 rows: 6,000 overlap the table, 6,000 are new keys
+    log.merge(spark.range(6000, 18000, 1, 4).toDF("k").withColumn("v", -col("k")), "k")
+    val merged = log.read().select("k", "v").as[(Long, Long)].collect().toMap
+    assert(merged.size == 18000)
+    assert(merged(5999L) == 5999L && merged(6000L) == -6000L && merged(17999L) == -17999L)
+
+    val dup = spark.range(20000, 32000, 1, 4).toDF("k").withColumn("v", col("k"))
+      .union(Seq((20000L, 0L)).toDF("k", "v"))
+    val e = intercept[IllegalArgumentException](log.merge(dup, "k"))
+    assert(e.getMessage.contains("duplicate keys"), e.getMessage)
+
+    // repeated and NULL keys in an over-cap key batch delete exactly once
+    val keys = spark.range(0, 12000, 1, 4).toDF("k").union(Seq(0L, 1L).toDF("k"))
+      .select(col("k").cast("long").as("k"))
+      .union(Seq(Option.empty[Long]).toDF("k"))
+    log.deleteKeys(keys, "k")
+    val left = log.read().select("k").as[Long].collect().toSet
+    assert(left == (12000L until 18000L).toSet)
+  }
+
   test("a 1,000-row merge into a one-file table adds one file for the batch " +
       "plus one per touched file") {
     val root = java.nio.file.Files.createTempDirectory("graft_jobs_merge").toString
