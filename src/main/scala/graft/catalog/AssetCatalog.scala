@@ -71,7 +71,7 @@ class AssetCatalog(spark: SparkSession, root: String) {
 
   /** `rows` evaluated once ([[CommitLog.evaluated]]), once no key
     * repeats within it or already exists in `table`. The repeat check
-    * reads the batch's keys on the driver; the existence check probes
+    * reads a driver-held batch's keys with no job; the existence check probes
     * only the files whose key bounds admit the batch's
     * ([[CommitLog.holdsAnyKey]]), so a fresh id above every stored key
     * costs no Spark job.

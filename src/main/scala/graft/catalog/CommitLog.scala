@@ -20,9 +20,16 @@ import org.apache.spark.sql.functions.{col, input_file_name, lit}
   * exact for the ASCII identifiers the registry keys actually use).
   */
 private[graft] case class ColStats(tpe: String, min: String, max: String) {
-  /** Could any value in [lo, hi] live in a file with these bounds? */
+  /** Could any value in [lo, hi] live in a file with these bounds? The
+    * bounds are rendered into the stats domain first
+    * ([[CommitLog.statsComparable]]: a DATE as its epoch day, a TIMESTAMP
+    * as epoch micros), and a bound this file's type cannot parse keeps
+    * the file: a conservative scan, never a wrong skip.
+    */
   def overlaps(lo: Any, hi: Any): Boolean =
-    ColStats.cmp(tpe, min, hi.toString) <= 0 && ColStats.cmp(tpe, max, lo.toString) >= 0
+    scala.util.Try(
+      ColStats.cmp(tpe, min, CommitLog.statsComparable(hi)) <= 0 &&
+        ColStats.cmp(tpe, max, CommitLog.statsComparable(lo)) >= 0).getOrElse(true)
 }
 
 private[graft] object ColStats {
@@ -224,32 +231,45 @@ object CommitLog {
 
   /** Rows a write batch may hold on the driver ([[evaluated]]). A
     * registry write carries a handful and a landing-file upsert about a
-    * thousand; a larger batch is checkpointed on the executors instead.
+    * thousand.
     */
   private val BatchRowCap: Int = 10000
 
-  /** `df`'s rows when it plans as a LocalRelation, whose collect runs no
-    * Spark job; None for any other plan.
+  /** Estimated bytes of a write batch's inputs (the sum over its plan's
+    * leaves) past which [[evaluated]] does not try the driver collect.
+    * [[BatchRowCap]] rows are a few hundred KiB of parquet (10,000 TPC-H
+    * orders rows of three columns are ~170 KiB), so a batch read from more
+    * is not expected to fit the cap, and one read from less bounds both
+    * the collect that finds it over the cap and the driver copy, unless a
+    * join or generator widens its rows. A leaf Spark cannot size (an RDD)
+    * estimates as unbounded.
     */
-  private def localRows(df: DataFrame): Option[Array[Row]] =
-    df.queryExecution.optimizedPlan match {
-      case _: LocalRelation => Some(df.collect())
-      case _                => None
-    }
+  private val BatchInputByteCap: Long = 1L << 20
 
   /** A write batch evaluated once, so the checks, probes and stage write
-    * that follow read its rows instead of re-running its plan. Up to
-    * [[BatchRowCap]] rows are collected (one job; none when `df` already
-    * plans as a LocalRelation) and come back as a LocalRelation; a larger
-    * batch is local-checkpointed on the executors.
+    * that follow read its rows instead of re-running its plan. A batch
+    * that already plans as a LocalRelation is returned as is (no job).
+    * One read from at most [[BatchInputByteCap]] bytes is collected up to
+    * [[BatchRowCap]] rows (one job) and comes back as a LocalRelation.
+    * Any other batch is too large for the driver: a deterministic one is
+    * returned as is and re-runs its plan at each step, which costs less
+    * than pinning its rows on the executors; a nondeterministic one is
+    * local-checkpointed so its checks and its staged rows see the same
+    * rows.
     */
-  private[catalog] def evaluated(df: DataFrame): DataFrame =
-    if (isLocal(df)) df
+  private[catalog] def evaluated(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.optimizedPlan
+    if (plan.isInstanceOf[LocalRelation]) df
     else {
-      val rows = df.limit(BatchRowCap + 1).collect()
-      if (rows.length <= BatchRowCap) df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
-      else df.localCheckpoint()
+      val onDriver =
+        if (plan.collectLeaves().map(_.stats.sizeInBytes).sum > BatchInputByteCap) None
+        else Some(df.limit(BatchRowCap + 1).collect()).filter(_.length <= BatchRowCap)
+      onDriver match {
+        case Some(rows) => df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
+        case None       => if (plan.deterministic) df else df.localCheckpoint()
+      }
     }
+  }
 
   /** Whether `df` plans as a LocalRelation: its rows are on the driver. */
   private def isLocal(df: DataFrame): Boolean =
@@ -264,7 +284,7 @@ object CommitLog {
       bounds: Option[(Any, Any)])
 
   /** [[BatchKeys]] of `batch`'s `keyCol`. A driver-held batch
-    * ([[localRows]]) answers on the driver with no job; any other batch,
+    * ([[isLocal]]) answers on the driver with no job; any other batch,
     * or keys with no exact driver order or equality (floating point,
     * binary, nested), pays one fused aggregate: count, count(distinct),
     * min and max.
@@ -272,11 +292,12 @@ object CommitLog {
   private[catalog] def keysOf(batch: DataFrame, keyCol: String): BatchKeys = {
     import org.apache.spark.sql.functions.{count, count_distinct, max, min}
     val keys = batch.select(keyCol)
-    val onDriver = localRows(keys).filter(_.forall(r => r.isNullAt(0) || (r.get(0) match {
-      case _: java.lang.Double | _: java.lang.Float => false
-      case _: Comparable[_] => true
-      case _ => false
-    })))
+    val onDriver = Option.when(isLocal(keys))(keys.collect())
+      .filter(_.forall(r => r.isNullAt(0) || (r.get(0) match {
+        case _: java.lang.Double | _: java.lang.Float => false
+        case _: Comparable[_] => true
+        case _ => false
+      })))
     onDriver match {
       case Some(rows) =>
         val distinct = rows.distinct
@@ -991,8 +1012,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         if (st == null || st.isEmpty || !st.hasNonNullValue) bad += name
         else {
           val prim = c.getPrimitiveType
+          // a TIMESTAMP bound renders as epoch micros (statsComparable),
+          // so millis or nanos timestamps keep no bounds
+          val microsOrNoTs = prim.getLogicalTypeAnnotation match {
+            case t: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+              t.getUnit == org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MICROS
+            case _ => true
+          }
           val tagged: Option[ColStats] = prim.getPrimitiveTypeName match {
-            case PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64 =>
+            case PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64 if microsOrNoTs =>
               Some(ColStats("long", st.genericGetMin.toString, st.genericGetMax.toString))
             case PrimitiveTypeName.FLOAT | PrimitiveTypeName.DOUBLE =>
               Some(ColStats("double", st.genericGetMin.toString, st.genericGetMax.toString))
@@ -3120,14 +3148,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   }
 
   /** Pool files of `m` that CONTAIN at least one of `keys`. `keys` is
-    * the write batch's key set, evaluated once before the head race
-    * ([[CommitLog.keysOf]]), so this probe never re-runs the batch's
-    * plan. Footer-stats overlap with the keys' bounds comes first (no I/O
-    * and no job: bounds and manifest are on the driver), then an exact
-    * semi-join with `input_file_name()` over just the candidates, read
-    * through the head's `schema` (no inference job), reduced to distinct
-    * file names ([[collectNames]]) — per-row data never reaches the
-    * driver. `refineCap` bounds the refined candidates: past the cap the
+    * the write batch's key set, taken once before the head race
+    * ([[CommitLog.keysOf]]), so this probe re-runs no plan of a
+    * driver-held batch. Footer-stats overlap with the keys' bounds comes
+    * first (no I/O and no job: bounds and manifest are on the driver),
+    * then an exact semi-join with `input_file_name()` over just the
+    * candidates, read through the head's `schema` (no inference job),
+    * reduced to distinct file names ([[collectNames]]) — per-row data
+    * never reaches the driver. `refineCap` bounds the refined candidates: past the cap the
     * exact refinement is skipped and the stats-overlap set stands as the
     * touched set (correct — a candidate with no matched key is rewritten
     * byte-identical — at the price of extra rewrite, the right trade once
@@ -3350,7 +3378,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * key repeats. This is where a keyed write's batch is evaluated, once,
     * before the head race ([[CommitLog.evaluated]]): every attempt's
     * duplicate check, constraint check, touched-file probe and stage write
-    * read these rows, never the caller's plan again.
+    * read these rows, never the caller's plan again. The exception is a
+    * deterministic batch too large for the driver, whose plan each step
+    * re-runs.
     */
   private def keyedUpdates(updates0: DataFrame, keyCol: String,
       op: String): (DataFrame, CommitLog.BatchKeys) = {
@@ -3560,24 +3590,24 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         val visible = visibleWithPos(names, dvFrameOf(head.dvNames))
         // matched rows carry their (file, pos) keys AND their data columns,
         // evaluated once: the tombstones and the updated copies come from
-        // the same rows, even under a nondeterministic predicate (rand(),
-        // current_timestamp), and neither re-runs the scan
+        // the same rows, even under a nondeterministic predicate (rand()),
+        // and a match set that fits the driver is not scanned again
         val matched = CommitLog.evaluated(castParts(visible, partTypesOf(head))
           .filter(coalesce(cond, lit(false))))
-        if (matched.isEmpty) Settle(v)
+        val headSchema = org.apache.spark.sql.types.StructType(
+          matched.schema.filterNot(f => DvKeys.contains(f.name)))
+        val setMap = sets.toMap
+        val updated = matched.select(headSchema.fieldNames.toSeq.map { c =>
+          setMap.get(c) match {
+            case Some(e) => e.as(c)
+            case None    => col(s"`$c`")
+          }
+        }: _*)
+        enforceConstraints(updated, head.checks, "updateWhereMoR", headSchema)
+        val dvStaged = stage(onePart(matched.select(DvKeys.map(col): _*)), Nil,
+          "updateWhereMoR")
+        if (dvStaged.isEmpty) Settle(v)
         else {
-          val headSchema = org.apache.spark.sql.types.StructType(
-            matched.schema.filterNot(f => DvKeys.contains(f.name)))
-          val setMap = sets.toMap
-          val updated = matched.select(headSchema.fieldNames.toSeq.map { c =>
-            setMap.get(c) match {
-              case Some(e) => e.as(c)
-              case None    => col(s"`$c`")
-            }
-          }: _*)
-          enforceConstraints(updated, head.checks, "updateWhereMoR", headSchema)
-          val dvStaged = stage(onePart(matched.select(DvKeys.map(col): _*)), Nil,
-            "updateWhereMoR")
           val dataStaged = stage(onePart(applyTransforms(updated)), head.partitionColumns,
             "updateWhereMoR")
           publishAt(head ++ dataStaged ++ dvStaged.map(_.asDv))

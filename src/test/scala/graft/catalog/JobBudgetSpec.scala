@@ -141,7 +141,7 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("status_set"), e.getMessage)
   }
 
-  test("a batch over the driver-row cap is checkpointed: merge, duplicate check " +
+  test("a batch over the driver-row cap re-runs its plan: merge, duplicate check " +
       "and keyed delete stay exact") {
     val root = java.nio.file.Files.createTempDirectory("graft_jobs_cap").toString
     val log = new CommitLog(spark, root)
@@ -165,6 +165,39 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     log.deleteKeys(keys, "k")
     val left = log.read().select("k").as[Long].collect().toSet
     assert(left == (12000L until 18000L).toSet)
+  }
+
+  test("a batch whose input Spark cannot size is never collected: merge, duplicate " +
+      "check and keyed delete stay exact") {
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs_rdd").toString
+    val log = new CommitLog(spark, root)
+    log.commit(spark.range(0, 100, 1, 2).toDF("k").withColumn("v", col("k")), replace = false)
+    // an RDD leaf estimates as unbounded input, however few rows it holds
+    def rdd(kv: Seq[(Long, Long)]): DataFrame = spark.sparkContext.parallelize(kv, 3).toDF("k", "v")
+    log.merge(rdd(Seq(5L -> -5L, 150L -> -150L)), "k")
+    val e = intercept[IllegalArgumentException](log.merge(rdd(Seq(7L -> 1L, 7L -> 2L)), "k"))
+    assert(e.getMessage.contains("duplicate keys"), e.getMessage)
+    log.deleteKeys(spark.sparkContext.parallelize(Seq(0L, 1L, 1L), 2).toDF("k"), "k")
+    val rows = log.read().select("k", "v").as[(Long, Long)].collect().toMap
+    assert(rows == (2L until 100L).map(k => k -> k).toMap + (5L -> -5L) + (150L -> -150L))
+  }
+
+  test("a nondeterministic MoR update tombstones exactly the rows it rewrites, " +
+      "under and over the driver-row cap") {
+    // draws anew on every evaluation (a seeded rand() would repeat itself)
+    val coin = udf(() => java.util.concurrent.ThreadLocalRandom.current().nextBoolean())
+      .asNondeterministic()
+    for (n <- Seq(2000L, 30000L)) {
+      val log = new CommitLog(spark, java.nio.file.Files.createTempDirectory("graft_jobs_nd").toString)
+      log.commit(spark.range(0, n, 1, 4).toDF("k").withColumn("v", col("k")), replace = false)
+      log.updateWhereMoR(coin(), Seq("v" -> (-col("k") - 1)))
+      val rows = log.read().select("k", "v").as[(Long, Long)].collect()
+      val keys = rows.map(_._1).distinct
+      assert(rows.length == n && keys.length == n && keys.min == 0L && keys.max == n - 1,
+        s"n=$n: ${rows.length} rows, ${keys.length} keys")
+      val flipped = rows.count(_._2 < 0)
+      assert(flipped > 0 && flipped < n, s"n=$n: $flipped rows updated")
+    }
   }
 
   test("a 1,000-row merge into a one-file table adds one file for the batch " +
