@@ -112,7 +112,9 @@ class AssetCatalog(spark: SparkSession, root: String) {
     * builds full replacement rows for the MATCHED keys only (so unknown
     * keys update nothing — the reference's `attribute_exists` guard), and
     * the merge rewrites only the pool files containing those keys instead
-    * of the whole table. The projection reads the old snapshot's
+    * of the whole table. The join reads only the files whose key stats
+    * admit the batch's keys ([[CommitLog.keyCandidateRows]], the probe
+    * [[create]]'s existence check shares), from the old snapshot's
     * immutable pool files while the new version stages, so the rewrite
     * can never consume itself.
     *
@@ -125,9 +127,9 @@ class AssetCatalog(spark: SparkSession, root: String) {
     */
   def update(table: String, keyCol: String, updates: DataFrame): Unit = {
     val batch = CommitLog.evaluated(updates)
-    require(!CommitLog.keysOf(batch, keyCol).duplicated,
-      s"update: duplicate keys in the updates batch for $table")
-    val cur = readTable(table)
+    val keys = CommitLog.keysOf(batch, keyCol)
+    require(!keys.duplicated, s"update: duplicate keys in the updates batch for $table")
+    val cur = log(table).keyCandidateRows(keys, keyCol).getOrElse(readTable(table).limit(0))
     val upd = batch.columns.filterNot(_ == keyCol)
     val matchedNew = cur.as("c").join(batch.as("u"), Seq(keyCol), "inner")
       .select(cur.columns.map { c =>

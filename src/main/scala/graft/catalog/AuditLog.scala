@@ -78,14 +78,16 @@ class AuditLog(spark: SparkSession, root: String) {
     * Either way a concurrent [[append]] that wins a version mid-update
     * survives, because each retry re-pins the new head and carries its
     * files forward (the old whole-table replace staged a stale snapshot
-    * and erased the racer).
+    * and erased the racer). The MoR tier retries up to
+    * [[MorStatusAttempts]] times: every API call appends to this one
+    * log, so its head moves often.
     */
   def setStatus(requestId: String, methodName: String, status: String,
       mor: Boolean = false): Unit = {
     val cond = col("aws_request_id") === requestId &&
       col("method_name") === methodName
     val sets = Seq("status" -> lit(status))
-    if (mor) log.updateWhereMoR(cond, sets): Unit
+    if (mor) log.updateWhereMoR(cond, sets, AuditLog.MorStatusAttempts): Unit
     else log.updateWhere(cond, sets): Unit
   }
 
@@ -93,4 +95,13 @@ class AuditLog(spark: SparkSession, root: String) {
   def lookup(requestId: String, methodName: String): DataFrame =
     events.filter(col("aws_request_id") === requestId &&
       col("method_name") === methodName)
+}
+
+object AuditLog {
+  /** Head-race attempts of a merge-on-read status correction. An attempt
+    * re-stages one tombstone file and one row, not a rewritten data file,
+    * so a correction outlasts a burst of concurrent appends instead of
+    * failing after the 5 attempts of a copy-on-write rewrite.
+    */
+  private[graft] val MorStatusAttempts: Int = 20
 }

@@ -8,9 +8,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{col, input_file_name, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Per-file min/max of one column, harvested from the parquet footer at
   * commit time and carried in the manifest line. Values are kept as
@@ -318,6 +319,32 @@ object CommitLog {
           if (a.isNullAt(3)) None else Some((a.get(3), a.get(4))))
     }
   }
+
+  /** The distinct values of one partition ([[CommitLog.collectNames]]). */
+  private val distinctWithin: Iterator[String] => Iterator[String] = _.toSet.iterator
+
+  /** Pool files the footer-schema memo holds; the least recently used
+    * entry leaves first.
+    */
+  private val FooterSchemaCap: Int = 8192
+
+  /** Footer-schema memo, JVM-wide: a parquet file's qualified path and
+    * byte length → the Spark schema its footer records, or None for a
+    * footer without Spark's row metadata (a read holding one infers).
+    * Pool files are immutable and uuid-named, so an entry never goes
+    * stale. [[CommitLog.poolParts]] fills it from the footer it already
+    * reads; a lookup costs no I/O.
+    */
+  private val footerSchemas = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, Long), Option[StructType]](256, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long), Option[StructType]]): Boolean =
+        size() > FooterSchemaCap
+    })
+
+  /** Drop the memo's entries for files under `root` (a qualified path). */
+  private[catalog] def forgetFooterSchemas(root: String): Unit =
+    footerSchemas.synchronized(footerSchemas.keySet.removeIf(_._1.startsWith(root)): Unit)
 
   /** What one attempt of [[CommitLog.headRace]] decided: end the race
     * with `result` and publish nothing, or publish `manifest` at head+1
@@ -954,16 +981,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
 
   /** File-path twin of [[enforceConstraints]] for the staged/pooled
     * write paths (SQL row-level rewrites, streaming epochs): reads the
-    * about-to-be-committed parquet once — and only when the table
-    * declares constraints at all.
+    * about-to-be-committed parquet `files` (path, byte length) once —
+    * and only when the table declares constraints at all.
     */
-  private def enforceConstraintsOnPaths(paths: Seq[Path],
+  private def enforceConstraintsOnPaths(files: Seq[(Path, Long)],
       cs: Map[String, String], op: String,
       headSchema: => org.apache.spark.sql.types.StructType): Unit = {
-    if (cs.isEmpty || paths.isEmpty) return
-    enforceConstraints(
-      spark.read.option("mergeSchema", "true")
-        .parquet(paths.map(_.toString): _*),
+    if (cs.isEmpty || files.isEmpty) return
+    enforceConstraints(parquetOf(files).parquet(files.map(_._1.toString): _*),
       cs, op, headSchema)
   }
 
@@ -997,15 +1022,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * row groups, straight from the parquet footer — no data pages are
     * read, so the cost is O(columns), not O(rows). A column whose stats
     * are missing in ANY row group is dropped (conservative: the file
-    * stays a candidate for every predicate on that column).
+    * stays a candidate for every predicate on that column). The third
+    * part is the footer's Spark schema ([[footerSchema]]).
     */
-  private def footerInfo(p: Path): (Long, Map[String, ColStats]) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, hfs.getConf))
-    try {
-      val rowCount = reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+  private def footerInfo(p: Path): (Long, Map[String, ColStats], Option[StructType]) =
+    withFooter(p) { footer =>
+      val rowCount = footer.getBlocks.asScala.map(_.getRowCount).sum
       val acc = scala.collection.mutable.Map.empty[String, ColStats]
       val bad = scala.collection.mutable.Set.empty[String]
-      for (b <- reader.getFooter.getBlocks.asScala;
+      for (b <- footer.getBlocks.asScala;
            c <- b.getColumns.asScala if c.getPath.size == 1) {
         val name = c.getPath.toDotString
         val st = c.getStatistics
@@ -1041,8 +1066,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           }
         }
       }
-      (rowCount, (acc -- bad).toMap)
-    } finally reader.close()
+      (rowCount, (acc -- bad).toMap,
+        GraftSqlShim.footerSparkSchema(spark, p, footer))
+    }
+
+  /** `f` of the parquet footer of `p`, read on the driver. */
+  private def withFooter[T](p: Path)(
+      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, hfs.getConf))
+    try f(reader.getFooter) finally reader.close()
   }
 
   /** Snapshot read of the current version: the returned DataFrame is bound
@@ -1055,10 +1087,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // AND the transform spec
     val m = manifest(v)
     val meta = tableMeta
-    val df = readManifest(m, meta)
-    // hidden-partition transforms: the derived `_p_*` layout columns are
-    // internal — the public snapshot never shows them
-    val hidden = transformsFor(m, meta).map(_.derivedName).filter(df.columns.contains)
+    withoutLayout(readManifest(m, meta), transformsFor(m, meta))
+  }
+
+  /** `df` without the derived `_p_*` layout columns of the hidden-partition
+    * transforms `specs`: they are internal, and the public snapshot never
+    * shows them.
+    */
+  private def withoutLayout(df: DataFrame, specs: Seq[PartitionTransform]): DataFrame = {
+    val hidden = specs.map(_.derivedName).filter(df.columns.contains)
     if (hidden.isEmpty) df else df.drop(hidden: _*)
   }
 
@@ -1069,7 +1106,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       // a rewrite can legally commit an empty table (e.g. delete-all);
       // an empty-schema frame is the only honest value without a stored schema
       spark.emptyDataFrame
-    } else readFiles(m.dataNames, dvFrameOf(m.dvNames), partTypesOf(m), meta)
+    } else readFiles(m.data, dvFrameOf(m.dvNames), partTypesOf(m), meta)
   }
 
   /** This table's descriptor ([[TableMeta]]), read fresh on every call. */
@@ -1099,32 +1136,110 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     else Some(spark.read.schema(DvSchema)
       .parquet(names.map(n => new Path(dataDir, n).toString): _*))
 
-  /** The pool files `names` as one parquet relation. Reads of a
+  /** The pool `files` as one parquet relation. Reads of a
     * type-WIDENED table ([[TableMeta.widened]], set by ALTER COLUMN ...
     * TYPE) pass the declared schema: old files keep their narrow physical
     * types, so a merged-schema read would die on the int-vs-bigint
     * conflict, while an explicit schema lets the parquet readers promote
     * per file (int32→int64, float→double, decimal widening — native in
-    * both the vectorized and row-based readers). Never-widened tables
-    * read with mergeSchema, unless the caller passes `schema` — the head
-    * snapshot's schema, which it already inferred: that read runs no
-    * inference job, and a file lacking a column the head has reads it as
-    * typed NULLs. basePath (hive partition-column rehydration)
+    * both the vectorized and row-based readers). A caller may pass
+    * `schema`, the head snapshot's, which it already has: a file lacking
+    * a column the head has reads it as typed NULLs. Any other read
+    * declares the files' data columns from the footer-schema memo
+    * ([[poolSchema]]), so it runs no inference job, and infers them with
+    * mergeSchema only when the memo cannot serve it. Partition columns
+    * are never declared: their types come from the paths either way.
+    * basePath (hive partition-column rehydration)
     * applies only when every name is dataDir-relative
     * ([[Manifest.isAbsoluteName]]; `Path(dataDir, n)` resolves both) — an absolute
     * shallow-clone reference lives outside this table's root, where a
     * basePath that is not an ancestor is a hard error (clones are always
     * unpartitioned, so basePath is a no-op for them anyway).
     */
-  private def pool(names: Seq[String], meta: TableMeta = tableMeta,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val r = schema.orElse(meta.widenedReadSchema) match {
+  private def pool(files: Seq[Entry], meta: TableMeta = tableMeta,
+      schema: Option[StructType] = None): DataFrame = {
+    val r = schema.orElse(meta.widenedReadSchema).orElse(poolSchema(files)) match {
       case Some(s) => spark.read.schema(s)
       case None    => spark.read.option("mergeSchema", "true")
     }
-    (if (names.exists(Manifest.isAbsoluteName)) r else r.option("basePath", dataDir.toString))
-      .parquet(names.map(n => new Path(dataDir, n).toString): _*)
+    (if (files.exists(_.absolute)) r else r.option("basePath", dataDir.toString))
+      .parquet(files.map(e => new Path(dataDir, e.name).toString): _*)
   }
+
+  /** `data/`, qualified once: pool names resolve against it to the
+    * footer-schema memo's keys.
+    */
+  private lazy val qualifiedDataDir: Path = hfs.makeQualified(dataDir)
+
+  /** A pool entry's footer-schema memo address: its qualified path and
+    * byte length ([[bytesOf]]).
+    */
+  private def pooledFile(e: Entry): (Path, Long) = (new Path(qualifiedDataDir, e.name), bytesOf(e))
+
+  /** [[footerSchema]] of pool entries; None when a file stores one of its
+    * own hive partition columns, whose type the path value sets.
+    */
+  private def poolSchema(files: Seq[Entry]): Option[StructType] =
+    footerSchema(files.map(pooledFile)).filterNot { s =>
+      val partCols = files.iterator.filterNot(_.absolute)
+        .flatMap(_.name.split('/').init.map(_.takeWhile(_ != '='))).toSet
+      s.fieldNames.exists(f => partCols.exists(_.equalsIgnoreCase(f)))
+    }
+
+  /** The schema a mergeSchema read of the parquet `files` (qualified
+    * path, byte length) infers, without its Spark job: each file's schema
+    * comes from the footer-schema memo, and they fold left in path
+    * order, the order Spark's inference merges them in. Files the memo
+    * lacks have their footers read on the driver and memoized, when they
+    * number at most Spark's own threshold for listing files serially on
+    * the driver. None past it, and when a footer carries no Spark row
+    * metadata or cannot be read: the caller's read infers.
+    */
+  private def footerSchema(files: Seq[(Path, Long)]): Option[StructType] = {
+    val memo = files.map { case (p, len) => (p.toString, len) }.distinct.sortBy(_._1)
+      .map(k => k -> CommitLog.footerSchemas.get(k))
+    val missing = memo.count(_._2 == null)
+    if (!declaresFooterSchemas || memo.isEmpty ||
+        missing > GraftSqlShim.partitionDiscoveryThreshold(spark)) None
+    else {
+      val schemas = memo.map {
+        case (k, null) =>
+          val p = new Path(k._1)
+          val read = scala.util.Try(withFooter(p)(GraftSqlShim.footerSparkSchema(spark, p, _)))
+          read.foreach(CommitLog.footerSchemas.put(k, _))
+          read.toOption.flatten
+        case (_, s) => s
+      }
+      if (schemas.exists(_.isEmpty)) None
+      else Some(GraftSqlShim.mergedSchema(spark, schemas.flatten))
+    }
+  }
+
+  /** Whether reads declare their files' schemas ([[footerSchema]]) rather
+    * than infer them. Overridable for tests, which compare the two.
+    */
+  protected def declaresFooterSchemas: Boolean = true
+
+  /** A parquet reader of the files `files` (path, byte length) declaring
+    * their [[footerSchema]], or inferring it with mergeSchema when the
+    * memo cannot serve it.
+    */
+  private def parquetOf(files: Seq[(Path, Long)]): org.apache.spark.sql.DataFrameReader =
+    footerSchema(files.map { case (p, len) =>
+      (p.getFileSystem(hfs.getConf).makeQualified(p), len) })
+      .fold(spark.read.option("mergeSchema", "true"))(spark.read.schema)
+
+  /** The data schema of `m`'s whole snapshot, for a read of only some of
+    * its files ([[readEquals]], [[readWhere]], [[keyCandidateRows]]): a
+    * column the head has reads as typed NULLs from candidates that all
+    * predate it, as it does in [[read]]. From the memo, else one
+    * inference job over every file of the head. None on a widened table,
+    * whose declared schema [[pool]] reads.
+    */
+  private def snapshotSchema(m: Manifest, meta: TableMeta): Option[StructType] =
+    if (meta.widened || m.data.isEmpty) None
+    else poolSchema(m.data).orElse(Some(spark.read.option("mergeSchema", "true")
+      .parquet(m.data.map(e => new Path(dataDir, e.name).toString): _*).schema))
 
   /** A pool relation annotated with tombstone join keys: each row carries
     * its pool file LEAF name and its stable row position within that
@@ -1136,10 +1251,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         col("_metadata.file_path"), "/", -1).as(DvKeys.head),
       col("_metadata.row_index").as(DvKeys.last))
 
-  /** `names` with tombstone join keys, minus the rows `dv` tombstones. */
-  private def visibleWithPos(names: Seq[String], dv: Option[DataFrame],
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val rows = withPos(pool(names, schema = schema))
+  /** `files` with tombstone join keys, minus the rows `dv` tombstones. */
+  private def visibleWithPos(files: Seq[Entry], dv: Option[DataFrame],
+      schema: Option[StructType] = None): DataFrame = {
+    val rows = withPos(pool(files, schema = schema))
     dv.fold(rows)(rows.join(_, DvKeys, "left_anti"))
   }
 
@@ -1178,19 +1293,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       }))
     }
 
-  /** Read `names` with tombstones applied: an ANTI JOIN on (file,
+  /** Read `files` with tombstones applied: an ANTI JOIN on (file,
     * position) against the deletion vectors. The DV side is parquet-
     * backed and small by the MoR premise (tombstones, not data), so
     * Spark's size estimate broadcasts it and the scan stays one
     * shuffle-free codegen'd pass; stale tombstones referencing files no
-    * longer in `names` simply match nothing. No DVs = the plain scan.
+    * longer in `files` simply match nothing. No DVs = the plain scan.
     * `schema` is [[pool]]'s.
     */
-  private def readFiles(names: Seq[String], dv: Option[DataFrame],
+  private def readFiles(files: Seq[Entry], dv: Option[DataFrame],
       partTypes: Map[String, String] = Map.empty,
       meta: TableMeta = tableMeta,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val rel = pool(names, meta, schema)
+      schema: Option[StructType] = None): DataFrame = {
+    val rel = pool(files, meta, schema)
     val base = dv.fold(rel)(d =>
       withPos(rel).join(d, DvKeys, "left_anti").select(rel.columns.map(col).toIndexedSeq: _*))
     castParts(base, partTypes)
@@ -1372,6 +1487,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * its entry carries the footer stats plus an exact min=max bound per
     * partition value ([[partValueStats]]), so one conjunctive test serves
     * both pruning tiers. The uuid keeps racing writers' files apart.
+    * The same footer read gives the file's Spark schema, which the
+    * footer-schema memo records under the pooled name ([[footerSchema]]).
     * Returns each pooled part with its entry.
     */
   private def poolParts(parts: Seq[PoolPart], op: String,
@@ -1380,7 +1497,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val live = parts.map(p => (p, footerInfo(p.src))).filter(_._2._1 > 0)
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     hfs.mkdirs(dataDir)
-    live.zipWithIndex.map { case ((p, (rows, st)), i) =>
+    live.zipWithIndex.map { case ((p, (rows, st, sparkSchema)), i) =>
       val name = (p.subdirs :+ f"$uuid-part$i%05d.parquet").mkString("/")
       val dst = new Path(dataDir, name)
       if (p.subdirs.nonEmpty) hfs.mkdirs(dst.getParent)
@@ -1390,6 +1507,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         else hfs.rename(p.src, dst)
       if (!landed) throw new java.io.IOException(
         s"$op: could not ${if (copy) "copy" else "move"} ${p.src} into the pool")
+      CommitLog.footerSchemas.put((new Path(qualifiedDataDir, name).toString, p.len), sparkSchema)
       p -> Entry.pooled(name, st ++ partValueStats(p.subdirs, colType), rows, p.len)
     }
   }
@@ -1539,10 +1657,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // a rejected epoch's files stay in the writer's stage dir, which ages out
     val gate = new ConstraintGate
     val pre = headNow
-    gate(pre.checks)(enforceConstraintsOnPaths(paths, _, "commitPooledFiles", schemaOf(pre)))
-    val newEntries = poolParts(paths.sortBy(_.getName)
-      .map(p => PoolPart(p, hfs.getFileStatus(p).getLen)), "commitPooledFiles").map(_._2)
-    val pooledPaths = newEntries.map(e => new Path(dataDir, e.name))
+    val parts = paths.sortBy(_.getName).map(p => PoolPart(p, hfs.getFileStatus(p).getLen))
+    gate(pre.checks)(enforceConstraintsOnPaths(parts.map(p => (p.src, p.len)), _,
+      "commitPooledFiles", schemaOf(pre)))
+    val newEntries = poolParts(parts, "commitPooledFiles").map(_._2)
+    val pooledPaths = newEntries.map(pooledFile)
     headRace("commitPooledFiles", if (replace) "replace" else "append") {
       (head, prev) =>
         if (txn.exists(prev.hasTxn)) Settle(head)
@@ -1551,7 +1670,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           gate(prev.checks)(enforceConstraintsOnPaths(pooledPaths, _, "commitPooledFiles",
             schemaOf(prev)))
           val carried = if (replace) replaceCarriedData(prev,
-            pooledPaths.headOption.map(p => spark.read.parquet(p.toString).schema))
+            pooledPaths.headOption.map(f => parquetOf(Seq(f)).parquet(f._1.toString).schema))
           else prev
           publishAt(carried ++ txn.map(Header.txn) ++ newEntries)
         }
@@ -1640,8 +1759,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       if (!replace) requireUnpartitioned("commitCopiedWithTombstones(append)", prev)
       gate(prev.checks)(validate(prev))
       val carried = if (replace) replaceCarriedData(prev,
-        dataEntries.headOption.map(e =>
-          spark.read.parquet(new Path(dataDir, e.name).toString).schema))
+        dataEntries.headOption.map(pooledFile)
+          .map(f => parquetOf(Seq(f)).parquet(f._1.toString).schema))
       else prev
       publishAt(carried ++ dataEntries ++ tombEntries)
     }
@@ -1947,7 +2066,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def commitStaged(stageDir: String, replace: Boolean): Long = {
     val newEntries = poolFromStage(new Path(stageDir), "commitStaged")
-    val newPaths = newEntries.map(e => new Path(dataDir, e.name))
+    val newPaths = newEntries.map(pooledFile)
     val gate = new ConstraintGate
     val pre = headNow
     gate(pre.checks)(enforceConstraintsOnPaths(newPaths, _, "commitStaged", schemaOf(pre)))
@@ -2297,20 +2416,22 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   /** File names of the current version surviving transform pruning for
     * `cond` — the observability seam the specs pin file-skip counts on.
     */
-  private[graft] def prunedCandidates(cond: org.apache.spark.sql.Column)
-      : Seq[String] = {
+  private[graft] def prunedCandidates(cond: org.apache.spark.sql.Column): Seq[String] =
+    prunedCandidates(cond, manifest(committedHead()), tableMeta)
+
+  /** [[prunedCandidates]] of the snapshot `m`. */
+  private def prunedCandidates(cond: org.apache.spark.sql.Column, m: Manifest,
+      meta: TableMeta): Seq[String] = {
     import org.apache.spark.sql.catalyst.{expressions => E}
-    val v = committedHead()
-    val m = manifest(v)
     val names = m.dataNames
-    val specs = transformsFor(m)
+    val specs = transformsFor(m, meta)
     if (names.isEmpty) return names
     val stats = m.fileStats
     // a Spark-4 Column is a ColumnNode tree, not a catalyst expression:
     // resolve it the honest way — analyze a Filter over this snapshot
     // and lift the RESOLVED condition (attributes bound, literals
     // type-coerced/foldable) out of the plan. Driver-side, no execution.
-    val resolved = readVersion(v).filter(cond).queryExecution.analyzed
+    val resolved = readManifest(m, meta).filter(cond).queryExecution.analyzed
       .collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }
@@ -2440,15 +2561,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def readWhere(cond: org.apache.spark.sql.Column): DataFrame = {
     val v = committedHead()
     val m = manifest(v)
-    val specs = transformsFor(m)
-    def hide(df: DataFrame): DataFrame = {
-      val hidden = specs.map(_.derivedName).filter(df.columns.contains)
-      if (hidden.isEmpty) df else df.drop(hidden: _*)
-    }
+    val meta = tableMeta
+    def hide(df: DataFrame): DataFrame = withoutLayout(df, transformsFor(m, meta))
     if (m.data.isEmpty) return hide(readVersion(v).filter(cond))
-    val candidates = prunedCandidates(cond)
+    val candidates = prunedCandidates(cond, m, meta)
     if (candidates.isEmpty) hide(readVersion(v).filter(cond).limit(0))
-    else hide(readFiles(candidates, dvFrameOf(m.dvNames), partTypesOf(m)).filter(cond))
+    else hide(readFiles(m.dataEntries(candidates), dvFrameOf(m.dvNames), partTypesOf(m), meta,
+      snapshotSchema(m, meta)).filter(cond))
   }
 
   // ---- named refs: tags, branches, write-audit-publish ---------------------
@@ -2717,9 +2836,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // split the branch's data entries into its OWN pool files (relative
     // names — the audited new/rewritten data) and references back into
     // main's pool (absolute — untouched since the fork)
-    val own = branch.data.filterNot(_.absolute).map(_.name)
+    val ownEntries = branch.data.filterNot(_.absolute)
+    val own = ownEntries.map(_.name)
     val main = manifest(head)
-    enforceConstraintsOnPaths(own.map(n => new Path(bData, n)),
+    enforceConstraintsOnPaths(ownEntries.map(e => new Path(bData, e.name) ->
+        e.bytes.getOrElse(hfs.getFileStatus(new Path(bData, e.name)).getLen)),
       main.checks, s"fastForward('$name')", schemaOf(main))
     hfs.mkdirs(dataDir)
     val moved = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
@@ -3130,21 +3251,29 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   protected def nameCollectCap: Int = 4 * 1024 * 1024
 
-  /** Distinct values of `c`, fetched as ROWS with a map-side-combined
-    * distinct — never `collect_set` into one giant array cell (a single
-    * row whose one value holds every name trips driver single-object
-    * limits long before the same names as a row stream would). Throws
-    * loudly past [[nameCollectCap]] instead of OOMing the driver.
+  /** Distinct values of `c`, deduplicated within each partition and
+    * unioned on the driver: one job and no exchange, where a `distinct`
+    * plans a shuffle (a map-stage job plus a final one). The driver gets
+    * each name at most once per partition. For the names of the files a
+    * scan reads ([[findTouched]], [[touchedBy]]) that is at most one per
+    * split; for a tombstone scan, at most the named data files per
+    * partition: metadata-scale either way. Names arrive as ROWS, never
+    * `collect_set` into one giant array cell (a single row whose one
+    * value holds every name trips driver single-object limits long
+    * before the same names as a row stream would). Throws loudly past
+    * [[nameCollectCap]] instead of OOMing the driver.
     */
   private def collectNames(df: DataFrame, c: String, what: String): Set[String] = {
     val cap = nameCollectCap
-    val rows = df.select(col(c)).filter(col(c).isNotNull)
-      .distinct().limit(cap + 1).collect()
-    if (rows.length > cap) throw new IllegalStateException(
+    val names = df.select(col(c)).filter(col(c).isNotNull)
+      .as(org.apache.spark.sql.Encoders.STRING)
+      .mapPartitions(CommitLog.distinctWithin)(org.apache.spark.sql.Encoders.STRING)
+      .collect().toSet
+    if (names.size > cap) throw new IllegalStateException(
       s"$what: more than $cap distinct file names under $tableRoot — " +
         "refusing to materialize the set on the driver; compact the table " +
         "or raise nameCollectCap")
-    rows.iterator.map(_.getString(0)).toSet
+    names
   }
 
   /** Pool files of `m` that CONTAIN at least one of `keys`. `keys` is
@@ -3176,7 +3305,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       // instead of drifting with path inference over the read set.
       val byLeaf = candidates.map(n => leafOf(n) -> n).toMap
       collectNames(
-        castParts(pool(candidates, schema = Some(schema)), partTypes)
+        castParts(pool(m.dataEntries(candidates), schema = Some(schema)), partTypes)
           .withColumn("_graft_file", input_file_name())
           .join(keys.frame, Seq(keyCol), "semi"),
         "_graft_file", "findTouched")
@@ -3204,20 +3333,32 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       statsCandidates(m, Seq((keyCol, lo, hi)))
     }
 
+  /** The head's visible rows in the files whose `keyCol` stats admit
+    * `keys` ([[keyCandidates]]), tombstones applied, read through the
+    * head's whole schema ([[snapshotSchema]]) and shaped as [[read]]
+    * shapes the snapshot. None, at no job, when no file can hold a key or
+    * nothing is committed. A superset of the keys' rows: the caller joins
+    * `keys.frame`.
+    */
+  private[catalog] def keyCandidateRows(keys: CommitLog.BatchKeys,
+      keyCol: String): Option[DataFrame] =
+    currentVersion.flatMap { v =>
+      val m = manifest(v)
+      val candidates = keyCandidates(m, keys, keyCol)
+      Option.when(candidates.nonEmpty) {
+        val meta = tableMeta
+        withoutLayout(readFiles(m.dataEntries(candidates), dvFrameOf(m.dvNames),
+          partTypesOf(m), meta, snapshotSchema(m, meta)), transformsFor(m, meta))
+      }
+    }
+
   /** Whether the head holds a visible row whose `keyCol` is one of `keys`.
-    * Exact: the stats tier narrows the head's files ([[keyCandidates]]),
-    * then one semi-join over only those files, tombstones applied,
+    * Exact: one semi-join over the key candidates ([[keyCandidateRows]])
     * answers; there is no refine cap. Keys outside every file's bounds
     * cost no job.
     */
   private[catalog] def holdsAnyKey(keys: CommitLog.BatchKeys, keyCol: String): Boolean =
-    currentVersion.exists { v =>
-      val m = manifest(v)
-      val candidates = keyCandidates(m, keys, keyCol)
-      candidates.nonEmpty &&
-        !readFiles(candidates, dvFrameOf(m.dvNames), partTypesOf(m))
-          .join(keys.frame, Seq(keyCol), "semi").isEmpty
-    }
+    keyCandidateRows(keys, keyCol).exists(!_.join(keys.frame, Seq(keyCol), "semi").isEmpty)
 
   /** Data files of `m` holding a VISIBLE row that matches `cond` — the
     * predicate twin of [[findTouched]] behind [[rewriteWhere]] and
@@ -3237,7 +3378,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     if (names.isEmpty) Set.empty
     else {
       val leaves = collectNames(
-        castParts(visibleWithPos(names, dv, Some(schema)), partTypesOf(m)).filter(cond),
+        castParts(visibleWithPos(m.data, dv, Some(schema)), partTypesOf(m)).filter(cond),
         DvKeys.head, op)
       names.filter(n => leaves(leafOf(n))).toSet
     }
@@ -3319,7 +3460,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // all files pruned: zero-row frame with the table schema, no scan
     // (OptimizeLimitZero folds the limit-0 into an empty relation)
     else if (candidates.isEmpty) readVersion(v).filter(pred).limit(0)
-    else readFiles(candidates, dvFrameOf(m.dvNames), partTypesOf(m)).filter(pred)
+    else {
+      val meta = tableMeta
+      readFiles(m.dataEntries(candidates), dvFrameOf(m.dvNames), partTypesOf(m), meta,
+        snapshotSchema(m, meta)).filter(pred)
+    }
   }
 
   /** Copy-on-write MERGE (upsert by key): rows of `updates` replace
@@ -3360,8 +3505,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // must not resurrect through the rewrite. The head schema reads a
         // column a touched file predates as NULL; under evolution the
         // survivors pad the batch's new columns (allowMissingColumns)
-        else readFiles(touched.toSeq.sorted, dvFrameOf(head.dvNames), partTypes,
-            schema = Some(b.schema))
+        else readFiles(head.dataEntries(touched.toSeq.sorted), dvFrameOf(head.dvNames),
+            partTypes, schema = Some(b.schema))
           .join(keys.frame, Seq(keyCol), "left_anti")
           .select(b.cols.map(col): _*)
           .unionByName(b.applied, allowMissingColumns = true)
@@ -3443,8 +3588,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       if (touched.isEmpty) Settle(v)
       else {
         val kept = head.filterEntries(e => e.dv || !touched(e.name))
-        val survivors = readFiles(touched.toSeq.sorted, dvFrameOf(head.dvNames),
-            partTypes, schema = Some(schema))
+        val survivors = readFiles(head.dataEntries(touched.toSeq.sorted),
+            dvFrameOf(head.dvNames), partTypes, schema = Some(schema))
           .join(keys.frame, Seq(keyCol), "left_anti")
           .select(schema.fieldNames.toSeq.map(col): _*)
         // partitioned survivors restage under their subdirs (see merge)
@@ -3480,8 +3625,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         val survivorEntries =
           if (touched.isEmpty) Seq.empty
           else {
-            val survivors = readFiles(touched.toSeq.sorted, dv, partTypesOf(head),
-                schema = Some(schema))
+            val survivors = readFiles(head.dataEntries(touched.toSeq.sorted), dv,
+                partTypesOf(head), schema = Some(schema))
               // SQL DELETE semantics: rows where the predicate is NULL survive
               .filter(!coalesce(cond, lit(false)))
               .select(schema.fieldNames.toSeq.map(col): _*)
@@ -3534,8 +3679,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         val setMap = sets.toMap
         // one pass over touched files: every column's new value is chosen
         // against the pre-update row, so SET a=b, b=a swaps correctly
-        val rewritten = readFiles(touched.toSeq.sorted, dv, partTypesOf(head),
-            schema = Some(schema))
+        val rewritten = readFiles(head.dataEntries(touched.toSeq.sorted), dv,
+            partTypesOf(head), schema = Some(schema))
           .select(schema.fieldNames.toSeq.map { c =>
             setMap.get(c) match {
               case Some(e) => when(matched, e).otherwise(col(c)).as(c)
@@ -3587,7 +3732,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val names = head.dataNames
       if (names.isEmpty) Settle(v)
       else {
-        val visible = visibleWithPos(names, dvFrameOf(head.dvNames))
+        val visible = visibleWithPos(head.data, dvFrameOf(head.dvNames))
         // matched rows carry their (file, pos) keys AND their data columns,
         // evaluated once: the tombstones and the updated copies come from
         // the same rows, even under a nondeterministic predicate (rand()),
@@ -3638,7 +3783,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val staged =
         if (names.isEmpty) Seq.empty
         else {
-          val visible = visibleWithPos(names, dvFrameOf(head.dvNames))
+          val visible = visibleWithPos(head.data, dvFrameOf(head.dvNames))
           stage(visible.filter(coalesce(cond, lit(false)))
             .select(DvKeys.map(col): _*), Nil, "deleteWhereMoR")
         }
@@ -3672,7 +3817,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val candidates = keyCandidates(m, keys, keyCol)
     if (candidates.isEmpty) Seq.empty
     else {
-      val visible = visibleWithPos(candidates, dvFrameOf(m.dvNames), schema)
+      val visible = visibleWithPos(m.dataEntries(candidates), dvFrameOf(m.dvNames), schema)
       stage(visible.join(keys.frame, Seq(keyCol), "semi")
         .select(DvKeys.map(col): _*), Nil, op).map(_.asDv)
     }
@@ -3800,8 +3945,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // wrong column type back into the pool files
         val survivorEntries =
           if (touched.isEmpty) Seq.empty
-          else stage(readFiles(touched.toSeq.sorted, Some(dv), partTypesOf(head)),
-            head.partitionColumns, "rewriteDeletes")
+          else stage(readFiles(head.dataEntries(touched.toSeq.sorted), Some(dv),
+            partTypesOf(head)), head.partitionColumns, "rewriteDeletes")
         Publish(kept ++ survivorEntries, _ => (dvN.length, touched.size))
       }
     }
@@ -3862,8 +4007,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           if (straddle.isEmpty) Seq.empty
           else {
             val schema = schemaOf(head)
-            val survivors = readFiles(straddle.sorted, dvFrameOf(head.dvNames),
-                partTypesOf(head), schema = Some(schema))
+            val survivors = readFiles(head.dataEntries(straddle.sorted),
+                dvFrameOf(head.dvNames), partTypesOf(head), schema = Some(schema))
               // NULL retention column survives (SQL DELETE semantics)
               .filter(!coalesce(col(column) < lit(cutoff), lit(false)))
               .select(schema.fieldNames.toSeq.map(col): _*)
@@ -4083,10 +4228,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def changesBetween(fromV: Long, toV: Long): DataFrame = {
     require(fromV <= toV, s"changesBetween: fromV $fromV > toV $toV")
-    val from = files(fromV).toSet
-    val to = files(toV).toSet
-    val fromDvN = dvFiles(fromV).toSet
-    val toDvN = dvFiles(toV).toSet
+    val (mFrom, mTo) = (manifest(fromV), manifest(toV))
+    val from = mFrom.dataNames.toSet
+    val to = mTo.dataNames.toSet
+    val fromDvN = mFrom.dvNames.toSet
+    val toDvN = mTo.dvNames.toSet
     val fromDv = dvFrameOf(fromDvN.toSeq.sorted)
     val toDv = dvFrameOf(toDvN.toSeq.sorted)
     val added = (to -- from).toSeq.sorted
@@ -4096,10 +4242,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // added file's rows already tombstoned at toV were never visible, and
     // a removed file's rows already tombstoned at fromV were already gone
     val fileParts = Seq(
-      (added, toDv, "insert", toV),
-      (removed, fromDv, "delete", fromV)).collect {
-      case (ns, dv, tag, v) if ns.nonEmpty =>
-        readFiles(ns, dv, partTypesOf(manifest(v)))
+      (added, toDv, "insert", mTo),
+      (removed, fromDv, "delete", mFrom)).collect {
+      case (ns, dv, tag, m) if ns.nonEmpty =>
+        readFiles(m.dataEntries(ns), dv, partTypesOf(m))
           .withColumn("_change_type", lit(tag))
     }
     // tombstone diffs on files present at BOTH ends: a DV file added in
@@ -4115,7 +4261,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         .intersect(common).toSeq.sorted
       val effective = stillDead.fold(d)(sd => d.join(sd, DvKeys, "left_anti"))
       if (targets.isEmpty) None
-      else Some(withPos(pool(targets)).join(effective, DvKeys, "semi")
+      else Some(withPos(pool(mTo.dataEntries(targets))).join(effective, DvKeys, "semi")
         .drop(DvKeys: _*).withColumn("_change_type", lit(tag)))
     }.flatten
     val newDvDeletes = dvDiffRows(dvFrameOf((toDvN -- fromDvN).toSeq.sorted), fromDv, "delete")
@@ -4508,7 +4654,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       if (perFileRows.nonEmpty) perFileRows.max else 1000000L)
     val numBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(numItems, fpp)
-    val index = bloomEntries(column, names, numItems, numBits)
+    val index = bloomEntries(column, m.data, numItems, numBits)
     val idxRoot = new Path(tableRoot, s"_index/bloom/$column")
     val idxDir = new Path(idxRoot, s"v$v")
     index.write.mode("overwrite").parquet(idxDir.toString)
@@ -4532,19 +4678,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     (v, names.length)
   }
 
-  /** One (name, bf) row per pool file in `names`: Spark's own
+  /** One (name, bf) row per pool file of `files`: Spark's own
     * `BloomFilterAggregate` of `xxhash64(column)` grouped by file —
     * shared by the full build and the per-commit incremental maintain.
     * The (qualified path → manifest name) mapping rides as a
     * broadcastable frame: it must survive partition subdirs, and the
     * names list is already manifest-resident.
     */
-  private def bloomEntries(column: String, names: Seq[String],
+  private def bloomEntries(column: String, files: Seq[Entry],
       numItems: Long, numBits: Long): DataFrame = {
     import spark.implicits._
-    val nameOf = names.map { n =>
-      val p = new Path(dataDir, n)
-      hfs.makeQualified(p).toString -> n
+    val nameOf = files.map { e =>
+      val p = new Path(dataDir, e.name)
+      hfs.makeQualified(p).toString -> e.name
     }.toDF("path", "name")
     val hashed = org.apache.spark.sql.functions.xxhash64(col(s"`$column`"))
     val bloomAgg = org.apache.spark.sql.GraftSqlShim.column(
@@ -4553,7 +4699,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         org.apache.spark.sql.catalyst.expressions.Literal(numItems),
         org.apache.spark.sql.catalyst.expressions.Literal(numBits))
         .toAggregateExpression())
-    pool(names)
+    pool(files)
       .select(col("_metadata.file_path").as("path"), col(s"`$column`"))
       .groupBy(col("path"))
       .agg(bloomAgg.as("bf"))
@@ -4584,8 +4730,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         if (v <= 1) Set.empty[String]
         else rawManifest(v - 1).dataNames.toSet
       val added = m.data.filterNot(e => prev(e.name))
-      val newNames = added.filterNot(_.absolute).map(_.name)
-      if (newNames.isEmpty) return
+      val fresh = added.filterNot(_.absolute)
+      if (fresh.isEmpty) return
       val rowsOf = added.flatMap(_.rows)
       val numItems = math.max(1024L, if (rowsOf.nonEmpty) rowsOf.max else 1000000L)
       hfs.listStatus(base).map(_.getPath.getName).foreach { column =>
@@ -4595,7 +4741,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           // appended parts ride the SAME index dir (the probe reads the
           // dir wholesale); filters may be sized differently per batch —
           // each file's filter is probed independently, so that's fine
-          bloomEntries(column, newNames, numItems, numBits)
+          bloomEntries(column, fresh, numItems, numBits)
             .write.mode("append").parquet(dir.toString)
         }
       }
@@ -4623,15 +4769,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val prev =
         if (v <= 1) Set.empty[String]
         else rawManifest(v - 1).dataNames.toSet
-      val newNames = m.data.filterNot(e => prev(e.name) || e.absolute).map(_.name)
-      if (newNames.isEmpty) return
+      val fresh = m.data.filterNot(e => prev(e.name) || e.absolute).sortBy(_.name)
+      if (fresh.isEmpty) return
       hfs.listStatus(base).map(_.getPath.getName).foreach { column =>
         AnnIndex.metaOf(spark, tableRoot, column).foreach { case (_, idCol, dir) =>
           AnnIndex.load(spark, tableRoot, column).foreach { case (_, cents, assigns) =>
-            val fresh = readFiles(newNames.sorted, None)
+            val vecs = readFiles(fresh, None)
               .select(col(idCol).cast("long").as("vec_id"),
                 col(column).as("embedding"))
-            graft.ops.KMeansIvf.assign(fresh, cents)
+            graft.ops.KMeansIvf.assign(vecs, cents)
               .select(col("vec_id"), col("c_id"))
               .join(assigns.select(col("vec_id")), Seq("vec_id"), "left_anti")
               .write.mode("append")
@@ -4753,7 +4899,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       }
     }
     if (candidates.isEmpty) readVersion(v).filter(rowPred).limit(0)
-    else readFiles(candidates, dvFrameOf(m.dvNames), partTypesOf(m)).filter(rowPred)
+    else {
+      val meta = tableMeta
+      readFiles(m.dataEntries(candidates), dvFrameOf(m.dvNames), partTypesOf(m), meta,
+        snapshotSchema(m, meta)).filter(rowPred)
+    }
   }
 
 
@@ -4845,7 +4995,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           // declared clustering: the pack rewrite is the convergence point —
           // files written before the declaration (or restaged by CoW ops)
           // come out range-clustered here
-          val packed = readFiles(pack.sorted, None, partTypesOf(head))
+          val packed = readFiles(head.dataEntries(pack.sorted), None, partTypesOf(head))
           val laidOut =
             if (head.clustering.nonEmpty) clustered(packed, partCols, Some(nOut))
             else if (partCols.isEmpty) packed.coalesce(nOut)

@@ -57,6 +57,11 @@ private[catalog] final case class Manifest(items: Seq[Manifest.Line]) {
   lazy val data: Seq[Entry] = entries.filterNot(_.dv)
   lazy val dvs: Seq[Entry] = entries.filter(_.dv)
   def dataNames: Seq[String] = data.map(_.name)
+  /** The data entries named by `names`, in that order. */
+  def dataEntries(names: Seq[String]): Seq[Entry] = {
+    val byName = data.iterator.map(e => e.name -> e).toMap
+    names.map(byName)
+  }
   def dvNames: Seq[String] = dvs.map(_.name)
 
   /** Per-file column bounds of the data entries that carry stats. */

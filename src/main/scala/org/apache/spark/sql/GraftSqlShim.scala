@@ -1,6 +1,13 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.spark.SparkException
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.errors.QueryExecutionErrors
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` Dataset constructor so graft can wrap a
   * custom LogicalPlan (graft.plans.AsOfJoinPlan) as a public DataFrame —
@@ -15,4 +22,39 @@ object GraftSqlShim {
 
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  private def conf(spark: SparkSession) =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
+  /** The schema Spark's own inference takes from the parquet footer of
+    * `path` (`ParquetFileFormat.readSchemaFromFooter`), when the footer
+    * carries Spark's row-metadata schema; None when it does not, since
+    * converting the bare parquet schema depends on session conf.
+    */
+  def footerSparkSchema(spark: SparkSession, path: Path,
+      footer: ParquetMetadata): Option[StructType] =
+    if (!footer.getFileMetaData.getKeyValueMetaData
+        .containsKey(ParquetReadSupport.SPARK_METADATA_KEY)) None
+    else Some(ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+      new ParquetToSparkSchemaConverter(conf(spark))))
+
+  /** `schemas` merged left to right, as a `mergeSchema` parquet read
+    * merges its files' schemas, failing with the same error on a
+    * conflict.
+    */
+  def mergedSchema(spark: SparkSession, schemas: Seq[StructType]): StructType = {
+    val caseSensitive = conf(spark).caseSensitiveAnalysis
+    schemas.reduceLeft { (acc, s) =>
+      try acc.merge(s, caseSensitive)
+      catch {
+        case e: SparkException => throw QueryExecutionErrors.failedMergingSchemaError(acc, s, e)
+      }
+    }
+  }
+
+  /** Most files a read lists serially on the driver
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`).
+    */
+  def partitionDiscoveryThreshold(spark: SparkSession): Int =
+    conf(spark).parallelPartitionDiscoveryThreshold
 }

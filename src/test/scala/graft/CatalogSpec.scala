@@ -909,6 +909,30 @@ class CatalogSpec extends AnyFunSuite {
       "the touched file must have been replaced by the CoW rewrite")
   }
 
+  test("audit log: a MoR status correction outlasts more racing appends than " +
+      "a copy-on-write rewrite's 5 attempts") {
+    val root = freshRoot() + "/audit"
+    val plain = new AuditLog(spark, root)
+    plain.append("req-1", "create", "fn", Map("t" -> "c"), "{}")
+    val racers = 7
+    assert(racers > 5 && racers < graft.catalog.AuditLog.MorStatusAttempts)
+    // a concurrent append wins the targeted version before each of the
+    // correction's first `racers` publishes
+    val racing = new AuditLog(spark, root) {
+      override protected def newLog(): graft.catalog.CommitLog =
+        new graft.catalog.CommitLog(spark, root) {
+          override protected def beforePublish(attempt: Int, v: Long): Unit =
+            if (attempt < racers) new AuditLog(spark, root).append(s"race-$attempt",
+              "create", "fn", Map("t" -> "c"), "{}")
+        }
+    }
+    racing.setStatus("req-1", "create", "failed", mor = true)
+    val st = plain.events.select("aws_request_id", "status")
+      .as[(String, String)].collect()
+    assert(st.toMap.apply("req-1") == "failed" && st.length == racers + 1,
+      s"every racing append and the correction must land once: ${st.toSeq}")
+  }
+
   test("registry failover: promoteSecondary makes every replica writable " +
       "and fences the primaries; reverse resync reaches parity") {
     import graft.catalog.TargetSystem

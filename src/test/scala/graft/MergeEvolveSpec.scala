@@ -263,6 +263,26 @@ class MergeEvolveSpec extends AnyFunSuite {
     assert(rows.size == 152)
   }
 
+  test("pruned reads after evolution keep the head's columns when every " +
+      "candidate predates one") {
+    val log = evolvedPast(freshRoot())
+    val head = log.read().schema
+    // each read's stats pruning leaves only the first seeded file
+    val reads = Seq(
+      "readEquals" -> log.readEquals(Seq("k" -> 50L)),
+      "readBetween" -> log.readBetween("k", 40L, 60L),
+      "readWhere(ranges)" -> log.readWhere(Seq(("k", 40L, 60L))),
+      "readWhere(cond)" -> log.readWhere(col("k") >= 40L && col("k") <= 60L))
+    val narrow = reads.collect { case (name, df) if df.schema != head =>
+      s"$name: ${df.schema.simpleString}" }
+    assert(narrow.isEmpty, s"head ${head.simpleString}; ${narrow.mkString("; ")}")
+    reads.foreach { case (name, df) =>
+      val rows = df.select("k", "v", "w").as[(Long, Long, Option[String])].collect()
+      assert(rows.exists(_ == ((50L, 500L, None))), s"$name: ${rows.toSeq}")
+    }
+    assert(log.readEquals(Seq("k" -> 201L)).select("w").as[String].collect().toSeq == Seq("n"))
+  }
+
   test("transform replace: the hidden _p_ layout columns never count as drift") {
     val root = freshRoot()
     val log = new CommitLog(spark, root)
