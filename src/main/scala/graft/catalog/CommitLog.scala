@@ -320,27 +320,51 @@ object CommitLog {
     }
   }
 
-  /** The distinct values of one partition ([[CommitLog.collectNames]]). */
-  private val distinctWithin: Iterator[String] => Iterator[String] = _.toSet.iterator
+  /** The distinct values of one partition ([[CommitLog.collectNames]]),
+    * at most `cap` + 1 of them: past `cap` the caller throws anyway.
+    */
+  private def distinctWithin(cap: Int): Iterator[String] => Iterator[String] = { it =>
+    val seen = scala.collection.mutable.HashSet.empty[String]
+    while (it.hasNext && seen.size <= cap) seen += it.next()
+    seen.iterator
+  }
 
   /** Pool files the footer-schema memo holds; the least recently used
-    * entry leaves first.
+    * entry leaves first. A read of more files than this still gets its
+    * schema from one footer job, but it pays that job on every call.
     */
-  private val FooterSchemaCap: Int = 8192
+  private val FooterSchemaCap: Int = 65536
 
   /** Footer-schema memo, JVM-wide: a parquet file's qualified path and
-    * byte length → the Spark schema its footer records, or None for a
-    * footer without Spark's row metadata (a read holding one infers).
-    * Pool files are immutable and uuid-named, so an entry never goes
-    * stale. [[CommitLog.poolParts]] fills it from the footer it already
-    * reads; a lookup costs no I/O.
+    * byte length, and the session's [[GraftSqlShim.FooterConversion]] →
+    * the schema Spark's inference takes from its footer. Pool files
+    * are immutable and uuid-named, so an entry never goes stale.
+    * [[CommitLog.poolParts]] fills it from the footer it already reads,
+    * and a read that finds files missing fills it with one footer job; a
+    * lookup costs no I/O. Files written together mostly share a schema,
+    * so values are interned ([[internSchema]]).
     */
   private val footerSchemas = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long), Option[StructType]](256, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), Option[StructType]]): Boolean =
+    new java.util.LinkedHashMap[FooterKey, StructType](256, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[FooterKey, StructType]): Boolean =
         size() > FooterSchemaCap
     })
+
+  private type FooterKey = (String, Long, GraftSqlShim.FooterConversion)
+
+  /** Canonical instances of the memo's schemas, held weakly. */
+  private val internedSchemas =
+    new java.util.WeakHashMap[StructType, java.lang.ref.WeakReference[StructType]]
+
+  private def internSchema(s: StructType): StructType = internedSchemas.synchronized {
+    Option(internedSchemas.get(s)).flatMap(r => Option(r.get)).getOrElse {
+      internedSchemas.put(s, new java.lang.ref.WeakReference(s))
+      s
+    }
+  }
+
+  private def memoizeFooterSchema(k: FooterKey, s: StructType): Unit =
+    footerSchemas.put(k, internSchema(s)): Unit
 
   /** Drop the memo's entries for files under `root` (a qualified path). */
   private[catalog] def forgetFooterSchemas(root: String): Unit =
@@ -1023,10 +1047,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * read, so the cost is O(columns), not O(rows). A column whose stats
     * are missing in ANY row group is dropped (conservative: the file
     * stays a candidate for every predicate on that column). The third
-    * part is the footer's Spark schema ([[footerSchema]]).
+    * part is the schema Spark's inference takes from the footer under
+    * `conv` ([[footerSchema]]).
     */
-  private def footerInfo(p: Path): (Long, Map[String, ColStats], Option[StructType]) =
-    withFooter(p) { footer =>
+  private def footerInfo(p: Path, conv: GraftSqlShim.FooterConversion)
+      : (Long, Map[String, ColStats], StructType) = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, hfs.getConf))
+    try {
+      val footer = reader.getFooter
       val rowCount = footer.getBlocks.asScala.map(_.getRowCount).sum
       val acc = scala.collection.mutable.Map.empty[String, ColStats]
       val bad = scala.collection.mutable.Set.empty[String]
@@ -1066,15 +1094,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           }
         }
       }
-      (rowCount, (acc -- bad).toMap,
-        GraftSqlShim.footerSparkSchema(spark, p, footer))
-    }
-
-  /** `f` of the parquet footer of `p`, read on the driver. */
-  private def withFooter[T](p: Path)(
-      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, hfs.getConf))
-    try f(reader.getFooter) finally reader.close()
+      (rowCount, (acc -- bad).toMap, conv.schemaOf(p, footer))
+    } finally reader.close()
   }
 
   /** Snapshot read of the current version: the returned DataFrame is bound
@@ -1146,8 +1167,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * `schema`, the head snapshot's, which it already has: a file lacking
     * a column the head has reads it as typed NULLs. Any other read
     * declares the files' data columns from the footer-schema memo
-    * ([[poolSchema]]), so it runs no inference job, and infers them with
-    * mergeSchema only when the memo cannot serve it. Partition columns
+    * ([[poolSchema]]), so it runs no inference job once the memo holds
+    * its files, and infers them with mergeSchema only when the memo
+    * cannot give them. Partition columns
     * are never declared: their types come from the paths either way.
     * basePath (hive partition-column rehydration)
     * applies only when every name is dataDir-relative
@@ -1187,33 +1209,30 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     }
 
   /** The schema a mergeSchema read of the parquet `files` (qualified
-    * path, byte length) infers, without its Spark job: each file's schema
-    * comes from the footer-schema memo, and they fold left in path
-    * order, the order Spark's inference merges them in. Files the memo
-    * lacks have their footers read on the driver and memoized, when they
-    * number at most Spark's own threshold for listing files serially on
-    * the driver. None past it, and when a footer carries no Spark row
-    * metadata or cannot be read: the caller's read infers.
+    * path, byte length) infers, from the footer-schema memo: each file's
+    * schema folds left in path order, the order Spark's inference merges
+    * them in. Files the memo lacks cost one footer job, run as inference
+    * runs its own, whose schemas fill the memo. None when a footer is
+    * left out as corrupt: the caller's read infers.
     */
-  private def footerSchema(files: Seq[(Path, Long)]): Option[StructType] = {
-    val memo = files.map { case (p, len) => (p.toString, len) }.distinct.sortBy(_._1)
-      .map(k => k -> CommitLog.footerSchemas.get(k))
-    val missing = memo.count(_._2 == null)
-    if (!declaresFooterSchemas || memo.isEmpty ||
-        missing > GraftSqlShim.partitionDiscoveryThreshold(spark)) None
+  private def footerSchema(files: Seq[(Path, Long)]): Option[StructType] =
+    if (!declaresFooterSchemas || files.isEmpty) None
     else {
-      val schemas = memo.map {
-        case (k, null) =>
-          val p = new Path(k._1)
-          val read = scala.util.Try(withFooter(p)(GraftSqlShim.footerSparkSchema(spark, p, _)))
-          read.foreach(CommitLog.footerSchemas.put(k, _))
-          read.toOption.flatten
-        case (_, s) => s
+      val conv = GraftSqlShim.footerConversion(spark)
+      val keys = files.map { case (p, len) => (p.toString, len) }.distinct.sortBy(_._1)
+      val known = keys.flatMap { case k @ (p, len) =>
+        Option(CommitLog.footerSchemas.get((p, len, conv))).map(k -> _)
+      }.toMap
+      val missing = keys.filterNot(known.contains)
+      val read =
+        if (missing.isEmpty) Map.empty[String, StructType]
+        else GraftSqlShim.footerSchemasInParallel(spark, conv, missing)
+      missing.foreach { case (p, len) =>
+        read.get(p).foreach(CommitLog.memoizeFooterSchema((p, len, conv), _))
       }
-      if (schemas.exists(_.isEmpty)) None
-      else Some(GraftSqlShim.mergedSchema(spark, schemas.flatten))
+      val schemas = keys.flatMap(k => known.get(k).orElse(read.get(k._1)))
+      Option.when(schemas.length == keys.length)(GraftSqlShim.mergedSchema(spark, schemas))
     }
-  }
 
   /** Whether reads declare their files' schemas ([[footerSchema]]) rather
     * than infer them. Overridable for tests, which compare the two.
@@ -1221,8 +1240,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   protected def declaresFooterSchemas: Boolean = true
 
   /** A parquet reader of the files `files` (path, byte length) declaring
-    * their [[footerSchema]], or inferring it with mergeSchema when the
-    * memo cannot serve it.
+    * their [[footerSchema]], or inferring it with mergeSchema when that is
+    * None.
     */
   private def parquetOf(files: Seq[(Path, Long)]): org.apache.spark.sql.DataFrameReader =
     footerSchema(files.map { case (p, len) =>
@@ -1232,9 +1251,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   /** The data schema of `m`'s whole snapshot, for a read of only some of
     * its files ([[readEquals]], [[readWhere]], [[keyCandidateRows]]): a
     * column the head has reads as typed NULLs from candidates that all
-    * predate it, as it does in [[read]]. From the memo, else one
-    * inference job over every file of the head. None on a widened table,
-    * whose declared schema [[pool]] reads.
+    * predate it, as it does in [[read]]. From the memo, which one footer
+    * job fills with the files of the head it lacks (a JVM that did not
+    * write them), after which every pruned read of the head is served;
+    * one inference job over every file of the head only when the memo
+    * cannot give it ([[poolSchema]]). None on a widened table, whose
+    * declared schema [[pool]] reads.
     */
   private def snapshotSchema(m: Manifest, meta: TableMeta): Option[StructType] =
     if (meta.widened || m.data.isEmpty) None
@@ -1487,17 +1509,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * its entry carries the footer stats plus an exact min=max bound per
     * partition value ([[partValueStats]]), so one conjunctive test serves
     * both pruning tiers. The uuid keeps racing writers' files apart.
-    * The same footer read gives the file's Spark schema, which the
-    * footer-schema memo records under the pooled name ([[footerSchema]]).
+    * The same footer read gives the schema Spark's inference takes from
+    * it, which the footer-schema memo records under the pooled name
+    * ([[footerSchema]]).
     * Returns each pooled part with its entry.
     */
   private def poolParts(parts: Seq[PoolPart], op: String,
       colType: Map[String, String] = Map.empty,
       copy: Boolean = false): Seq[(PoolPart, Entry)] = {
-    val live = parts.map(p => (p, footerInfo(p.src))).filter(_._2._1 > 0)
+    val conv = GraftSqlShim.footerConversion(spark)
+    val live = parts.map(p => (p, footerInfo(p.src, conv))).filter(_._2._1 > 0)
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     hfs.mkdirs(dataDir)
-    live.zipWithIndex.map { case ((p, (rows, st, sparkSchema)), i) =>
+    live.zipWithIndex.map { case ((p, (rows, st, schema)), i) =>
       val name = (p.subdirs :+ f"$uuid-part$i%05d.parquet").mkString("/")
       val dst = new Path(dataDir, name)
       if (p.subdirs.nonEmpty) hfs.mkdirs(dst.getParent)
@@ -1507,7 +1531,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         else hfs.rename(p.src, dst)
       if (!landed) throw new java.io.IOException(
         s"$op: could not ${if (copy) "copy" else "move"} ${p.src} into the pool")
-      CommitLog.footerSchemas.put((new Path(qualifiedDataDir, name).toString, p.len), sparkSchema)
+      CommitLog.memoizeFooterSchema((new Path(qualifiedDataDir, name).toString, p.len, conv),
+        schema)
       p -> Entry.pooled(name, st ++ partValueStats(p.subdirs, colType), rows, p.len)
     }
   }
@@ -3254,20 +3279,21 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   /** Distinct values of `c`, deduplicated within each partition and
     * unioned on the driver: one job and no exchange, where a `distinct`
     * plans a shuffle (a map-stage job plus a final one). The driver gets
-    * each name at most once per partition. For the names of the files a
-    * scan reads ([[findTouched]], [[touchedBy]]) that is at most one per
-    * split; for a tombstone scan, at most the named data files per
-    * partition: metadata-scale either way. Names arrive as ROWS, never
-    * `collect_set` into one giant array cell (a single row whose one
-    * value holds every name trips driver single-object limits long
-    * before the same names as a row stream would). Throws loudly past
-    * [[nameCollectCap]] instead of OOMing the driver.
+    * each name at most once per partition, and at most
+    * [[nameCollectCap]] + 1 names from any partition. For the names of
+    * the files a scan reads ([[findTouched]], [[touchedBy]]) that is at
+    * most one per split; for a tombstone scan, at most the named data
+    * files per partition: metadata-scale either way. Names arrive as
+    * ROWS, never `collect_set` into one giant array cell (a single row
+    * whose one value holds every name trips driver single-object limits
+    * long before the same names as a row stream would). Throws loudly
+    * past [[nameCollectCap]] instead of OOMing the driver.
     */
   private def collectNames(df: DataFrame, c: String, what: String): Set[String] = {
     val cap = nameCollectCap
     val names = df.select(col(c)).filter(col(c).isNotNull)
       .as(org.apache.spark.sql.Encoders.STRING)
-      .mapPartitions(CommitLog.distinctWithin)(org.apache.spark.sql.Encoders.STRING)
+      .mapPartitions(CommitLog.distinctWithin(cap))(org.apache.spark.sql.Encoders.STRING)
       .collect().toSet
     if (names.size > cap) throw new IllegalStateException(
       s"$what: more than $cap distinct file names under $tableRoot — " +

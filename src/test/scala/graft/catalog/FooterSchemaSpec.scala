@@ -63,7 +63,10 @@ class FooterSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
     CommitLog.forgetFooterSchemas(
       HadoopFs.fs(spark, root).makeQualified(new Path(root)).toString)
 
-  private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+  private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toSeq.map {
+    case bytes: Array[Byte] => bytes.toSeq
+    case v => v
+  }.toString).sorted.toSeq
 
   /** `log`'s read of `root` against the inferring read: same schema, same
     * rows. Returns the jobs the served read needed for its schema.
@@ -187,61 +190,95 @@ class FooterSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
     clone.merge(typed(5, 6).withColumn("s", lit("cloned")), "k")
     assert(sameAsInferred(clone, root) == 0)
     forget(src)
-    assert(sameAsInferred(clone, root) == 0, "cold: two source footers read on the driver")
+    assert(sameAsInferred(clone, root) == 1, "cold: one job reads the source's footers")
+    assert(sameAsInferred(clone, root) == 0)
   }
 
-  /** One parquet file written without Spark's row metadata. */
-  private def foreignFile(rows: Seq[(Long, String)]): Path = {
+  /** One parquet file written without Spark's row metadata; with
+    * `rawBinary` it also holds `b`, `p`'s bytes in a binary column with no
+    * string annotation.
+    */
+  private def foreignFile(rows: Seq[(Long, String)], rawBinary: Boolean = false): Path = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.parquet.schema.MessageTypeParser
-    val schema = MessageTypeParser.parseMessageType(
-      "message t { required int64 k; optional binary p (STRING); }")
+    val schema = MessageTypeParser.parseMessageType("message t { required int64 k; " +
+      s"optional binary p (STRING); ${if (rawBinary) "optional binary b;" else ""} }")
     val dir = java.nio.file.Files.createTempDirectory("graft_fschema_src").toString
     val path = new Path(dir, "foreign.parquet")
     val conf = spark.sparkContext.hadoopConfiguration
     val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(path, conf))
       .withConf(conf).withType(schema).build()
     val groups = new SimpleGroupFactory(schema)
-    try rows.foreach { case (k, p) => w.write(groups.newGroup().append("k", k).append("p", p)) }
+    try rows.foreach { case (k, p) =>
+      val g = groups.newGroup().append("k", k).append("p", p)
+      w.write(if (rawBinary) g.append("b", p) else g)
+    }
     finally w.close()
     path
   }
 
-  test("a pooled file without Spark metadata is not served: its read infers") {
+  test("a pooled file without Spark metadata is served like any other") {
     val root = tmp()
     val log = new CommitLog(spark, root)
     log.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "p"), replace = false)
     log.commitPooledFiles(Seq(foreignFile(Seq(3L -> "c", 4L -> "d"))), replace = false, None)
-    assert(sameAsInferred(log, root) > 0)
+    assert(sameAsInferred(log, root) == 0)
     assert(log.read().count() == 4)
     // a keyed write beside the foreign file reads the head through the
-    // inferred schema and leaves the foreign file in place
+    // served schema and leaves the foreign file in place
     log.merge(Seq((1L, "aa")).toDF("k", "p"), "k")
     assert(log.read().filter(col("k") === 1L).select("p").as[String].collect().toSeq ==
       Seq("aa"))
-    assert(sameAsInferred(log, root) > 0)
-    // rewriting it leaves only Spark-written files, which are served
-    log.merge(Seq((3L, "cc")).toDF("k", "p"), "k")
     assert(sameAsInferred(log, root) == 0)
-    assert(log.read().count() == 4)
+    forget(root)
+    assert(sameAsInferred(log, root) == 1, "cold: one job reads every footer")
+    assert(sameAsInferred(log, root) == 0)
   }
 
-  test("a cold memo reads the footers on the driver, with no job") {
+  test("a footer without Spark metadata converts under each session's settings") {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    val root = tmp()
+    val log = new CommitLog(spark, root)
+    log.commitPooledFiles(Seq(foreignFile(Seq(1L -> "a", 2L -> "b"), rawBinary = true)),
+      replace = false, None)
+    assert(sameAsInferred(log, root) == 0)
+    assert(log.read().schema("b").dataType == BinaryType)
+    val asString = spark.newSession()
+    asString.conf.set("spark.sql.parquet.binaryAsString", "true")
+    val other = new CommitLog(asString, root)
+    assert(jobsOf(other.read().schema) == 1, "new settings: one job converts the footer")
+    assert(jobsOf(other.read().schema) == 0)
+    val want = new CommitLog(asString, root) {
+      override protected def declaresFooterSchemas: Boolean = false
+    }.read()
+    assert(other.read().schema == want.schema)
+    assert(other.read().schema("b").dataType == StringType)
+    assert(rowsOf(other.read()) == rowsOf(want))
+    // the first session's entry stays
+    assert(jobsOf(log.read().schema("b").dataType == BinaryType) == 0)
+  }
+
+  test("a cold memo is filled by one footer job, after which reads are served") {
     val root = tmp()
     val log = new CommitLog(spark, root)
     log.commit(typed(0, 30).repartition(6), replace = false)
     log.merge(typed(3, 4).withColumn("s", lit("x")), "k")
     forget(root)
+    assert(sameAsInferred(log, root) == 1)
     assert(sameAsInferred(log, root) == 0)
-    // and from a handle that never wrote the table
+    // a handle that never wrote the table: a pruned read fills the memo
+    // with the whole head once
     forget(root)
-    assert(sameAsInferred(new CommitLog(spark, root), root) == 0)
+    val fresh = new CommitLog(spark, root)
+    assert(jobsOf(fresh.readEquals(Seq("k" -> 3L)).schema) == 1)
+    assert(jobsOf(fresh.readEquals(Seq("k" -> 20L)).schema) == 0)
+    assert(fresh.readEquals(Seq("k" -> 3L)).select("s").as[String].collect().toSeq == Seq("x"))
+    assert(sameAsInferred(fresh, root) == 0)
   }
 
-  test("more unknown files than the serial-listing threshold: the read infers, " +
-      "unchanged") {
+  test("more files than Spark lists serially: a cold read pays one footer job, once") {
     val root = tmp()
     val log = new CommitLog(spark, root)
     val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
@@ -252,6 +289,7 @@ class FooterSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
     val warm = sameAsInferred(log, root)
     forget(root)
     val cold = sameAsInferred(log, root)
-    assert(cold == warm + 1, s"cold $cold jobs, warm $warm: one inference job apart")
+    assert(cold == warm + 1, s"cold $cold jobs, warm $warm: one footer job apart")
+    assert(sameAsInferred(log, root) == warm)
   }
 }
