@@ -577,17 +577,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * single-table commits are never blocked and never lost.
     */
   private[graft] def publishPending(df: DataFrame, id: String,
-      decisionUri: String, replace: Boolean, maxAttempts: Int = 50): Long = {
-    val pre = headNow
-    enforceConstraints(df, pre.checks, "xtxn", schemaOf(pre))
-    val newEntries = stage(df, Nil, "xtxn")
-    headRace("publishPending", "xtxn", maxAttempts) { (_, prev) =>
-      if (!replace) requireUnpartitioned("publishPending(append)", prev)
-      val carried =
-        if (replace) replaceCarriedData(prev, Some(df.schema)) else prev
-      publishAt(Header.xtxn(id, decisionUri) +: (carried ++ newEntries))
-    }
-  }
+      decisionUri: String, replace: Boolean, maxAttempts: Int = 50): Long =
+    commitWhole("publishPending", "xtxn", replace, budget = maxAttempts,
+        extra = Seq(Header.xtxn(id, decisionUri)))(
+      (cs, m) => enforceConstraints(df, cs, "xtxn", schemaOf(m)),
+      declared => stage(clustered(df, Nil, declared), Nil, "xtxn"),
+      _ => Some(df.schema))
 
   /** Data pool file names (relative to data/) of a committed version. */
   def files(v: Long): Seq[String] = manifest(v).dataNames
@@ -649,10 +644,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def txns(v: Long): Set[String] = manifest(v).txns.toSet
 
   /** The head version when `txn` already landed there: a redelivered
-    * batch returns it before validating or staging anything.
+    * batch returns it before validating or staging anything. `head` (the
+    * head version and its manifest) is read only when `txn` is given.
     */
-  private def appliedAt(txn: Option[String]): Option[Long] =
-    txn.flatMap(id => currentVersion.filter(v => txns(v).contains(id)))
+  private def appliedAt(txn: Option[String],
+      head: => (Long, Manifest) = pinnedHead): Option[Long] =
+    txn.flatMap { id => val (v, m) = head; if (m.hasTxn(id)) Some(v) else None }
 
   // ---- CHECK constraints ---------------------------------------------------
 
@@ -879,17 +876,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     }
   }
 
-  /** Apply the declared clustering layout to an outgoing batch: range-
-    * repartition on (partition cols ++ clustering cols) — disjoint
-    * ranges across tasks by construction — then sort within each task,
-    * so hive partition splitting keeps per-file clustering-column runs
-    * contiguous and footer bounds tight. A batch missing any clustering
+  /** Apply the `declared` clustering layout (the write's pinned head's)
+    * to an outgoing batch: range-repartition on (partition cols ++
+    * clustering cols) — disjoint ranges across tasks by construction —
+    * then sort within each task, so hive partition splitting keeps
+    * per-file clustering-column runs contiguous and footer bounds tight.
+    * A batch missing any clustering
     * column (schema evolution) stages as-is: layout is best-effort,
     * correctness never depends on it.
     */
-  private def clustered(df: DataFrame, partCols: Seq[String] = Seq.empty,
+  private def clustered(df: DataFrame, partCols: Seq[String], declared: Seq[String],
       numParts: Option[Int] = None): DataFrame = {
-    val declared = clusteringColumns
     val have = df.columns.toSet
     if (declared.isEmpty || !declared.forall(have)) return df
     val keys = (partCols.filter(have) ++ declared).map(col)
@@ -1016,8 +1013,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       cs, op, headSchema)
   }
 
-  /** The head a write validates against before its [[headRace]]. */
-  private def headNow: Manifest = currentVersion.map(manifest).getOrElse(Manifest.empty)
+  /** The head version and its manifest (v0 and the empty manifest for an
+    * uncommitted table): what a write validates against before its
+    * [[headRace]].
+    */
+  private def pinnedHead: (Long, Manifest) = {
+    val v = currentVersion.getOrElse(0L)
+    (v, manifest(v))
+  }
 
   /** The read schema of `m`'s snapshot: one schema-inference job (none
     * for a widened table, whose declared schema is read as is).
@@ -1358,29 +1361,74 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * the pair only wholly-published or wholly-absent.
     */
   def commit(df: DataFrame, replace: Boolean, txn: Option[String],
-      header: Option[(String, String)]): Long = {
-    for (v <- appliedAt(txn)) return v
+      header: Option[(String, String)]): Long = header match {
+    case Some((Manifest.Op, op)) => commitPartitioned(df, Nil, replace, txn, Some(op))
+    case _ => commitPartitioned(df, Nil, replace, txn,
+      extraHeader = header.map { case (k, hv) => Header(k, hv).text })
+  }
+
+  /** The one body of every commit that adds whole files: [[commitPartitioned]]
+    * (and so [[commit]]), [[commitPooledFiles]], [[commitStaged]],
+    * [[commitCopiedWithTombstones]] and [[publishPending]] supply only
+    * their batch and their headers. One head read before the race settles
+    * an already-applied `txn`, holds the append layout rule
+    * ([[requireAppendable]]), validates the batch (`check(cs, head)`)
+    * before anything is staged, so a rejected batch leaves no pool
+    * litter, and gives the declared clustering `stageBatch` lays the batch
+    * out by. Each [[headRace]] attempt then does the same against its own
+    * head, re-validating through the write's [[ConstraintGate]], and
+    * publishes the `#partition:` header of a partitioned write and `extra`
+    * (each superseding its same-key line), the carried head, the `#txn:`
+    * line and the staged entries. An append carries the head whole; a replace
+    * carries [[replaceCarriedData]], `newSchema(entries)` being the
+    * replacement's schema.
+    */
+  private def commitWhole(name: String, op: String, replace: Boolean,
+      partCols: Seq[String] = Nil, txn: Option[String] = None,
+      extra: Seq[Manifest.Line] = Nil, budget: Int = 50)(
+      check: (Map[String, String], Manifest) => Unit,
+      stageBatch: Seq[String] => Seq[Entry],
+      newSchema: Seq[Entry] => Option[StructType]): Long = {
+    val (preV, pre) = pinnedHead
+    for (v <- appliedAt(txn, (preV, pre))) return v
+    if (!replace) requireAppendable(name, partCols, pre, raced = false)
     val gate = new ConstraintGate
-    val pre = headNow
-    gate(pre.checks)(enforceConstraints(df, _, "commit", schemaOf(pre)))
-    val newEntries = stage(clustered(df), Nil, "commit")
-    val opName = header.collect { case (Manifest.Op, hv) => hv }
-      .getOrElse(if (replace) "replace" else "append")
-    headRace("commit", opName) { (head, prev) =>
+    gate(pre.checks)(check(_, pre))
+    val entries = stageBatch(pre.clustering)
+    val headers = (if (partCols.isEmpty) Nil else Seq(Header.partition(partCols))) ++ extra
+    val superseded = headers.collect { case h: Header => h.key }
+    headRace(name, op, budget) { (head, prev) =>
       if (txn.exists(prev.hasTxn)) Settle(head)  // lost the race to our own id's writer
       else {
-        if (!replace) requireUnpartitioned("commit(append)", prev)
-        gate(prev.checks)(enforceConstraints(df, _, "commit", schemaOf(prev)))
+        if (!replace) requireAppendable(name, partCols, prev, raced = true)
+        gate(prev.checks)(check(_, prev))
         // a replace drops the file lines but MUST carry the txn headers —
         // applied-batch memory outlives any rewrite or compaction
-        val carried0 =
-          if (replace) replaceCarriedData(prev, Some(df.schema)) else prev
-        val carried = header.fold(carried0) { case (k, _) => carried0.without(k) }
-        publishAt(carried ++ txn.map(Header.txn) ++
-          header.map { case (k, hv) => Header(k, hv) } ++ newEntries)
+        val carried = if (replace) replaceCarriedData(prev, newSchema(entries)) else prev
+        publishAt(Manifest(headers) ++ carried.without(superseded: _*) ++
+          txn.map(Header.txn) ++ entries)
       }
     }
   }
+
+  /** The append layout rule of [[commitWhole]]: a flat append refuses a
+    * hive-partitioned head ([[requireUnpartitioned]]); a partitioned one
+    * needs the head's spec, or a head holding no data files (hive subdir
+    * lines over flat lines mix directory depths). `raced` names a head
+    * that moved after the write's pre-race check.
+    */
+  private def requireAppendable(name: String, partCols: Seq[String], m: Manifest,
+      raced: Boolean): Unit =
+    if (partCols.isEmpty) requireUnpartitioned(s"$name(append)", m)
+    else {
+      val have = m.partitionColumns
+      val layout = if (have.isEmpty) "flat" else s"partitioned by $have"
+      require(have == partCols || (have.isEmpty && m.data.isEmpty),
+        if (raced) s"$name: head layout changed by a concurrent commit (now $layout); " +
+          s"append by $partCols would mix layouts"
+        else s"$name: head is $layout, append by $partCols would mix layouts " +
+          "(replace=true may change the spec)")
+    }
 
   /** The value of a version's `#<key>:` manifest header, if present. */
   def headerOf(v: Long, key: String): Option[String] = manifest(v).header(key)
@@ -1603,66 +1651,20 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * ([[deleteWhereMoR]], O(rows)) with [[rewriteDeletes]] as the
     * partition-aware fold. Only flat APPENDS refuse
     * ([[requireUnpartitioned]]) — mixing layouts is a correctness
-    * error.
+    * error. An empty `partitionCols` is the flat [[commit]]. An
+    * `extraHeader` line (e.g. `#ptspec:`) supersedes its same-key line
+    * and rides the same atomic publish as the data it describes.
     */
   def commitPartitioned(df: DataFrame, partitionCols: Seq[String],
       replace: Boolean, txn: Option[String] = None,
       op: Option[String] = None,
       extraHeader: Option[String] = None): Long = {
-    require(partitionCols.nonEmpty, "commitPartitioned: empty partition column list")
-    for (v <- appliedAt(txn)) return v
-    currentVersion.filter(_ => !replace).foreach { v =>
-      val prevManifest = manifest(v)
-      val existing = prevManifest.partitionColumns
-      // an empty-spec head is only appendable when it holds NO data
-      // files: hive subdir lines over flat lines mix directory depths
-      require(existing == partitionCols ||
-          (existing.isEmpty && prevManifest.data.isEmpty),
-        s"commitPartitioned: head is ${if (existing.isEmpty) "flat"
-          else s"partitioned by $existing"}, append by $partitionCols " +
-          "would mix layouts (replace=true may change the spec)")
-    }
-    val gate = new ConstraintGate
-    val pre = headNow
-    gate(pre.checks)(enforceConstraints(df, _, "commitPartitioned", schemaOf(pre)))
-    val newEntries = stage(clustered(df, partitionCols), partitionCols, "commitPartitioned")
-    val extra = extraHeader.map(Manifest.parseLine)
-    headRace("commitPartitioned",
-        op.getOrElse(if (replace) "replace" else "append")) { (head, prev) =>
-      if (txn.exists(prev.hasTxn)) Settle(head)
-      else {
-        // re-check the spec against the CURRENT head on every attempt: a
-        // concurrent replace can change/drop the spec between the entry
-        // check and this publish, and appending our header over the racer's
-        // file lines would mix directory layouts under data/ (the partitioned
-        // mirror of the flat paths' requireUnpartitioned)
-        if (!replace) {
-          val headCols = prev.partitionColumns
-          // same rule as the entry check: a racer that replaced the table
-          // FLAT (empty spec, data lines present) must also refuse — an
-          // empty spec alone is only safe over an empty table
-          require(headCols == partitionCols ||
-              (headCols.isEmpty && prev.data.isEmpty),
-            s"commitPartitioned: head layout changed by a concurrent commit " +
-              s"(now ${if (headCols.isEmpty) "flat" else s"partitioned by $headCols"}); " +
-              s"append by $partitionCols would mix layouts")
-        }
-        gate(prev.checks)(enforceConstraints(df, _, "commitPartitioned", schemaOf(prev)))
-        // shape-aware carry: a partitioned INSERT OVERWRITE that changes
-        // the column set drops the stale evolved `#schema:` header like
-        // the flat path; the RLO restage and other shape-preserving
-        // replaces match the recorded map and keep it
-        val carried0 =
-          if (replace) replaceCarriedData(prev, Some(df.schema))
-          else prev.without(Manifest.Partition)
-        // an extra header (e.g. #ptspec:) supersedes its prior same-key
-        // line — it rides the SAME atomic publish as the data it describes
-        val carried = extra.collect { case h: Header => carried0.without(h.key) }
-          .getOrElse(carried0)
-        publishAt(Header.partition(partitionCols) +: (Manifest(extra.toSeq) ++ carried ++
-          txn.map(Header.txn) ++ newEntries))
-      }
-    }
+    val name = if (partitionCols.isEmpty) "commit" else "commitPartitioned"
+    commitWhole(name, op.getOrElse(if (replace) "replace" else "append"), replace,
+        partitionCols, txn, extraHeader.map(Manifest.parseLine).toSeq)(
+      (cs, m) => enforceConstraints(df, cs, name, schemaOf(m)),
+      declared => stage(clustered(df, partitionCols, declared), partitionCols, name),
+      _ => Some(df.schema))
   }
 
   /** Commit EXPLICITLY NAMED staged parquet files (not a whole staging
@@ -1677,30 +1679,29 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   private[catalog] def commitPooledFiles(paths: Seq[Path], replace: Boolean,
       txn: Option[String]): Long = {
-    for (v <- appliedAt(txn)) return v
     if (paths.isEmpty && !replace) return currentVersion.getOrElse(0L)
-    // a rejected epoch's files stay in the writer's stage dir, which ages out
-    val gate = new ConstraintGate
-    val pre = headNow
-    val parts = paths.sortBy(_.getName).map(p => PoolPart(p, hfs.getFileStatus(p).getLen))
-    gate(pre.checks)(enforceConstraintsOnPaths(parts.map(p => (p.src, p.len)), _,
-      "commitPooledFiles", schemaOf(pre)))
-    val newEntries = poolParts(parts, "commitPooledFiles").map(_._2)
-    val pooledPaths = newEntries.map(pooledFile)
-    headRace("commitPooledFiles", if (replace) "replace" else "append") {
-      (head, prev) =>
-        if (txn.exists(prev.hasTxn)) Settle(head)
-        else {
-          if (!replace) requireUnpartitioned("commitPooledFiles(append)", prev)
-          gate(prev.checks)(enforceConstraintsOnPaths(pooledPaths, _, "commitPooledFiles",
-            schemaOf(prev)))
-          val carried = if (replace) replaceCarriedData(prev,
-            pooledPaths.headOption.map(f => parquetOf(Seq(f)).parquet(f._1.toString).schema))
-          else prev
-          publishAt(carried ++ txn.map(Header.txn) ++ newEntries)
-        }
-    }
+    lazy val parts = paths.sortBy(_.getName).map(p => PoolPart(p, hfs.getFileStatus(p).getLen))
+    // the batch is validated where it lies: in the writer's stage dir until
+    // it pools (a rejected epoch's files stay there and age out), then in
+    // the pool
+    var pooled: Option[Seq[(Path, Long)]] = None
+    commitWhole("commitPooledFiles", if (replace) "replace" else "append", replace,
+        txn = txn)(
+      (cs, m) => enforceConstraintsOnPaths(pooled.getOrElse(parts.map(p => (p.src, p.len))),
+        cs, "commitPooledFiles", schemaOf(m)),
+      _ => {
+        val entries = poolParts(parts, "commitPooledFiles").map(_._2)
+        pooled = Some(entries.map(pooledFile))
+        entries
+      },
+      firstFileSchema)
   }
+
+  /** The footer schema of the first data file among pooled `entries`: a
+    * file-based replace's `newSchema` ([[commitWhole]]).
+    */
+  private def firstFileSchema(entries: Seq[Entry]): Option[StructType] =
+    entries.find(!_.dv).map(pooledFile).map(f => parquetOf(Seq(f)).parquet(f._1.toString).schema)
 
   /** Import externally-produced parquet files WITH row-level deletes in
     * ONE atomic commit: each source file pools byte-identical under a
@@ -1759,36 +1760,27 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             .drop("_graft_src", "_graft_del_pos")
       }
     }
-    val gate = new ConstraintGate
-    def validate(head: Manifest)(cs: Map[String, String]): Unit =
-      if (cs.nonEmpty) enforceConstraints(liveRows, cs, "commitCopiedWithTombstones",
-        schemaOf(head))
-    val pre = headNow
-    gate(pre.checks)(validate(pre))
-    val pooled = poolParts(srcs.map(p =>
-      PoolPart(p, HadoopFs.fs(spark, p.toString).getFileStatus(p).getLen)),
-      "commitCopiedWithTombstones", copy = true)
-    val dataEntries = pooled.map(_._2)
-    val tombEntries = tombs match {
-      case None => Seq.empty
-      case Some(t) =>
-        val mapDf = pooled.map { case (p, e) => (p.src.toUri.getPath, e.name) }
-          .toDF("_graft_src", DvKeys.head)
-        val keyed = t
-          .join(org.apache.spark.sql.functions.broadcast(mapDf), Seq("_graft_src"))
-          .select(col(DvKeys.head),
-            col("_graft_del_pos").cast("long").as(DvKeys.last))
-        stage(keyed, Nil, "importDeletes").map(_.asDv)
-    }
-    headRace("commitCopiedWithTombstones", "import") { (_, prev) =>
-      if (!replace) requireUnpartitioned("commitCopiedWithTombstones(append)", prev)
-      gate(prev.checks)(validate(prev))
-      val carried = if (replace) replaceCarriedData(prev,
-        dataEntries.headOption.map(pooledFile)
-          .map(f => parquetOf(Seq(f)).parquet(f._1.toString).schema))
-      else prev
-      publishAt(carried ++ dataEntries ++ tombEntries)
-    }
+    commitWhole("commitCopiedWithTombstones", "import", replace)(
+      (cs, m) => if (cs.nonEmpty) enforceConstraints(liveRows, cs,
+        "commitCopiedWithTombstones", schemaOf(m)),
+      _ => {
+        val pooled = poolParts(srcs.map(p =>
+          PoolPart(p, HadoopFs.fs(spark, p.toString).getFileStatus(p).getLen)),
+          "commitCopiedWithTombstones", copy = true)
+        val tombEntries = tombs match {
+          case None => Seq.empty
+          case Some(t) =>
+            val mapDf = pooled.map { case (p, e) => (p.src.toUri.getPath, e.name) }
+              .toDF("_graft_src", DvKeys.head)
+            val keyed = t
+              .join(org.apache.spark.sql.functions.broadcast(mapDf), Seq("_graft_src"))
+              .select(col(DvKeys.head),
+                col("_graft_del_pos").cast("long").as(DvKeys.last))
+            stage(keyed, Nil, "importDeletes").map(_.asDv)
+        }
+        pooled.map(_._2) ++ tombEntries
+      },
+      firstFileSchema)
   }
 
   /** Incremental physical replication from `src` (this log is the
@@ -2092,14 +2084,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   def commitStaged(stageDir: String, replace: Boolean): Long = {
     val newEntries = poolFromStage(new Path(stageDir), "commitStaged")
     val newPaths = newEntries.map(pooledFile)
-    val gate = new ConstraintGate
-    val pre = headNow
-    gate(pre.checks)(enforceConstraintsOnPaths(newPaths, _, "commitStaged", schemaOf(pre)))
-    headRace("commitStaged", if (replace) "replace" else "append") { (_, prev) =>
-      if (!replace) requireUnpartitioned("commitStaged(append)", prev)
-      gate(prev.checks)(enforceConstraintsOnPaths(newPaths, _, "commitStaged", schemaOf(prev)))
-      publishAt((if (replace) replaceCarried(prev) else prev) ++ newEntries)
-    }
+    // a row-level rewrite preserves the table's shape: its replace carries
+    // the evolved schema of record unconditionally (no `newSchema`)
+    commitWhole("commitStaged", if (replace) "replace" else "append", replace)(
+      (cs, m) => enforceConstraintsOnPaths(newPaths, cs, "commitStaged", schemaOf(m)),
+      _ => newEntries, _ => None)
   }
 
   /** Zero-copy SHALLOW CLONE: publish this (empty) table's v1 as a
@@ -2172,6 +2161,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // branch point.
     val cloned = Header.cloned(srcRoot, v) +:
       (srcManifest.only(Manifest.Contracts) ++ absEntries)
+    // single-shot, not a headRace: a clone must be v1, so a lost race has no retry
     if (!publish(1, cloned.set(Header.op("clone")))) throw new java.io.IOException(
       s"cloneFrom: lost the v1 race under $tableRoot")
     // a concurrent source vacuum may have dropped a time-travel target
@@ -2892,6 +2882,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // standing table lineage and contracts stay MAIN's (txn memory,
     // constraints, clustering); the branch ships data, not DDL
     val published = (replaceCarried(main) ++ rewritten).set(Header.op("fast_forward"))
+    // single-shot, not a headRace: a moved head ends the fast-forward, and
+    // its renames roll back
     if (!publish(head + 1, published)) {
       rollback()
       throw new IllegalStateException(
@@ -4115,17 +4107,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // columns: each shuffle range then holds one partition's value slab,
     // and the hive re-stage keeps the c=v layout — partition-local
     // clustering, never a flat rewrite
-    replaceAs(readVersion(v).repartitionByRange(nOut, keys: _*)
-      .sortWithinPartitions(keys: _*), partCols, "optimize")
+    commitPartitioned(readVersion(v).repartitionByRange(nOut, keys: _*)
+      .sortWithinPartitions(keys: _*), partCols, replace = true, op = Some("optimize"))
     (m.data.length, currentFileCount)
   }
-
-  /** Replace the table's content with `df` under the `partCols` layout,
-    * stamped `op` — the publish of the whole-table maintenance rewrites.
-    */
-  private def replaceAs(df: DataFrame, partCols: Seq[String], op: String): Long =
-    if (partCols.isEmpty) commit(df, replace = true, None, Some(Manifest.Op -> op))
-    else commitPartitioned(df, partCols, replace = true, op = Some(op))
 
   /** Z-order cluster the head snapshot on `columns` (the multi-dimension
     * OPTIMIZE ZORDER maintenance op): rows are range-partitioned and
@@ -4230,10 +4215,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // pruning on the partition column and on the z-ordered dimensions
     // compose instead of one destroying the other
     val keys = partCols.map(col) :+ col("_graft_z")
-    replaceAs(snap.withColumn("_graft_z", zval)
+    commitPartitioned(snap.withColumn("_graft_z", zval)
       .repartitionByRange(nOut, keys: _*)
       .sortWithinPartitions(keys: _*)
-      .drop("_graft_z"), partCols, "optimize")
+      .drop("_graft_z"), partCols, replace = true, op = Some("optimize"))
     (m.data.length, currentFileCount)
   }
 
@@ -4994,9 +4979,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       if (head.dvs.nonEmpty) {
         // tombstoned snapshot: full rewrite, which also folds the DVs
         val all = readManifest(head)
-        replaceAs(if (partCols.nonEmpty) all
+        commitPartitioned(if (partCols.nonEmpty) all
           else all.coalesce(fileCount(head.data.map(bytesOf).sum, targetFileBytes)),
-          partCols, "compact")
+          partCols, replace = true, op = Some("compact"))
         Settle((names.length, currentFileCount))
       } else {
         val sized = head.data.map(e => (e.name, bytesOf(e)))
@@ -5023,7 +5008,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           // come out range-clustered here
           val packed = readFiles(head.dataEntries(pack.sorted), None, partTypesOf(head))
           val laidOut =
-            if (head.clustering.nonEmpty) clustered(packed, partCols, Some(nOut))
+            if (head.clustering.nonEmpty) clustered(packed, partCols, head.clustering, Some(nOut))
             else if (partCols.isEmpty) packed.coalesce(nOut)
             else packed.repartition(nOut, partCols.map(col): _*)
           Publish(kept ++ stage(laidOut, partCols, "compact"),

@@ -993,9 +993,7 @@ private[catalog] object GraftProcedures {
       val logical = log.read().select(schema.fields.map(f =>
         col(s"`${ColumnMapping.physicalName(f)}`").as(f.name)).toIndexedSeq: _*)
       val partCols = GraftTable.resolve(cat.sparkSession, root).partCols
-      val v =
-        if (partCols.nonEmpty) log.commitPartitioned(logical, partCols, replace = true)
-        else log.commit(logical, replace = true)
+      val v = log.commitPartitioned(logical, partCols, replace = true)
       val plain = org.apache.spark.sql.types.StructType(schema.fields.map(f =>
         f.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
       TableMeta.update(HadoopFs.fs(cat.sparkSession, root), root)(

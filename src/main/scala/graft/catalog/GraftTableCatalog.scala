@@ -873,25 +873,17 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
               // hidden-partition transforms: route through the deriving
               // commit so the declared layout holds on every SQL INSERT
               lazy val tspecs = log.partitionTransforms.map(_.spec)
+              // (an empty partCols is the flat commit)
               mode match {
-              case AppendMode if partCols.nonEmpty =>
-                log.commitPartitioned(data, partCols, replace = false): Unit
-              case AppendMode if tspecs.nonEmpty =>
-                log.commitTransformed(data, tspecs, replace = false): Unit
-              case AppendMode        => log.commit(data, replace = false): Unit
-              case TruncateMode if partCols.nonEmpty =>
-                log.commitPartitioned(data, partCols, replace = true): Unit
-              case TruncateMode if tspecs.nonEmpty =>
-                log.commitTransformed(data, tspecs, replace = true): Unit
-              case TruncateMode      => log.commit(data, replace = true): Unit
               case OverwriteMode(c)  =>
-                if (log.currentVersion.isEmpty) {
-                  if (partCols.nonEmpty)
-                    log.commitPartitioned(data, partCols, replace = true): Unit
-                  else log.commit(data, replace = true): Unit
-                } else log.rewriteWhere(c, Some(data)): Unit
+                if (log.currentVersion.isEmpty)
+                  log.commitPartitioned(data, partCols, replace = true): Unit
+                else log.rewriteWhere(c, Some(data)): Unit
                 // (rewriteWhere is partition-aware: a filter-overwrite on
                 // a partitioned table restages under the hive subdirs)
+              case _ if partCols.isEmpty && tspecs.nonEmpty =>
+                log.commitTransformed(data, tspecs, replace = mode == TruncateMode): Unit
+              case _ => log.commitPartitioned(data, partCols, replace = mode == TruncateMode): Unit
               }
             }
           }

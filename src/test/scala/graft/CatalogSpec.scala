@@ -18,6 +18,16 @@ class CatalogSpec extends AnyFunSuite {
   private def freshRoot() =
     java.nio.file.Files.createTempDirectory("graft_catalog").toString
 
+  /** A commit-log handle counting its metadata accesses: `open` = a
+    * manifest or head-hint read, `list` = a `_commits` listing.
+    */
+  private class Counting(root: String) extends graft.catalog.CommitLog(spark, root) {
+    val opens = new java.util.concurrent.atomic.AtomicInteger
+    val lists = new java.util.concurrent.atomic.AtomicInteger
+    override protected def onMetaAccess(kind: String): Unit =
+      (if (kind == "open") opens else lists).incrementAndGet(): Unit
+  }
+
   private def seed(cat: AssetCatalog): Unit =
     cat.create("source_system", "src_sys_id", Seq(
       SourceSystem(101L, "crm", "us-east-2", ts("2026-01-01 00:00:00"), "active"),
@@ -817,12 +827,6 @@ class CatalogSpec extends AnyFunSuite {
   test("commit log: head discovery is O(1) metadata reads after 500 commits") {
     import graft.catalog.CommitLog
     val root = freshRoot() + "/t"
-    class Counting extends CommitLog(spark, root) {
-      val opens = new java.util.concurrent.atomic.AtomicInteger
-      val lists = new java.util.concurrent.atomic.AtomicInteger
-      override protected def onMetaAccess(kind: String): Unit =
-        (if (kind == "open") opens else lists).incrementAndGet(): Unit
-    }
     val writer = new CommitLog(spark, root)
     // 500 commits in one JVM; each appends a 25-row chunk
     for (i <- 0L until 500L)
@@ -831,7 +835,7 @@ class CatalogSpec extends AnyFunSuite {
     // a FRESH reader (no cached state) resolves and reads the head
     // opening exactly 2 metadata files: the head hint + that version's
     // manifest — never an O(versions) listing of _commits
-    val reader = new Counting
+    val reader = new Counting(root)
     val head = reader.read()
     assert(reader.lists.get == 0,
       s"read listed _commits ${reader.lists.get} times; the hint path must not list")
@@ -842,7 +846,7 @@ class CatalogSpec extends AnyFunSuite {
     val hfs = graft.catalog.HadoopFs.fs(spark, root)
     val out = hfs.create(new org.apache.hadoop.fs.Path(root, "_commits/_head.hint"), true)
     out.write("497\n".getBytes("UTF-8")); out.close()
-    val stale = new Counting
+    val stale = new Counting(root)
     assert(stale.currentVersion.contains(500L))
     assert(stale.lists.get == 0)
     // time travel, CDF, and RESTORE are unaffected by the pointer plane
@@ -850,7 +854,31 @@ class CatalogSpec extends AnyFunSuite {
     assert(reader.changesBetween(499L, 500L).count() == 25)
     val vr = reader.restore(499L)
     assert(vr == 501L && reader.read().count() == 12475)
-    assert(new Counting().currentVersion.contains(501L))
+    assert(new Counting(root).currentVersion.contains(501L))
+  }
+
+  test("commit log: a whole-file commit reads the head once before its race") {
+    import graft.catalog.CommitLog
+    val flat = freshRoot() + "/t"
+    new CommitLog(spark, flat).commit(spark.range(0, 10).toDF("k"), replace = false)
+    val parted = freshRoot() + "/p"
+    def rows(lo: Long) = spark.range(lo, lo + 10).select($"id".as("k"), ($"id" % 2).as("p"))
+    new CommitLog(spark, parted).commitPartitioned(rows(0), Seq("p"), replace = true)
+    /** Metadata opens of one commit through a fresh handle. */
+    def opens(root: String)(commit: CommitLog => Any): Int = {
+      val log = new Counting(root)
+      commit(log)
+      assert(log.lists.get == 0, s"a commit listed _commits ${log.lists.get} times")
+      log.opens.get
+    }
+    val got = Seq(
+      opens(flat)(_.commit(spark.range(10, 20).toDF("k"), replace = false)),
+      opens(flat)(_.commit(spark.range(20, 30).toDF("k"), replace = false, Some("batch-1"))),
+      opens(parted)(_.commitPartitioned(rows(10), Seq("p"), replace = false)))
+    // one pre-race read (head hint + manifest), then one race attempt (the same two)
+    assert(got == Seq(4, 4, 4),
+      s"metadata opens of an append, a txn append and a partitioned append: $got")
+    assert(new CommitLog(spark, flat).read().count() == 30)
   }
 
   test("audit log: append, lookup, guarded status update") {

@@ -61,6 +61,22 @@ class ClusteringSpec extends AnyFunSuite {
       log.read().filter(col("k") >= 0 && col("k") <= 99).count())
   }
 
+  test("cross-table transaction writes land range-disjoint on a clustered table") {
+    val root = tmp()
+    val log = new CommitLog(spark, root)
+    log.setClustering(Seq("k"))
+    val batch = spark.range(0, 4000).select(
+      (col("id") * 2654435761L % 4000).as("k"), col("id").as("v"))
+      .repartition(8)
+    withPinnedFanout(6) {
+      graft.catalog.CrossTableTxn.commitAll(spark, root + "_xtxn", Seq((log, batch, false)))
+    }
+    val rs = ranges(log, "k")
+    assert(rs.length > 1, s"expected multiple files, got $rs")
+    assert(disjoint(rs), s"clustered files must carry disjoint ranges: $rs")
+    assert(log.read().count() == 4000)
+  }
+
   test("values are layout-independent: clustered table equals unclustered twin") {
     val a = new CommitLog(spark, tmp())
     val b = new CommitLog(spark, tmp())

@@ -260,9 +260,22 @@ class ConstraintSpec extends AnyFunSuite {
     assert(plain.read().count() == 1, "violating import must not land")
   }
 
-  /** The keyed DML paths and the streaming sink's pooled commit: each
-    * validates its batch against the empty constraint set, loses attempt
-    * 0 to an addConstraint, and must re-validate against the new head.
+  /** A cross-table transaction's pending version, then its commit
+    * decision: a batch the race let through becomes visible here.
+    */
+  private def pendingCommitted(l: CommitLog): Long = {
+    val decision = l.tableRootPath + s"_decision_${java.util.UUID.randomUUID()}"
+    val v = l.publishPending(Seq((2L, -9)).toDF("k", "qty"), "x1", decision, replace = false)
+    graft.catalog.LogStore.write(graft.catalog.HadoopFs.fs(spark, decision),
+      new org.apache.hadoop.fs.Path(decision), "commit\n".getBytes("UTF-8"))
+    v
+  }
+
+  /** The keyed DML paths, the streaming sink's pooled commit and a
+    * cross-table transaction's pending version (which reports as its
+    * `xtxn` stamp): each validates its batch against the empty constraint
+    * set, loses attempt 0 to an addConstraint, and must re-validate
+    * against the new head.
     */
   private val racedPaths: Seq[(String, CommitLog => Any)] = Seq(
     "merge" -> (_.merge(Seq((2L, -9)).toDF("k", "qty"), "k")),
@@ -270,7 +283,8 @@ class ConstraintSpec extends AnyFunSuite {
     "applyChangesMoR" -> (_.applyChangesMoR(Seq.empty[Long].toDF("k"),
       Seq((2L, -9)).toDF("k", "qty"), "k")),
     "commitPooledFiles" -> (l => graft.catalog.SinkCommit(l,
-      Seq(oneSrcFile(Seq((2L, -9)).toDF("k", "qty"))), replace = false)))
+      Seq(oneSrcFile(Seq((2L, -9)).toDF("k", "qty"))), replace = false)),
+    "xtxn" -> pendingCommitted)
 
   test("constraint DDL landing mid-merge, mid-mergeMoR, mid-applyChangesMoR and " +
       "mid-commitPooledFiles re-validates the racing batch") {

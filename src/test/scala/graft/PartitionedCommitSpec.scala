@@ -90,6 +90,11 @@ class PartitionedCommitSpec extends AnyFunSuite {
       log.commit(sample(201, 300), replace = false)
     }
     assert(flatAppend.getMessage.contains("hive-partitioned"), flatAppend.getMessage)
+    // an empty column list is the flat commit, and refuses the same way
+    val noColsAppend = intercept[IllegalArgumentException] {
+      log.commitPartitioned(sample(201, 300), Nil, replace = false)
+    }
+    assert(noColsAppend.getMessage.contains("hive-partitioned"), noColsAppend.getMessage)
 
     // replace back to flat is legal and drops the spec
     log.commit(sample(1, 10).drop("cat"), replace = true)
@@ -101,6 +106,12 @@ class PartitionedCommitSpec extends AnyFunSuite {
       log.commitPartitioned(sample(11, 20), Seq("cat"), replace = false)
     }
     assert(mixBack.getMessage.contains("mix layouts"), mixBack.getMessage)
+
+    // on the flat head an empty column list appends as commit does
+    val flatV = log.commitPartitioned(sample(11, 20).drop("cat"), Nil, replace = false)
+    assert(log.partitionColumns(flatV).isEmpty && log.operation(flatV) == "append")
+    assert(log.files(flatV).forall(!_.contains("/")), log.files(flatV))
+    assert(log.read().count() == 20)
   }
 
   test("MoR delete + partition-aware rewriteDeletes keep the layout") {
