@@ -98,14 +98,20 @@ class AuditLog(spark: SparkSession, root: String) {
 }
 
 object AuditLog {
-  /** Head-race attempts of a merge-on-read status correction. An attempt
-    * re-stages one tombstone file and one row, not a rewritten data file,
-    * so a correction outlasts a burst of concurrent appends instead of
-    * failing after the 5 attempts of a copy-on-write rewrite. Under three
-    * closed-loop API clients sharing one log (perfbench `registry_api`,
-    * 16 ten-second runs on a 4-vCPU host), the most races a single
-    * correction lost is 8, and 5 of 67 corrections lost 5 or more; the
-    * budget is twice the worst.
+  /** Head-race attempts of a merge-on-read status correction. Nearly
+    * every race it loses is to another client's append, which cannot hold
+    * the corrected row: such a loss rebases ([[CommitLog.updateWhereMoR]]),
+    * costing one manifest read and no Spark job. A loss that can conflict
+    * re-stages one tombstone file and one row, not a rewritten data file.
+    * Either way a correction outlasts a burst of concurrent appends
+    * instead of failing after the 5 attempts of a copy-on-write rewrite.
+    * Under three closed-loop API clients sharing one log (perfbench
+    * `registry_api`, 4-vCPU host), before the rebase 16 ten-second runs
+    * saw at most 8 lost races for one correction, and 5 of 67 corrections
+    * lost 5 or more. With it, 10 traced ten-second runs saw every one of
+    * their 10 corrections lose exactly one race and rebase, and a traced
+    * 45-second run lost 8 races in all, against 21 before. The budget
+    * stays twice the earlier worst.
     */
   private[graft] val MorStatusAttempts: Int = 16
 }

@@ -2434,28 +2434,42 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   private[graft] def prunedCandidates(cond: org.apache.spark.sql.Column): Seq[String] =
     prunedCandidates(cond, manifest(committedHead()), tableMeta)
 
-  /** [[prunedCandidates]] of the snapshot `m`. */
+  /** [[prunedCandidates]] of the snapshot `m`: the transform tier
+    * ([[transformPruned]]), then the column-stats tier ([[statsPruned]]).
+    */
   private def prunedCandidates(cond: org.apache.spark.sql.Column, m: Manifest,
-      meta: TableMeta): Seq[String] = {
+      meta: TableMeta): Seq[String] =
+    if (m.data.isEmpty) Nil
+    else resolvedConjuncts(readManifest(m, meta), cond).fold(m.dataNames) { conj =>
+      statsPruned(m, conj, transformPruned(m, conj, transformsFor(m, meta)))
+    }
+
+  /** The conjuncts of `cond` resolved against `df`'s columns. A Spark-4
+    * Column is a ColumnNode tree, not a catalyst expression: resolve it
+    * the honest way — analyze a Filter over `df` and lift the RESOLVED
+    * condition (attributes bound, literals type-coerced/foldable) out of
+    * the plan. Driver-side analysis, no execution.
+    */
+  private def resolvedConjuncts(df: DataFrame, cond: org.apache.spark.sql.Column)
+      : Option[Seq[org.apache.spark.sql.catalyst.expressions.Expression]] =
+    df.filter(cond).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => conjunctsOf(f.condition)
+    }
+
+  /** The data files of `m` that the resolved conjuncts `conj` keep
+    * through hidden-partition transform pruning: bounds on a transform's
+    * SOURCE column bound its derived column. Each derived bound costs one
+    * 1-row local job ([[derivedOf]]).
+    */
+  private def transformPruned(m: Manifest,
+      conj: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      specs: Seq[PartitionTransform]): Seq[String] = {
     import org.apache.spark.sql.catalyst.{expressions => E}
-    val names = m.dataNames
-    val specs = transformsFor(m, meta)
-    if (names.isEmpty) return names
     val stats = m.fileStats
-    // a Spark-4 Column is a ColumnNode tree, not a catalyst expression:
-    // resolve it the honest way — analyze a Filter over this snapshot
-    // and lift the RESOLVED condition (attributes bound, literals
-    // type-coerced/foldable) out of the plan. Driver-side, no execution.
-    val resolved = readManifest(m, meta).filter(cond).queryExecution.analyzed
-      .collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-    if (resolved.isEmpty) return names
     // the literal side is any sub-expression the optimizer could fold
     // (Literal, Cast(Literal), arithmetic over them)
     def isLit(e: E.Expression): Boolean = e.foldable
-    val conj = conjunctsOf(resolved.get)
-    var candidates = names
+    var candidates = m.dataNames
     specs.foreach { t =>
       // (lo, hi) bounds on the DERIVED value, None = unbounded side
       val bounds: Seq[(Option[String], Option[String])] = conj.flatMap {
@@ -2512,8 +2526,22 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         }
       }
     }
-    // tier 2: direct per-file footer min/max on ANY column — clustered /
-    // naturally-ordered tables skip files with no transform declared.
+    candidates
+  }
+
+  /** The names of `candidates` (data files of `m`) whose per-file footer
+    * min/max admit every comparison of a column with a literal among the
+    * resolved conjuncts `conj` — clustered / naturally-ordered tables skip
+    * files with no transform declared. Manifest stats alone: no listing,
+    * no footer read, no job. A file without a bound on a column stays a
+    * candidate.
+    */
+  private def statsPruned(m: Manifest,
+      conj: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      candidates: Seq[String]): Seq[String] = {
+    import org.apache.spark.sql.catalyst.{expressions => E}
+    val stats = m.fileStats
+    def isLit(e: E.Expression): Boolean = e.foldable
     // The probe value is the RESOLVED literal's internal rendering, which
     // matches how the manifest stats were tagged (timestamps as micros,
     // dates as epoch days, strings as UTF-16-comparable text); a
@@ -2556,15 +2584,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         rendered(l).map(d => (attNameOf(a).get, Some(d), None))
       case _ => None
     }
-    colBounds.foreach { case (c, lo, hi) =>
-      candidates = candidates.filter { n =>
+    candidates.filter { n =>
+      colBounds.forall { case (c, lo, hi) =>
         stats.get(n).flatMap(_.get(c)).forall { s =>
           lo.forall(b => !safeFor(s.tpe, b) || ColStats.cmp(s.tpe, s.max, b) >= 0) &&
             hi.forall(b => !safeFor(s.tpe, b) || ColStats.cmp(s.tpe, s.min, b) <= 0)
         }
       }
     }
-    candidates
   }
 
   /** Filtered snapshot read with hidden-partition pruning: predicates on
@@ -2949,7 +2976,18 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     *  4. on a win, returns `onWin(head+1)`. On a loss another writer
     *     landed head+1 first: pause ([[racePause]]) and start over from
     *     step 1 against the new head, so nothing computed against a stale
-    *     snapshot is ever published.
+    *     snapshot is ever published unchecked. The one exception is the
+    *     merge-on-read rebase ([[morRace]]): a merge-on-read write's
+    *     `decide` publishes the entries it staged against its base B
+    *     unchanged on top of the new head H, without recomputing, when
+    *     all four of these hold ([[rebases]]): H still lists every data
+    *     and deletion-vector entry of B; H's headers other than
+    *     [[Manifest.PerCommit]] and [[Manifest.Lineage]], and its
+    *     `#partition:` layout, equal B's; no data entry added since B
+    *     can hold a row the write matches, by manifest stats alone; and
+    *     no deletion vector added since B has a (file, position) stats
+    *     box overlapping one the write staged (a vector without stats
+    *     conflicts). Otherwise it recomputes against H.
     *
     * After `budget` lost attempts it throws `IOException("<name>: lost the
     * head race <budget> times under <root>")`. Append and metadata paths
@@ -2977,6 +3015,108 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
 
   /** [[Publish]] whose result is the version it lands at. */
   private def publishAt(m: Manifest): Attempt[Long] = Publish(m, v => v)
+
+  /** One computed attempt of a merge-on-read writer ([[morRace]]): `next`,
+    * the manifest a win publishes, and `holdsMatch`, whether a data entry
+    * of a manifest can hold a row the write matches, judged from manifest
+    * stats alone.
+    */
+  private final case class MorAttempt(next: Manifest, holdsMatch: Manifest => Boolean)
+
+  /** [[headRace]] for the merge-on-read writers ([[updateWhereMoR]],
+    * [[deleteWhereMoR]], [[deleteKeysMoR]], [[mergeMoR]]): `attempt`
+    * computes the write against the head manifest it is given, None when
+    * nothing matches (the race settles at that head). After a lost race the
+    * entries the last computed attempt staged land again, unchanged, on
+    * top of the new head when nothing that landed in between can conflict
+    * with them ([[rebases]]); otherwise `attempt` recomputes against the
+    * new head. A rebase costs one manifest read and no Spark job. An
+    * attempt whose `next` is not its head plus new entries (an evolving
+    * merge's `#schema:` edit) never rebases.
+    */
+  private def morRace(name: String, op: String, budget: Int)(
+      attempt: Manifest => Option[MorAttempt]): Long = {
+    // (the head the staged entries were last checked against, the
+    // entries, their match test)
+    var staged: Option[(Manifest, Seq[Entry], Manifest => Boolean)] = None
+    headRace(name, op, budget, requireHead) { (v, head) =>
+      staged.filter { case (base, entries, holdsMatch) =>
+        rebases(base, head, entries, holdsMatch)
+      } match {
+        case Some((_, entries, holdsMatch)) =>
+          staged = Some((head, entries, holdsMatch))
+          publishAt(head ++ entries)
+        case None => attempt(head) match {
+          case None => Settle(v)
+          case Some(MorAttempt(next, holdsMatch)) =>
+            val added = next.items.drop(head.items.length)
+            staged = Option.when(next.items.startsWith(head.items) &&
+                added.forall(_.isInstanceOf[Entry])) {
+              (head, added.collect { case e: Entry => e }, holdsMatch)
+            }
+            publishAt(next)
+        }
+      }
+    }
+  }
+
+  /** Whether entries staged against `base` may land unchanged on `head`:
+    *
+    *  1. `head` still lists every data and deletion-vector entry of
+    *     `base`, so nothing was rewritten, compacted, folded, restored or
+    *     replaced in between;
+    *  2. `head`'s headers other than [[Manifest.PerCommit]] and
+    *     [[Manifest.Lineage]], and its `#partition:` layout, equal
+    *     `base`'s, so no constraint, schema, clustering, TTL or transform
+    *     changed and the write's constraint verdict still holds;
+    *  3. no data entry added since `base` can hold a row the write
+    *     matches (`holdsMatch`, from manifest stats alone);
+    *  4. no deletion vector added since `base` has a (file, position)
+    *     stats box that overlaps the box of one of the `staged` deletion
+    *     vectors. A vector without that box counts as a conflict.
+    */
+  private def rebases(base: Manifest, head: Manifest, staged: Seq[Entry],
+      holdsMatch: Manifest => Boolean): Boolean = {
+    def listed(m: Manifest): Set[(String, Boolean)] =
+      m.entries.iterator.map(e => (e.name, e.dv)).toSet
+    def contracts(m: Manifest): Set[Manifest.Line] =
+      m.without(Manifest.PerCommit ++ Manifest.Lineage).filterEntries(_ => false).items.toSet
+    val before = listed(base)
+    lazy val added = head.filterEntries(e => !before((e.name, e.dv)))
+    lazy val mine = staged.filter(_.dv).map(dvBox)
+    before.subsetOf(listed(head)) &&
+      contracts(head) == contracts(base) &&
+      head.partitionColumns == base.partitionColumns &&
+      !holdsMatch(Manifest(added.data)) &&
+      added.dvs.forall(d => dvBox(d).exists { case (file, pos) =>
+        mine.forall(_.exists { case (f, p) =>
+          !(file.overlaps(f.min, f.max) && pos.overlaps(p.min, p.max))
+        })
+      })
+  }
+
+  /** A deletion-vector entry's (file, position) stats box. */
+  private def dvBox(e: Entry): Option[(ColStats, ColStats)] = {
+    val st = e.colStats
+    for (f <- st.get(DvKeys.head); p <- st.get(DvKeys.last)) yield (f, p)
+  }
+
+  /** [[MorAttempt.holdsMatch]] of a keyed write: a data entry whose key
+    * stats admit the range of `keys` ([[keyCandidates]]).
+    */
+  private def keyMatch(keys: CommitLog.BatchKeys, keyCol: String): Manifest => Boolean =
+    m => keyCandidates(m, keys, keyCol).nonEmpty
+
+  /** [[MorAttempt.holdsMatch]] of a predicate write: a data entry whose
+    * column stats admit every column-literal comparison of `cond`
+    * ([[statsPruned]]), with `cond` resolved once against `scanned`, the
+    * relation the attempt matched it on.
+    */
+  private def predicateMatch(scanned: DataFrame,
+      cond: org.apache.spark.sql.Column): Manifest => Boolean =
+    resolvedConjuncts(scanned, cond).fold((m: Manifest) => m.data.nonEmpty) { conj =>
+      m => statsPruned(m, conj, m.dataNames).nonEmpty
+    }
 
   /** The missing-head failure of the mutators that need a committed head. */
   private def missingHead(prefix: String = ""): Exception =
@@ -3746,17 +3886,16 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       sets: Seq[(String, org.apache.spark.sql.Column)],
       maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.coalesce
-    headRace("updateWhereMoR", "update_mor", maxAttempts, requireHead) { (v, head) =>
-      val names = head.dataNames
-      if (names.isEmpty) Settle(v)
+    morRace("updateWhereMoR", "update_mor", maxAttempts) { head =>
+      if (head.data.isEmpty) None
       else {
-        val visible = visibleWithPos(head.data, dvFrameOf(head.dvNames))
+        val visible = castParts(visibleWithPos(head.data, dvFrameOf(head.dvNames)),
+          partTypesOf(head))
         // matched rows carry their (file, pos) keys AND their data columns,
         // evaluated once: the tombstones and the updated copies come from
         // the same rows, even under a nondeterministic predicate (rand()),
         // and a match set that fits the driver is not scanned again
-        val matched = CommitLog.evaluated(castParts(visible, partTypesOf(head))
-          .filter(coalesce(cond, lit(false))))
+        val matched = CommitLog.evaluated(visible.filter(coalesce(cond, lit(false))))
         val headSchema = org.apache.spark.sql.types.StructType(
           matched.schema.filterNot(f => DvKeys.contains(f.name)))
         val setMap = sets.toMap
@@ -3769,11 +3908,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         enforceConstraints(updated, head.checks, "updateWhereMoR", headSchema)
         val dvStaged = stage(onePart(matched.select(DvKeys.map(col): _*)), Nil,
           "updateWhereMoR")
-        if (dvStaged.isEmpty) Settle(v)
-        else {
+        Option.when(dvStaged.nonEmpty) {
           val dataStaged = stage(onePart(applyTransforms(updated)), head.partitionColumns,
             "updateWhereMoR")
-          publishAt(head ++ dataStaged ++ dvStaged.map(_.asDv))
+          MorAttempt(head ++ dataStaged ++ dvStaged.map(_.asDv), predicateMatch(visible, cond))
         }
       }
     }
@@ -3796,16 +3934,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def deleteWhereMoR(cond: org.apache.spark.sql.Column, maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.coalesce
-    headRace("deleteWhereMoR", "delete_mor", maxAttempts, requireHead) { (v, head) =>
-      val names = head.dataNames
-      val staged =
-        if (names.isEmpty) Seq.empty
-        else {
-          val visible = visibleWithPos(head.data, dvFrameOf(head.dvNames))
-          stage(visible.filter(coalesce(cond, lit(false)))
-            .select(DvKeys.map(col): _*), Nil, "deleteWhereMoR")
-        }
-      if (staged.isEmpty) Settle(v) else publishAt(head ++ staged.map(_.asDv))
+    morRace("deleteWhereMoR", "delete_mor", maxAttempts) { head =>
+      if (head.data.isEmpty) None
+      else {
+        val visible = visibleWithPos(head.data, dvFrameOf(head.dvNames))
+        val staged = stage(visible.filter(coalesce(cond, lit(false)))
+          .select(DvKeys.map(col): _*), Nil, "deleteWhereMoR")
+        Option.when(staged.nonEmpty)(
+          MorAttempt(head ++ staged.map(_.asDv), predicateMatch(visible, cond)))
+      }
     }
   }
 
@@ -3816,9 +3953,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def deleteKeysMoR(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long = {
     val keys = CommitLog.keysOf(CommitLog.evaluated(keys0.select(keyCol)), keyCol)
-    headRace("deleteKeysMoR", "delete_mor", maxAttempts, requireHead) { (v, head) =>
+    morRace("deleteKeysMoR", "delete_mor", maxAttempts) { head =>
       val staged = keyTombstones(head, keys, keyCol, "deleteKeysMoR")
-      if (staged.isEmpty) Settle(v) else publishAt(head ++ staged)
+      Option.when(staged.nonEmpty)(MorAttempt(head ++ staged, keyMatch(keys, keyCol)))
     }
   }
 
@@ -3868,7 +4005,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       evolve: Boolean = false): Long = {
     val (updates, keys) = keyedUpdates(updates0, keyCol, "mergeMoR")
     val gate = new ConstraintGate
-    headRace("mergeMoR", "merge_mor", maxAttempts, requireHead) { (v, head) =>
+    morRace("mergeMoR", "merge_mor", maxAttempts) { head =>
       // schema evolution mirrors [[merge]]: appended rows carry the new
       // columns, existing files stay untouched and read them as NULL
       val b = keyedBatch(updates, head, evolve, "mergeMoR", "updates")
@@ -3876,8 +4013,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       // tombstone the old positions of matched keys
       val dvStaged = keyTombstones(head, keys, keyCol, "mergeMoR", Some(b.schema))
       val dataStaged = stage(b.applied, head.partitionColumns, "mergeMoR")
-      if (dvStaged.isEmpty && dataStaged.isEmpty) Settle(v)
-      else publishAt(b.evolved(head) ++ dataStaged ++ dvStaged)
+      Option.when(dvStaged.nonEmpty || dataStaged.nonEmpty)(
+        MorAttempt(b.evolved(head) ++ dataStaged ++ dvStaged, keyMatch(keys, keyCol)))
     }
   }
 
@@ -4159,11 +4296,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val nOut = fileCount(m.data.map(bytesOf).sum, targetFileBytes)
     val snap = readVersion(v)
     val k = columns.size
+    // a try-cast: under ANSI a plain cast of 'v1' to DOUBLE throws, where
+    // a non-castable value must scale to bucket 0 like a NULL
+    def asDouble(c: String): org.apache.spark.sql.Column = col(c).try_cast("double")
     val (scaled, bits) =
       if (quantileBuckets == 0) {
         val boundAggs = columns.flatMap(c => Seq(
-          org.apache.spark.sql.functions.min(col(c).cast("double")),
-          org.apache.spark.sql.functions.max(col(c).cast("double"))))
+          org.apache.spark.sql.functions.min(asDouble(c)),
+          org.apache.spark.sql.functions.max(asDouble(c))))
         val bounds = snap.agg(boundAggs.head, boundAggs.tail: _*).head()
         (columns.zipWithIndex.map { case (c, j) =>
           val (mn, mx) = (bounds.get(2 * j), bounds.get(2 * j + 1))
@@ -4173,7 +4313,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             val span = mx.asInstanceOf[Double] - lo
             org.apache.spark.sql.functions.coalesce(
               org.apache.spark.sql.functions.floor(
-                (col(c).cast("double") - lit(lo)) / lit(span) * lit(65535.0)), lit(0L))
+                (asDouble(c) - lit(lo)) / lit(span) * lit(65535.0)), lit(0L))
           }
         }, 16)
       } else {
@@ -4184,14 +4324,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           // per-column equi-depth cutpoints (approx, one pass per column
           // over the numeric projection; nulls and non-castables excluded
           // and bucketed to 0)
-          val cuts = snap.select(col(c).cast("double").as("_graft_q"))
+          val cuts = snap.select(asDouble(c).as("_graft_q"))
             .na.drop().stat
             .approxQuantile("_graft_q", probs, 0.25 / quantileBuckets)
             .distinct.sorted
           if (cuts.isEmpty) lit(0L)
           else {
             val raw = aggregate(array(cuts.map(lit(_)).toIndexedSeq: _*), lit(0L),
-              (acc, cut) => acc + when(col(c).cast("double") > cut, 1L).otherwise(0L))
+              (acc, cut) => acc + when(asDouble(c) > cut, 1L).otherwise(0L))
             // the sketch may return far fewer distinct cutpoints than
             // requested (few distinct values, coarse error): stretch the
             // observed bucket range over the FULL bit width, or the top
@@ -4977,12 +5117,17 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val names = head.dataNames
       val partCols = head.partitionColumns
       if (head.dvs.nonEmpty) {
-        // tombstoned snapshot: full rewrite, which also folds the DVs
+        // tombstoned snapshot: full rewrite, which also folds the DVs. It
+        // replaces the head it read within this attempt, so a commit that
+        // lands first makes the attempt recompute instead of being erased.
+        // The rows are the head's own, which already pass its constraints.
         val all = readManifest(head)
-        commitPartitioned(if (partCols.nonEmpty) all
+        val laidOut = clustered(if (partCols.nonEmpty) all
           else all.coalesce(fileCount(head.data.map(bytesOf).sum, targetFileBytes)),
-          partCols, replace = true, op = Some("compact"))
-        Settle((names.length, currentFileCount))
+          partCols, head.clustering)
+        Publish(Manifest(if (partCols.isEmpty) Nil else Seq(Header.partition(partCols))) ++
+            replaceCarriedData(head, Some(all.schema)) ++ stage(laidOut, partCols, "compact"),
+          _ => (names.length, currentFileCount))
       } else {
         val sized = head.data.map(e => (e.name, bytesOf(e)))
         val candidates = sized.collect {

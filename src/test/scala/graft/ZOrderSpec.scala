@@ -69,6 +69,19 @@ class ZOrderSpec extends AnyFunSuite {
     assert(out.agg(sum(col("payload"))).head().getLong(0) == 65535L * 65536 / 2)
   }
 
+  test("a STRING z-order column scales to bucket 0 in both modes, rows unchanged") {
+    for (buckets <- Seq(0, 256)) {
+      val log = new CommitLog(spark, freshRoot())
+      log.commit(spark.range(200).select(col("id").as("k"),
+        concat(lit("v"), col("id").cast("string")).as("v")), replace = false)
+      val before = log.read().collect().map(_.toString).sorted.toSeq
+      log.optimizeZOrder(Seq("k", "v"), quantileBuckets = buckets)
+      assert(log.read().collect().map(_.toString).sorted.toSeq == before,
+        s"quantileBuckets = $buckets")
+      assert(log.operation(log.currentVersion.get) == "optimize")
+    }
+  }
+
   test("readWhere conjunction is consistent with a brute-force filter") {
     val (log, target) = mkTable()
     log.optimizeZOrder(Seq("x", "y"), target)

@@ -17,11 +17,15 @@ import graft.SparkTestSession
   *    operation must give up with "lost the head race" after exactly its
   *    budget, with the visible table unchanged;
   *  - then a racer that commits on attempt 0 only: the operation must land
-  *    one version above the racer, with the racer's effect kept.
+  *    one version above the racer, with the racer's effect kept. A
+  *    merge-on-read path (`rebases`) lands the entries its attempt 0
+  *    staged on top of the racer's append, so that run leaves no orphaned
+  *    pool file.
   *
   * Every test owns its table, so the tests run in parallel.
   */
 class HeadRaceSpec extends AnyFunSuite with ParallelTestExecution {
+  import MorRebaseSpec.orphans
   import SparkTestSession._
   import spark.implicits._
 
@@ -33,7 +37,8 @@ class HeadRaceSpec extends AnyFunSuite with ParallelTestExecution {
     */
   private case class RacePath(name: String, stamp: String, budget: Int,
       op: CommitLog => Any, setup: String => Unit = seeded,
-      racer: String => Unit = appendRacer, kept: CommitLog => Unit = rowKept)
+      racer: String => Unit = appendRacer, kept: CommitLog => Unit = rowKept,
+      rebases: Boolean = false)
 
   private def rows(kv: (Long, String)*): DataFrame = kv.toDF("k", "p")
 
@@ -138,13 +143,14 @@ class HeadRaceSpec extends AnyFunSuite with ParallelTestExecution {
       kept = l => assert(keys(l)(Racer) && updated(l) == Seq("u"))),
     RacePath("updateWhereMoR", "update_mor", 5,
       _.updateWhereMoR(col("k") === 2L, Seq("p" -> lit("u"))),
-      kept = l => assert(keys(l)(Racer) && updated(l) == Seq("u"))),
+      kept = l => assert(keys(l)(Racer) && updated(l) == Seq("u")), rebases = true),
     RacePath("deleteWhereMoR", "delete_mor", 5, _.deleteWhereMoR(col("k") === 2L),
-      kept = l => assert(keys(l) == Set(1L, 3L, Racer))),
+      kept = l => assert(keys(l) == Set(1L, 3L, Racer)), rebases = true),
     RacePath("deleteKeysMoR", "delete_mor", 5, _.deleteKeysMoR(Seq(2L).toDF("k"), "k"),
-      kept = l => assert(keys(l) == Set(1L, 3L, Racer))),
+      kept = l => assert(keys(l) == Set(1L, 3L, Racer)), rebases = true),
     RacePath("mergeMoR", "merge_mor", 5, _.mergeMoR(rows(2L -> "u", 5L -> "n"), "k"),
-      kept = l => assert(keys(l) == Set(1L, 2L, 3L, 5L, Racer) && updated(l) == Seq("u"))),
+      kept = l => assert(keys(l) == Set(1L, 2L, 3L, 5L, Racer) && updated(l) == Seq("u")),
+      rebases = true),
     RacePath("applyChangesMoR", "cdc_apply", 5,
       _.applyChangesMoR(Seq(2L).toDF("k"), rows(2L -> "u", 4L -> "d"), "k",
         txn = Some("cdc-1")),
@@ -186,6 +192,17 @@ class HeadRaceSpec extends AnyFunSuite with ParallelTestExecution {
     assert(paths.map(p => (p.name, p.stamp)).distinct.size == paths.size)
   }
 
+  test("compact of a tombstoned head folds again above a racing append, keeping its row") {
+    val root = freshRoot()
+    seeded(root)
+    new CommitLog(spark, root).deleteWhereMoR(col("k") === 2L)
+    val log = new Raced(root, (attempt, _) => if (attempt == 0) appendRacer(root))
+    log.compact()
+    val head = log.currentVersion.get
+    assert(keys(log) == Set(1L, 3L, Racer))
+    assert(log.dvFiles(head).isEmpty && log.operation(head) == "compact")
+  }
+
   for (p <- paths) test(s"${p.name} (${p.stamp}): budget ${p.budget}, then a win above a racer") {
     val root = freshRoot()
     p.setup(root)
@@ -199,11 +216,14 @@ class HeadRaceSpec extends AnyFunSuite with ParallelTestExecution {
     assert(state(new CommitLog(spark, root)) == before, "a lost race must leave no effect")
 
     val head = start + p.budget
+    val orphaned = if (p.rebases) orphans(root) else Set.empty[String]
     val winner = new Raced(root, (attempt, _) => if (attempt == 0) p.racer(root))
     p.op(winner)
     assert(winner.seen.toSeq == Seq((0, head + 1), (1, head + 2)))
     assert(winner.currentVersion.contains(head + 2))
     assert(winner.operation(head + 2) == p.stamp)
     p.kept(winner)
+    if (p.rebases) assert(orphans(root) == orphaned,
+      "a rebase above the racer's append publishes what attempt 0 staged")
   }
 }

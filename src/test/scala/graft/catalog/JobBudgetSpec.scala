@@ -124,6 +124,42 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[String].collect().toSeq == Seq("s1"))
   }
 
+  test("a MoR status correction that loses 3 races to non-matching appends stays " +
+      "within set_status's one-attempt budget") {
+    val reg = new Registry
+    val sc = spark.sparkContext
+    val auditRoot = s"${reg.root}/audit"
+    var races = 0
+    // appends win the targeted version before the correction's first
+    // `races` publishes; their own jobs run untagged
+    val racing = new AuditLog(spark, auditRoot) {
+      override protected def newLog(): CommitLog = new CommitLog(spark, auditRoot) {
+        override protected def beforePublish(attempt: Int, v: Long): Unit =
+          if (races > 0) {
+            races -= 1
+            val tag = sc.getLocalProperty(Tag)
+            sc.setLocalProperty(Tag, null)
+            try reg.audit.append(s"race-$races", "create", s"$Table-api",
+              Map("tasktype" -> "create"), "{}")
+            finally sc.setLocalProperty(Tag, tag)
+          }
+      }
+    }
+    val rid = reg.rid(IdBase + 6)
+    racing.setStatus(rid, "create", "warm", mor = true)
+    val head = new CommitLog(spark, auditRoot).currentVersion.get
+    races = 3
+    val n = jobsOf(racing.setStatus(rid, "create", "raced", mor = true))
+    info(s"set_status jobs after 3 lost races: $n")
+    assert(races == 0)
+    assert(new CommitLog(spark, auditRoot).currentVersion.contains(head + 4))
+    assert(n <= budgets.toMap.apply("set_status"), s"raced set_status ran $n jobs")
+    val status = reg.audit.events.select("aws_request_id", "status").as[(String, String)]
+      .collect()
+    assert(status.filter(_._1 == rid).map(_._2).toSeq == Seq("raced"))
+    assert(status.map(_._1).toSet.intersect(Set("race-0", "race-1", "race-2")).size == 3)
+  }
+
   test("a constrained update adds only its one validation aggregate") {
     val reg = new Registry
     reg.update(IdBase + 3, "warm")
