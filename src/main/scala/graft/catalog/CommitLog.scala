@@ -372,12 +372,15 @@ object CommitLog {
 
   /** What one attempt of [[CommitLog.headRace]] decided: end the race
     * with `result` and publish nothing, or publish `manifest` at head+1
-    * and, once it wins, return `onWin(head+1)`.
+    * and, once it wins, return `onWin(head+1)`. `reads` is the write's
+    * read test, judged from manifest stats alone: can a data entry of the
+    * given manifest hold a row this write read? A write without one
+    * recomputes after every lost race.
     */
   private sealed trait Attempt[+T] extends Product with Serializable
   private final case class Settle[T](result: T) extends Attempt[T]
-  private final case class Publish[T](manifest: Manifest, onWin: Long => T)
-      extends Attempt[T]
+  private final case class Publish[+T](manifest: Manifest, onWin: Long => T,
+      reads: Option[Manifest => Boolean] = None) extends Attempt[T]
 }
 
 /** Versioned commit log over an immutable parquet file pool — snapshot
@@ -790,14 +793,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * replacement with a different column set makes the DATA the schema
     * of record again; carrying the stale header would resurrect dropped
     * evolved columns as phantom NULLs and hide the replacement's
-    * genuinely new columns at plan time. Maintenance replaces (compact's
-    * fold, optimize, fast-forward, the row-level-op CoW rewrite) preserve
-    * shape by construction — their rewrites emit the evolved schema — and
-    * keep carrying unconditionally via [[replaceCarried]]. `newSchema` is
-    * by-name and consulted ONLY when an evolved header exists, so
-    * file-based callers pay a footer read only on the rare evolved-table
-    * replace; `None` (schema unknowable — e.g. truncate-to-empty) carries
-    * conservatively.
+    * genuinely new columns at plan time. A rewrite of the head (compact's
+    * fold, optimize) emits the evolved schema, so it keeps the header.
+    * `newSchema` is by-name and consulted ONLY when an evolved header
+    * exists, so file-based callers pay a footer read only on the rare
+    * evolved-table replace; `None` (schema unknowable — e.g.
+    * truncate-to-empty) carries conservatively.
     */
   private def replaceCarriedData(prev: Manifest,
       newSchema: => Option[org.apache.spark.sql.types.StructType]): Manifest = {
@@ -1105,11 +1106,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * to that version's immutable pool files, so later commits (or a
     * concurrent compact/replicate) cannot change or tear what it reads.
     */
-  def read(): DataFrame = {
-    val v = committedHead()
+  def read(): DataFrame = read(manifest(committedHead()))
+
+  /** [[read]] of the snapshot `m`. */
+  private[catalog] def read(m: Manifest): DataFrame = {
     // ONE manifest read and ONE descriptor read serve rows, dv names,
     // AND the transform spec
-    val m = manifest(v)
     val meta = tableMeta
     withoutLayout(readManifest(m, meta), transformsFor(m, meta))
   }
@@ -1377,11 +1379,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * litter, and gives the declared clustering `stageBatch` lays the batch
     * out by. Each [[headRace]] attempt then does the same against its own
     * head, re-validating through the write's [[ConstraintGate]], and
-    * publishes the `#partition:` header of a partitioned write and `extra`
-    * (each superseding its same-key line), the carried head, the `#txn:`
-    * line and the staged entries. An append carries the head whole; a replace
-    * carries [[replaceCarriedData]], `newSchema(entries)` being the
-    * replacement's schema.
+    * publishes [[wholeManifest]], `newSchema(entries)` being a replacement's
+    * schema.
     */
   private def commitWhole(name: String, op: String, replace: Boolean,
       partCols: Seq[String] = Nil, txn: Option[String] = None,
@@ -1395,20 +1394,62 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val gate = new ConstraintGate
     gate(pre.checks)(check(_, pre))
     val entries = stageBatch(pre.clustering)
-    val headers = (if (partCols.isEmpty) Nil else Seq(Header.partition(partCols))) ++ extra
-    val superseded = headers.collect { case h: Header => h.key }
     headRace(name, op, budget) { (head, prev) =>
       if (txn.exists(prev.hasTxn)) Settle(head)  // lost the race to our own id's writer
       else {
         if (!replace) requireAppendable(name, partCols, prev, raced = true)
         gate(prev.checks)(check(_, prev))
-        // a replace drops the file lines but MUST carry the txn headers —
-        // applied-batch memory outlives any rewrite or compaction
-        val carried = if (replace) replaceCarriedData(prev, newSchema(entries)) else prev
-        publishAt(Manifest(headers) ++ carried.without(superseded: _*) ++
-          txn.map(Header.txn) ++ entries)
+        publishAt(wholeManifest(prev, replace, partCols, extra, txn, entries,
+          newSchema(entries)))
       }
     }
+  }
+
+  /** A whole-file commit's manifest on `prev`: the `#partition:` header
+    * and `extra` (each superseding its same-key line), the carried head
+    * (whole for an append, [[replaceCarriedData]] for a replace of schema
+    * `newSchema`), the `#txn:` line and the staged `entries`.
+    */
+  private def wholeManifest(prev: Manifest, replace: Boolean, partCols: Seq[String],
+      extra: Seq[Manifest.Line], txn: Option[String], entries: Seq[Entry],
+      newSchema: => Option[StructType]): Manifest = {
+    val headers = (if (partCols.isEmpty) Nil else Seq(Header.partition(partCols))) ++ extra
+    // a replace drops the file lines but MUST carry the txn headers —
+    // applied-batch memory outlives any rewrite or compaction
+    val carried = if (replace) replaceCarriedData(prev, newSchema) else prev
+    Manifest(headers) ++ carried.without(headers.collect { case h: Header => h.key }: _*) ++
+      txn.map(Header.txn) ++ entries
+  }
+
+  /** Replace the table with a rewrite of its own head ([[optimizeBy]],
+    * [[optimizeZOrder]], the `set_partition_transforms` and
+    * `materialize_mapping` procedures). Each [[headRace]] attempt lays out
+    * `rows(head)` of the head it pinned, hive-partitioned by `partCols` or
+    * by the hidden-partition `transforms` ([[commitTransformed]]'s layout
+    * and `#ptspec:` header), as a replace ([[wholeManifest]]). So a commit
+    * landing first is never erased: with a read test (`reads`) the rewrite
+    * rebases over it, else it recomputes. Named and budgeted like
+    * [[commitPartitioned]]'s race.
+    */
+  private[catalog] def rewriteHead(partCols: Seq[String] = Nil, transforms: Seq[String] = Nil,
+      op: String = "replace", reads: Option[Manifest => Boolean] = None)(
+      rows: Manifest => DataFrame): Long = {
+    val name = if (partCols.isEmpty && transforms.isEmpty) "commit" else "commitPartitioned"
+    val gate = new ConstraintGate
+    var laidBy = Seq.empty[PartitionTransform]
+    val v = headRace(name, op, headless = requireHead) { (_, head) =>
+      val snapshot = rows(head)
+      laidBy = transforms.map(parseTransform(snapshot, _))
+      val (df, cols) =
+        if (laidBy.isEmpty) (snapshot, partCols) else transformed(snapshot, laidBy)
+      gate(head.checks)(enforceConstraints(df, _, name, schemaOf(head)))
+      val entries = stage(clustered(df, cols, head.clustering), cols, name)
+      val ptspec = if (laidBy.isEmpty) Nil else Seq(Header.ptspec(laidBy))
+      Publish(wholeManifest(head, replace = true, cols, ptspec, None, entries, Some(df.schema)),
+        v => v, reads)
+    }
+    if (laidBy.nonEmpty) writePtspec(laidBy)
+    v
   }
 
   /** The append layout rule of [[commitWhole]]: a flat append refuses a
@@ -2336,10 +2377,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val ts = partitionTransforms
     require(ts.nonEmpty, s"commitStagedTransformed: no declared transforms " +
       s"under $tableRoot")
-    val names = ts.map(_.derivedName)
     restaged(stageDir, "commitStagedTransformed") { df =>
-      commitPartitioned(applyTransforms(df).repartition(names.map(n => col(s"`$n`")): _*),
-        names, replace = true, extraHeader = Some(Header.ptspec(ts).text))
+      val (laidOut, names) = transformed(df, ts)
+      commitPartitioned(laidOut, names, replace = true, extraHeader = Some(Header.ptspec(ts).text))
     }
   }
 
@@ -2372,21 +2412,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           s"${existing.map(_.spec).mkString(", ")}; got " +
           s"${parsed.map(_.spec).mkString(", ")} — appends must match " +
           "(replace=true re-lays-out)")
-    val derived = parsed.foldLeft(df)((d, t) =>
-      d.withColumn(t.derivedName, t.derive(col(s"`${t.src}`"))))
-    // cluster by the derived values before the partitioned write: without
-    // it every task opens a file in every partition value it holds — at
-    // 1000 tasks × 1000 values that is 10^6 near-empty files per commit.
-    // Transforms are DESIGNED to bound value counts (buckets hash-balance,
-    // time grains batch), so one exchange for ~one file per value is the
-    // right default here, unlike raw commitPartitioned's opt-in.
-    val names = parsed.map(_.derivedName)
+    val (laidOut, names) = transformed(df, parsed)
     // the spec rides the SAME atomic manifest publish as the laid-out
     // data (`#ptspec:` header): spec and layout can never disagree, even
     // across a crash mid-replace — a reader of the new head sees the new
     // spec, a reader of the old head the old one
-    val ver = commitPartitioned(derived.repartition(names.map(n => col(s"`$n`")): _*),
-      names, replace, txn,
+    val ver = commitPartitioned(laidOut, names, replace, txn,
       extraHeader = Some(Header.ptspec(parsed).text))
     // descriptor = write-behind copy (pre-commit declarations);
     // written only AFTER the data publish succeeds, so a failed commit
@@ -2394,6 +2425,22 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // THIS write crashes, the header above is still the spec of record
     writePtspec(parsed)
     ver
+  }
+
+  /** `df` with the derived columns of the transforms `parsed`, and their
+    * names. The rows are clustered by the derived values before the
+    * partitioned write: without it every task opens a file in every
+    * partition value it holds — at 1000 tasks × 1000 values that is 10^6
+    * near-empty files per commit. Transforms are DESIGNED to bound value
+    * counts (buckets hash-balance, time grains batch), so one exchange for
+    * ~one file per value is the right default here, unlike raw
+    * commitPartitioned's opt-in.
+    */
+  private def transformed(df: DataFrame,
+      parsed: Seq[PartitionTransform]): (DataFrame, Seq[String]) = {
+    val names = parsed.map(_.derivedName)
+    (parsed.foldLeft(df)((d, t) => d.withColumn(t.derivedName, t.derive(col(s"`${t.src}`"))))
+      .repartition(names.map(n => col(s"`$n`")): _*), names)
   }
 
   /** Split a predicate into conjuncts (`Or`/`Not` stay whole: they never
@@ -2974,20 +3021,22 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     *     0), then publishes that manifest, its `#op:` set to `op`, at head+1
     *     through the store's put-if-absent ([[publish]]);
     *  4. on a win, returns `onWin(head+1)`. On a loss another writer
-    *     landed head+1 first: pause ([[racePause]]) and start over from
-    *     step 1 against the new head, so nothing computed against a stale
-    *     snapshot is ever published unchecked. The one exception is the
-    *     merge-on-read rebase ([[morRace]]): a merge-on-read write's
-    *     `decide` publishes the entries it staged against its base B
-    *     unchanged on top of the new head H, without recomputing, when
-    *     all four of these hold ([[rebases]]): H still lists every data
-    *     and deletion-vector entry of B; H's headers other than
-    *     [[Manifest.PerCommit]] and [[Manifest.Lineage]], and its
-    *     `#partition:` layout, equal B's; no data entry added since B
-    *     can hold a row the write matches, by manifest stats alone; and
-    *     no deletion vector added since B has a (file, position) stats
-    *     box overlapping one the write staged (a vector without stats
-    *     conflicts). Otherwise it recomputes against H.
+    *     landed head+1 first: pause ([[racePause]]) and try again on the
+    *     new head H under one rule ([[rebased]]). The lost manifest, diffed
+    *     against the base B it was computed on, is the write's delta: the
+    *     entries it removes, the entries it adds, and any header it edits
+    *     (`#op:` aside). The delta lands on H, as H less the removed entries
+    *     plus the added ones, with no recompute and no Spark job, when the
+    *     write has a read test ([[Publish]]`.reads`), edits no header, and:
+    *      - H still lists every data and deletion-vector entry of B;
+    *      - H's headers other than [[Manifest.PerCommit]] and
+    *        [[Manifest.Lineage]], and its `#partition:` layout, equal B's;
+    *      - no data entry added since B passes the read test;
+    *      - every deletion vector added since B has a (file, position)
+    *        stats box that overlaps no deletion vector the write adds, and
+    *        whose file bounds hold no data file the write removes.
+    *     Otherwise `decide` recomputes against H. So nothing computed on a
+    *     stale snapshot is published unchecked, and nothing is erased.
     *
     * After `budget` lost attempts it throws `IOException("<name>: lost the
     * head race <budget> times under <root>")`. Append and metadata paths
@@ -2997,14 +3046,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   private def headRace[T](name: String, op: String, budget: Int = 50,
       headless: Option[() => Exception] = None)(
       decide: (Long, Manifest) => Attempt[T]): T = {
+    // the last publish that lost, and the head it was computed on
+    var lost: Option[(Manifest, Publish[T])] = None
     var attempt = 0
     while (attempt < budget) {
       val head = currentVersion.getOrElse(headless.fold(0L)(fail => throw fail()))
-      decide(head, manifest(head)) match {
+      val m = manifest(head)
+      lost.flatMap { case (base, p) => rebased(base, m, p) }
+        .getOrElse(decide(head, m)) match {
         case Settle(result) => return result
-        case Publish(m, onWin) =>
+        case p @ Publish(next, onWin, _) =>
           beforePublish(attempt, head + 1)
-          if (publish(head + 1, m.set(Header.op(op)))) return onWin(head + 1)
+          if (publish(head + 1, next.set(Header.op(op)))) return onWin(head + 1)
+          lost = Some((m, p))
           racePause(attempt, head + 1)
       }
       attempt += 1
@@ -3014,86 +3068,41 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   }
 
   /** [[Publish]] whose result is the version it lands at. */
-  private def publishAt(m: Manifest): Attempt[Long] = Publish(m, v => v)
+  private def publishAt(m: Manifest, reads: Option[Manifest => Boolean] = None)
+      : Attempt[Long] = Publish(m, v => v, reads)
 
-  /** One computed attempt of a merge-on-read writer ([[morRace]]): `next`,
-    * the manifest a win publishes, and `holdsMatch`, whether a data entry
-    * of a manifest can hold a row the write matches, judged from manifest
-    * stats alone.
+  /** `p`, computed on `base` and lost to `head`, with its delta landed on
+    * `head` when the one rule of [[headRace]] step 4 allows it; None when
+    * it must recompute.
     */
-  private final case class MorAttempt(next: Manifest, holdsMatch: Manifest => Boolean)
-
-  /** [[headRace]] for the merge-on-read writers ([[updateWhereMoR]],
-    * [[deleteWhereMoR]], [[deleteKeysMoR]], [[mergeMoR]]): `attempt`
-    * computes the write against the head manifest it is given, None when
-    * nothing matches (the race settles at that head). After a lost race the
-    * entries the last computed attempt staged land again, unchanged, on
-    * top of the new head when nothing that landed in between can conflict
-    * with them ([[rebases]]); otherwise `attempt` recomputes against the
-    * new head. A rebase costs one manifest read and no Spark job. An
-    * attempt whose `next` is not its head plus new entries (an evolving
-    * merge's `#schema:` edit) never rebases.
-    */
-  private def morRace(name: String, op: String, budget: Int)(
-      attempt: Manifest => Option[MorAttempt]): Long = {
-    // (the head the staged entries were last checked against, the
-    // entries, their match test)
-    var staged: Option[(Manifest, Seq[Entry], Manifest => Boolean)] = None
-    headRace(name, op, budget, requireHead) { (v, head) =>
-      staged.filter { case (base, entries, holdsMatch) =>
-        rebases(base, head, entries, holdsMatch)
-      } match {
-        case Some((_, entries, holdsMatch)) =>
-          staged = Some((head, entries, holdsMatch))
-          publishAt(head ++ entries)
-        case None => attempt(head) match {
-          case None => Settle(v)
-          case Some(MorAttempt(next, holdsMatch)) =>
-            val added = next.items.drop(head.items.length)
-            staged = Option.when(next.items.startsWith(head.items) &&
-                added.forall(_.isInstanceOf[Entry])) {
-              (head, added.collect { case e: Entry => e }, holdsMatch)
-            }
-            publishAt(next)
-        }
+  private def rebased[T](base: Manifest, head: Manifest, p: Publish[T]): Option[Publish[T]] =
+    p.reads.flatMap { reads =>
+      def key(e: Entry) = (e.name, e.dv)
+      def headers(m: Manifest, skip: Set[String]) =
+        m.without(skip).filterEntries(_ => false).items.toSet
+      val notContract = Manifest.PerCommit ++ Manifest.Lineage - Manifest.Partition
+      val had = base.entries.map(key).toSet
+      val has = p.manifest.entries.map(key).toSet
+      val removed = base.entries.filterNot(e => has(key(e)))
+      val added = p.manifest.entries.filterNot(e => had(key(e)))
+      val racing = head.filterEntries(e => !had(key(e)))
+      lazy val gone = removed.filterNot(_.dv).map(e => leafOf(e.name))
+      lazy val mine = added.filter(_.dv).map(dvBox)
+      // a racing deletion vector conflicts without a stats box, or when its
+      // box overlaps one this write adds or its file bounds hold a removed file
+      def clear(d: Entry) = dvBox(d).exists { case (file, pos) =>
+        gone.forall(n => !file.overlaps(n, n)) && mine.forall(_.exists { case (f, q) =>
+          !(file.overlaps(f.min, f.max) && pos.overlaps(q.min, q.max))
+        })
+      }
+      Option.when(headers(p.manifest, Set(Manifest.Op)) == headers(base, Set(Manifest.Op)) &&
+          had.subsetOf(head.entries.map(key).toSet) &&
+          headers(head, notContract) == headers(base, notContract) &&
+          !reads(Manifest(racing.data)) && racing.dvs.forall(clear)) {
+        val dropped = removed.map(key).toSet
+        p.copy(manifest = head.filterEntries(e => !dropped(key(e))) ++ added)
       }
     }
-  }
-
-  /** Whether entries staged against `base` may land unchanged on `head`:
-    *
-    *  1. `head` still lists every data and deletion-vector entry of
-    *     `base`, so nothing was rewritten, compacted, folded, restored or
-    *     replaced in between;
-    *  2. `head`'s headers other than [[Manifest.PerCommit]] and
-    *     [[Manifest.Lineage]], and its `#partition:` layout, equal
-    *     `base`'s, so no constraint, schema, clustering, TTL or transform
-    *     changed and the write's constraint verdict still holds;
-    *  3. no data entry added since `base` can hold a row the write
-    *     matches (`holdsMatch`, from manifest stats alone);
-    *  4. no deletion vector added since `base` has a (file, position)
-    *     stats box that overlaps the box of one of the `staged` deletion
-    *     vectors. A vector without that box counts as a conflict.
-    */
-  private def rebases(base: Manifest, head: Manifest, staged: Seq[Entry],
-      holdsMatch: Manifest => Boolean): Boolean = {
-    def listed(m: Manifest): Set[(String, Boolean)] =
-      m.entries.iterator.map(e => (e.name, e.dv)).toSet
-    def contracts(m: Manifest): Set[Manifest.Line] =
-      m.without(Manifest.PerCommit ++ Manifest.Lineage).filterEntries(_ => false).items.toSet
-    val before = listed(base)
-    lazy val added = head.filterEntries(e => !before((e.name, e.dv)))
-    lazy val mine = staged.filter(_.dv).map(dvBox)
-    before.subsetOf(listed(head)) &&
-      contracts(head) == contracts(base) &&
-      head.partitionColumns == base.partitionColumns &&
-      !holdsMatch(Manifest(added.data)) &&
-      added.dvs.forall(d => dvBox(d).exists { case (file, pos) =>
-        mine.forall(_.exists { case (f, p) =>
-          !(file.overlaps(f.min, f.max) && pos.overlaps(p.min, p.max))
-        })
-      })
-  }
 
   /** A deletion-vector entry's (file, position) stats box. */
   private def dvBox(e: Entry): Option[(ColStats, ColStats)] = {
@@ -3101,22 +3110,26 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     for (f <- st.get(DvKeys.head); p <- st.get(DvKeys.last)) yield (f, p)
   }
 
-  /** [[MorAttempt.holdsMatch]] of a keyed write: a data entry whose key
-    * stats admit the range of `keys` ([[keyCandidates]]).
+  /** The read test ([[Publish]]`.reads`) of a keyed write: a data entry
+    * whose key stats admit the range of `keys` ([[keyCandidates]]).
     */
-  private def keyMatch(keys: CommitLog.BatchKeys, keyCol: String): Manifest => Boolean =
-    m => keyCandidates(m, keys, keyCol).nonEmpty
+  private def keyMatch(keys: CommitLog.BatchKeys, keyCol: String): Option[Manifest => Boolean] =
+    Some(m => keyCandidates(m, keys, keyCol).nonEmpty)
 
-  /** [[MorAttempt.holdsMatch]] of a predicate write: a data entry whose
-    * column stats admit every column-literal comparison of `cond`
-    * ([[statsPruned]]), with `cond` resolved once against `scanned`, the
-    * relation the attempt matched it on.
+  /** The read test of a predicate write: a data entry whose column stats
+    * admit every column-literal comparison of `cond` ([[statsPruned]]).
+    * `cond` is resolved against `scanned`, the relation the write matched
+    * it on, on the first test, so a write that wins its first race never
+    * pays the analysis.
     */
-  private def predicateMatch(scanned: DataFrame,
-      cond: org.apache.spark.sql.Column): Manifest => Boolean =
-    resolvedConjuncts(scanned, cond).fold((m: Manifest) => m.data.nonEmpty) { conj =>
-      m => statsPruned(m, conj, m.dataNames).nonEmpty
-    }
+  private def predicateMatch(scanned: => DataFrame,
+      cond: org.apache.spark.sql.Column): Option[Manifest => Boolean] = {
+    lazy val conj = resolvedConjuncts(scanned, cond)
+    Some(m => m.data.nonEmpty && conj.forall(c => statsPruned(m, c, m.dataNames).nonEmpty))
+  }
+
+  /** The read test of a rewrite that reads only the files it removes. */
+  private val readsRemovedOnly: Option[Manifest => Boolean] = Some(_ => false)
 
   /** The missing-head failure of the mutators that need a committed head. */
   private def missingHead(prefix: String = ""): Exception =
@@ -3168,8 +3181,22 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     won
   }
 
-  private val compacting: ThreadLocal[java.lang.Boolean] =
+  /** One publish-time maintenance hook: `act` reports whether it acted.
+    * It is skipped while this thread is already inside it (`running`), so
+    * the hook's own publish never recurses, and it is best-effort: the
+    * triggering commit already stands, so any failure degrades to the
+    * manual path, never a failed commit or a wrong answer.
+    */
+  private def hook(running: ThreadLocal[java.lang.Boolean])(act: => Boolean): Boolean =
+    !running.get() && {
+      running.set(true)
+      try act catch { case scala.util.control.NonFatal(_) => false }
+      finally running.set(false)
+    }
+
+  private def reentrancyGuard(): ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
+  private val compacting, vacuumRunning, deleteFolding, ttlEnforcing = reentrancyGuard()
 
   /** Maintenance knob resolution: the SESSION conf wins (operator
     * override), else the table's own TBLPROPERTIES (its descriptor) — the
@@ -3200,7 +3227,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   private def maintenanceConf(key: String, default: String): String =
     spark.conf.getOption(key).orElse(tableProps.get(key)).getOrElse(default)
 
-  /** Best-effort publish-time small-file compaction (opt-in:
+  /** Publish-time small-file compaction ([[hook]], opt-in:
     * `spark.graft.autoCompact.minSmallFiles=N`; unset/0 disables): once
     * a commit leaves >= N data files below
     * `spark.graft.autoCompact.targetBytes` (default 128 MB) in the new
@@ -3212,33 +3239,20 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * fast path. Conservative by construction: a snapshot carrying
     * merge-on-read tombstones is skipped (its debt folds through
     * [[rewriteDeletes]] on the owner's schedule — the hook must never
-    * escalate a cheap append into a full-table rewrite), failures
-    * degrade to the manual `compact()` path, and the reentrancy guard
-    * keeps the compaction's own publish from recursing.
+    * escalate a cheap append into a full-table rewrite).
     */
-  private def autoCompact(m: Manifest): Boolean = {
-    if (compacting.get()) return false
-    try {
-      val minSmall =
-        maintenanceConf("spark.graft.autoCompact.minSmallFiles", "0").toInt
-      if (minSmall <= 0) return false
-      if (m.dvs.nonEmpty) return false
+  private def autoCompact(m: Manifest): Boolean = hook(compacting) {
+    val minSmall = maintenanceConf("spark.graft.autoCompact.minSmallFiles", "0").toInt
+    minSmall > 0 && m.dvs.isEmpty && {
       val target = maintenanceConf("spark.graft.autoCompact.targetBytes",
         String.valueOf(128L * 1024 * 1024)).toLong
-      val small = m.data.count(e => !e.absolute && e.bytes.exists(_ < target))
-      if (small < minSmall) return false
-      compacting.set(true)
-      try { val (b, a) = compact(target); a < b }
-      finally compacting.set(false)
-    } catch { case scala.util.control.NonFatal(_) => false }
+      m.data.count(e => !e.absolute && e.bytes.exists(_ < target)) >= minSmall && {
+        val (b, a) = compact(target); a < b
+      }
+    }
   }
 
-  // reentrancy guard: maintenance triggered from a vacuum-adjacent
-  // publish must not re-enter the sweep
-  private val vacuumRunning: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
-
-  /** Best-effort publish-time vacuum (opt-in:
+  /** Publish-time vacuum ([[hook]], opt-in:
     * `spark.graft.vacuum.retentionMs=N`, session conf or TBLPROPERTIES;
     * unset/0 disables): versions older than the declared retention drop
     * — and their unreferenced pool files, `_tmp` staging orphans,
@@ -3254,16 +3268,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * — stays in force (a refusal, like any hook failure, degrades
     * silently to the manual `vacuum()` path).
     */
-  private def autoVacuum(): Boolean = {
-    if (vacuumRunning.get()) return false
-    try {
-      val retention =
-        maintenanceConf("spark.graft.vacuum.retentionMs", "0").toLong
-      if (retention <= 0) return false
-      val versions = committedVersions.sorted
-      if (versions.length <= 1) return false
-      val horizon = System.currentTimeMillis() - retention
-      if (commitTime(versions.head) > horizon) return false // oldest still young
+  private def autoVacuum(): Boolean = hook(vacuumRunning) {
+    val retention = maintenanceConf("spark.graft.vacuum.retentionMs", "0").toLong
+    val versions = if (retention <= 0) Nil else committedVersions.sorted
+    val horizon = System.currentTimeMillis() - retention
+    // the oldest retained version still young: nothing to drop
+    versions.length > 1 && commitTime(versions.head) <= horizon && {
       // mirror vacuum's own pin set: a tag-pinned version past the
       // horizon is NOT droppable, so it must not keep the hook from
       // short-circuiting — otherwise every publish after the pin pays a
@@ -3274,21 +3284,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       }.toSet
       val droppable = versions.dropRight(1)
         .count(v => !pinned(v) && commitTime(v) <= horizon)
-      if (droppable == 0) return false
-      vacuumRunning.set(true)
-      try {
+      droppable > 0 && {
         val (m, f) = vacuum(keepVersions = versions.length - droppable,
           minVersionAgeMs = retention)
         m + f > 0
-      } finally vacuumRunning.set(false)
-    } catch { case scala.util.control.NonFatal(_) => false }
+      }
+    }
   }
 
-  // reentrancy guard: the fold's own publish must not recurse
-  private val deleteFolding: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
-
-  /** Best-effort publish-time tombstone fold (opt-in:
+  /** Publish-time tombstone fold ([[hook]], opt-in:
     * `spark.graft.rewriteDeletes.maxDebtRatio=R`, session conf or
     * TBLPROPERTIES; unset/0 disables): once a commit leaves
     * deletion-vector rows >= R × the live data rows, run
@@ -3301,69 +3305,48 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * minutes accumulates unbounded anti-join read debt until an
     * operator remembers. The debt census reads the manifest's
     * commit-time `_n` row tags on the `-`-prefixed DV lines vs the data
-    * lines — ZERO filesystem calls on the fast path. Same contract as
-    * the sibling hooks: the triggering commit already stands, ANY
-    * failure degrades to the (still-correct) merge-on-read scan plus
-    * the manual fold path, and the reentrancy guard keeps the fold's
-    * own publish from recursing. Composes with [[autoCompact]]: that
-    * hook deliberately skips tombstoned snapshots, but the FOLD's
-    * publish carries no DV lines, so its small-file census runs — a
-    * replica past both thresholds folds and compacts in one publish
-    * cascade.
+    * lines — ZERO filesystem calls on the fast path. Composes with
+    * [[autoCompact]]: that hook deliberately skips tombstoned snapshots,
+    * but the FOLD's publish carries no DV lines, so its small-file census
+    * runs — a replica past both thresholds folds and compacts in one
+    * publish cascade.
     */
-  private def autoRewriteDeletes(m: Manifest): Boolean = {
-    if (deleteFolding.get()) return false
-    try {
-      val ratio = maintenanceConf(
-        "spark.graft.rewriteDeletes.maxDebtRatio", "0").toDouble
-      if (ratio <= 0) return false
-      val debt = m.dvs.map(_.rows.getOrElse(0L)).sum
-      if (debt == 0L) return false
-      val data = m.data.map(_.rows.getOrElse(0L)).sum
-      // the declared ratio is debt vs LIVE rows: stored rows still count
-      // their already-tombstoned copies, so dividing by `data` would
-      // understate the ratio (debt/(live+debt)) exactly when debt is
-      // heaviest and the fold matters most
-      val live = math.max(data - debt, 1L)
-      if (debt.toDouble < ratio * live.toDouble) return false
-      deleteFolding.set(true)
-      try { rewriteDeletes(): Unit; true }
-      finally deleteFolding.set(false)
-    } catch { case scala.util.control.NonFatal(_) => false }
+  private def autoRewriteDeletes(m: Manifest): Boolean = hook(deleteFolding) {
+    val ratio = maintenanceConf("spark.graft.rewriteDeletes.maxDebtRatio", "0").toDouble
+    lazy val debt = m.dvs.map(_.rows.getOrElse(0L)).sum
+    // the declared ratio is debt vs LIVE rows: stored rows still count
+    // their already-tombstoned copies, so dividing by `data` would
+    // understate the ratio (debt/(live+debt)) exactly when debt is
+    // heaviest and the fold matters most
+    lazy val live = math.max(m.data.map(_.rows.getOrElse(0L)).sum - debt, 1L)
+    ratio > 0 && debt > 0L && debt.toDouble >= ratio * live.toDouble && {
+      rewriteDeletes(): Unit
+      true
+    }
   }
 
-  // reentrancy guard: the enforcement's own publish must not recurse
-  private val ttlEnforcing: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
-
-  /** Best-effort publish-time TTL enforcement (opt-in:
+  /** Publish-time TTL enforcement ([[hook]], opt-in:
     * `spark.graft.ttl.autoEnforce=true`): a table carrying a standing
     * `#ttl:` policy expires its aged rows as commits land — the declared
     * "engine applies retention" posture with no scheduler in the loop
     * (reference grounding: asset registries carry lifecycle config the
-    * platform, not an operator, applies). Same contract as the index
-    * hooks above: the triggering commit already stands, enforcement is
-    * usually a metadata-only manifest edit (stats-tier whole-file drops),
-    * and ANY failure degrades to the manual `CALL enforce_ttl` path —
-    * never a failed commit, never a wrong answer.
+    * platform, not an operator, applies). Enforcement is usually a
+    * metadata-only manifest edit (stats-tier whole-file drops), and a
+    * failure degrades to the manual `CALL enforce_ttl` path.
     */
-  private def autoEnforceTtl(m: Manifest): Boolean = {
-    if (ttlEnforcing.get()) return false
-    try {
-      if (maintenanceConf("spark.graft.ttl.autoEnforce", "false") != "true")
-        return false
-      if (!m.has(Manifest.Ttl)) return false
-      // deterministic-maintenance escape hatch: `spark.graft.ttl.asOfMs`
-      // pins the enforcement clock (tests, replayed pipelines, frozen
-      // benchmarks); production leaves it unset = wall clock
-      val asOf = maintenanceConf("spark.graft.ttl.asOfMs", "").trim match {
-        case "" => System.currentTimeMillis()
-        case s  => s.toLong
+  private def autoEnforceTtl(m: Manifest): Boolean = hook(ttlEnforcing) {
+    maintenanceConf("spark.graft.ttl.autoEnforce", "false") == "true" &&
+      m.has(Manifest.Ttl) && {
+        // deterministic-maintenance escape hatch: `spark.graft.ttl.asOfMs`
+        // pins the enforcement clock (tests, replayed pipelines, frozen
+        // benchmarks); production leaves it unset = wall clock
+        val asOf = maintenanceConf("spark.graft.ttl.asOfMs", "").trim match {
+          case "" => System.currentTimeMillis()
+          case s  => s.toLong
+        }
+        val (d, r) = enforceTtl(asOf)
+        d + r > 0
       }
-      ttlEnforcing.set(true)
-      try { val (d, r) = enforceTtl(asOf); d + r > 0 }
-      finally ttlEnforcing.set(false)
-    } catch { case scala.util.control.NonFatal(_) => false }
   }
 
   /** Apply every maintenance policy this table DECLARES (session conf
@@ -3527,20 +3510,19 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * metadata exposes), which normalize to manifest names exactly (leaves
     * are uuid-unique); castParts pins partition-column types so a
     * predicate on a string partition column compares lexically, matching
-    * the stats tier. The scan reads through the head's `schema`.
+    * the stats tier. `visible` is the head's visible rows with their
+    * (file, position) keys, read through its schema.
     */
-  private def touchedBy(m: Manifest, cond: org.apache.spark.sql.Column,
-      dv: Option[DataFrame], op: String,
-      schema: org.apache.spark.sql.types.StructType): Set[String] = {
+  private def touchedBy(m: Manifest, visible: => DataFrame,
+      cond: org.apache.spark.sql.Column, op: String): Set[String] = {
     val names = m.dataNames
     if (names.isEmpty) Set.empty
     else {
-      val leaves = collectNames(
-        castParts(visibleWithPos(m.data, dv, Some(schema)), partTypesOf(m)).filter(cond),
-        DvKeys.head, op)
+      val leaves = collectNames(visible.filter(cond), DvKeys.head, op)
       names.filter(n => leaves(leafOf(n))).toSet
     }
   }
+
 
   /** Exact (bytes, rows) of a retained version. Bytes/rows come from the
     * manifest's commit-time `_n`/`_b` tags — zero filesystem calls on the
@@ -3638,13 +3620,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * key is a partition column, the partition-value stats prune the
     * touched set to exactly the hit partitions before any I/O.
     *
-    * A lost head race recomputes the whole merge (lost work is bounded
-    * by the touched-file rewrite). Updates must carry the table's schema;
-    * with `evolve = true` the batch may ALSO carry new columns — the
-    * table schema widens in the same commit (existing rows read the new
-    * columns as NULL through the pool's mergeSchema read; untouched
-    * files are never rewritten for a schema change). The upstream-
-    * added-a-field case a long-lived CDC pipeline hits first.
+    * A lost head race lands the rewrite unchanged unless a racing file
+    * can hold a batch key or a racing tombstone falls on a rewritten file
+    * ([[headRace]] step 4); then it recomputes. Updates must carry the
+    * table's schema; with `evolve = true` the batch may ALSO carry new
+    * columns — the table schema widens in the same commit (existing rows
+    * read the new columns as NULL through the pool's mergeSchema read;
+    * untouched files are never rewritten for a schema change). The
+    * upstream-added-a-field case a long-lived CDC pipeline hits first.
     */
   def merge(updates0: DataFrame, keyCol: String, maxAttempts: Int = 5,
       evolve: Boolean = false): Long = {
@@ -3672,7 +3655,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       // (the #partition header rides the kept lines), so an upsert into one
       // partition rewrites only that partition's touched files and the
       // layout survives — no flatten, no full-table rewrite.
-      publishAt(b.evolved(kept) ++ stage(merged, head.partitionColumns, "merge"))
+      publishAt(b.evolved(kept) ++ stage(merged, head.partitionColumns, "merge"),
+        keyMatch(keys, keyCol))
     }
   }
 
@@ -3751,7 +3735,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           .join(keys.frame, Seq(keyCol), "left_anti")
           .select(schema.fieldNames.toSeq.map(col): _*)
         // partitioned survivors restage under their subdirs (see merge)
-        publishAt(kept ++ stage(survivors, head.partitionColumns, "delete"))
+        publishAt(kept ++ stage(survivors, head.partitionColumns, "delete"),
+          keyMatch(keys, keyCol))
       }
     }
   }
@@ -3774,7 +3759,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val partCols = head.partitionColumns
       val dv = dvFrameOf(head.dvNames)
       val schema = schemaOf(head)
-      val touched = touchedBy(head, cond, dv, "rewriteWhere", schema)
+      lazy val visible =
+        castParts(visibleWithPos(head.data, dv, Some(schema)), partTypesOf(head))
+      val touched = touchedBy(head, visible, cond, "rewriteWhere")
       if (touched.isEmpty && extra.isEmpty) Settle(v)
       else {
         val kept = head.filterEntries(e => e.dv || !touched(e.name))
@@ -3796,7 +3783,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // columns only — derive their layout columns before staging
         val extraEntries = extra.map(e => stage(applyTransforms(e), partCols, "rewriteWhere"))
           .getOrElse(Seq.empty)
-        publishAt(kept ++ survivorEntries ++ extraEntries)
+        publishAt(kept ++ survivorEntries ++ extraEntries,
+          if (head.data.isEmpty) None else predicateMatch(visible, cond))
       }
     }
   }
@@ -3814,13 +3802,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * table (an audit-log status correction) needs, vs. a whole-table
     * replace that rewrites every byte for one row.
     *
-    * Touched files are re-discovered on every attempt, so an append
-    * that wins a version mid-update survives the retry (a replace
-    * commit, by contrast, stages the stale snapshot once and erases the
-    * racer on retry). All set-expressions evaluate against the ORIGINAL
-    * row (simultaneous-assignment SQL UPDATE semantics), and a NULL
-    * predicate leaves the row unchanged. A no-match update returns the
-    * current version without committing.
+    * An append that wins a version mid-update survives: the rewrite lands
+    * on it unchanged when its stats rule out a match, else recomputes
+    * ([[headRace]] step 4). All set-expressions
+    * evaluate against the ORIGINAL row (simultaneous-assignment SQL UPDATE
+    * semantics), and a NULL predicate leaves the row unchanged. A
+    * no-match update returns the current version without committing.
     */
   def updateWhere(cond: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)],
@@ -3829,7 +3816,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     headRace("updateWhere", "update", maxAttempts, requireHead) { (v, head) =>
       val dv = dvFrameOf(head.dvNames)
       val schema = schemaOf(head)
-      val touched = touchedBy(head, cond, dv, "updateWhere", schema)
+      lazy val visible =
+        castParts(visibleWithPos(head.data, dv, Some(schema)), partTypesOf(head))
+      val touched = touchedBy(head, visible, cond, "updateWhere")
       if (touched.isEmpty) Settle(v)
       else {
         val kept = head.filterEntries(e => e.dv || !touched(e.name))
@@ -3853,7 +3842,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         // re-derive the layout column, or the row stays filed under its
         // old partition and pruning silently goes wrong
         publishAt(kept ++ stage(applyTransforms(rewritten), head.partitionColumns,
-          "updateWhere"))
+          "updateWhere"), predicateMatch(visible, cond))
       }
     }
   }
@@ -3886,8 +3875,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       sets: Seq[(String, org.apache.spark.sql.Column)],
       maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.coalesce
-    morRace("updateWhereMoR", "update_mor", maxAttempts) { head =>
-      if (head.data.isEmpty) None
+    headRace("updateWhereMoR", "update_mor", maxAttempts, requireHead) { (v, head) =>
+      if (head.data.isEmpty) Settle(v)
       else {
         val visible = castParts(visibleWithPos(head.data, dvFrameOf(head.dvNames)),
           partTypesOf(head))
@@ -3908,10 +3897,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         enforceConstraints(updated, head.checks, "updateWhereMoR", headSchema)
         val dvStaged = stage(onePart(matched.select(DvKeys.map(col): _*)), Nil,
           "updateWhereMoR")
-        Option.when(dvStaged.nonEmpty) {
+        if (dvStaged.isEmpty) Settle(v)
+        else {
           val dataStaged = stage(onePart(applyTransforms(updated)), head.partitionColumns,
             "updateWhereMoR")
-          MorAttempt(head ++ dataStaged ++ dvStaged.map(_.asDv), predicateMatch(visible, cond))
+          publishAt(head ++ dataStaged ++ dvStaged.map(_.asDv), predicateMatch(visible, cond))
         }
       }
     }
@@ -3934,14 +3924,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def deleteWhereMoR(cond: org.apache.spark.sql.Column, maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.coalesce
-    morRace("deleteWhereMoR", "delete_mor", maxAttempts) { head =>
-      if (head.data.isEmpty) None
+    headRace("deleteWhereMoR", "delete_mor", maxAttempts, requireHead) { (v, head) =>
+      if (head.data.isEmpty) Settle(v)
       else {
         val visible = visibleWithPos(head.data, dvFrameOf(head.dvNames))
         val staged = stage(visible.filter(coalesce(cond, lit(false)))
           .select(DvKeys.map(col): _*), Nil, "deleteWhereMoR")
-        Option.when(staged.nonEmpty)(
-          MorAttempt(head ++ staged.map(_.asDv), predicateMatch(visible, cond)))
+        if (staged.isEmpty) Settle(v)
+        else publishAt(head ++ staged.map(_.asDv), predicateMatch(visible, cond))
       }
     }
   }
@@ -3953,9 +3943,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   def deleteKeysMoR(keys0: DataFrame, keyCol: String, maxAttempts: Int = 5): Long = {
     val keys = CommitLog.keysOf(CommitLog.evaluated(keys0.select(keyCol)), keyCol)
-    morRace("deleteKeysMoR", "delete_mor", maxAttempts) { head =>
+    headRace("deleteKeysMoR", "delete_mor", maxAttempts, requireHead) { (v, head) =>
       val staged = keyTombstones(head, keys, keyCol, "deleteKeysMoR")
-      Option.when(staged.nonEmpty)(MorAttempt(head ++ staged, keyMatch(keys, keyCol)))
+      if (staged.isEmpty) Settle(v) else publishAt(head ++ staged, keyMatch(keys, keyCol))
     }
   }
 
@@ -4005,7 +3995,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       evolve: Boolean = false): Long = {
     val (updates, keys) = keyedUpdates(updates0, keyCol, "mergeMoR")
     val gate = new ConstraintGate
-    morRace("mergeMoR", "merge_mor", maxAttempts) { head =>
+    headRace("mergeMoR", "merge_mor", maxAttempts, requireHead) { (v, head) =>
       // schema evolution mirrors [[merge]]: appended rows carry the new
       // columns, existing files stay untouched and read them as NULL
       val b = keyedBatch(updates, head, evolve, "mergeMoR", "updates")
@@ -4013,8 +4003,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       // tombstone the old positions of matched keys
       val dvStaged = keyTombstones(head, keys, keyCol, "mergeMoR", Some(b.schema))
       val dataStaged = stage(b.applied, head.partitionColumns, "mergeMoR")
-      Option.when(dvStaged.nonEmpty || dataStaged.nonEmpty)(
-        MorAttempt(b.evolved(head) ++ dataStaged ++ dvStaged, keyMatch(keys, keyCol)))
+      if (dvStaged.isEmpty && dataStaged.isEmpty) Settle(v)
+      else publishAt(b.evolved(head) ++ dataStaged ++ dvStaged, keyMatch(keys, keyCol))
     }
   }
 
@@ -4102,7 +4092,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           if (touched.isEmpty) Seq.empty
           else stage(readFiles(head.dataEntries(touched.toSeq.sorted), Some(dv),
             partTypesOf(head)), head.partitionColumns, "rewriteDeletes")
-        Publish(kept ++ survivorEntries, _ => (dvN.length, touched.size))
+        Publish(kept ++ survivorEntries, _ => (dvN.length, touched.size), readsRemovedOnly)
       }
     }
 
@@ -4228,24 +4218,26 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * touched-file discovery of [[merge]]/[[deleteKeys]] hit the minimum
     * file set — clustering is what converts footer stats into actual
     * pruning. Same snapshot guarantees as [[compact]]: maintenance and
-    * the query plane never race. Returns (filesBefore, filesAfter).
+    * the query plane never race, and a racing append is carried
+    * ([[rewriteHead]]). Returns (filesBefore, filesAfter).
     */
   def optimizeBy(column: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val v = committedHead()
-    val m = manifest(v)
+    val m = manifest(committedHead())
     val partCols = m.partitionColumns
     require(!partCols.contains(column),
       s"optimizeBy: $column is a partition column — constant within every " +
         "c=v dir, clustering on it is a no-op")
-    val nOut = fileCount(m.data.map(bytesOf).sum, targetFileBytes)
     val keys = partCols.map(col) :+ col(column)
     // on a partitioned table the cluster keys LEAD with the partition
     // columns: each shuffle range then holds one partition's value slab,
     // and the hive re-stage keeps the c=v layout — partition-local
     // clustering, never a flat rewrite
-    commitPartitioned(readVersion(v).repartitionByRange(nOut, keys: _*)
-      .sortWithinPartitions(keys: _*), partCols, replace = true, op = Some("optimize"))
+    rewriteHead(partCols, op = "optimize", reads = readsRemovedOnly) { head =>
+      readManifest(head)
+        .repartitionByRange(fileCount(head.data.map(bytesOf).sum, targetFileBytes), keys: _*)
+        .sortWithinPartitions(keys: _*)
+    }
     (m.data.length, currentFileCount)
   }
 
@@ -4287,66 +4279,66 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       (quantileBuckets >= 2 && quantileBuckets <= 65536 &&
         (quantileBuckets & (quantileBuckets - 1)) == 0),
       s"quantileBuckets must be 0 (linear) or a power of two in [2, 65536], got $quantileBuckets")
-    val v = committedHead()
-    val m = manifest(v)
+    val m = manifest(committedHead())
     val partCols = m.partitionColumns
     require(!columns.exists(partCols.contains),
       s"optimizeZOrder: ${columns.filter(partCols.contains)} are partition " +
         "columns — constant within every c=v dir, z-ordering them is a no-op")
-    val nOut = fileCount(m.data.map(bytesOf).sum, targetFileBytes)
-    val snap = readVersion(v)
     val k = columns.size
     // a try-cast: under ANSI a plain cast of 'v1' to DOUBLE throws, where
     // a non-castable value must scale to bucket 0 like a NULL
     def asDouble(c: String): org.apache.spark.sql.Column = col(c).try_cast("double")
-    val (scaled, bits) =
-      if (quantileBuckets == 0) {
-        val boundAggs = columns.flatMap(c => Seq(
-          org.apache.spark.sql.functions.min(asDouble(c)),
-          org.apache.spark.sql.functions.max(asDouble(c))))
-        val bounds = snap.agg(boundAggs.head, boundAggs.tail: _*).head()
-        (columns.zipWithIndex.map { case (c, j) =>
-          val (mn, mx) = (bounds.get(2 * j), bounds.get(2 * j + 1))
-          if (mn == null || mx == null || mn == mx) lit(0L)
-          else {
-            val lo = mn.asInstanceOf[Double]
-            val span = mx.asInstanceOf[Double] - lo
-            org.apache.spark.sql.functions.coalesce(
-              org.apache.spark.sql.functions.floor(
-                (asDouble(c) - lit(lo)) / lit(span) * lit(65535.0)), lit(0L))
-          }
-        }, 16)
-      } else {
-        import org.apache.spark.sql.functions.{aggregate, array, floor, when}
-        val b = java.lang.Integer.numberOfTrailingZeros(quantileBuckets)
-        val probs = (1 until quantileBuckets).map(_.toDouble / quantileBuckets).toArray
-        (columns.map { c =>
-          // per-column equi-depth cutpoints (approx, one pass per column
-          // over the numeric projection; nulls and non-castables excluded
-          // and bucketed to 0)
-          val cuts = snap.select(asDouble(c).as("_graft_q"))
-            .na.drop().stat
-            .approxQuantile("_graft_q", probs, 0.25 / quantileBuckets)
-            .distinct.sorted
-          if (cuts.isEmpty) lit(0L)
-          else {
-            val raw = aggregate(array(cuts.map(lit(_)).toIndexedSeq: _*), lit(0L),
-              (acc, cut) => acc + when(asDouble(c) > cut, 1L).otherwise(0L))
-            // the sketch may return far fewer distinct cutpoints than
-            // requested (few distinct values, coarse error): stretch the
-            // observed bucket range over the FULL bit width, or the top
-            // interleave bits would sit constant and the dimension would
-            // not participate in the file split
-            floor(raw * lit(((1L << b) - 1).toDouble) / lit(cuts.length.toDouble))
-              .cast("long")
-          }
-        }, b)
-      }
-    val zval = (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
-      scaled.zipWithIndex.foldLeft(acc) { case (a, (c, j)) =>
-        a.bitwiseOR(org.apache.spark.sql.functions.shiftleft(
-          org.apache.spark.sql.functions.shiftright(c, i).bitwiseAND(lit(1L)),
-          i * k + j))
+    // the z-value of the rows of `snap`, whose bounds or quantiles scale it
+    def zValue(snap: DataFrame): org.apache.spark.sql.Column = {
+      val (scaled, bits) =
+        if (quantileBuckets == 0) {
+          val boundAggs = columns.flatMap(c => Seq(
+            org.apache.spark.sql.functions.min(asDouble(c)),
+            org.apache.spark.sql.functions.max(asDouble(c))))
+          val bounds = snap.agg(boundAggs.head, boundAggs.tail: _*).head()
+          (columns.zipWithIndex.map { case (c, j) =>
+            val (mn, mx) = (bounds.get(2 * j), bounds.get(2 * j + 1))
+            if (mn == null || mx == null || mn == mx) lit(0L)
+            else {
+              val lo = mn.asInstanceOf[Double]
+              val span = mx.asInstanceOf[Double] - lo
+              org.apache.spark.sql.functions.coalesce(
+                org.apache.spark.sql.functions.floor(
+                  (asDouble(c) - lit(lo)) / lit(span) * lit(65535.0)), lit(0L))
+            }
+          }, 16)
+        } else {
+          import org.apache.spark.sql.functions.{aggregate, array, floor, when}
+          val b = java.lang.Integer.numberOfTrailingZeros(quantileBuckets)
+          val probs = (1 until quantileBuckets).map(_.toDouble / quantileBuckets).toArray
+          (columns.map { c =>
+            // per-column equi-depth cutpoints (approx, one pass per column
+            // over the numeric projection; nulls and non-castables excluded
+            // and bucketed to 0)
+            val cuts = snap.select(asDouble(c).as("_graft_q"))
+              .na.drop().stat
+              .approxQuantile("_graft_q", probs, 0.25 / quantileBuckets)
+              .distinct.sorted
+            if (cuts.isEmpty) lit(0L)
+            else {
+              val raw = aggregate(array(cuts.map(lit(_)).toIndexedSeq: _*), lit(0L),
+                (acc, cut) => acc + when(asDouble(c) > cut, 1L).otherwise(0L))
+              // the sketch may return far fewer distinct cutpoints than
+              // requested (few distinct values, coarse error): stretch the
+              // observed bucket range over the FULL bit width, or the top
+              // interleave bits would sit constant and the dimension would
+              // not participate in the file split
+              floor(raw * lit(((1L << b) - 1).toDouble) / lit(cuts.length.toDouble))
+                .cast("long")
+            }
+          }, b)
+        }
+      (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
+        scaled.zipWithIndex.foldLeft(acc) { case (a, (c, j)) =>
+          a.bitwiseOR(org.apache.spark.sql.functions.shiftleft(
+            org.apache.spark.sql.functions.shiftright(c, i).bitwiseAND(lit(1L)),
+            i * k + j))
+        }
       }
     }
     // partitioned tables z-cluster WITHIN each partition: the shuffle
@@ -4355,10 +4347,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     // pruning on the partition column and on the z-ordered dimensions
     // compose instead of one destroying the other
     val keys = partCols.map(col) :+ col("_graft_z")
-    commitPartitioned(snap.withColumn("_graft_z", zval)
-      .repartitionByRange(nOut, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .drop("_graft_z"), partCols, replace = true, op = Some("optimize"))
+    rewriteHead(partCols, op = "optimize", reads = readsRemovedOnly) { head =>
+      val snap = readManifest(head)
+      snap.withColumn("_graft_z", zValue(snap))
+        .repartitionByRange(fileCount(head.data.map(bytesOf).sum, targetFileBytes), keys: _*)
+        .sortWithinPartitions(keys: _*)
+        .drop("_graft_z")
+    }
     (m.data.length, currentFileCount)
   }
 
@@ -5117,17 +5112,15 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val names = head.dataNames
       val partCols = head.partitionColumns
       if (head.dvs.nonEmpty) {
-        // tombstoned snapshot: full rewrite, which also folds the DVs. It
-        // replaces the head it read within this attempt, so a commit that
-        // lands first makes the attempt recompute instead of being erased.
-        // The rows are the head's own, which already pass its constraints.
+        // tombstoned snapshot: full rewrite of the head this attempt read,
+        // which also folds the DVs. Its rows already pass the constraints.
         val all = readManifest(head)
         val laidOut = clustered(if (partCols.nonEmpty) all
           else all.coalesce(fileCount(head.data.map(bytesOf).sum, targetFileBytes)),
           partCols, head.clustering)
-        Publish(Manifest(if (partCols.isEmpty) Nil else Seq(Header.partition(partCols))) ++
-            replaceCarriedData(head, Some(all.schema)) ++ stage(laidOut, partCols, "compact"),
-          _ => (names.length, currentFileCount))
+        Publish(wholeManifest(head, replace = true, partCols, Nil, None,
+          stage(laidOut, partCols, "compact"), Some(all.schema)),
+          _ => (names.length, currentFileCount), readsRemovedOnly)
       } else {
         val sized = head.data.map(e => (e.name, bytesOf(e)))
         val candidates = sized.collect {
@@ -5157,7 +5150,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             else if (partCols.isEmpty) packed.coalesce(nOut)
             else packed.repartition(nOut, partCols.map(col): _*)
           Publish(kept ++ stage(laidOut, partCols, "compact"),
-            _ => (names.length, currentFileCount))
+            _ => (names.length, currentFileCount), readsRemovedOnly)
         }
       }
     }

@@ -294,8 +294,10 @@ private[catalog] object GraftProcedures {
         }
       }
       specs += sb.toString
-      val v = log.commitTransformed(log.read(),
-        specs.map(_.trim).filter(_.nonEmpty).toSeq, replace = true)
+      val transforms = specs.map(_.trim).filter(_.nonEmpty).toSeq
+      require(transforms.nonEmpty, "commitTransformed: empty transform list")
+      // the head is read inside the race: a commit landing first is re-laid out too
+      val v = log.rewriteHead(transforms = transforms)(m => log.read(m))
       result(new StructType().add("version", LongType)
         .add("transforms", StringType),
         v, log.partitionTransforms.map(_.spec).mkString(","))
@@ -990,10 +992,10 @@ private[catalog] object GraftProcedures {
       val schema = declaredOpt.getOrElse(throw new IllegalStateException(
         s"materialize_mapping: no declared schema under $root"))
       val log = new CommitLog(cat.sparkSession, root)
-      val logical = log.read().select(schema.fields.map(f =>
-        col(s"`${ColumnMapping.physicalName(f)}`").as(f.name)).toIndexedSeq: _*)
       val partCols = GraftTable.resolve(cat.sparkSession, root).partCols
-      val v = log.commitPartitioned(logical, partCols, replace = true)
+      // the head is read inside the race: a commit landing first is renamed too
+      val v = log.rewriteHead(partCols)(m => log.read(m).select(schema.fields.map(f =>
+        col(s"`${ColumnMapping.physicalName(f)}`").as(f.name)).toIndexedSeq: _*))
       val plain = org.apache.spark.sql.types.StructType(schema.fields.map(f =>
         f.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
       TableMeta.update(HadoopFs.fs(cat.sparkSession, root), root)(

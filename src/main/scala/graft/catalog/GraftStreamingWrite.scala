@@ -32,8 +32,7 @@ private[graft] final class GraftStreamingWrite(
     log: CommitLog,
     schema: StructType,
     queryId: String,
-    replaceEachEpoch: Boolean,
-    tableName: String) extends StreamingWrite {
+    replaceEachEpoch: Boolean) extends StreamingWrite {
 
   private val stageRoot = log.newStageDir("stream")
   // captured on the DRIVER (factories serialize to tasks): the session

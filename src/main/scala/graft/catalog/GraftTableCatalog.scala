@@ -860,8 +860,7 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
           // rename — the epoch write's rows are resolved to table order)
           val streamSchema =
             if (hasRenames) ColumnMapping.physicalSchema(schema) else info.schema()
-          new GraftStreamingWrite(log, streamSchema, info.queryId(),
-            replaceEachEpoch, tableName)
+          new GraftStreamingWrite(log, streamSchema, info.queryId(), replaceEachEpoch)
         }
         override def toInsertableRelation: InsertableRelation =
           new InsertableRelation {

@@ -741,16 +741,6 @@ object IcebergInterop {
   def readFileList(spark: SparkSession, table: String): Seq[String] =
     resolveFiles(spark, table).collect { case f if f.content == 0 => f.path }
 
-  /** Live `(data files, position-delete files)` of the current snapshot
-    * (equality-delete files are resolved separately by [[readIceberg]]).
-    */
-  private[graft] def readFileLists(spark: SparkSession,
-      table: String): (Seq[String], Seq[String]) = {
-    val fs0 = resolveFiles(spark, table)
-    (fs0.collect { case f if f.content == 0 => f.path },
-      fs0.collect { case f if f.content == 1 => f.path })
-  }
-
   /** One live file of the current snapshot: data (content 0), position
     * deletes (1), or equality deletes (2, with the equality field ids);
     * `seq` is the entry's data sequence number (inherited from its

@@ -110,7 +110,7 @@ object Ingest {
       .parquet(srcPath)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeRollupBatch(log, batch, id, tablePath)
+        mergeRollupBatch(log, batch, id)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -126,7 +126,7 @@ object Ingest {
     * the commit as its txn id, so skip-on-redelivery needs no side files.
     */
   def mergeRollupBatch(log: graft.catalog.CommitLog, batch: DataFrame,
-      batchId: Long, tablePath: String): Unit = {
+      batchId: Long): Unit = {
     val txn = s"rollup-$batchId"
     if (log.currentVersion.exists(v => log.txns(v).contains(txn)))
       return   // re-delivered batch: its id landed with its commit

@@ -7,7 +7,8 @@ import graft.catalog.{CommitLog, CrossTableTxn}
 
 /** The composed multi-writer storm a busy 100 TB table actually
   * experiences: concurrent threads interleave keyed merges, MoR
-  * updates, maintenance (tombstone fold + compaction), incremental
+  * updates, maintenance (tombstone fold, compaction and a clustering
+  * rewrite that reads the whole table it replaces), incremental
   * replication, guarded vacuums, and cross-table transactions against
   * ONE table for several rounds. The individual race seams are specced
   * elsewhere (CrossTableTxnSpec decision races, CatalogSpec head races,
@@ -80,6 +81,10 @@ class ChaosSpec extends AnyFunSuite {
             l.rewriteDeletes(maxAttempts = 60): Unit
             l.compact(maxAttempts = 60): Unit
           }
+        },
+        worker("optimizer") {     // range-clusters the whole table on k
+          val l = new CommitLog(spark, t)
+          for (_ <- 1 to rounds) l.optimizeBy("k"): Unit
         },
         worker("replicator") {    // incremental syncs against live churn
           val replica = new CommitLog(spark, s"$root/replica")

@@ -259,8 +259,7 @@ class StreamingSpec extends AnyFunSuite {
     // re-delivering an already-applied batch id must be a no-op
     val log = new graft.catalog.CommitLog(spark, s"$tmp/rollup")
     val before = log.currentVersion
-    graft.stream.Ingest.mergeRollupBatch(log,
-      spark.read.parquet(landing), 0L, s"$tmp/rollup")
+    graft.stream.Ingest.mergeRollupBatch(log, spark.read.parquet(landing), 0L)
     assert(log.currentVersion == before)
   }
 

@@ -17,10 +17,10 @@ import graft.SparkTestSession
   *    operation must give up with "lost the head race" after exactly its
   *    budget, with the visible table unchanged;
   *  - then a racer that commits on attempt 0 only: the operation must land
-  *    one version above the racer, with the racer's effect kept. A
-  *    merge-on-read path (`rebases`) lands the entries its attempt 0
-  *    staged on top of the racer's append, so that run leaves no orphaned
-  *    pool file.
+  *    one version above the racer, with the racer's effect kept. A path
+  *    with a read test the racer's append cannot pass (`rebases`) lands the
+  *    delta its attempt 0 staged on top of the append, so that run leaves
+  *    no orphaned pool file.
   *
   * Every test owns its table, so the tests run in parallel.
   */
@@ -134,13 +134,14 @@ class HeadRaceSpec extends AnyFunSuite with ParallelTestExecution {
     RacePath("expireBefore", "expire", 5, _.expireBefore("k", 2L),
       kept = l => assert(keys(l) == Set(2L, 3L, Racer))),
     RacePath("merge", "merge", 5, _.merge(rows(2L -> "u", 5L -> "n"), "k"),
-      kept = l => assert(keys(l) == Set(1L, 2L, 3L, 5L, Racer) && updated(l) == Seq("u"))),
+      kept = l => assert(keys(l) == Set(1L, 2L, 3L, 5L, Racer) && updated(l) == Seq("u")),
+      rebases = true),
     RacePath("delete", "delete", 5, _.deleteKeys(Seq(2L).toDF("k"), "k"),
-      kept = l => assert(keys(l) == Set(1L, 3L, Racer))),
+      kept = l => assert(keys(l) == Set(1L, 3L, Racer)), rebases = true),
     RacePath("rewriteWhere", "delete", 5, _.deleteWhere(col("k") === 2L),
-      kept = l => assert(keys(l) == Set(1L, 3L, Racer))),
+      kept = l => assert(keys(l) == Set(1L, 3L, Racer)), rebases = true),
     RacePath("updateWhere", "update", 5, _.updateWhere(col("k") === 2L, Seq("p" -> lit("u"))),
-      kept = l => assert(keys(l)(Racer) && updated(l) == Seq("u"))),
+      kept = l => assert(keys(l)(Racer) && updated(l) == Seq("u")), rebases = true),
     RacePath("updateWhereMoR", "update_mor", 5,
       _.updateWhereMoR(col("k") === 2L, Seq("p" -> lit("u"))),
       kept = l => assert(keys(l)(Racer) && updated(l) == Seq("u")), rebases = true),
@@ -159,10 +160,13 @@ class HeadRaceSpec extends AnyFunSuite with ParallelTestExecution {
     RacePath("rewriteDeletes", "rewrite_deletes", 5, _.rewriteDeletes(),
       setup = root => { seeded(root)
         new CommitLog(spark, root).deleteWhereMoR(col("k") === 2L): Unit },
-      kept = l => assert(keys(l) == Set(1L, 3L, Racer) && l.dvFiles(l.currentVersion.get).isEmpty)),
+      kept = l => assert(keys(l) == Set(1L, 3L, Racer) && l.dvFiles(l.currentVersion.get).isEmpty),
+      rebases = true),
     RacePath("compact", "compact", 5, _.compact(),
+      // the packed file plus the racer's, carried by the rebase
       kept = l => assert(keys(l) == Set(1L, 2L, 3L, Racer) &&
-        l.files(l.currentVersion.get).length == 1))
+        l.files(l.currentVersion.get).length == 2), rebases = true),
+    RacePath("commit", "optimize", 50, _.optimizeBy("k"), rebases = true)
   )
 
   /** A handle on `root` whose `beforePublish` records its arguments and

@@ -8,14 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** The merge-on-read rebase, as a conflict matrix: a racer lands one
-  * version through the `beforePublish` seam before a merge-on-read write's
-  * first publish, and the write then either publishes the entries it
-  * already staged on top of the racer (a rebase) or recomputes against the
-  * racer's head. The two are told apart by orphaned pool files: files
-  * under `data/` that no retained manifest lists. A rebase publishes what
-  * attempt 0 staged, so it leaves none; a recompute leaves attempt 0's.
-  * Every case also checks the rows the table ends with.
+/** The head race's one conflict rule, as a matrix: a racer lands one
+  * version through the `beforePublish` seam before a write's first
+  * publish, and the write then either lands the delta it already staged on
+  * top of the racer (a rebase) or recomputes against the racer's head. The
+  * two are told apart by orphaned pool files: files under `data/` that no
+  * retained manifest lists. A rebase publishes what attempt 0 staged, so it
+  * leaves none; a recompute leaves attempt 0's. Every case also checks the
+  * rows the table ends with. The writers are the merge-on-read ones and the
+  * copy-on-write rewrites, whose delta also removes the files it rewrote.
   */
 class MorRebaseSpec extends AnyFunSuite with ParallelTestExecution {
   import MorRebaseSpec.orphans
@@ -69,10 +70,26 @@ class MorRebaseSpec extends AnyFunSuite with ParallelTestExecution {
   private def update(l: CommitLog): Any = l.updateWhereMoR(col("k") === 2L, Seq("p" -> lit("u")))
   private def mergeMoR(l: CommitLog): Any = l.mergeMoR(rows(2L -> "u", 5L -> "n"), "k")
 
+  private def delete(k: Long)(root: String): Unit =
+    new CommitLog(spark, root).deleteWhereMoR(col("k") === k): Unit
+
+  private def merge(l: CommitLog): Any = l.merge(rows(2L -> "u", 5L -> "n"), "k")
+  private def deleteKeys(l: CommitLog): Any = l.deleteKeys(Seq(2L).toDF("k"), "k")
+  private def updateCoW(l: CommitLog): Any = l.updateWhere(col("k") === 2L, Seq("p" -> lit("u")))
+  private def compact(l: CommitLog): Any = l.compact()
+  private def fold(l: CommitLog): Any = l.rewriteDeletes()
+
+  /** [[seeded]] with row 3 tombstoned, for the tombstone fold. */
+  private def seededDeleted(): String = {
+    val root = seeded()
+    delete(3L)(root)
+    root
+  }
+
   /** One cell: `writer` runs on a handle that loses attempt 0 to `racer`. */
   private def cell(writer: CommitLog => Any, racer: String => Unit, rebased: Boolean,
-      expected: Seq[(Long, String)]): Unit = {
-    val root = seeded()
+      expected: Seq[(Long, String)], setup: () => String = () => seeded()): Unit = {
+    val root = setup()
     val start = new CommitLog(spark, root).currentVersion.get
     writer(new Raced(root, racer))
     val log = new CommitLog(spark, root)
@@ -161,6 +178,63 @@ class MorRebaseSpec extends AnyFunSuite with ParallelTestExecution {
   test("mergeMoR: a deletion vector with no stats recomputes") {
     cell(mergeMoR, statslessDv, rebased = false,
       (updated(2L -> "u") :+ (5L -> "n")).filterNot(_._1 == 1L))
+  }
+
+  test("merge: a non-matching append rebases") {
+    cell(merge, append(9L -> "r"), rebased = true,
+      updated(2L -> "u") ++ Seq(5L -> "n", 9L -> "r"))
+  }
+
+  test("merge: an append of a matching row recomputes and replaces it too") {
+    cell(merge, append(2L -> "r"), rebased = false, updated(2L -> "u") :+ (5L -> "n"))
+  }
+
+  test("merge: a delete in a file it rewrites recomputes, and the row stays deleted") {
+    cell(merge, delete(1L), rebased = false,
+      (updated(2L -> "u") :+ (5L -> "n")).filterNot(_._1 == 1L))
+  }
+
+  test("deleteKeys: a non-matching append rebases") {
+    cell(deleteKeys, append(9L -> "r"), rebased = true,
+      seed.filterNot(_._1 == 2L) :+ (9L -> "r"))
+  }
+
+  test("deleteKeys: an append of a matching row recomputes and deletes it too") {
+    cell(deleteKeys, append(2L -> "r"), rebased = false, seed.filterNot(_._1 == 2L))
+  }
+
+  test("deleteKeys: a delete in a file it rewrites recomputes, and the row stays deleted") {
+    cell(deleteKeys, delete(1L), rebased = false, seed.filterNot(r => r._1 == 1L || r._1 == 2L))
+  }
+
+  test("updateWhere: a non-matching append rebases") {
+    cell(updateCoW, append(9L -> "r"), rebased = true, updated(2L -> "u") :+ (9L -> "r"))
+  }
+
+  test("updateWhere: an append of a matching row recomputes and updates it too") {
+    cell(updateCoW, append(2L -> "r"), rebased = false, updated(2L -> "u") :+ (2L -> "u"))
+  }
+
+  test("updateWhere: a delete in a file it rewrites recomputes, and the row stays deleted") {
+    cell(updateCoW, delete(1L), rebased = false, updated(2L -> "u").filterNot(_._1 == 1L))
+  }
+
+  test("compact: an append rebases") {
+    cell(compact, append(9L -> "r"), rebased = true, seed :+ (9L -> "r"))
+  }
+
+  test("compact: a delete in a file it packs recomputes, and the row stays deleted") {
+    cell(compact, delete(1L), rebased = false, seed.filterNot(_._1 == 1L))
+  }
+
+  test("rewriteDeletes: an append rebases") {
+    cell(fold, append(9L -> "r"), rebased = true, seed.filterNot(_._1 == 3L) :+ (9L -> "r"),
+      seededDeleted)
+  }
+
+  test("rewriteDeletes: a delete in a file it folds recomputes, and the row stays deleted") {
+    cell(fold, delete(1L), rebased = false, seed.filterNot(r => r._1 == 1L || r._1 == 3L),
+      seededDeleted)
   }
 }
 
