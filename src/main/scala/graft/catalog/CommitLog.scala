@@ -1440,16 +1440,25 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val v = headRace(name, op, headless = requireHead) { (_, head) =>
       val snapshot = rows(head)
       laidBy = transforms.map(parseTransform(snapshot, _))
-      val (df, cols) =
-        if (laidBy.isEmpty) (snapshot, partCols) else transformed(snapshot, laidBy)
-      gate(head.checks)(enforceConstraints(df, _, name, schemaOf(head)))
-      val entries = stage(clustered(df, cols, head.clustering), cols, name)
-      val ptspec = if (laidBy.isEmpty) Nil else Seq(Header.ptspec(laidBy))
-      Publish(wholeManifest(head, replace = true, cols, ptspec, None, entries, Some(df.schema)),
-        v => v, reads)
+      Publish(laidOut(snapshot, partCols, laidBy, head, name, gate), v => v, reads)
     }
     if (laidBy.nonEmpty) writePtspec(laidBy)
     v
+  }
+
+  /** The manifest replacing `head` with `rows`, laid out hive-partitioned
+    * by `partCols` or by the hidden-partition transforms `laidBy`
+    * ([[commitTransformed]]'s layout and `#ptspec:` header): the rows are
+    * checked against `head`'s constraints through `gate`, clustered by its
+    * declared clustering and staged.
+    */
+  private def laidOut(rows: DataFrame, partCols: Seq[String], laidBy: Seq[PartitionTransform],
+      head: Manifest, name: String, gate: ConstraintGate): Manifest = {
+    val (df, cols) = if (laidBy.isEmpty) (rows, partCols) else transformed(rows, laidBy)
+    gate(head.checks)(enforceConstraints(df, _, name, schemaOf(head)))
+    val entries = stage(clustered(df, cols, head.clustering), cols, name)
+    val ptspec = if (laidBy.isEmpty) Nil else Seq(Header.ptspec(laidBy))
+    wholeManifest(head, replace = true, cols, ptspec, None, entries, Some(df.schema))
   }
 
   /** The append layout rule of [[commitWhole]]: a flat append refuses a
@@ -2111,25 +2120,60 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
 
   /** Fresh staging directory under the table's `_tmp` for an external
     * writer (the SQL row-level-operation write stages here, then commits
-    * via [[commitStaged]]). Unreferenced leftovers from crashed writers
+    * via [[commitRowLevel]]). Unreferenced leftovers from crashed writers
     * age out under vacuum's in-flight guard like any orphan.
     */
   def newStageDir(tag: String): String =
     new Path(tmpDir, s"$tag-${java.util.UUID.randomUUID().toString}").toString
 
-  /** Publish the parquet files previously written into `stageDir` (via
-    * [[newStageDir]]) as the next commit. `replace=true` is the
-    * row-level-operation contract: the staged files ARE the table's new
-    * content. `#txn:` headers carry forward across the replace.
+  /** Append the parquet files previously written into `stageDir` (via
+    * [[newStageDir]]) as the next commit.
     */
-  def commitStaged(stageDir: String, replace: Boolean): Long = {
+  def commitStaged(stageDir: String): Long = {
     val newEntries = poolFromStage(new Path(stageDir), "commitStaged")
     val newPaths = newEntries.map(pooledFile)
-    // a row-level rewrite preserves the table's shape: its replace carries
-    // the evolved schema of record unconditionally (no `newSchema`)
-    commitWhole("commitStaged", if (replace) "replace" else "append", replace)(
+    commitWhole("commitStaged", "append", replace = false)(
       (cs, m) => enforceConstraintsOnPaths(newPaths, cs, "commitStaged", schemaOf(m)),
       _ => newEntries, _ => None)
+  }
+
+  /** The commit of a SQL row-level rewrite (`UPDATE`, `MERGE INTO`, a
+    * `DELETE` no filter serves): the rows staged under `stageDir` replace
+    * version `scanned`, the one the statement's scan read. A flat table
+    * pools the staged files; a hive or transform layout re-stages their
+    * rows under it ([[laidOut]]). An empty stage truncates to empty.
+    * Constraints are checked once, against `scanned`. Past `scanned` the
+    * replace lands by [[headRace]] step 4 with the read test "holds any
+    * data" (the scan read every file, under a condition the table never
+    * sees), else the statement fails; it is never republished.
+    */
+  private[catalog] def commitRowLevel(stageDir: String, scanned: Long): Long = {
+    val name = "commitRowLevel"
+    val base = manifest(scanned)
+    val partCols = tableMeta.partCols
+    val laidBy = if (partCols.isEmpty) transformsFor(base) else Nil
+    val dir = new Path(stageDir)
+    val replace =
+      if (partCols.isEmpty && laidBy.isEmpty) {
+        val entries = poolFromStage(dir, name)
+        enforceConstraintsOnPaths(entries.map(pooledFile), base.checks, name, schemaOf(base))
+        // the table keeps its shape, so its evolved schema of record too
+        wholeManifest(base, replace = true, Nil, Nil, None, entries, None)
+      } else {
+        val staged = hfs.exists(dir) && hfs.listStatus(dir)
+          .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+        // `readManifest`, not `read()`: a transform layout keeps its derived columns
+        val rows = if (staged) spark.read.parquet(stageDir) else readManifest(base).where(lit(false))
+        try laidOut(rows, partCols, laidBy, base, name, new ConstraintGate)
+        finally hfs.delete(dir, true)
+      }
+    val p = Publish[Long](replace, v => v, Some(_.data.nonEmpty))
+    headRace(name, "replace") { (head, m) =>
+      if (head == scanned) p
+      else rebased(base, m, p).getOrElse(throw new java.io.IOException(
+        s"$name: $tableRoot changed since the statement read v$scanned (now v$head) " +
+          "in a way that conflicts with it; re-run it"))
+    }
   }
 
   /** Zero-copy SHALLOW CLONE: publish this (empty) table's v1 as a
@@ -2366,21 +2410,6 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     val parsed = specs.map(parseTransformOn(schema, _))
     writePtspec(parsed)
     parsed
-  }
-
-  /** Transform twin of [[commitStagedPartitioned]] for the SQL row-level
-    * rewrite on a hidden-partitioned table: the flat staged rows are
-    * re-derived and re-laid-out under the declared transforms, so the
-    * layout (and every later read's pruning) survives SQL MERGE/UPDATE.
-    */
-  def commitStagedTransformed(stageDir: String): Long = {
-    val ts = partitionTransforms
-    require(ts.nonEmpty, s"commitStagedTransformed: no declared transforms " +
-      s"under $tableRoot")
-    restaged(stageDir, "commitStagedTransformed") { df =>
-      val (laidOut, names) = transformed(df, ts)
-      commitPartitioned(laidOut, names, replace = true, extraHeader = Some(Header.ptspec(ts).text))
-    }
   }
 
   /** (Re)compute every declared derived column whose source is present —
@@ -2969,37 +2998,6 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     head + 1
   }
 
-  /** Partitioned twin of [[commitStaged]] for the SQL row-level rewrite:
-    * Spark's V2 parquet batch write stages FLAT files (it cannot lay out
-    * hive dirs), so the staged rows are read back and re-staged under
-    * `partitionCols` subdirs before the replace publishes. Costs one
-    * extra write of the post-merge rows — the price of keeping the
-    * partition layout (and its pruning) through SQL MERGE/UPDATE instead
-    * of refusing; the file-pruned single-write path is the DataFrame
-    * plane ([[merge]]). An empty stage is a legal truncate-to-empty
-    * (the schema comes from the current head).
-    */
-  def commitStagedPartitioned(stageDir: String, partitionCols: Seq[String]): Long =
-    restaged(stageDir, "commitStagedPartitioned")(
-      commitPartitioned(_, partitionCols, replace = true))
-
-  /** Re-stage the rows an external writer staged under `stageDir` through
-    * `commit`, then drop the stage dir. A stage with no parts is a legal
-    * truncate-to-empty: `commit` gets the committed head's schema with no
-    * rows (`readVersion`, not `read()`: a transform-partitioned head keeps
-    * its derived layout columns).
-    */
-  private def restaged(stageDir: String, op: String)(commit: DataFrame => Long): Long = {
-    val dir = new Path(stageDir)
-    val hasParts = hfs.exists(dir) && hfs.listStatus(dir)
-      .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val ver = commit(
-      if (hasParts) spark.read.parquet(dir.toString)
-      else readVersion(committedHead(s"$op: ")).where(lit(false)))
-    hfs.delete(dir, true)
-    ver
-  }
-
   // ---- the commit protocol ------------------------------------------------
 
   /** The commit protocol: every single-table mutation publishes its next
@@ -3433,7 +3431,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   private def findTouched(m: Manifest, keys: CommitLog.BatchKeys, keyCol: String,
       schema: => org.apache.spark.sql.types.StructType, refineCap: Int = touchRefineCap,
-      partTypes: Map[String, String] = Map.empty): Set[String] = {
+      partTypes: Map[String, String]): Set[String] = {
     val candidates = keyCandidates(m, keys, keyCol)
     if (candidates.isEmpty) Set.empty
     else if (candidates.length > refineCap) candidates.toSet
@@ -4159,7 +4157,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
               .select(schema.fieldNames.toSeq.map(col): _*)
             stage(survivors, head.partitionColumns, "expire")
           }
-        Publish(kept ++ survivorEntries, _ => (dead.size, straddle.size))
+        Publish(kept ++ survivorEntries, _ => (dead.size, straddle.size), readsRemovedOnly)
       }
     }
   }
@@ -4742,13 +4740,6 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   /** (analyzedVersion, rows, col → (ndv, nullCount)). */
   def analyzedStats(): Option[(Long, Long, Map[String, (Long, Long)])] =
     analyzed().map(a => (a.version, a.rows, a.cols))
-
-  /** Equi-height histograms, if the last [[analyze]] harvested them:
-    * (analyzedVersion, col → (binHeight, endpoints, perIntervalNdv)).
-    * Height = non-null rows / bins, the catalyst equi-height contract.
-    */
-  def analyzedHistograms(): Option[(Long, Map[String, (Double, Seq[Double], Seq[Long])])] =
-    analyzed().map(a => (a.version, a.hists))
 
   /** Numeric-column min/max (as doubles): (analyzedVersion, col → (min,
     * max)). Served beside NDV so catalyst range intersection works — a

@@ -75,6 +75,10 @@ object CrossTableTxn {
     val fs = HadoopFs.fs(spark, coordDir)
     fs.mkdirs(new Path(coordDir))
     val store = LogStore.forPath(spark, coordDir)
+    // not a headRace: each pending version already won its table's own
+    // head race; this loop retries the whole transaction under a new id
+    // when a reader forced its decision to abort, and a decision file is
+    // write-once, with no head to rebase onto
     var attempt = 0
     while (attempt < maxAttempts) {
       val id = java.util.UUID.randomUUID().toString
@@ -153,6 +157,8 @@ object CrossTableTxn {
       l.resolveDecision(v)
       v
     }
+    // not a headRace: the pin publishes nothing; it re-reads every head
+    // until two passes agree
     var prev = pass()
     var attempt = 0
     while (attempt < maxAttempts) {

@@ -57,9 +57,7 @@ final class GraftDataSource extends TableProvider with DataSourceRegister {
           log.versionAsOf(ts.toLong).getOrElse(throw new IllegalArgumentException(
             s"graft: no commit at or before $ts under $root"))
         })
-    pinned.foreach { v =>
-      require(log.currentVersion.nonEmpty, s"graft: no commits under $root")
-    }
+    require(pinned.isEmpty || log.currentVersion.nonEmpty, s"graft: no commits under $root")
     new GraftTable(spark, s"graft.`$root`", root, GraftTable.resolve(spark, root, external),
       pinned)
   }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScanBuilder, ParquetTable}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
@@ -740,6 +740,33 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    pinned.foreach { v =>
+      require(log.files(v) != null, s"version $v not readable under $root")
+    }
+    scanAt(pinned.orElse(log.currentVersion).getOrElse(0L), options)
+  }
+
+  /** A parquet scan of version `v`'s files (none for v0) under `readSchema`. */
+  private def parquetScanAt(v: Long, readSchema: StructType,
+      options: CaseInsensitiveStringMap): ParquetScanBuilder = {
+    val scanOptions = withBasePath(options)
+    ParquetTable(tableName, spark, scanOptions, if (v > 0) log.filePaths(v) else Nil,
+      Some(readSchema), classOf[ParquetFileFormat]).newScanBuilder(scanOptions)
+  }
+
+  // hive-partitioned pools nest files under c=v dirs: basePath lets the
+  // file index rehydrate the partition columns (and makes them PRUNABLE
+  // partition attributes — Spark plans partition filters as file-level
+  // pruning, not row filters, exactly the DPP-ready shape)
+  private def withBasePath(options: CaseInsensitiveStringMap): CaseInsensitiveStringMap =
+    if (partCols.isEmpty) options
+    else new CaseInsensitiveStringMap(
+      (options.asScala ++ Map("basePath" -> new Path(root, "data").toString)).asJava)
+
+  /** The table's scan of version `v` ([[parquetScanAt]] under the logical
+    * schema), with its streaming twin, exact stats and key grouping.
+    */
+  private def scanAt(v: Long, options: CaseInsensitiveStringMap): ScanBuilder = {
     // with the DV analyzer rule installed ([[graft.plans.ApplyDeletionVectors]]
     // via GraftExtensions) a tombstone-bearing relation is rewritten to the
     // anti-joined read BEFORE any scan is built, so reaching this point with
@@ -765,22 +792,9 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
         "CALL <catalog>.system.materialize_mapping")
     val streamSchema =
       if (hasRenames) ColumnMapping.physicalSchema(schema) else schema
-    val snapshot = pinned.orElse(log.currentVersion)
-    pinned.foreach { v =>
-      require(log.files(v) != null, s"version $v not readable under $root")
-    }
-    val paths = snapshot.map(log.filePaths).getOrElse(Seq.empty)
-    // hive-partitioned pools nest files under c=v dirs: basePath lets the
-    // file index rehydrate the partition columns (and makes them PRUNABLE
-    // partition attributes — Spark plans partition filters as file-level
-    // pruning, not row filters, exactly the DPP-ready shape)
-    val scanOptions =
-      if (partCols.isEmpty) options
-      else new CaseInsensitiveStringMap(
-        (options.asScala ++ Map("basePath" -> new Path(root, "data").toString)).asJava)
-    val inner = ParquetTable(tableName, spark, scanOptions, paths, Some(schema),
-      classOf[ParquetFileFormat]).newScanBuilder(scanOptions)
-      .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder]
+    val snapshot = Option.when(v > 0)(v)
+    val scanOptions = withBasePath(options)
+    val inner = parquetScanAt(v, schema, options)
     // batch pushdown forwards untouched; streaming reads tail the commit
     // log ([[GraftMicroBatchStream]]) — the checkpoint location is unused
     // because offsets ARE commit versions (the engine's own durable log).
@@ -904,14 +918,16 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
       else log.deleteWhere(cond): Unit
     }
 
-  /** SQL MERGE INTO / UPDATE: Spark's group-based row-level rewrite.
-    * The operation's scan reads the whole snapshot (one group — file-
-    * granular grouping would need the parquet write stack re-implemented
-    * per group for no semantic gain; the file-pruned CoW merge lives on
-    * the DataFrame plane, [[CommitLog.merge]]); Spark computes the
-    * post-merge rows and writes them through Spark's OWN parquet V2
-    * batch write into a commit-log staging dir, and the batch commit
-    * publishes the staged files as a replace version — atomic, snapshot-
+  /** SQL MERGE INTO / UPDATE (and a DELETE no filter can serve): Spark's
+    * group-based row-level rewrite. The operation's scan reads the whole
+    * snapshot of one version (one group — file-granular grouping would
+    * need the parquet write stack re-implemented per group for no
+    * semantic gain; the file-pruned CoW merge lives on the DataFrame
+    * plane, [[CommitLog.merge]]); Spark computes the new rows and writes
+    * them through Spark's OWN parquet V2 batch write into a commit-log
+    * staging dir, and the batch commit replaces the version the scan read
+    * with the staged rows ([[CommitLog.commitRowLevel]]), or fails the
+    * statement when a conflicting commit landed since: atomic, snapshot-
     * isolated, and the data path is entirely Spark's vectorized writer.
     */
   override def newRowLevelOperationBuilder(
@@ -920,10 +936,12 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
     // the group-based rewrite replaces the WHOLE table from its own raw
     // scan (which must stay pushdown-free and un-rewritten — see
     // newScanBuilder's one-group contract), so merge-on-read tombstones
-    // cannot ride through it: require them folded in first
-    if (hasDeletes) throw new IllegalStateException(
+    // cannot ride through it: require them folded in first, at the
+    // version the scan reads too (a delete may land in between)
+    def foldFirst = new IllegalStateException(
       s"$tableName carries merge-on-read deletion vectors; fold them in " +
         "before SQL MERGE/UPDATE: CALL <catalog>.system.rewrite_deletes")
+    if (hasDeletes) throw foldFirst
     // Column-mapped tables run the rewrite natively: the group scan
     // plans under the PHYSICAL schema and reports logical names (rows
     // bind positionally), and the write stages files under physical
@@ -946,28 +964,25 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
           // untouched partition from the replace commit) makes the group
           // scan read the full snapshot, which is exactly what the
           // one-group contract requires.
+          // the version the scan read: the one the write replaces
+          @volatile private var scanned: Option[Long] = None
           override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+            val v = scanned.getOrElse {
+              val head = log.currentVersion.getOrElse(0L)
+              if (head > 0 && log.dvFiles(head).nonEmpty) throw foldFirst
+              head
+            }
+            scanned = Some(v)
             // column-mapped tables plan the group scan directly under
             // the PHYSICAL schema (what the files store) and report the
             // LOGICAL schema upward — same arity and types, so the rows
             // bind positionally to the command's resolved attributes,
-            // exactly how the streaming read handles the mapping. The
-            // plain path delegates to the table's own builder.
+            // exactly how the streaming read handles the mapping (their
+            // partition columns are never mapped — ALTER refuses
+            // renaming them). The plain path is the table's own scan.
             val inner: ScanBuilder =
-              if (!hasRenames) GraftTable.this.newScanBuilder(options)
-              else {
-                val paths = log.currentVersion.map(log.filePaths).getOrElse(Seq.empty)
-                // hive-partitioned pools nest files under c=v dirs:
-                // basePath rehydrates the partition columns (their names
-                // are never mapped — ALTER refuses renaming them)
-                val scanOptions =
-                  if (partCols.isEmpty) options
-                  else new CaseInsensitiveStringMap((options.asScala ++
-                    Map("basePath" -> new Path(root, "data").toString)).asJava)
-                ParquetTable(tableName, spark, scanOptions, paths,
-                  Some(ColumnMapping.physicalSchema(schema)),
-                  classOf[ParquetFileFormat]).newScanBuilder(scanOptions)
-              }
+              if (!hasRenames) scanAt(v, options)
+              else parquetScanAt(v, ColumnMapping.physicalSchema(schema), options)
             new ScanBuilder {
               override def build(): org.apache.spark.sql.connector.read.Scan = {
                 val built = inner.build()
@@ -1022,18 +1037,8 @@ private[graft] class GraftTable(spark: SparkSession, tableName: String, root: St
                     override def commit(
                         messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
                       delegate.commit(messages)
-                      // partitioned tables re-stage the (flat) staged rows
-                      // under their partition subdirs so the layout — and
-                      // every later scan's partition pruning — survives
-                      // the SQL rewrite; unpartitioned pools publish the
-                      // staged files directly
-                      if (partCols.nonEmpty)
-                        log.commitStagedPartitioned(stage, partCols): Unit
-                      else if (log.partitionTransforms.nonEmpty)
-                        // re-derive + re-lay-out: the hidden layout (and
-                        // its pruning) survives SQL MERGE/UPDATE
-                        log.commitStagedTransformed(stage): Unit
-                      else log.commitStaged(stage, replace = true): Unit
+                      log.commitRowLevel(stage, scanned.getOrElse(throw new IllegalStateException(
+                        s"$tableName: a row-level write with no scan of the table"))): Unit
                     }
                     override def abort(
                         messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =

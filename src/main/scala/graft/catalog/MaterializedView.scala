@@ -50,7 +50,7 @@ final class MaterializedView private (
       * re-pins the cursors (dims are small and slow-moving; the fact
       * plane keeps O(changes) refreshes). Empty = single-table view.
       */
-    val joins: Seq[(String, String, String)] = Nil) {
+    val joins: Seq[(String, String, String)]) {
 
   private val log = new CommitLog(spark, mvRoot)
   private val srcLog = new CommitLog(spark, srcRoot)
@@ -266,8 +266,7 @@ object MaterializedView {
 
   private def writeState(spark: SparkSession, mvRoot: String, srcRoot: String,
       groupCols: Seq[String], sumCols: Seq[(String, String)], v: Long,
-      joins: Seq[(String, String, String)] = Nil,
-      dimVs: Seq[Long] = Nil): Unit = {
+      joins: Seq[(String, String, String)], dimVs: Seq[Long]): Unit = {
     import org.json4s.JsonDSL._
     val base =
       ("src" -> srcRoot) ~ ("groups" -> groupCols) ~

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -94,9 +93,4 @@ object BigramKernel {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
-
-  /** Column-API surface (same shim as VectorKernels). */
-  def bigramTop(toks: Column): Column =
-    org.apache.spark.sql.GraftSqlShim.column(
-      BigramTop(org.apache.spark.sql.GraftSqlShim.expression(toks)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -102,9 +101,4 @@ object ProjectKernel {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
-
-  /** Column-API surface (same shim as VectorKernels). */
-  def vecProject(v: Column, k: Int): Column =
-    org.apache.spark.sql.GraftSqlShim.column(
-      FloatVecProject(org.apache.spark.sql.GraftSqlShim.expression(v), k))
 }

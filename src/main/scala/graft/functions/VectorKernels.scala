@@ -373,7 +373,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         VectorKernels.builderFor(name)))
     // merge-on-read correctness for the SQL catalog: tombstone-bearing
     // snapshots read through the DV anti-join, not the raw file scan
-    ext.injectResolutionRule(session => new graft.plans.ApplyDeletionVectors(session))
+    ext.injectResolutionRule(_ => new graft.plans.ApplyDeletionVectors)
     // matching aggregates over a catalog table plan onto their FRESH
     // materialized view instead of the base scan (|groups| rows vs a
     // full fact scan); fires only under exact-match + freshness guards

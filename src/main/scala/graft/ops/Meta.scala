@@ -93,7 +93,7 @@ object Meta {
   }
 
   /** R8 health probe (lambda_function.py:142-143): constant select. */
-  private def health(s: SparkSession, d: String): DataFrame =
+  private def health(s: SparkSession): DataFrame =
     s.range(1).select(lit("ok").as("status"), lit(200).as("code"))
 
   /** R11 request-envelope construction (swagger:37-61): the FULL canonical
@@ -224,7 +224,7 @@ object Meta {
     "meta_point_lookup"      -> pointLookup _,
     "meta_keyed_delete"      -> keyedDelete _,
     "meta_router_dispatch"   -> routerDispatch _,
-    "meta_health"            -> health _,
+    "meta_health"            -> ((s, _) => health(s)),
     "meta_envelope_json"     -> envelopeJson _,
     "meta_validate_required" -> validateRequired _,
     "meta_audit_status"      -> auditStatus _,

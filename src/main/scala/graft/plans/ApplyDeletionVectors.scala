@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Cast, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -38,7 +37,7 @@ import graft.catalog.GraftTable
   * [[graft.catalog.GraftTable.newScanBuilder]] refuses to bind a raw
   * file scan in either state.
   */
-class ApplyDeletionVectors(spark: SparkSession) extends Rule[LogicalPlan] {
+class ApplyDeletionVectors extends Rule[LogicalPlan] {
 
   /** Only READ positions are rewritten. A write/row-level command's
     * target relation must stay the V2 table (the command machinery

@@ -244,7 +244,7 @@ object Stateful {
     * values are partition-count-invariant either way.
     */
   private def runToMemory(s: SparkSession, df: DataFrame, mode: OutputMode,
-      parts: Int = 4): DataFrame = withShufflePartitions(s, parts) {
+      parts: Int): DataFrame = withShufflePartitions(s, parts) {
     val name = s"graft_sink_${java.util.UUID.randomUUID.toString.replace("-", "")}"
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(Trigger.AvailableNow()).start()

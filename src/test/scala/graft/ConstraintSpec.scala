@@ -216,7 +216,7 @@ class ConstraintSpec extends AnyFunSuite {
     val stage = racer.newStageDir("spec")
     Seq((2L, -9)).toDF("k", "qty").write.parquet(stage)
     val ex = intercept[IllegalStateException] {
-      racer.commitStaged(stage, replace = false)
+      racer.commitStaged(stage)
     }
     assert(ex.getMessage.contains("qty_pos"),
       s"staged batch must re-validate against the new head: ${ex.getMessage}")

@@ -99,7 +99,7 @@ class HeadRaceSpec extends AnyFunSuite with ParallelTestExecution {
     RacePath("commitStaged", "append", 50, l => {
       val stage = l.newStageDir("race")
       rows(7L -> "x").write.parquet(stage)
-      l.commitStaged(stage, replace = false) }),
+      l.commitStaged(stage) }),
     RacePath("publishPending", "xtxn", 50, l => {
       val decision = l.tableRootPath + s"_decision_${java.util.UUID.randomUUID()}"
       val v = l.publishPending(rows(7L -> "x"), "x1", decision, replace = false)
@@ -132,7 +132,7 @@ class HeadRaceSpec extends AnyFunSuite with ParallelTestExecution {
     RacePath("setTtl", "set_ttl", 50, _.setTtl("k", 1000L), setup = declaredOnly,
       kept = l => assert(keys(l)(Racer) && l.ttlPolicy.contains(("k", 1000L)))),
     RacePath("expireBefore", "expire", 5, _.expireBefore("k", 2L),
-      kept = l => assert(keys(l) == Set(2L, 3L, Racer))),
+      kept = l => assert(keys(l) == Set(2L, 3L, Racer)), rebases = true),
     RacePath("merge", "merge", 5, _.merge(rows(2L -> "u", 5L -> "n"), "k"),
       kept = l => assert(keys(l) == Set(1L, 2L, 3L, 5L, Racer) && updated(l) == Seq("u")),
       rebases = true),

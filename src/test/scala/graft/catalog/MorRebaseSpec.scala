@@ -78,6 +78,7 @@ class MorRebaseSpec extends AnyFunSuite with ParallelTestExecution {
   private def updateCoW(l: CommitLog): Any = l.updateWhere(col("k") === 2L, Seq("p" -> lit("u")))
   private def compact(l: CommitLog): Any = l.compact()
   private def fold(l: CommitLog): Any = l.rewriteDeletes()
+  private def expire(l: CommitLog): Any = l.expireBefore("k", 2L)
 
   /** [[seeded]] with row 3 tombstoned, for the tombstone fold. */
   private def seededDeleted(): String = {
@@ -235,6 +236,15 @@ class MorRebaseSpec extends AnyFunSuite with ParallelTestExecution {
   test("rewriteDeletes: a delete in a file it folds recomputes, and the row stays deleted") {
     cell(fold, delete(1L), rebased = false, seed.filterNot(r => r._1 == 1L || r._1 == 3L),
       seededDeleted)
+  }
+
+  // rows 1, 2, 3 share the file that straddles the cutoff 2
+  test("expireBefore: a non-matching append rebases") {
+    cell(expire, append(9L -> "r"), rebased = true, seed.filterNot(_._1 == 1L) :+ (9L -> "r"))
+  }
+
+  test("expireBefore: a delete in a straddling file recomputes, and the row stays deleted") {
+    cell(expire, delete(3L), rebased = false, seed.filterNot(r => r._1 == 1L || r._1 == 3L))
   }
 }
 

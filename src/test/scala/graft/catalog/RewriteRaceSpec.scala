@@ -5,19 +5,25 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.connector.write.{RowLevelOperation, RowLevelOperationInfo}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.ParallelTestExecution
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
 /** The rewrites that read the table they replace: `optimizeBy`,
-  * `optimizeZOrder`, and the `set_partition_transforms` and
-  * `materialize_mapping` procedures. Each loses its first publish to an
-  * append of row 999, and must land above it with that row kept: a
-  * rewrite that republished the snapshot it read before the race would
-  * erase the append. The optimize paths race through `beforePublish`; the
-  * procedures open their own handle, so their racer rides a log store
+  * `optimizeZOrder`, the `set_partition_transforms` and
+  * `materialize_mapping` procedures, and SQL `UPDATE`, `MERGE INTO` and
+  * `DELETE` run as a row-level rewrite. Each loses its first publish to
+  * an append of row 999, and must keep that row: a rewrite that
+  * republished the snapshot it read before the race would erase the
+  * append. The rewrites of the head land above it; a SQL statement, whose
+  * scan read every row, fails instead, with none of its effect. The
+  * optimize paths race through `beforePublish`; the procedures and
+  * statements open their own handle, so their racer rides a log store
   * ([[RewriteRaceSpec.RacingStore]]) installed in a session of their own.
   */
 class RewriteRaceSpec extends AnyFunSuite with ParallelTestExecution {
@@ -128,6 +134,78 @@ class RewriteRaceSpec extends AnyFunSuite with ParallelTestExecution {
     val log = new CommitLog(spark, root)
     val head = log.files(log.currentVersion.get).map(n => s"$root/data/$n")
     assert(spark.read.parquet(head: _*).columns.toSet == Set("k", "w"))
+  }
+
+  private val seedRows = Set(1L -> "a", 2L -> "b", 3L -> "c")
+
+  /** `statement` on table `name`, created by `ddl` and seeded with
+    * [[seedRows]], after `racer` armed on its root. Returns the table's
+    * rows and what the statement threw, if anything.
+    */
+  private def rowLevel(name: String, ddl: String, statement: String)(
+      racer: String => Unit): (Set[(Long, String)], Option[Throwable]) = {
+    val (s, w) = racingSession()
+    s.sql(s"CREATE TABLE grr.db.$name (k BIGINT, p STRING) $ddl")
+    s.sql(s"INSERT INTO grr.db.$name VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    val root = s"$w/db/$name"
+    val raced = RacingStore.arm(root)(racer(root))
+    val thrown = scala.util.Try(s.sql(statement.replace("$t", s"grr.db.$name"))).failed.toOption
+    assert(raced.get, "the racer ran before the statement's publish")
+    (s.sql(s"SELECT k, p FROM grr.db.$name").as[(Long, String)].collect().toSet, thrown)
+  }
+
+  /** The statement failed on the conflict with the racer, and the table
+    * holds the seed rows and the racer's, with none of the statement's
+    * effect.
+    */
+  private def conflicted(outcome: (Set[(Long, String)], Option[Throwable])): Unit = {
+    val (table, thrown) = outcome
+    assert(table == seedRows + (Racer -> "racer"), "the racing append was erased")
+    val causes = thrown.toSeq.flatMap(Iterator.iterate(_)(_.getCause).takeWhile(_ != null))
+    assert(causes.exists(c => c.isInstanceOf[java.io.IOException] &&
+      c.getMessage.contains("changed since the statement read")),
+      s"the statement must fail on the conflict: $thrown")
+  }
+
+  test("SQL UPDATE fails over a row appended before its publish, which it keeps") {
+    conflicted(rowLevel("u", "", "UPDATE $t SET p = concat(p, '!') WHERE k = 2")(appendRacer))
+  }
+
+  test("SQL MERGE INTO a hive-partitioned table fails over a row appended before its publish") {
+    conflicted(rowLevel("h", "PARTITIONED BY (p)",
+      """MERGE INTO $t t USING (SELECT CAST(2 AS BIGINT) AS k, 'z' AS p) s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET t.p = s.p WHEN NOT MATCHED THEN INSERT *""".stripMargin)(
+      root => new CommitLog(spark, root)
+        .commitPartitioned(rows(Racer -> "racer"), Seq("p"), replace = false): Unit))
+  }
+
+  test("SQL DELETE on a transform-partitioned table fails over a row appended before its publish") {
+    // `k % 2` translates to no filter, so the delete runs as a row-level rewrite
+    conflicted(rowLevel("x", "PARTITIONED BY (bucket(2, k))", "DELETE FROM $t WHERE k % 2 = 0")(
+      root => new CommitLog(spark, root)
+        .commitTransformed(rows(Racer -> "racer"), Seq("bucket(2, k)"), replace = false): Unit))
+  }
+
+  test("a row-level scan refuses a merge-on-read delete that landed after analysis") {
+    val (s, w) = racingSession()
+    s.sql("CREATE TABLE grr.db.d (k BIGINT, p STRING)")
+    s.sql("INSERT INTO grr.db.d VALUES (1, 'a'), (2, 'b')")
+    val table = s.sessionState.catalogManager.catalog("grr").asInstanceOf[GraftTableCatalog]
+      .loadTable(Identifier.of(Array("db"), "d")).asInstanceOf[GraftTable]
+    val op = table.newRowLevelOperationBuilder(new RowLevelOperationInfo {
+      def options() = CaseInsensitiveStringMap.empty()
+      def command() = RowLevelOperation.Command.UPDATE
+    }).build()
+    new CommitLog(spark, s"$w/db/d").deleteWhereMoR(col("k") === 1L)
+    val e = intercept[IllegalStateException](op.newScanBuilder(CaseInsensitiveStringMap.empty()))
+    assert(e.getMessage.contains("merge-on-read deletion vectors"))
+  }
+
+  test("SQL UPDATE lands over a commit that adds no data file") {
+    val (table, thrown) = rowLevel("e", "", "UPDATE $t SET p = concat(p, '!') WHERE k = 2")(
+      root => new CommitLog(spark, root).commit(rows().coalesce(1), replace = false): Unit)
+    assert(thrown.isEmpty, s"a racer with no data cannot conflict: $thrown")
+    assert(table == seedRows - (2L -> "b") + (2L -> "b!"))
   }
 }
 
